@@ -413,8 +413,10 @@ class ReadstatDataSource(DataSource):
         — one part-file per partition, staged + committed atomically
         (writers/spark_sink.py). sas7bdat (optionally RLE), sav, zsav,
         xpt, and dta (schema-deterministic sentinel-safe types so
-        parts always union; write_dta_partitioned keeps the
-        stats-narrowed storage)."""
+        parts always union). The part-file writer is the same one
+        write_readstat_partitioned and write_readstat_hive run; only
+        the column plan differs: the sink plans per partition from
+        the schema, write_dta_partitioned narrows from a pre-pass."""
         from polars_readstat_spark.writers.spark_sink import (
             ReadstatDataSourceWriter,
         )

@@ -290,9 +290,3 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
             )
     finally:
         staged.unpersist()
-
-
-def iter_packed_chunks_wide(df, pack_fn, max_rows: int = 8192, modules=()):
-    """Back-compat name for the wide (all-cores) packing protocol —
-    now the JVM-tagged single-crossing iter_ordered_packed."""
-    yield from iter_ordered_packed(df, pack_fn, max_rows, modules)

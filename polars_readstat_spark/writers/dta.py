@@ -9,9 +9,10 @@ Two Spark jobs, then a streaming assembly:
 2. **Pack**: batches are packed vectorized (numpy structured array per
    batch). The driver-side `write_dta` pulls partitions in order via
    `toLocalIterator()`; the distributed path
-   (writers/partitioned.py) runs the same pack+assemble inside each
-   executor task against its own partition, with the column plan from
-   the global pre-pass so every part-file shares one schema.
+   (writers/partitioned.py) hands the column plan from the global
+   pre-pass to the sink's ``write_partition_file``, which runs the
+   same pack+assemble inside each executor task against its own
+   partition, so every part-file shares one schema.
 
 Layout per the public dta-118 spec (same section tags the reader
 parses). Nulls → Stata sentinel missings; date → %td day numbers;
@@ -561,8 +562,8 @@ def write_dta(
         # Big exports take the all-cores JVM-tagged protocol (see
         # iter_ordered_packed; same ≥100k-row policy as por/sav/xpt).
         from polars_readstat_spark.writers import (
+            iter_ordered_packed,
             iter_packed_chunks,
-            iter_packed_chunks_wide,
         )
 
         cols_l, tm = list(cols), dict(tagged_missing)
@@ -595,7 +596,7 @@ def write_dta(
         # already win; measured 2.0 -> 3.2 s at 600k rows. Only very
         # large exports take the wide path.
         chunks_iter = (
-            iter_packed_chunks_wide if int(stats["__n"]) >= 2_000_000
+            iter_ordered_packed if int(stats["__n"]) >= 2_000_000
             else iter_packed_chunks
         )
         for payload, n in chunks_iter(

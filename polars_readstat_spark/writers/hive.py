@@ -5,10 +5,11 @@ The canonical 100-TB lake layout is partitioned by source/date. This
 writer lands it in ONE pass: ``df.repartition(*keys)`` co-locates
 each key combination in exactly one task (hash partitioning maps a
 key to one partition), the task splits its Arrow stream by key and
-writes complete files into ``dir/k1=v1/k2=v2/`` through the same
-``write_partition_file`` machinery as the distributed sink, and the
-driver publishes one ``_prs_stats.json`` per subdirectory from the
-collected task stats.
+writes complete files into ``dir/k1=v1/k2=v2/`` with the distributed
+sink's own task body (``write_sink_part``: per-chunk plan, then the
+shared ``write_partition_file``), and the driver publishes one
+``_prs_stats.json`` per subdirectory from the collected task stats
+(``publish_task_results``, shared with writers/partitioned.py).
 
 Design departures from Hive, deliberate:
 
@@ -76,14 +77,11 @@ def write_readstat_hive(
     (``zonemap_stripe_rows``, ``zonemap_bloom_columns``, ...).
     Returns [{"path", "n_rows"}, ...]."""
     from polars_readstat_spark.writers.spark_sink import (
-        _bloom_cols_opt,
-        _bloom_max_bytes_opt,
-        _stripe_rows_opt,
-        convert_batches,
+        TASK_RESULT_SCHEMA,
         plan_write,
-        publish_stats_manifest,
-        stats_reader_keys,
-        write_partition_file,
+        publish_task_results,
+        task_result_batch,
+        write_sink_part,
     )
 
     keys = [str(k) for k in partition_by]
@@ -107,17 +105,12 @@ def write_readstat_hive(
                 f"fractional type {t} — float directory names are an "
                 "interop trap; cast or bucket it first"
             )
-    fmt, fields, names, shorts, kinds = plan_write(df.schema, opts)
-    stripe_rows = _stripe_rows_opt(opts)
-    bloom_cols = _bloom_cols_opt(opts)
-    bloom_max = _bloom_max_bytes_opt(opts)
+    schema_plan = plan_write(df.schema, opts)
     from polars_readstat_spark.sources.fs import fs_makedirs
 
     fs_makedirs(dir_path)
 
     def task(batches):
-        import json
-
         import pyarrow as pa
 
         from pyspark import TaskContext
@@ -139,12 +132,6 @@ def write_readstat_hive(
             pend_rows.pop(kt, 0)
             if not bs:
                 return
-            frames, widths, acc = convert_batches(
-                bs, names, kinds, fmt,
-                stripe_rows=stripe_rows,
-                bloom_cols=bloom_cols,
-                bloom_max_bytes=bloom_max,
-            )
             sub = dir_path
             for k, v in zip(keys, kt):
                 sub = fs_join(sub, f"{k}={_render_key(v)}")
@@ -155,34 +142,9 @@ def write_readstat_hive(
             staged = fs_join(
                 sub, f".staged-p{pid:05d}-{s:03d}-{os.getpid()}.{fmt}"
             )
-            n = write_partition_file(
-                staged, fmt, fields, names, shorts, kinds, frames,
-                widths, opts,
-            )
+            n, payload = write_sink_part(staged, bs, schema_plan, opts)
             fs_move(staged, final)
-            stats = stats_reader_keys(acc.stats, fmt, names, shorts)
-            stripes = acc.stripes_payload()
-            if stripes is not None:
-                stripes["cols"] = [
-                    stats_reader_keys(c, fmt, names, shorts)
-                    for c in stripes["cols"]
-                ]
-            blooms = acc.bloom_payload()
-            if blooms is not None:
-                blooms = stats_reader_keys(blooms, fmt, names, shorts)
-            out_rows.append(
-                (
-                    final,
-                    n,
-                    json.dumps(
-                        {
-                            "cols": stats,
-                            "stripes": stripes,
-                            "blooms": blooms,
-                        }
-                    ),
-                )
-            )
+            out_rows.append((final, n, payload))
 
         for batch in batches:
             if batch.num_rows == 0:
@@ -210,41 +172,9 @@ def write_readstat_hive(
         for kt in list(pending):
             flush(kt)
         if out_rows:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r[0] for r in out_rows], pa.string()),
-                    pa.array([r[1] for r in out_rows], pa.int64()),
-                    pa.array([r[2] for r in out_rows], pa.string()),
-                ],
-                names=["path", "n_rows", "stats"],
-            )
+            yield task_result_batch(out_rows)
 
-    results = (
-        df.repartition(*keys)
-        .mapInArrow(
-            task,
-            "path string, n_rows long, stats string",
-        )
-        .collect()
+    # one manifest per subdirectory, from the collected task stats
+    return publish_task_results(
+        df.repartition(*keys).mapInArrow(task, TASK_RESULT_SCHEMA).collect()
     )
-    # one manifest per subdirectory, from the collected stats
-    import json
-
-    by_dir: dict[str, list] = {}
-    for r in results:
-        try:
-            doc = json.loads(r.stats)
-        except ValueError:
-            continue
-        by_dir.setdefault(os.path.dirname(r.path), []).append(
-            (
-                r.path,
-                r.n_rows,
-                doc.get("cols") or {},
-                doc.get("stripes"),
-                doc.get("blooms"),
-            )
-        )
-    for d, parts in by_dir.items():
-        publish_stats_manifest(d, parts, merge=True)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]

@@ -3,13 +3,17 @@ partition, written inside the executor tasks.
 
 The single-file writers stream through the driver
 (`toLocalIterator`), which bounds memory but serializes wall-clock —
-SCALE.md names that bound. This path removes it: a global pre-pass
-job resolves one column plan (string widths, bigint downcasts) so
-every part-file shares a single schema, then `mapInPandas` tasks pack
-and assemble their own partition's file in parallel. The output
-directory is exactly the multi-file layout the readers already
-consume (`spark.read.format("readstat").load(dir)` unions part files
-with per-file partition fan-out), so dir-write → dir-read roundtrips.
+SCALE.md names that bound. This path removes it. Each
+``write_*_partitioned`` is a thin facade over the distributed sink's
+part-file writer (writers/spark_sink.py): a global pre-pass job
+resolves one column plan (string widths, dta integer narrowing) so
+every part-file shares a single schema, then one generic
+``mapInArrow`` task per partition streams its batches through the
+zone-map accumulator into ``write_part`` and the driver publishes the
+``_prs_stats.json`` manifest. The output directory is exactly the
+multi-file layout the readers already consume
+(`spark.read.format("readstat").load(dir)` unions part files with
+per-file partition fan-out), so dir-write → dir-read roundtrips.
 
 On a real cluster the directory must be storage every executor can
 reach (NFS/fuse-mounted object store); tasks write to a temp name and
@@ -23,97 +27,61 @@ import os
 from pyspark.sql import DataFrame
 
 
-def _zone_kinds(df: DataFrame, fmt: str):
-    """(name, kind) pairs for the zone-map accumulator, derived from
-    the Spark schema with the sink's own mapping — best-effort: a
-    schema plan_write can't express just skips the stats."""
-    try:
-        from polars_readstat_spark.writers.spark_sink import plan_write
-
-        _, _, names, _, kinds = plan_write(df.schema, {"format": fmt})
-        return list(zip(names, kinds))
-    except Exception:  # noqa: BLE001 — stats are an optimization
-        return None
-
-
-def _zone_acc(zone_kinds, fmt="", bloom_cols=(), bloom_max_bytes=None):
-    """Per-task ZoneMapStats (None when the schema has no stats plan).
-    Tasks see the cast frames for sav/xpt/sas7bdat — harmless: date
-    kinds are excluded from stats entirely, plain numerics cast to
-    identical logical doubles, strings pass through unchanged. fmt
-    enables format-specific numeric poisoning (xpt IBM-float range).
-    Stripe accumulation is on (sink default) so the bulk exporters
-    publish the same intra-file pruning geometry as the sink."""
-    if not zone_kinds:
-        return None
+def _write_parts(
+    src: DataFrame, dir_path: str, plan, bloom_columns=(),
+    bloom_max_bytes=None,
+) -> list[dict]:
+    """Run the one per-partition write task over ``src`` (already in
+    ``plan``'s column order and on-disk representation; ``plan`` is a
+    spark_sink.PartPlan) and publish the manifest. Empty partitions write no file. Returns
+    [{"path", "n_rows"}, ...] per written part."""
+    from polars_readstat_spark.sources.fs import fs_makedirs
     from polars_readstat_spark.writers.spark_sink import (
-        ZoneMapStats,
-        _stripe_rows_opt,
+        TASK_RESULT_SCHEMA,
+        publish_task_results,
     )
 
-    return ZoneMapStats(
-        [n for n, _ in zone_kinds],
-        [k for _, k in zone_kinds],
-        fmt,
-        stripe_rows=_stripe_rows_opt({}),
-        bloom_cols=bloom_cols,
-        bloom_max_bytes=bloom_max_bytes,
+    fs_makedirs(dir_path)
+
+    def task(batches):
+        from pyspark import TaskContext
+
+        from polars_readstat_spark.sources.fs import fs_join, fs_move
+        from polars_readstat_spark.writers.spark_sink import (
+            ZoneMapStats,
+            _stripe_rows_opt,
+            task_result_batch,
+            write_part,
+        )
+
+        # stripes at the sink's default geometry, so the bulk exports
+        # publish the same intra-file pruning as the sink. Date kinds
+        # arrive as format-epoch numbers in sav/xpt/sas7bdat; the
+        # accumulator maps them back to epoch days by fmt.
+        acc = ZoneMapStats(
+            plan.names, plan.kinds, plan.fmt,
+            stripe_rows=_stripe_rows_opt({}),
+            bloom_cols=bloom_columns,
+            bloom_max_bytes=bloom_max_bytes,
+        )
+
+        def frames():
+            for batch in batches:
+                if batch.num_rows:
+                    acc.add(batch)
+                    yield batch.to_pandas()
+
+        pid = TaskContext.get().partitionId()
+        path = fs_join(dir_path, f"part-{pid:05d}.{plan.fmt}")
+        tmp = path + f".tmp{os.getpid()}"
+        n, payload = write_part(tmp, plan, frames(), acc)
+        if n:
+            fs_move(tmp, path)
+            yield task_result_batch([(path, n, payload)])
+
+    return publish_task_results(
+        src.mapInArrow(task, TASK_RESULT_SCHEMA).collect()
     )
-
-
-def _stats_json(acc) -> str:
-    """Task-result stats payload: {"cols": ..., "stripes": ...} (the
-    pre-r13 flat-dict form is still accepted by _publish)."""
-    import json
-
-    if acc is None:
-        return ""
-    return json.dumps(
-        {
-            "cols": acc.stats,
-            "stripes": acc.stripes_payload(),
-            "blooms": acc.bloom_payload(),
-        }
-    )
-
-
-def _publish(dir_path: str, results) -> None:
-    """Driver-side manifest publish from the collected task rows
-    (path, n_rows, stats-json). merge=True keeps valid entries from a
-    previous export into the same directory — stale ones are defused
-    by the reader's size+mtime validation anyway."""
-    import json
-
-    from polars_readstat_spark.writers.spark_sink import (
-        publish_stats_manifest,
-    )
-
-    parts = []
-    for r in results:
-        if not getattr(r, "stats", ""):
-            continue
-        try:
-            doc = json.loads(r.stats)
-        except ValueError:
-            continue
-        if (
-            isinstance(doc, dict)
-            and set(doc) <= {"cols", "stripes", "blooms"}
-            and isinstance(doc.get("cols"), dict)
-        ):
-            parts.append(
-                (
-                    r.path,
-                    r.n_rows,
-                    doc["cols"],
-                    doc.get("stripes"),
-                    doc.get("blooms"),
-                )
-            )
-        else:  # pre-r13 flat stats dict
-            parts.append((r.path, r.n_rows, doc))
-    if parts:
-        publish_stats_manifest(dir_path, parts, merge=True)
 
 
 def write_dta_partitioned(
@@ -132,69 +100,27 @@ def write_dta_partitioned(
     partitions are skipped). All parts share the column plan from one
     global pre-pass, so a directory scan unions them cleanly."""
     from polars_readstat_spark.writers.dta import (
-        _assemble_dta,
         _finalize_cols,
-        _pack_stream,
         _plan_columns,
     )
+    from polars_readstat_spark.writers.spark_sink import PartPlan, plan_write
 
-    variable_labels = variable_labels or {}
-    value_labels = value_labels or {}
-    plan, aggs = _plan_columns(df)
+    dta_plan, aggs = _plan_columns(df)
     stats = df.agg(*aggs).collect()[0].asDict()
-    cols = _finalize_cols(plan, stats)
-    names = [c[0] for c in cols]
-    from polars_readstat_spark.sources.fs import fs_makedirs
-
-    fs_makedirs(dir_path)
-
-    def write_partition(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        acc = _zone_acc(
-            zone_kinds, "dta", bloom_columns, bloom_max_bytes
-        )
-
-        def tap(it):
-            for pdf in it:
-                if acc is not None:
-                    acc.add_pandas(pdf)
-                yield pdf
-
-        data, strls, n_rows = _pack_stream(cols, tap(batches))
-        if n_rows > 0:
-            out = _assemble_dta(
-                cols, data, strls, n_rows, data_label, variable_labels,
-                value_labels,
-            )
-            from polars_readstat_spark.sources.fs import fs_join, fs_move, fs_open_output
-
-            path = fs_join(dir_path, f"part-{pid:05d}.dta")
-            tmp = path + f".tmp{os.getpid()}"
-            with fs_open_output(tmp) as f:
-                f.write(out)
-            fs_move(tmp, path)
-            yield pd.DataFrame(
-                {
-                    "path": [path],
-                    "n_rows": [n_rows],
-                    "stats": [_stats_json(acc)],
-                }
-            )
-
-    zone_kinds = _zone_kinds(df, "dta")
-    results = (
-        df.select(*names)
-        .mapInPandas(
-            write_partition, schema="path string, n_rows long, stats string"
-        )
-        .collect()
+    cols = _finalize_cols(dta_plan, stats)
+    _, fields, names, _, kinds = plan_write(df.schema, {"format": "dta"})
+    return _write_parts(
+        df.select(*names),
+        dir_path,
+        PartPlan(
+            "dta", fields, names, None, kinds, [], cols,
+            data_label=data_label,
+            variable_labels=variable_labels or {},
+            value_labels=value_labels or {},
+        ),
+        bloom_columns,
+        bloom_max_bytes,
     )
-    _publish(dir_path, results)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
 
 
 def write_sav_partitioned(
@@ -217,85 +143,28 @@ def write_sav_partitioned(
     partition; blocks stay independently decompressible for the
     reader's block-range partitioning)."""
     from polars_readstat_spark.writers.sav import (
-        _pack_columns,
         _sav_cast,
         _sav_columns,
-        _sav_dictionary,
         _sav_widths,
     )
+    from polars_readstat_spark.writers.spark_sink import PartPlan
 
-    variable_labels = variable_labels or {}
-    value_labels = value_labels or {}
-    measures = measures or {}
     fields, names, shorts, kinds, aggs = _sav_columns(df)
     stats = df.agg(*aggs).collect()[0].asDict()
-    widths = _sav_widths(fields, kinds, stats)
-    el_per = [max((w + 7) // 8, 1) if w else 1 for w in widths]
-    case_size = sum(el_per)
-    from polars_readstat_spark.sources.fs import fs_makedirs
-
-    fs_makedirs(dir_path)
-    src = _sav_cast(df, fields, kinds)
-
-    def write_partition(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        acc = _zone_acc(
-            zone_kinds, "sav", bloom_columns, bloom_max_bytes
-        )
-        data = bytearray()
-        n_rows = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if acc is not None:
-                acc.add_pandas(pdf)
-            data += _pack_columns(
-                [pdf[nm] for nm in names], kinds, widths, el_per, case_size
-            )
-            n_rows += len(pdf)
-        if n_rows > 0:
-            head = _sav_dictionary(
-                fields, names, shorts, kinds, widths, el_per, case_size,
-                n_rows, zsav, data_label, variable_labels, value_labels,
-                measures,
-            )
-            ext = "zsav" if zsav else "sav"
-            from polars_readstat_spark.sources.fs import fs_join, fs_move, fs_open_output
-
-            path = fs_join(dir_path, f"part-{pid:05d}.{ext}")
-            tmp = path + f".tmp{os.getpid()}"
-            with fs_open_output(tmp) as f:
-                f.write(bytes(head))
-                if zsav:
-                    from polars_readstat_spark.writers.sav import _ZlibSink
-
-                    zs = _ZlibSink(f, len(head))
-                    zs.write(bytes(data))
-                    zs.close()
-                else:
-                    f.write(bytes(data))
-            fs_move(tmp, path)
-            yield pd.DataFrame(
-                {
-                    "path": [path],
-                    "n_rows": [n_rows],
-                    "stats": [_stats_json(acc)],
-                }
-            )
-
-    zone_kinds = list(zip(names, kinds))
-    results = (
-        src.mapInPandas(
-            write_partition, schema="path string, n_rows long, stats string"
-        )
-        .collect()
+    return _write_parts(
+        _sav_cast(df, fields, kinds),
+        dir_path,
+        PartPlan(
+            "zsav" if zsav else "sav", fields, names, shorts, kinds,
+            _sav_widths(fields, kinds, stats),
+            data_label=data_label,
+            variable_labels=variable_labels or {},
+            value_labels=value_labels or {},
+            measures=measures or {},
+        ),
+        bloom_columns,
+        bloom_max_bytes,
     )
-    _publish(dir_path, results)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
 
 
 def write_xpt_partitioned(
@@ -309,99 +178,31 @@ def write_xpt_partitioned(
     bloom_max_bytes: int | None = None,
 ) -> list[dict]:
     """Write one .xpt per partition into ``dir_path``. XPT carries no
-    row count in its header, so each task writes header + its packed
-    records + the 80-byte tail pad directly; string widths come from
-    the one global pre-pass."""
+    row count in its header, so each task streams header + its packed
+    records + the 80-byte tail pad; string widths come from the one
+    global pre-pass."""
     from polars_readstat_spark.writers.xpt import (
-        _pack_xpt,
         _xpt_cast,
         _xpt_columns,
-        _xpt_header,
         _xpt_widths,
     )
+    from polars_readstat_spark.writers.spark_sink import PartPlan
 
-    variable_labels = variable_labels or {}
     fields, names, shorts, kinds, aggs = _xpt_columns(df)
     stats = df.agg(*aggs).collect()[0].asDict()
-    widths = _xpt_widths(fields, kinds, stats)
-    record_width = sum(widths)
-    head = bytes(
-        _xpt_header(
-            fields, shorts, kinds, widths, dataset_name, variable_labels,
-            version,
-        )
+    return _write_parts(
+        _xpt_cast(df, fields, kinds),
+        dir_path,
+        PartPlan(
+            "xpt", fields, names, shorts, kinds,
+            _xpt_widths(fields, kinds, stats),
+            dataset_name=dataset_name,
+            variable_labels=variable_labels or {},
+            version=version,
+        ),
+        bloom_columns,
+        bloom_max_bytes,
     )
-    from polars_readstat_spark.sources.fs import fs_makedirs
-
-    fs_makedirs(dir_path)
-    src = _xpt_cast(df, fields, kinds)
-
-    def write_partition(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        acc = _zone_acc(
-            zone_kinds, "xpt", bloom_columns, bloom_max_bytes
-        )
-        data = bytearray()
-        n_rows = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if acc is not None:
-                acc.add_pandas(pdf)
-            data += _pack_xpt(
-                [pdf[nm] for nm in names], kinds, widths, record_width
-            )
-            n_rows += len(pdf)
-        if n_rows > 0:
-            from polars_readstat_spark.sources.fs import fs_join, fs_move, fs_open_output
-
-            path = fs_join(dir_path, f"part-{pid:05d}.xpt")
-            tmp = path + f".tmp{os.getpid()}"
-            with fs_open_output(tmp) as f:
-                f.write(head)
-                f.write(bytes(data))
-                f.write(b" " * ((-len(data)) % 80))
-            fs_move(tmp, path)
-            if acc is not None:
-                from polars_readstat_spark.writers.spark_sink import (
-                    stats_reader_keys,
-                )
-
-                acc.stats = stats_reader_keys(
-                    acc.stats, "xpt", names, shorts
-                )
-                acc.bloom = stats_reader_keys(
-                    acc.bloom, "xpt", names, shorts
-                )
-                # stripe children carry the long names too — re-key
-                # them the same way or the reader's refutation
-                # lookups never match (the r12 XPT lesson, at stripe
-                # granularity)
-                for s in acc.stripes:
-                    s.stats = stats_reader_keys(
-                        s.stats, "xpt", names, shorts
-                    )
-            yield pd.DataFrame(
-                {
-                    "path": [path],
-                    "n_rows": [n_rows],
-                    "stats": [_stats_json(acc)],
-                }
-            )
-
-    zone_kinds = list(zip(names, kinds))
-    results = (
-        src.mapInPandas(
-            write_partition, schema="path string, n_rows long, stats string"
-        )
-        .collect()
-    )
-    _publish(dir_path, results)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
 
 
 def write_sas7bdat_partitioned(
@@ -416,7 +217,7 @@ def write_sas7bdat_partitioned(
     bloom_max_bytes: int | None = None,
 ) -> list[dict]:
     """Write one .sas7bdat per partition into ``dir_path``. Each task
-    assembles a complete file (header + meta page + data pages) and
+    streams a complete file (header + meta page + data pages) and
     back-patches its own row/page counts locally, so no global count
     job is needed — only the string-width pre-pass is shared.
     ``compress='rle'`` emits SASYZCRL row-compressed META pages."""
@@ -424,66 +225,25 @@ def write_sas7bdat_partitioned(
         _sas_cast,
         _sas_columns,
         _sas_widths,
-        _SasFileSink,
     )
+    from polars_readstat_spark.writers.spark_sink import PartPlan
 
-    variable_labels = variable_labels or {}
     fields, names, kinds, aggs = _sas_columns(df)
     stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
-    widths = _sas_widths(fields, kinds, stats)
-    src = _sas_cast(df, fields, kinds)
-    from polars_readstat_spark.sources.fs import fs_makedirs
-
-    fs_makedirs(dir_path)
-
-    def write_partition(batches):
-        import pandas as pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        from polars_readstat_spark.sources.fs import fs_join, fs_move, fs_open_output
-
-        path = fs_join(dir_path, f"part-{pid:05d}.sas7bdat")
-        tmp = path + f".tmp{os.getpid()}"
-        acc = _zone_acc(
-            zone_kinds, "sas7bdat", bloom_columns, bloom_max_bytes
-        )
-        fh = sink = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if acc is not None:
-                acc.add_pandas(pdf)
-            if fh is None:
-                fh = fs_open_output(tmp)
-                sink = _SasFileSink(
-                    fh, fields, names, kinds, widths, dataset_name,
-                    variable_labels, page_length, compress,
-                )
-            sink.write_batch([pdf[nm] for nm in names])
-        if fh is not None:
-            n_rows = sink.n_rows
-            sink.close()
-            fh.close()
-            fs_move(tmp, path)
-            yield pd.DataFrame(
-                {
-                    "path": [path],
-                    "n_rows": [n_rows],
-                    "stats": [_stats_json(acc)],
-                }
-            )
-
-    zone_kinds = list(zip(names, kinds))
-    results = (
-        src.mapInPandas(
-            write_partition, schema="path string, n_rows long, stats string"
-        )
-        .collect()
+    return _write_parts(
+        _sas_cast(df, fields, kinds),
+        dir_path,
+        PartPlan(
+            "sas7bdat", fields, names, None, kinds,
+            _sas_widths(fields, kinds, stats),
+            dataset_name=dataset_name,
+            variable_labels=variable_labels or {},
+            page_length=page_length,
+            compress=compress,
+        ),
+        bloom_columns,
+        bloom_max_bytes,
     )
-    _publish(dir_path, results)
-    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
 
 
 def write_readstat_partitioned(df: DataFrame, dir_path: str, ext: str = "dta", **kwargs):

@@ -11,8 +11,16 @@ Each executor task assembles one complete part-file for its partition
 a dot-prefixed name and renamed by the driver-side ``commit`` so a
 failed job never leaves torn files visible; ``abort`` removes the
 staging. On a real cluster the directory must be storage both the
-executors and the driver can reach (the same contract as
-writers/partitioned.py).
+executors and the driver can reach.
+
+This module also owns the one part-file writer every distributed
+export shares: ``write_partition_file`` lays out a file from a
+resolved ``PartPlan``, and ``write_part`` adds the staged write's
+manifest payload (zone maps, stripes, blooms keyed by reader names).
+The batch and streaming sinks and each hive chunk resolve their plan
+per partition (``write_sink_part``: no pre-pass); the partitioned
+exporters (writers/partitioned.py) resolve one from a global pre-pass
+and run the same ``write_part`` in a generic ``mapInArrow`` task.
 
 Supported formats: ``sas7bdat`` (plus ``compress=rle``), ``sav``,
 ``zsav`` (zlib block container), ``xpt``, and ``dta``. The first four
@@ -35,7 +43,7 @@ from __future__ import annotations
 
 import os
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from polars_readstat_spark.sources.fs import (
     fs_open_output as _fs_open_output,
@@ -93,9 +101,9 @@ def plan_write(schema, options):
     """Driver-side column plan from the declared schema alone.
 
     Returns (fmt, fields, names, shorts, kinds): `shorts` is None for
-    formats that keep full names (sas7bdat, dta). dta's kinds are
-    unused — its column plan is built schema-only in _write_dta_part
-    (see module docstring)."""
+    formats that keep full names (sas7bdat, dta). dta's kinds drive
+    only the zone maps — its column types are planned schema-only in
+    _dta_sink_cols (see module docstring)."""
     fmt = (options.get("format") or options.get("ext") or "").lstrip(".").lower()
     if not fmt:
         path = options.get("path", "")
@@ -229,9 +237,10 @@ class ZoneMapStats:
     ≥ ~8.99e307, SPSS sysmis is -DBL_MAX) read back as NULL, ±inf
     silently lands as 0.0 in xpt's IBM floats, and xpt flushes
     magnitudes below 16^-65 (~5.4e-79) to 0.0 — each a value outside
-    the recorded range (review r12). Columns are looked up BY NAME so
-    batches built from pandas frames (the partitioned writers)
-    accumulate the same way as the sink's Arrow batches."""
+    the recorded range (review r12). Columns are looked up BY NAME,
+    so the partitioned exporters' cast-frame batches (format-epoch
+    dates, double numerics) accumulate the same way as the sink's
+    logical Arrow batches."""
 
     # |v| at/above this may be a missing code on disk (dta missing
     # doubles start at 0x7fe0... ≈ 8.988e307; sav sysmis = -DBL_MAX);
@@ -499,20 +508,6 @@ class ZoneMapStats:
             return pc.cast(r, pa.int64())
         return None
 
-    def add_pandas(self, pdf) -> None:
-        """Accumulate from a pandas frame (partitioned-writer tasks):
-        one Arrow conversion of the stats-relevant columns only.
-        pandas NaN/None become Arrow nulls, matching how the packers
-        treat them (missing sentinels → read back as null)."""
-        import pyarrow as pa
-
-        cols = [c for c in self.stats if c in pdf.columns]
-        if not cols:
-            return
-        self.add(
-            pa.RecordBatch.from_pandas(pdf[cols], preserve_index=False)
-        )
-
 
 def convert_batches(
     batches, names, kinds, fmt, stripe_rows=0, bloom_cols=(),
@@ -644,8 +639,8 @@ def publish_stats_manifest(dir_path, parts, merge=True) -> None:
     ZoneMapStats.stats dict and stripes an optional
     ``stripes_payload()`` fragment (per-row-span zone maps — the
     intra-file pruning geometry). ``merge=True`` keeps existing
-    entries (append mode); shared by the distributed sink and the
-    partitioned bulk exporters."""
+    entries (append mode); shared by the distributed sink, the hive
+    writer and the partitioned bulk exporters."""
     import json
 
     from polars_readstat_spark.sources.fs import (
@@ -703,108 +698,161 @@ def publish_stats_manifest(dir_path, parts, merge=True) -> None:
         pass
 
 
-def write_partition_file(
-    staged_path, fmt, fields, names, shorts, kinds, frames, widths_map,
-    options,
-):
-    """Assemble one part-file from converted pandas frames."""
-    if fmt == "dta":
-        return _write_dta_part(
-            staged_path, fields, names, frames, widths_map, options
+@dataclass
+class PartPlan:
+    """A resolved column plan: everything ``write_partition_file``
+    needs to lay out a part-file before it sees a row. ``widths`` are
+    on-disk byte widths per column (sav: 0 for numerics); dta carries
+    its (name, kind, width, fmt) tuples in ``dta_cols`` instead. The
+    sink resolves one per partition (``write_sink_part``); the
+    partitioned exporters resolve one per export from their global
+    pre-pass."""
+
+    fmt: str
+    fields: list
+    names: list
+    shorts: list | None
+    kinds: list
+    widths: list
+    dta_cols: list | None = None
+    dataset_name: str = "DATA"
+    data_label: str = ""
+    variable_labels: dict = field(default_factory=dict)
+    value_labels: dict = field(default_factory=dict)
+    measures: dict = field(default_factory=dict)
+    version: int = 5
+    page_length: int | None = None
+    compress: str | None = None
+
+
+def write_partition_file(staged_path, plan: PartPlan, frames) -> int:
+    """The one part-file assembler. Lays out ``plan``'s file at
+    ``staged_path`` from pandas ``frames`` — consumed once, in order,
+    empty frames skipped — and returns its row count. sas7bdat and
+    xpt stream frame by frame; sav and dta headers carry the row
+    count, so those hold only the packed bytes until the end. No rows
+    → no file, 0."""
+    from itertools import chain
+
+    frames = (pdf for pdf in frames if len(pdf))
+    names, kinds, widths = plan.names, plan.kinds, plan.widths
+    if plan.fmt == "dta":
+        from polars_readstat_spark.writers.dta import (
+            _assemble_dta,
+            _pack_stream,
         )
-    limit = _STR_LIMIT[fmt]
-    widths = []
-    for f, k in zip(fields, kinds):
-        if k == "str":
-            w = widths_map.get(f.name, 1)
-            if w > limit:
-                raise ValueError(
-                    f"write readstat: column {f.name} wider than {limit} "
-                    f"bytes ({fmt} char limit)"
-                )
-            widths.append(w)
-        else:
-            widths.append(0 if fmt in ("sav", "zsav") else 8)
-    n_rows = sum(len(p) for p in frames)
 
-    if fmt == "sas7bdat":
-        from polars_readstat_spark.writers.sas7bdat import _SasFileSink
-
-        with _fs_open_output(staged_path) as fh:
-            sink = _SasFileSink(
-                fh, fields, names, kinds, widths,
-                options.get("dataset_name", "DATA"), {},
-                int(options["page_length"]) if options.get("page_length") else None,
-                options.get("compress"),
+        data, strls, n_rows = _pack_stream(plan.dta_cols, frames)
+        if n_rows:
+            out = _assemble_dta(
+                plan.dta_cols, data, strls, n_rows, plan.data_label,
+                plan.variable_labels, plan.value_labels,
             )
-            for pdf in frames:
-                if len(pdf):
-                    sink.write_batch([pdf[n] for n in names])
-            sink.close()
-    elif fmt in ("sav", "zsav"):
+            with _fs_open_output(staged_path) as fh:
+                fh.write(out)
+        return n_rows
+    if plan.fmt in ("sav", "zsav"):
         from polars_readstat_spark.writers.sav import (
             _pack_columns,
             _sav_dictionary,
             _ZlibSink,
         )
 
-        zsav = fmt == "zsav"
+        zsav = plan.fmt == "zsav"
         el_per = [max((w + 7) // 8, 1) if w else 1 for w in widths]
         case_size = sum(el_per)
-        head = _sav_dictionary(
-            fields, names, shorts, kinds, widths, el_per, case_size,
-            n_rows, zsav, options.get("data_label", ""), {}, {}, {},
-        )
-        with _fs_open_output(staged_path) as fh:
-            fh.write(bytes(head))
-            sink = _ZlibSink(fh, len(head)) if zsav else fh
+        data = bytearray()
+        n_rows = 0
+        for pdf in frames:
+            data += _pack_columns(
+                [pdf[n] for n in names], kinds, widths, el_per, case_size
+            )
+            n_rows += len(pdf)
+        if n_rows:
+            head = _sav_dictionary(
+                plan.fields, names, plan.shorts, kinds, widths, el_per,
+                case_size, n_rows, zsav, plan.data_label,
+                plan.variable_labels, plan.value_labels, plan.measures,
+            )
+            with _fs_open_output(staged_path) as fh:
+                fh.write(bytes(head))
+                if zsav:
+                    zs = _ZlibSink(fh, len(head))
+                    zs.write(data)
+                    zs.close()
+                else:
+                    fh.write(data)
+        return n_rows
+    first = next(frames, None)
+    if first is None:
+        return 0
+    frames = chain([first], frames)
+    with _fs_open_output(staged_path) as fh:
+        if plan.fmt == "sas7bdat":
+            from polars_readstat_spark.writers.sas7bdat import _SasFileSink
+
+            sink = _SasFileSink(
+                fh, plan.fields, names, kinds, widths, plan.dataset_name,
+                plan.variable_labels, plan.page_length, plan.compress,
+            )
             for pdf in frames:
-                if len(pdf):
-                    sink.write(
-                        _pack_columns(
-                            [pdf[n] for n in names], kinds, widths,
-                            el_per, case_size,
-                        )
-                    )
-            if zsav:
-                sink.close()
-    else:  # xpt
+                sink.write_batch([pdf[n] for n in names])
+            sink.close()
+            return sink.n_rows
         from polars_readstat_spark.writers.xpt import _pack_xpt, _xpt_header
 
-        record_width = sum(w if k == "str" else 8 for w, k in zip(widths, kinds))
-        head = bytes(
-            _xpt_header(
-                fields, shorts, kinds, widths,
-                options.get("dataset_name", "DATA"), {}, 5,
+        fh.write(
+            bytes(
+                _xpt_header(
+                    plan.fields, plan.shorts, kinds, widths,
+                    plan.dataset_name, plan.variable_labels, plan.version,
+                )
             )
         )
-        with _fs_open_output(staged_path) as fh:
-            fh.write(head)
-            total = 0
-            for pdf in frames:
-                if len(pdf):
-                    raw = _pack_xpt(
-                        [pdf[n] for n in names], kinds, widths, record_width
-                    )
-                    fh.write(raw)
-                    total += len(raw)
-            fh.write(b" " * ((-total) % 80))
+        record_width = sum(widths)
+        n_rows = 0
+        for pdf in frames:
+            fh.write(
+                _pack_xpt([pdf[n] for n in names], kinds, widths, record_width)
+            )
+            n_rows += len(pdf)
+        fh.write(b" " * ((-n_rows * record_width) % 80))
     return n_rows
 
 
-def _write_dta_part(staged_path, fields, names, frames, widths_map, options):
-    """dta part-file with a schema-deterministic, sentinel-safe column
-    plan: every partition maps the same Spark type to the same Stata
+def write_part(staged_path, plan: PartPlan, frames, acc):
+    """Every distributed writer's per-task write: stage the part-file
+    (``write_partition_file``) and return ``(n_rows, (stats, stripes,
+    blooms))`` — the manifest payload, keyed by what the READER calls
+    the columns (xpt's uppercase shorts; stripe children and blooms
+    re-key the same way or the refutation lookups never match).
+    ``acc`` must have seen every row once ``frames`` is exhausted.
+    No rows → ``(0, None)`` and no file."""
+    n_rows = write_partition_file(staged_path, plan, frames)
+    if not n_rows:
+        return 0, None
+
+    def rekey(stats):
+        return stats_reader_keys(stats, plan.fmt, plan.names, plan.shorts)
+
+    stripes = acc.stripes_payload()
+    if stripes is not None:
+        stripes["cols"] = [rekey(c) for c in stripes["cols"]]
+    blooms = acc.bloom_payload()
+    if blooms is not None:
+        blooms = rekey(blooms)
+    return n_rows, (rekey(acc.stats), stripes, blooms)
+
+
+def _dta_sink_cols(fields, frames, widths_map) -> list[tuple]:
+    """The sink's schema-deterministic, sentinel-safe dta column plan:
+    every partition maps the same Spark type to the same Stata
     type regardless of its values, so part-files always union under
     one schema (write_dta's stats-tightened narrowing would let two
     partitions disagree). tinyint→int and smallint→long clear the
     Stata missing-sentinel bands; int/bigint→double is exact to ±2^53
     with a loud per-partition guard beyond (mirroring write_dta)."""
-    from polars_readstat_spark.writers.dta import (
-        _DOUBLE_EXACT_INT,
-        _assemble_dta,
-        _pack_stream,
-    )
+    from polars_readstat_spark.writers.dta import _DOUBLE_EXACT_INT
 
     cols = []
     bigcheck = []
@@ -850,13 +898,97 @@ def _write_dta_part(staged_path, fields, names, frames, widths_map, options):
                     "outside ±2^53; Stata's widest numeric type (double) "
                     "cannot represent them exactly"
                 )
-    data, strls, n_rows = _pack_stream(cols, frames)
-    out = _assemble_dta(
-        cols, data, strls, n_rows, options.get("data_label", ""), {}, {},
+    return cols
+
+
+def write_sink_part(staged_path, batches, schema_plan, options):
+    """The sink's task body (batch sink, streaming sink and each hive
+    chunk): convert the Arrow batches, resolve this partition's plan,
+    and ``write_part``. The sink has no pre-pass, so string widths
+    come from this partition's own data (checked against the format's
+    limit) and dta types from the schema alone. Labels stay empty;
+    ``data_label``/``dataset_name``/``page_length``/``compress`` come
+    from the write options. Returns ``write_part``'s (n_rows,
+    payload)."""
+    fmt, fields, names, shorts, kinds = schema_plan
+    frames, widths_map, acc = convert_batches(
+        batches, names, kinds, fmt,
+        stripe_rows=_stripe_rows_opt(options),
+        bloom_cols=_bloom_cols_opt(options),
+        bloom_max_bytes=_bloom_max_bytes_opt(options),
     )
-    with _fs_open_output(staged_path) as fh:
-        fh.write(out)
-    return n_rows
+    widths, dta_cols = [], None
+    if fmt == "dta":
+        dta_cols = _dta_sink_cols(fields, frames, widths_map)
+    else:
+        limit = _STR_LIMIT[fmt]
+        for f, k in zip(fields, kinds):
+            if k != "str":
+                widths.append(0 if fmt in ("sav", "zsav") else 8)
+                continue
+            w = widths_map.get(f.name, 1)
+            if w > limit:
+                raise ValueError(
+                    f"write readstat: column {f.name} wider than {limit} "
+                    f"bytes ({fmt} char limit)"
+                )
+            widths.append(w)
+    plan = PartPlan(
+        fmt, fields, names, shorts, kinds, widths, dta_cols,
+        dataset_name=options.get("dataset_name", "DATA"),
+        data_label=options.get("data_label", ""),
+        page_length=(
+            int(options["page_length"]) if options.get("page_length") else None
+        ),
+        compress=options.get("compress"),
+    )
+
+    def drain():
+        # hand the frames over one at a time, dropping each as it is
+        # packed: the list and the packed bytes never coexist in full
+        frames.reverse()
+        while frames:
+            yield frames.pop()
+
+    return write_part(staged_path, plan, drain(), acc)
+
+
+# mapInArrow write tasks (partitioned, hive) report one row per file
+TASK_RESULT_SCHEMA = "path string, n_rows long, stats string"
+
+
+def task_result_batch(rows):
+    """[(path, n_rows, payload)] → the Arrow batch a write task
+    yields; the payload travels as JSON to the driver."""
+    import json
+
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([r[0] for r in rows], pa.string()),
+            pa.array([r[1] for r in rows], pa.int64()),
+            pa.array([json.dumps(r[2]) for r in rows], pa.string()),
+        ],
+        names=["path", "n_rows", "stats"],
+    )
+
+
+def publish_task_results(results) -> list[dict]:
+    """Driver side of the mapInArrow writers: one ``_prs_stats.json``
+    per directory the collected task rows wrote into (merge=True keeps
+    valid entries from earlier exports; stale ones are defused by the
+    reader's size+mtime validation). Returns [{"path", "n_rows"}]."""
+    import json
+
+    by_dir: dict[str, list] = {}
+    for r in results:
+        by_dir.setdefault(os.path.dirname(r.path), []).append(
+            (r.path, r.n_rows, *json.loads(r.stats))
+        )
+    for d, parts in by_dir.items():
+        publish_stats_manifest(d, parts, merge=True)
+    return [{"path": r.path, "n_rows": r.n_rows} for r in results]
 
 
 class ReadstatDataSourceWriter(DataSourceArrowWriter):
@@ -870,9 +1002,8 @@ class ReadstatDataSourceWriter(DataSourceArrowWriter):
         self.options = dict(options)
         self.options["path"] = path
         self.overwrite = overwrite
-        self.fmt, self.fields, self.names, self.shorts, self.kinds = (
-            plan_write(schema, self.options)
-        )
+        self.schema_plan = plan_write(schema, self.options)
+        self.fmt = self.schema_plan[0]
         self.run_id = uuid.uuid4().hex[:12]
         from polars_readstat_spark.sources.fs import fs_makedirs
 
@@ -881,22 +1012,11 @@ class ReadstatDataSourceWriter(DataSourceArrowWriter):
     def write(self, iterator):
         from pyspark import TaskContext
 
+        from polars_readstat_spark.sources.fs import fs_join
+
         ctx = TaskContext.get()
         pid = ctx.partitionId()
         attempt = ctx.taskAttemptId()
-        # stream straight off the iterator: holding the Arrow batches
-        # AND the converted frames would double the partition's peak
-        frames, widths, acc = convert_batches(
-            iterator, self.names, self.kinds, self.fmt,
-            stripe_rows=_stripe_rows_opt(self.options),
-            bloom_cols=_bloom_cols_opt(self.options),
-            bloom_max_bytes=_bloom_max_bytes_opt(self.options),
-        )
-        stats = acc.stats
-        if not any(len(p) for p in frames):
-            return _PartMessage("", "", 0)
-        from polars_readstat_spark.sources.fs import fs_join
-
         final = fs_join(
             self.path, f"part-{pid:05d}-{self.run_id}.{self.fmt}"
         )
@@ -906,27 +1026,14 @@ class ReadstatDataSourceWriter(DataSourceArrowWriter):
             self.path,
             f".staged-{self.run_id}-a{attempt}-part-{pid:05d}.{self.fmt}",
         )
-        n = write_partition_file(
-            staged, self.fmt, self.fields, self.names, self.shorts,
-            self.kinds, frames, widths, self.options,
+        # stream straight off the iterator: holding the Arrow batches
+        # AND the converted frames would double the partition's peak
+        n, payload = write_sink_part(
+            staged, iterator, self.schema_plan, self.options
         )
-        stats = stats_reader_keys(stats, self.fmt, self.names, self.shorts)
-        stripes = acc.stripes_payload()
-        if stripes is not None:
-            stripes["cols"] = [
-                stats_reader_keys(c, self.fmt, self.names, self.shorts)
-                for c in stripes["cols"]
-            ]
-        blooms = acc.bloom_payload()
-        if blooms is not None:
-            # same re-key rule as the stats: manifest keys must match
-            # what the READER calls the columns (xpt shorts)
-            blooms = stats_reader_keys(
-                blooms, self.fmt, self.names, self.shorts
-            )
-        return _PartMessage(
-            staged, final, n, stats=stats, stripes=stripes, blooms=blooms
-        )
+        if not n:
+            return _PartMessage("", "", 0)
+        return _PartMessage(staged, final, n, pid, *payload)
 
     def commit(self, messages):
         from polars_readstat_spark.sources.fs import (
@@ -991,9 +1098,8 @@ class ReadstatStreamWriter(DataSourceStreamArrowWriter):
         self.path = path
         self.options = dict(options)
         self.options["path"] = path
-        self.fmt, self.fields, self.names, self.shorts, self.kinds = (
-            plan_write(schema, self.options)
-        )
+        self.schema_plan = plan_write(schema, self.options)
+        self.fmt = self.schema_plan[0]
         from polars_readstat_spark.sources.fs import fs_makedirs
 
         fs_makedirs(path)
@@ -1003,46 +1109,22 @@ class ReadstatStreamWriter(DataSourceStreamArrowWriter):
 
         from polars_readstat_spark.sources.fs import fs_join
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
+        pid = TaskContext.get().partitionId()
+        staged = fs_join(
+            self.path,
+            f".staged-stream-{uuid.uuid4().hex[:12]}-p{pid:05d}.{self.fmt}",
+        )
         # the accumulator runs over the batches anyway — publishing
         # its zone maps (and opt-in blooms) at commit gives the
         # landing directory file skipping for free (round 13: before
         # this the stats were computed and DISCARDED, so streamed
         # lakes needed a separate index_zonemaps pass)
-        frames, widths, acc = convert_batches(
-            iterator, self.names, self.kinds, self.fmt,
-            stripe_rows=_stripe_rows_opt(self.options),
-            bloom_cols=_bloom_cols_opt(self.options),
-            bloom_max_bytes=_bloom_max_bytes_opt(self.options),
+        n, payload = write_sink_part(
+            staged, iterator, self.schema_plan, self.options
         )
-        if not any(len(p) for p in frames):
+        if not n:
             return _PartMessage("", "", 0, pid)
-        staged = fs_join(
-            self.path,
-            f".staged-stream-{uuid.uuid4().hex[:12]}-p{pid:05d}.{self.fmt}",
-        )
-        n = write_partition_file(
-            staged, self.fmt, self.fields, self.names, self.shorts,
-            self.kinds, frames, widths, self.options,
-        )
-        stats = stats_reader_keys(
-            acc.stats, self.fmt, self.names, self.shorts
-        )
-        stripes = acc.stripes_payload()
-        if stripes is not None:
-            stripes["cols"] = [
-                stats_reader_keys(c, self.fmt, self.names, self.shorts)
-                for c in stripes["cols"]
-            ]
-        blooms = acc.bloom_payload()
-        if blooms is not None:
-            blooms = stats_reader_keys(
-                blooms, self.fmt, self.names, self.shorts
-            )
-        return _PartMessage(
-            staged, "", n, pid, stats=stats, stripes=stripes, blooms=blooms
-        )
+        return _PartMessage(staged, "", n, pid, *payload)
 
     def commit(self, messages, batchId):
         from polars_readstat_spark.sources.fs import fs_join, fs_move

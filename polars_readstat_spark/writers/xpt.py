@@ -153,11 +153,10 @@ def write_xpt(
     out = _xpt_header(
         fields, shorts, kinds, widths, dataset_name, variable_labels, version
     )
-    src = _xpt_cast(
-        df, fields, kinds,
-        extra=[F.col(c).cast("string").alias(f"__tag_{i}")
-               for i, c in enumerate(ind_names)],
-    )
+    tag_exprs = [
+        F.col(c).cast("string").alias(f"__tag_{i}")
+        for i, c in enumerate(ind_names)
+    ]
 
     # packing (incl. IEEE→IBM) runs on the executors; the driver only
     # concatenates fixed-width records in partition order. Big exports
@@ -189,10 +188,6 @@ def write_xpt(
         "polars_readstat_spark.writers.tagged",
         "polars_readstat_spark.writers",
     )
-    tag_exprs = [
-        F.col(c).cast("string").alias(f"__tag_{i}")
-        for i, c in enumerate(ind_names)
-    ]
     # wide protocol: cast AFTER the repartition (guide §2.3) — the
     # range-bounds sampling pass then re-executes only the bare scan
     # + order tags, not the date/double casts (same fix as sav)
@@ -206,7 +201,10 @@ def write_xpt(
             ),
         )
         if int(stats["__n"]) >= 100_000
-        else iter_packed_chunks(src, pack_fn, 8192, modules=xpt_mods)
+        else iter_packed_chunks(
+            _xpt_cast(df, fields, kinds, extra=tag_exprs),
+            pack_fn, 8192, modules=xpt_mods,
+        )
     )
     with fs_open_output(path) as fh:
         fh.write(bytes(out))

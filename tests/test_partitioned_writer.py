@@ -142,3 +142,47 @@ def test_xpt_roundtrip_dir_write_dir_read(spark, tmp_path):
     rows = {int(r.K): r for r in back.collect()}
     assert rows[9999].S == "row9999" and rows[9999].V == 9999 * 2.5
     assert str(rows[0].D) == "2020-01-01"
+
+
+@pytest.mark.parametrize("ext", ["sav", "dta"])
+def test_labels_reach_every_part(spark, tmp_path, ext):
+    """data_label, variable labels and value labels pass through to
+    every part-file's own metadata, not just the first."""
+    from pyspark.sql import functions as F
+
+    import polars_readstat_spark as prs
+    from polars_readstat_spark.sources.dta.meta import parse_dta_meta
+    from polars_readstat_spark.sources.sav.meta import parse_sav_meta
+
+    df = (
+        spark.range(400)
+        .repartition(4)
+        .select(
+            (F.col("id") % 2 + 1).cast("int").alias("sex"),
+            F.concat(F.lit("r"), F.col("id")).alias("name"),
+        )
+    )
+    d = str(tmp_path / f"labels_{ext}")
+    res = prs.write_readstat_partitioned(
+        df, d, ext=ext,
+        data_label="Survey wave 3",
+        variable_labels={"sex": "Respondent sex", "name": "Full name"},
+        value_labels={"sex": {1: "Male", 2: "Female"}},
+    )
+    files = sorted(glob.glob(os.path.join(d, f"part-*.{ext}")))
+    assert len(files) == len(res) == 4
+    for f in files:
+        if ext == "sav":
+            m = parse_sav_meta(f)
+            assert m.file_label == "Survey wave 3"
+            v = {x.name: x for x in m.variables}
+            assert v["sex"].label == "Respondent sex"
+            assert v["name"].label == "Full name"
+            assert v["sex"].value_labels == {1.0: "Male", 2.0: "Female"}
+        else:
+            m = parse_dta_meta(f)
+            assert m.data_label == "Survey wave 3"
+            v = {x.name: x for x in m.variables}
+            assert v["sex"].varlabel == "Respondent sex"
+            assert v["name"].varlabel == "Full name"
+            assert m.value_labels[v["sex"].lblname] == {1: "Male", 2: "Female"}

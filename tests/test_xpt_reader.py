@@ -6,6 +6,8 @@ cannot read) self-validates against in-file string twin columns.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -13,8 +15,12 @@ import pytest
 import polars_readstat_spark as prs
 
 X = "/root/reference/crates/polars_readstat_rs/tests/sas/data/xpt/"
+needs_corpus = pytest.mark.skipif(
+    not os.path.isdir(X), reason="corpus missing"
+)
 
 
+@needs_corpus
 @pytest.mark.parametrize("fn", ["ACQ_G.xpt", "sample.xpt"])
 def test_v5_matches_pandas(fn, spark):
     p = X + fn
@@ -39,6 +45,7 @@ def test_v5_matches_pandas(fn, spark):
         assert ((a == b) | (np.isnan(a) & np.isnan(b))).all(), v.name
 
 
+@needs_corpus
 def test_v5_date_promotion(spark):
     # collect(), not toPandas(): the file carries year-1583 dates that
     # overflow datetime64[ns]
@@ -49,6 +56,7 @@ def test_v5_date_promotion(spark):
     assert rows[4]["MYDATE"] is None
 
 
+@needs_corpus
 def test_v8_reads_with_string_twins(spark):
     rows = prs.scan_readstat(spark, X + "dates_xpt_v8.xpt").collect()
     assert len(rows) == 19
@@ -59,6 +67,7 @@ def test_v8_reads_with_string_twins(spark):
             assert str(d) == s
 
 
+@needs_corpus
 def test_options_and_partitions(spark):
     p = X + "ACQ_G.xpt"
     full = prs.scan_readstat(spark, p).toPandas()

@@ -11,8 +11,9 @@ emission) twice in one session:
      transformWithStateInPandas StatefulProcessor (RocksDB state store,
      per-bucket value state of the same array schema).
 
-Prints best-of-N walls for both and asserts the emitted row MULTISETS
-are equal (the oracle's currency). Adoption gate per VERDICT r13: B
+Checks the emitted row MULTISETS are equal (the oracle's currency)
+and exits 1 before any timing when they differ; otherwise prints
+best-of-N walls for both. Adoption gate per VERDICT r13: B
 must beat A's 4-batch drain by >20% with identical output; otherwise
 the applyInPandasWithState floor is documented in SCALE.md and the
 item closes.
@@ -26,6 +27,7 @@ import os
 import sys
 import time
 import uuid
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -172,14 +174,21 @@ def main() -> None:
                 spark.conf.set(key, prior)
 
     # equality first (the gate's precondition), then walls
-    rows_a = sorted(tuple(r) for r in run_a().collect())
-    rows_b = sorted(tuple(r) for r in run_b().collect())
-    print(f"rows A={len(rows_a)} B={len(rows_b)} equal={rows_a == rows_b}")
-    if rows_a != rows_b:
-        only_a = set(rows_a) - set(rows_b)
-        only_b = set(rows_b) - set(rows_a)
-        print(f"  only_a sample: {sorted(only_a)[:5]}")
-        print(f"  only_b sample: {sorted(only_b)[:5]}")
+    rows_a = Counter(tuple(r) for r in run_a().collect())
+    rows_b = Counter(tuple(r) for r in run_b().collect())
+    equal = rows_a == rows_b
+    print(
+        f"rows A={rows_a.total()} B={rows_b.total()} equal={equal}"
+    )
+    if not equal:
+        # Counter subtraction keeps multiplicity: a row emitted twice
+        # by A and once by B shows up in only_a
+        only_a = rows_a - rows_b
+        only_b = rows_b - rows_a
+        print(f"  only_a sample: {sorted(only_a.items())[:5]}")
+        print(f"  only_b sample: {sorted(only_b.items())[:5]}")
+        spark.stop()
+        sys.exit(1)
 
     for tag, fn in (("A_applyInPandasWithState", run_a),
                     ("B_transformWithState", run_b)):
