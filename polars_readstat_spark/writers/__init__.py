@@ -2,12 +2,141 @@
 file formats. Single-file formats with row-count headers ⇒ a pre-pass
 aggregation job (widths/counts/ranges) + a driver-side streaming
 assembly over Arrow chunks (iter_arrow_chunks — the Spark translation
-of the reference's two-pass sink_stata, pybindings.rs:951-1096)."""
+of the reference's two-pass sink_stata, pybindings.rs:951-1096).
+
+The column plan every path shares (single file, partitioned, sink) also
+lives here: Spark type → kind (``column_kinds``), the pre-pass
+(``prepass_aggs``), string-width limits (``str_widths``) and the epoch
+casts (``to_disk``). dta plans its own integer narrowing."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# ---- the column plan shared by every non-dta writer and the sink ----
+# SAS counts from 1960-01-01, SPSS from 1582-10-14 (1970-01-01 = 0)
+SAS_DAY_SHIFT = 3653
+SAS_SEC_SHIFT = 315_619_200
+SPSS_SEC_SHIFT = 12_219_379_200
+
+# (date multiplier, date shift, datetime seconds shift) per format:
+# an on-disk date is (days since 1970 + shift) * multiplier
+_EPOCH = {
+    "sas7bdat": (1.0, float(SAS_DAY_SHIFT), float(SAS_SEC_SHIFT)),
+    "xpt": (1.0, float(SAS_DAY_SHIFT), float(SAS_SEC_SHIFT)),
+    "sav": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
+    "zsav": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
+    "por": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
+}
+# max string byte width per format (None: unlimited)
+_STR_LIMIT = {"sas7bdat": 32767, "sav": 255, "zsav": 255, "xpt": 200, "por": None}
+# on-disk numeric width where the layout records one (others: 0)
+_NUM_WIDTH = {"sas7bdat": 8, "xpt": 8}
+_NUMERIC = (
+    "tinyint", "smallint", "int", "bigint", "float", "double", "boolean",
+    "void",  # an all-null column: written as an all-missing numeric
+)
+
+
+def column_kinds(fields, fmt: str) -> list[str]:
+    """Spark type → on-disk kind per field: str | date | datetime |
+    time | num. Pure (no SparkSession): the sink's planning worker
+    calls it too. Any other type raises ValueError naming the column,
+    before a job runs."""
+    if fmt == "sas7bdat":
+        for f in fields:
+            if len(f.name.encode("utf-8")) > 32:
+                raise ValueError(
+                    f"write sas7bdat: column name {f.name!r} exceeds the "
+                    "32-byte sas7bdat name limit"
+                )
+    kinds = []
+    for f in fields:
+        t = f.dataType.simpleString()
+        if t == "string":
+            kinds.append("str")
+        elif t == "date":
+            kinds.append("date")
+        elif t.startswith("timestamp"):
+            kinds.append("datetime")
+        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
+            kinds.append("time")
+        elif t in _NUMERIC or t.startswith("decimal"):
+            kinds.append("num")
+        else:
+            raise ValueError(
+                f"write {fmt}: unsupported type {t} for column {f.name!r}"
+            )
+    return kinds
+
+
+def prepass_aggs(fields, kinds, fmt: str) -> list[Column]:
+    """The pre-pass aggregation: the row count (``__n``; sas7bdat
+    back-patches its header instead) and each string column's max
+    UTF-8 byte width (``__w_<name>``). Empty → run no job."""
+    aggs = [] if fmt == "sas7bdat" else [F.count(F.lit(1)).alias("__n")]
+    return aggs + [
+        F.max(F.octet_length(f.name)).alias(f"__w_{f.name}")
+        for f, k in zip(fields, kinds)
+        if k == "str"
+    ]
+
+
+def str_widths(fmt, fields, kinds, width_of, numeric_lengths=None) -> list[int]:
+    """On-disk byte width per column. Strings take ``width_of(name)``
+    (a pre-pass stat or a partition's own max; at least 1) and must
+    fit the format's limit; numerics take the format's fixed width, or
+    sas7bdat's ``LENGTH`` 3-8 from ``numeric_lengths``."""
+    limit = _STR_LIMIT[fmt]
+    numeric_lengths = numeric_lengths or {}
+    widths = []
+    for f, k in zip(fields, kinds):
+        if k == "str":
+            w = max(int(width_of(f.name) or 1), 1)
+            if limit is not None and w > limit:
+                raise ValueError(
+                    f"write {fmt}: column {f.name!r} has strings wider "
+                    f"than {limit} bytes (the {fmt} limit)"
+                )
+        elif f.name in numeric_lengths:
+            w = int(numeric_lengths[f.name])
+            if not 3 <= w <= 8:
+                raise ValueError(
+                    f"write {fmt}: numeric_lengths[{f.name!r}]={w} "
+                    "outside SAS's LENGTH 3-8 range"
+                )
+        else:
+            w = _NUM_WIDTH.get(fmt, 0)
+        widths.append(w)
+    return widths
+
+
+def to_disk(df, fmt, fields, kinds, extra=()):
+    """Select every column in the format's on-disk representation:
+    numerics as double, dates/datetimes shifted to the format epoch,
+    ns-since-midnight times as seconds, strings as-is. ``extra``
+    appends pass-through columns (e.g. the wide protocol's order
+    tags)."""
+    mul, dadd, sec = _EPOCH[fmt]
+    sel = []
+    for f, k in zip(fields, kinds):
+        c = F.col(f.name)
+        if k == "num":
+            c = c.cast("double")
+        elif k == "date":
+            c = (
+                # day-count epochs shift in integers, then widen
+                (F.unix_date(c) + int(dadd)).cast("double")
+                if mul == 1.0
+                else F.unix_date(c).cast("double") * mul + sec
+            )
+        elif k == "datetime":
+            c = ts_epoch_seconds(c) + sec
+        elif k == "time":
+            c = c.cast("double") / 1e9
+        sel.append(c.alias(f.name))
+    return df.select(*sel, *extra)
 
 
 def ts_epoch_seconds(c: Column) -> Column:

@@ -106,7 +106,9 @@ def _plan_columns(df: DataFrame):
 
 
 def _finalize_cols(plan, stats) -> list[tuple]:
-    """Pre-pass stats → concrete (name, kind, width, fmt) per column."""
+    """Pre-pass stats → concrete (name, kind, width, fmt) per column.
+    Kinds ending in ``?`` narrow from the stats' min/max; the rest
+    (the sink's schema-only plan passes only these) are final."""
     cols = []
     _INT_ORDER = ("byte", "int", "long")
     _FITS = {
@@ -160,21 +162,21 @@ def _finalize_cols(plan, stats) -> list[tuple]:
                 cols.append((name, "strl", 8, "%9s"))
             else:
                 cols.append((name, "str", w, f"%{max(w, 9)}s"))
-        elif kind == "byte":
-            cols.append((name, "byte", 1, "%8.0g"))
-        elif kind == "int":
-            cols.append((name, "int", 2, "%8.0g"))
-        elif kind == "long":
-            cols.append((name, "long", 4, "%12.0g"))
-        elif kind == "float":
-            cols.append((name, "float", 4, "%9.0g"))
-        elif kind == "double":
-            cols.append((name, "double", 8, "%10.0g"))
-        elif kind == "date":
-            cols.append((name, "date", 4, "%td"))
-        elif kind == "datetime":
-            cols.append((name, "datetime", 8, "%tc"))
+        else:
+            cols.append((name, kind, *_LAYOUT[kind]))
     return cols
+
+
+# (byte width, display format) per fixed-width Stata kind
+_LAYOUT = {
+    "byte": (1, "%8.0g"),
+    "int": (2, "%8.0g"),
+    "long": (4, "%12.0g"),
+    "float": (4, "%9.0g"),
+    "double": (8, "%10.0g"),
+    "date": (4, "%td"),
+    "datetime": (8, "%tc"),
+}
 
 
 _TYPECODE = {

@@ -84,6 +84,28 @@ def _write_parts(
     )
 
 
+def _write_planned(
+    df: DataFrame, dir_path: str, fmt: str, bloom_columns=(),
+    bloom_max_bytes=None, **plan_opts,
+) -> list[dict]:
+    """sav/zsav/xpt/sas7bdat: the sink's column plan plus one global
+    pre-pass for string widths, so every part shares one layout."""
+    from polars_readstat_spark.writers import prepass_aggs, str_widths, to_disk
+    from polars_readstat_spark.writers.spark_sink import PartPlan, plan_write
+
+    fmt, fields, names, shorts, kinds = plan_write(df.schema, {"format": fmt})
+    aggs = prepass_aggs(fields, kinds, fmt)
+    stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
+    widths = str_widths(fmt, fields, kinds, lambda n: stats.get(f"__w_{n}"))
+    return _write_parts(
+        to_disk(df, fmt, fields, kinds),
+        dir_path,
+        PartPlan(fmt, fields, names, shorts, kinds, widths, **plan_opts),
+        bloom_columns,
+        bloom_max_bytes,
+    )
+
+
 def write_dta_partitioned(
     df: DataFrame,
     dir_path: str,
@@ -103,17 +125,20 @@ def write_dta_partitioned(
         _finalize_cols,
         _plan_columns,
     )
-    from polars_readstat_spark.writers.spark_sink import PartPlan, plan_write
+    from polars_readstat_spark.writers import column_kinds
+    from polars_readstat_spark.writers.spark_sink import PartPlan
 
     dta_plan, aggs = _plan_columns(df)
     stats = df.agg(*aggs).collect()[0].asDict()
     cols = _finalize_cols(dta_plan, stats)
-    _, fields, names, _, kinds = plan_write(df.schema, {"format": "dta"})
+    fields = df.schema.fields
+    names = [f.name for f in fields]
     return _write_parts(
         df.select(*names),
         dir_path,
         PartPlan(
-            "dta", fields, names, None, kinds, [], cols,
+            "dta", fields, names, None, column_kinds(fields, "dta"), [],
+            cols,
             data_label=data_label,
             variable_labels=variable_labels or {},
             value_labels=value_labels or {},
@@ -142,28 +167,13 @@ def write_sav_partitioned(
     part's case data in the ZLIB block container (one .zsav per
     partition; blocks stay independently decompressible for the
     reader's block-range partitioning)."""
-    from polars_readstat_spark.writers.sav import (
-        _sav_cast,
-        _sav_columns,
-        _sav_widths,
-    )
-    from polars_readstat_spark.writers.spark_sink import PartPlan
-
-    fields, names, shorts, kinds, aggs = _sav_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict()
-    return _write_parts(
-        _sav_cast(df, fields, kinds),
-        dir_path,
-        PartPlan(
-            "zsav" if zsav else "sav", fields, names, shorts, kinds,
-            _sav_widths(fields, kinds, stats),
-            data_label=data_label,
-            variable_labels=variable_labels or {},
-            value_labels=value_labels or {},
-            measures=measures or {},
-        ),
-        bloom_columns,
+    return _write_planned(
+        df, dir_path, "zsav" if zsav else "sav", bloom_columns,
         bloom_max_bytes,
+        data_label=data_label,
+        variable_labels=variable_labels or {},
+        value_labels=value_labels or {},
+        measures=measures or {},
     )
 
 
@@ -181,27 +191,11 @@ def write_xpt_partitioned(
     row count in its header, so each task streams header + its packed
     records + the 80-byte tail pad; string widths come from the one
     global pre-pass."""
-    from polars_readstat_spark.writers.xpt import (
-        _xpt_cast,
-        _xpt_columns,
-        _xpt_widths,
-    )
-    from polars_readstat_spark.writers.spark_sink import PartPlan
-
-    fields, names, shorts, kinds, aggs = _xpt_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict()
-    return _write_parts(
-        _xpt_cast(df, fields, kinds),
-        dir_path,
-        PartPlan(
-            "xpt", fields, names, shorts, kinds,
-            _xpt_widths(fields, kinds, stats),
-            dataset_name=dataset_name,
-            variable_labels=variable_labels or {},
-            version=version,
-        ),
-        bloom_columns,
-        bloom_max_bytes,
+    return _write_planned(
+        df, dir_path, "xpt", bloom_columns, bloom_max_bytes,
+        dataset_name=dataset_name,
+        variable_labels=variable_labels or {},
+        version=version,
     )
 
 
@@ -221,28 +215,12 @@ def write_sas7bdat_partitioned(
     back-patches its own row/page counts locally, so no global count
     job is needed — only the string-width pre-pass is shared.
     ``compress='rle'`` emits SASYZCRL row-compressed META pages."""
-    from polars_readstat_spark.writers.sas7bdat import (
-        _sas_cast,
-        _sas_columns,
-        _sas_widths,
-    )
-    from polars_readstat_spark.writers.spark_sink import PartPlan
-
-    fields, names, kinds, aggs = _sas_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
-    return _write_parts(
-        _sas_cast(df, fields, kinds),
-        dir_path,
-        PartPlan(
-            "sas7bdat", fields, names, None, kinds,
-            _sas_widths(fields, kinds, stats),
-            dataset_name=dataset_name,
-            variable_labels=variable_labels or {},
-            page_length=page_length,
-            compress=compress,
-        ),
-        bloom_columns,
-        bloom_max_bytes,
+    return _write_planned(
+        df, dir_path, "sas7bdat", bloom_columns, bloom_max_bytes,
+        dataset_name=dataset_name,
+        variable_labels=variable_labels or {},
+        page_length=page_length,
+        compress=compress,
     )
 
 

@@ -34,13 +34,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_readstat_spark.sources.por.b30 import _parse_base30
-from polars_readstat_spark.writers import ts_epoch_seconds
-
-
-from polars_readstat_spark.sources.por.reader import (
-    _POS_ASCII,
-    SPSS_SEC_SHIFT,
+from polars_readstat_spark.sources.por.reader import _POS_ASCII
+from polars_readstat_spark.writers import (
+    column_kinds,
+    prepass_aggs,
+    str_widths,
+    to_disk,
 )
+
+
 def _por_safe_table() -> bytes:
     """latin-1 byte → portable-charset byte; anything outside the
     portable charset becomes '?'. The format cannot carry other bytes:
@@ -742,44 +744,10 @@ def write_por(
     names = [f.name for f in fields]
     por_names = _por_names(names)
 
-    kinds = []
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-            aggs.append(F.max(F.octet_length(f.name)).alias(f"__w_{f.name}"))
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        else:
-            kinds.append("num")
-    stats = df.agg(*aggs).collect()[0].asDict()
-    widths = [
-        max(int(stats.get(f"__w_{f.name}") or 1), 1) if k == "str" else 0
-        for f, k in zip(fields, kinds)
-    ]
-
-    sel = []
-    for f, k in zip(fields, kinds):
-        c = F.col(f.name)
-        if k == "num":
-            sel.append(c.cast("double").alias(f.name))
-        elif k == "date":
-            sel.append(
-                (F.unix_date(c).cast("double") * 86400.0 + float(SPSS_SEC_SHIFT))
-                .alias(f.name)
-            )
-        elif k == "datetime":
-            sel.append((ts_epoch_seconds(c) + float(SPSS_SEC_SHIFT)).alias(f.name))
-        elif k == "time":
-            sel.append((c.cast("double") / 1e9).alias(f.name))
-        else:
-            sel.append(c.alias(f.name))
-    src = df.select(*sel)
+    kinds = column_kinds(fields, "por")
+    stats = df.agg(*prepass_aggs(fields, kinds, "por")).collect()[0].asDict()
+    widths = str_widths("por", fields, kinds, lambda n: stats.get(f"__w_{n}"))
+    src = to_disk(df, "por", fields, kinds)
 
     now = datetime.datetime.now()
     from polars_readstat_spark.sources.fs import fs_open_output
@@ -854,13 +822,14 @@ def write_por(
         # wide protocol: cast AFTER the repartition (guide §2.3) — the
         # range-bounds sampling pass then re-executes only the bare
         # scan + order tags, not the date/double casts (same fix as
-        # sav/xpt; `sel` resolves by name on the shuffled frame)
+        # sav/xpt)
         chunks = (
             iter_ordered_packed(
                 df, lambda pdf: _pack_por_chunk(pdf, kinds_l), 8192,
                 modules=por_mods,
-                cast=lambda b: b.select(
-                    *sel, F.col("__prs_mid"), F.col("__prs_cid")
+                cast=lambda b: to_disk(
+                    b, "por", fields, kinds,
+                    extra=[F.col("__prs_mid"), F.col("__prs_cid")],
                 ),
             )
             if int(stats["__n"]) >= 100_000

@@ -23,7 +23,7 @@ Type mapping (the inverse of sources/sas7bdat/decode.py):
 - numerics → 8-byte IEEE little-endian doubles (NaN is a SAS missing)
 - date     → days since 1960-01-01, format DATE
 - timestamp→ seconds since 1960-01-01 (fractional µs), format DATETIME
-- bigint tagged time=ns_since_midnight → seconds, format TIME
+- bigint tagged as nanoseconds since midnight → seconds, format TIME
 - string   → fixed width (global max octet length), space padded
 
 Reference parity target: the reference has NO sas7bdat writer
@@ -41,7 +41,13 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.writers import str_cell_matrix, ts_epoch_seconds
+from polars_readstat_spark.writers import (
+    column_kinds,
+    prepass_aggs,
+    str_cell_matrix,
+    str_widths,
+    to_disk,
+)
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
     parse_tag_offsets as _parse_tag_offsets,
@@ -68,85 +74,6 @@ SIG_COL_TEXT = b"\xfd\xff\xff\xff\xff\xff\xff\xff"
 SIG_COL_NAME = b"\xff\xff\xff\xff\xff\xff\xff\xff"
 SIG_COL_ATTRS = b"\xfc\xff\xff\xff\xff\xff\xff\xff"
 SIG_FMT_LABEL = b"\xfe\xfb\xff\xff\xff\xff\xff\xff"
-
-# SAS epoch 1960-01-01 relative to Unix epoch (shared with the xpt
-# writer, which targets the same epoch)
-from polars_readstat_spark.writers.xpt import (  # noqa: E402
-    SAS_DAY_SHIFT,
-    SAS_SEC_SHIFT,
-)
-
-
-def _sas_columns(df: DataFrame):
-    fields = df.schema.fields
-    names = [f.name for f in fields]
-    for n in names:
-        if len(n.encode("utf-8")) > 32:
-            raise ValueError(
-                f"write_sas7bdat: column name {n!r} exceeds the 32-byte "
-                "sas7bdat name limit"
-            )
-    kinds = []
-    aggs = []
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-            aggs.append(F.max(F.octet_length(f.name)).alias(f"__w_{f.name}"))
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        else:
-            kinds.append("num")
-    return fields, names, kinds, aggs
-
-
-def _sas_widths(fields, kinds, stats, numeric_lengths=None) -> list[int]:
-    numeric_lengths = numeric_lengths or {}
-    widths = []
-    for f, k in zip(fields, kinds):
-        if k == "str":
-            w = max(int(stats.get(f"__w_{f.name}") or 1), 1)
-            if w > 32767:
-                raise ValueError(
-                    f"write_sas7bdat: column {f.name} wider than 32767 bytes "
-                    "(sas7bdat char column limit)"
-                )
-            widths.append(w)
-        else:
-            w = int(numeric_lengths.get(f.name, 8))
-            if not 3 <= w <= 8:
-                raise ValueError(
-                    f"write_sas7bdat: numeric_lengths[{f.name!r}]={w} "
-                    "outside SAS's LENGTH 3-8 range"
-                )
-            widths.append(w)
-    return widths
-
-
-def _sas_cast(df: DataFrame, fields, kinds, extra=()) -> DataFrame:
-    sel = []
-    for f, k in zip(fields, kinds):
-        c = F.col(f.name)
-        if k == "num":
-            sel.append(c.cast("double").alias(f.name))
-        elif k == "date":
-            sel.append(
-                (F.unix_date(c) + SAS_DAY_SHIFT).cast("double").alias(f.name)
-            )
-        elif k == "datetime":
-            sel.append(
-                (ts_epoch_seconds(c) + float(SAS_SEC_SHIFT)).alias(f.name)
-            )
-        elif k == "time":
-            sel.append((c.cast("double") / 1e9).alias(f.name))
-        else:
-            sel.append(c.alias(f.name))
-    return df.select(*sel, *extra)
-
 
 RLE_LITERAL = b"SASYZCRL"
 RDC_LITERAL = b"SASYZCR2"
@@ -1380,7 +1307,9 @@ def write_sas7bdat(
     tagged_missing = dict(tagged_missing or {})
     ind_names = list(dict.fromkeys(tagged_missing.values()))
     data_df = df.drop(*ind_names) if ind_names else df
-    fields, names, kinds, aggs = _sas_columns(data_df)
+    fields = data_df.schema.fields
+    names = [f.name for f in fields]
+    kinds = column_kinds(fields, "sas7bdat")
     for vcol, icol in tagged_missing.items():
         if vcol not in names or kinds[names.index(vcol)] == "str":
             raise ValueError(
@@ -1401,11 +1330,15 @@ def write_sas7bdat(
                 f"numeric_lengths: {c!r} is tagged-missing — tags live in "
                 "the mantissa tail that truncation drops"
             )
+    aggs = prepass_aggs(fields, kinds, "sas7bdat")
     stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
-    widths = _sas_widths(fields, kinds, stats, numeric_lengths)
+    widths = str_widths(
+        "sas7bdat", fields, kinds, lambda n: stats.get(f"__w_{n}"),
+        numeric_lengths,
+    )
     # indicator columns ride at the end of the stream, consumed at pack
-    src = _sas_cast(
-        df, fields, kinds,
+    src = to_disk(
+        df, "sas7bdat", fields, kinds,
         extra=[F.col(c).cast("string").alias(f"__tag_{i}")
                for i, c in enumerate(ind_names)],
     )
@@ -1498,7 +1431,7 @@ def write_sas7bdat(
         if two_stage:
             # JVM-tagged single-crossing protocol (round 13; see
             # writers.iter_ordered_packed): the shuffle carries the
-            # NARROW source types and the row-widening _sas_cast runs
+            # NARROW source types and the row-widening to_disk cast runs
             # post-shuffle on every core, as do pack + RLE/RDC encode.
             from polars_readstat_spark.writers import iter_ordered_packed
 
@@ -1508,8 +1441,8 @@ def write_sas7bdat(
             ]
 
             def cast_after(shuffled):
-                return _sas_cast(
-                    shuffled, fields, kinds,
+                return to_disk(
+                    shuffled, "sas7bdat", fields, kinds,
                     extra=tag_exprs
                     + [F.col("__prs_mid"), F.col("__prs_cid")],
                 )

@@ -27,8 +27,11 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SAS_DAY_SHIFT = 3653
-SAS_SEC_SHIFT = 315_619_200
+from polars_readstat_spark.writers import (
+    SAS_DAY_SHIFT,
+    SAS_SEC_SHIFT,
+    column_kinds,
+)
 
 
 def _sas_name(name: str, seen: set, maxlen: int = 32) -> str:
@@ -77,10 +80,10 @@ def write_sas_csv_import(
     kinds, lengths, formats = [], {}, {}
     sel = []
     aggs = []
-    for f, sn in zip(fields, sas_names):
+    for f, sn, k in zip(fields, sas_names, column_kinds(fields, "sas_csv")):
         t = f.dataType.simpleString()
         c = F.col(f.name)
-        if t == "string":
+        if k == "str":
             kinds.append("str")
             aggs.append(F.max(F.octet_length(f.name)).alias(f"__w_{f.name}"))
             sel.append(c.alias(sn))
@@ -88,11 +91,11 @@ def write_sas_csv_import(
             kinds.append("num")
             lengths[sn] = 3
             sel.append(c.cast("tinyint").alias(sn))
-        elif t == "date":
+        elif k == "date":
             kinds.append("num")
             formats[sn] = "yymmdd10."
             sel.append((F.unix_date(c) + SAS_DAY_SHIFT).alias(sn))
-        elif t.startswith("timestamp"):
+        elif k == "datetime":
             kinds.append("num")
             formats[sn] = "datetime19."
             # tz-free seconds-of-epoch: TIMESTAMP_NTZ cannot cast to
@@ -106,7 +109,7 @@ def write_sas_csv_import(
                 + F.second(c)
             )
             sel.append((secs + SAS_SEC_SHIFT).alias(sn))
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
+        elif k == "time":
             kinds.append("num")
             formats[sn] = "time8."
             sel.append((c / F.lit(1_000_000_000)).cast("long").alias(sn))

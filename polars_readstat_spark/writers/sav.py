@@ -39,10 +39,15 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.writers import str_cell_matrix, ts_epoch_seconds
+from polars_readstat_spark.writers import (
+    column_kinds,
+    prepass_aggs,
+    str_cell_matrix,
+    str_widths,
+    to_disk,
+)
 
 SYSMIS_BITS = 0xFFEFFFFFFFFFFFFF
-SPSS_SEC_SHIFT = 12_219_379_200
 
 
 def _short_names(names: list[str]) -> list[bytes]:
@@ -69,53 +74,6 @@ def _short_names(names: list[str]) -> list[bytes]:
 
 def _fmt_int(fmt_type: int, width: int, dec: int) -> int:
     return (fmt_type << 16) | (width << 8) | dec
-
-
-def _sav_columns(df: DataFrame):
-    """→ (fields, names, shorts, kinds, pre-pass aggs).
-    kind: num | date | datetime | time | str."""
-    fields = df.schema.fields
-    names = [f.name for f in fields]
-    shorts = _short_names(names)
-    kinds = []
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-            aggs.append(
-                F.max(F.octet_length(f.name)).alias(f"__w_{f.name}")
-            )
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        elif t in ("tinyint", "smallint", "int", "bigint", "float",
-                   "double", "boolean", "decimal", "short", "long") or t.startswith("decimal"):
-            kinds.append("num")
-        else:
-            raise ValueError(f"write_sav: unsupported type {t} for {f.name}")
-    return fields, names, shorts, kinds, aggs
-
-
-def _sav_widths(fields, kinds, stats) -> list[int]:
-    """String byte widths from pre-pass stats (0 for numeric)."""
-    widths = []
-    for f, k in zip(fields, kinds):
-        if k == "str":
-            w = stats.get(f"__w_{f.name}") or 1
-            w = max(int(w), 1)
-            if w > 255:
-                raise ValueError(
-                    f"write_sav: column {f.name} has strings wider than "
-                    "255 bytes (SPSS limit; reference writer.rs rejects too)"
-                )
-            widths.append(w)
-        else:
-            widths.append(0)
-    return widths
 
 
 def write_sav(
@@ -151,10 +109,14 @@ def write_sav(
         compress = False  # zsav's zlib layer subsumes it; stream
         # stays all-literal so our reader's parallel plan applies
 
-    fields, names, shorts, kinds, aggs = _sav_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict()
+    fmt = "zsav" if zsav else "sav"
+    fields = df.schema.fields
+    names = [f.name for f in fields]
+    shorts = _short_names(names)
+    kinds = column_kinds(fields, fmt)
+    stats = df.agg(*prepass_aggs(fields, kinds, fmt)).collect()[0].asDict()
     nrows = stats["__n"]
-    widths = _sav_widths(fields, kinds, stats)
+    widths = str_widths(fmt, fields, kinds, lambda n: stats.get(f"__w_{n}"))
 
     el_per = [max((w + 7) // 8, 1) if w else 1 for w in widths]
     case_size = sum(el_per)
@@ -166,7 +128,7 @@ def write_sav(
     )
 
     # ---- data: stream partitions, pack vectorized --------------------
-    src = _sav_cast(df, fields, kinds)
+    src = to_disk(df, fmt, fields, kinds)
 
     el_numeric = np.concatenate(
         [
@@ -219,8 +181,8 @@ def write_sav(
         chunks = (
             iter_ordered_packed(
                 df, pack_fn, 8192, modules=sav_mods,
-                cast=lambda b: _sav_cast(
-                    b, fields, kinds,
+                cast=lambda b: to_disk(
+                    b, fmt, fields, kinds,
                     extra=[F.col("__prs_mid"), F.col("__prs_cid")],
                 ),
             )
@@ -332,33 +294,6 @@ def _sav_dictionary(
     # dictionary terminator
     out += struct.pack("<2i", 999, 0)
     return out
-
-
-def _sav_cast(df: DataFrame, fields, kinds, extra=()) -> DataFrame:
-    """Select casts once so every batch arrives pre-converted (dates →
-    seconds since 1582, etc.). ``extra`` appends pass-through columns
-    (the wide protocol's __prs_mid/__prs_cid order tags)."""
-    sel = []
-    for i, f in enumerate(fields):
-        c = F.col(f.name)
-        k = kinds[i]
-        if k == "num":
-            sel.append(c.cast("double").alias(f.name))
-        elif k == "date":
-            # days since 1970 → seconds since 1582
-            sel.append(
-                (F.unix_date(c).cast("double") * 86400.0 + float(SPSS_SEC_SHIFT))
-                .alias(f.name)
-            )
-        elif k == "datetime":
-            sel.append(
-                (ts_epoch_seconds(c) + float(SPSS_SEC_SHIFT)).alias(f.name)
-            )
-        elif k == "time":
-            sel.append((c.cast("double") / 1e9).alias(f.name))
-        else:
-            sel.append(c.alias(f.name))
-    return df.select(*sel, *extra)
 
 
 _SYSMIS_LE = np.frombuffer(struct.pack("<Q", SYSMIS_BITS), dtype=np.uint8)

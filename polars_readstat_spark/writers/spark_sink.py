@@ -54,21 +54,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from polars_readstat_spark.writers.sas7bdat import (
-    SAS_DAY_SHIFT,
-    SAS_SEC_SHIFT,
-)
-from polars_readstat_spark.writers.sav import SPSS_SEC_SHIFT
-
-# (date multiplier, date shift, datetime seconds shift) per format,
-# from the writers' canonical epoch constants
-_EPOCH = {
-    "sas7bdat": (1.0, float(SAS_DAY_SHIFT), float(SAS_SEC_SHIFT)),
-    "xpt": (1.0, float(SAS_DAY_SHIFT), float(SAS_SEC_SHIFT)),
-    "sav": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
-    "zsav": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
-}
-_STR_LIMIT = {"sas7bdat": 32767, "sav": 255, "zsav": 255, "xpt": 200}
+from polars_readstat_spark.writers import _EPOCH, column_kinds, str_widths
 
 
 @dataclass
@@ -97,6 +83,10 @@ class _PartMessage(WriterCommitMessage):
     blooms: dict | None = None
 
 
+# por is single-file only (a legacy interchange format)
+_SINK_FORMATS = ("sas7bdat", "sav", "zsav", "xpt", "dta")
+
+
 def plan_write(schema, options):
     """Driver-side column plan from the declared schema alone.
 
@@ -109,51 +99,20 @@ def plan_write(schema, options):
         path = options.get("path", "")
         tail = os.path.basename(path)
         fmt = tail.rsplit(".", 1)[-1].lower() if "." in tail else ""
-    if fmt != "dta" and fmt not in _EPOCH:
+    if fmt not in _SINK_FORMATS:
         raise ValueError(
             f"df.write.format('readstat'): set .option('format', ...) to "
-            f"one of {sorted([*_EPOCH, 'dta'])} (got {fmt!r})"
+            f"one of {sorted(_SINK_FORMATS)} (got {fmt!r})"
         )
-    # this runs inside the Python planning worker (no SparkSession),
-    # so the kind mapping is replicated here without pyspark Columns —
-    # the rules mirror each writer's _*_columns exactly
     fields = schema.fields
     names = [f.name for f in fields]
-    kinds = []
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        elif t in (
-            "tinyint", "smallint", "int", "bigint", "float", "double",
-            "boolean",
-        ) or t.startswith("decimal"):
-            kinds.append("num")
-        else:
-            raise ValueError(
-                f"df.write.format('readstat'): unsupported type {t} "
-                f"for column {f.name}"
-            )
-    if fmt in ("sas7bdat", "dta"):
-        if fmt == "sas7bdat":
-            for n in names:
-                if len(n.encode("utf-8")) > 32:
-                    raise ValueError(
-                        f"write readstat: column name {n!r} exceeds the "
-                        "32-byte sas7bdat name limit"
-                    )
-        shorts = None
-    elif fmt in ("sav", "zsav"):
+    kinds = column_kinds(fields, fmt)
+    shorts = None
+    if fmt in ("sav", "zsav"):
         from polars_readstat_spark.writers.sav import _short_names
 
         shorts = _short_names(names)
-    else:
+    elif fmt == "xpt":
         from polars_readstat_spark.writers.xpt import _short_names
 
         shorts = _short_names(names)
@@ -844,61 +803,53 @@ def write_part(staged_path, plan: PartPlan, frames, acc):
     return n_rows, (rekey(acc.stats), stripes, blooms)
 
 
+# the sink's schema-only Stata kind per Spark type: tinyint→int and
+# smallint→long clear the Stata missing-sentinel bands; int/bigint→
+# double is exact to ±2^53 (bigint is guarded per partition)
+_DTA_SINK_KIND = {
+    "string": "str", "boolean": "byte", "tinyint": "int",
+    "smallint": "long", "int": "double", "bigint": "double",
+    "float": "double", "double": "double", "date": "date",
+    "timestamp": "datetime", "timestamp_ntz": "datetime",
+}
+
+
 def _dta_sink_cols(fields, frames, widths_map) -> list[tuple]:
     """The sink's schema-deterministic, sentinel-safe dta column plan:
     every partition maps the same Spark type to the same Stata
     type regardless of its values, so part-files always union under
     one schema (write_dta's stats-tightened narrowing would let two
-    partitions disagree). tinyint→int and smallint→long clear the
-    Stata missing-sentinel bands; int/bigint→double is exact to ±2^53
-    with a loud per-partition guard beyond (mirroring write_dta)."""
-    from polars_readstat_spark.writers.dta import _DOUBLE_EXACT_INT
+    partitions disagree). Beyond ±2^53 a bigint partition fails
+    loudly (mirroring write_dta)."""
+    from polars_readstat_spark.writers.dta import (
+        _DOUBLE_EXACT_INT,
+        _finalize_cols,
+    )
 
-    cols = []
-    bigcheck = []
+    plan = []
     for f in fields:
         t = f.dataType.simpleString()
-        n = f.name
-        if t == "string":
-            w = widths_map.get(n, 1)
-            if w > 2045:
-                cols.append((n, "strl", 8, "%9s"))
-            else:
-                cols.append((n, "str", w, f"%{max(w, 9)}s"))
-        elif t == "boolean":
-            cols.append((n, "byte", 1, "%8.0g"))
-        elif t == "tinyint":
-            cols.append((n, "int", 2, "%8.0g"))
-        elif t == "smallint":
-            cols.append((n, "long", 4, "%12.0g"))
-        elif t in ("int", "bigint"):
-            if t == "bigint":
-                bigcheck.append(n)
-            cols.append((n, "double", 8, "%10.0g"))
-        elif t in ("float", "double") or t.startswith("decimal"):
-            cols.append((n, "double", 8, "%10.0g"))
-        elif t == "date":
-            cols.append((n, "date", 4, "%td"))
-        elif t.startswith("timestamp"):
-            cols.append((n, "datetime", 8, "%tc"))
-        else:
+        kind = "double" if t.startswith("decimal") else _DTA_SINK_KIND.get(t)
+        if kind is None:
             raise ValueError(
-                f"write readstat: unsupported dta sink type {t} for {n}"
+                f"write readstat: unsupported dta sink type {t} for {f.name}"
             )
-    for n in bigcheck:
+        plan.append((f.name, kind))
+        if t != "bigint":
+            continue
         for pdf in frames:
-            if len(pdf) == 0:
-                continue
-            s = pdf[n].dropna()
+            s = pdf[f.name].dropna()
             if len(s) and (
                 s.min() < -_DOUBLE_EXACT_INT or s.max() > _DOUBLE_EXACT_INT
             ):
                 raise ValueError(
-                    f"write readstat: bigint column {n!r} holds values "
+                    f"write readstat: bigint column {f.name!r} holds values "
                     "outside ±2^53; Stata's widest numeric type (double) "
                     "cannot represent them exactly"
                 )
-    return cols
+    return _finalize_cols(
+        plan, {f"__w_{n}": w for n, w in widths_map.items()}
+    )
 
 
 def write_sink_part(staged_path, batches, schema_plan, options):
@@ -921,18 +872,7 @@ def write_sink_part(staged_path, batches, schema_plan, options):
     if fmt == "dta":
         dta_cols = _dta_sink_cols(fields, frames, widths_map)
     else:
-        limit = _STR_LIMIT[fmt]
-        for f, k in zip(fields, kinds):
-            if k != "str":
-                widths.append(0 if fmt in ("sav", "zsav") else 8)
-                continue
-            w = widths_map.get(f.name, 1)
-            if w > limit:
-                raise ValueError(
-                    f"write readstat: column {f.name} wider than {limit} "
-                    f"bytes ({fmt} char limit)"
-                )
-            widths.append(w)
+        widths = str_widths(fmt, fields, kinds, widths_map.get)
     plan = PartPlan(
         fmt, fields, names, shorts, kinds, widths, dta_cols,
         dataset_name=options.get("dataset_name", "DATA"),

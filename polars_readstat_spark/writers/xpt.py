@@ -24,16 +24,18 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.writers import str_cell_matrix, ts_epoch_seconds
+from polars_readstat_spark.writers import (
+    column_kinds,
+    prepass_aggs,
+    str_cell_matrix,
+    str_widths,
+    to_disk,
+)
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
     parse_tag_offsets as _parse_tag_offsets,
     xpt_tag_byte0 as _xpt_tag_byte0,
 )
-
-# SAS epoch 1960-01-01 relative to Unix epoch
-SAS_DAY_SHIFT = 3653
-SAS_SEC_SHIFT = 315_619_200
 
 
 def _pad80(b: bytes) -> bytes:
@@ -133,7 +135,10 @@ def write_xpt(
     tagged_missing = dict(tagged_missing or {})
     ind_names = list(dict.fromkeys(tagged_missing.values()))
     data_df = df.drop(*ind_names) if ind_names else df
-    fields, names, shorts, kinds, aggs = _xpt_columns(data_df)
+    fields = data_df.schema.fields
+    names = [f.name for f in fields]
+    shorts = _short_names(names)
+    kinds = column_kinds(fields, "xpt")
     for vcol, icol in tagged_missing.items():
         if vcol not in names or kinds[names.index(vcol)] == "str":
             raise ValueError(
@@ -143,8 +148,8 @@ def write_xpt(
             raise ValueError(
                 f"tagged_missing: indicator column {icol!r} not in DataFrame"
             )
-    stats = df.agg(*aggs).collect()[0].asDict()
-    widths = _xpt_widths(fields, kinds, stats)
+    stats = df.agg(*prepass_aggs(fields, kinds, "xpt")).collect()[0].asDict()
+    widths = str_widths("xpt", fields, kinds, lambda n: stats.get(f"__w_{n}"))
     record_width = sum(widths)
     ncols = len(names)
     tag_slot = {names.index(v): ncols + ind_names.index(i)
@@ -194,15 +199,15 @@ def write_xpt(
     chunks = (
         iter_ordered_packed(
             df, pack_fn, 8192, modules=xpt_mods,
-            cast=lambda b: _xpt_cast(
-                b, fields, kinds,
+            cast=lambda b: to_disk(
+                b, "xpt", fields, kinds,
                 extra=tag_exprs
                 + [F.col("__prs_mid"), F.col("__prs_cid")],
             ),
         )
         if int(stats["__n"]) >= 100_000
         else iter_packed_chunks(
-            _xpt_cast(df, fields, kinds, extra=tag_exprs),
+            to_disk(df, "xpt", fields, kinds, extra=tag_exprs),
             pack_fn, 8192, modules=xpt_mods,
         )
     )
@@ -213,44 +218,6 @@ def write_xpt(
             fh.write(payload)
             total += len(payload)
         fh.write(b" " * ((-total) % 80))
-
-
-def _xpt_columns(df: DataFrame):
-    fields = df.schema.fields
-    names = [f.name for f in fields]
-    shorts = _short_names(names)
-    kinds = []
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in fields:
-        t = f.dataType.simpleString()
-        if t == "string":
-            kinds.append("str")
-            aggs.append(F.max(F.octet_length(f.name)).alias(f"__w_{f.name}"))
-        elif t == "date":
-            kinds.append("date")
-        elif t.startswith("timestamp"):
-            kinds.append("datetime")
-        elif t == "bigint" and f.metadata.get("time") == "ns_since_midnight":
-            kinds.append("time")
-        else:
-            kinds.append("num")
-    return fields, names, shorts, kinds, aggs
-
-
-def _xpt_widths(fields, kinds, stats) -> list[int]:
-    widths = []
-    for f, k in zip(fields, kinds):
-        if k == "str":
-            w = max(int(stats.get(f"__w_{f.name}") or 1), 1)
-            if w > 200:
-                raise ValueError(
-                    f"write_xpt: column {f.name} wider than 200 bytes "
-                    "(v5 transport char limit)"
-                )
-            widths.append(w)
-        else:
-            widths.append(8)
-    return widths
 
 
 def _xpt_header(
@@ -327,23 +294,6 @@ def _xpt_header(
     else:
         out += _hdr("OBS")
     return out
-
-
-def _xpt_cast(df: DataFrame, fields, kinds, extra=()) -> DataFrame:
-    sel = []
-    for f, k in zip(fields, kinds):
-        c = F.col(f.name)
-        if k == "num":
-            sel.append(c.cast("double").alias(f.name))
-        elif k == "date":
-            sel.append((F.unix_date(c) + SAS_DAY_SHIFT).cast("double").alias(f.name))
-        elif k == "datetime":
-            sel.append((ts_epoch_seconds(c) + float(SAS_SEC_SHIFT)).alias(f.name))
-        elif k == "time":
-            sel.append((c.cast("double") / 1e9).alias(f.name))
-        else:
-            sel.append(c.alias(f.name))
-    return df.select(*sel, *extra)
 
 
 def _pack_xpt(cols_data, kinds, widths, record_width, tags_data=None) -> bytes:
