@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import os
 import time
+from operator import attrgetter
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
@@ -38,7 +40,13 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-_TRUE = {"1", "true", "yes"}
+from polars_readstat_spark.sources.partplan import (
+    ScanReader,
+    _opt_bool,
+    _opt_int,
+    column_names,
+    selected_indices,
+)
 
 
 def is_data_file(path: str) -> bool:
@@ -111,16 +119,6 @@ def _scrub_union_widened(file_stats: dict, float_cols: set) -> None:
         if isinstance(st, dict) and isinstance(st.get("cols"), list):
             for c in st["cols"]:
                 scrub(c)
-
-
-def _opt_bool(options, key: str, default: bool = False) -> bool:
-    v = options.get(key)
-    return default if v is None else str(v).lower() in _TRUE
-
-
-def _opt_int(options, key: str, default: int | None = None) -> int | None:
-    v = options.get(key)
-    return default if v in (None, "") else int(v)
 
 
 class ReadstatDataSource(DataSource):
@@ -323,25 +321,7 @@ class ReadstatDataSource(DataSource):
         if len(paths) > 1 and _opt_bool(self.options, "union_by_name"):
             return self._union_schema(paths)[0]
         fmt = self._format()
-        if fmt == "dta":
-            from polars_readstat_spark.sources.dta.meta import parse_dta_meta
-
-            return dta_spark_schema(parse_dta_meta(self._path()), self.options)
-        if fmt == "sas7bdat":
-            from polars_readstat_spark.sources.sas7bdat.meta import parse_sas_meta
-
-            return sas_spark_schema(parse_sas_meta(self._path()), self.options)
-        if fmt in ("sav", "zsav"):
-            from polars_readstat_spark.sources.sav.meta import parse_sav_meta
-
-            return sav_spark_schema(parse_sav_meta(self._path()), self.options)
-        if fmt == "por":
-            from polars_readstat_spark.sources.por.reader import parse_por
-
-            return por_spark_schema(parse_por(self._path())[0], self.options)
-        from polars_readstat_spark.sources.xpt.meta import parse_xpt_meta
-
-        return xpt_spark_schema(parse_xpt_meta(self._path()), self.options)
+        return spark_schema(fmt, _parse_meta(fmt, self._path()), self.options)
 
     def _union_schema(self, paths):
         """Schema-drift tolerance for multi-file scans (100 TB lakes
@@ -382,21 +362,17 @@ class ReadstatDataSource(DataSource):
                         True,
                         cur.metadata,
                     )
-        cols = self.options.get("columns")
-        if cols:
-            wanted = [c.strip() for c in str(cols).split(",") if c.strip()]
-            missing = [c for c in wanted if c not in by_name]
-            if missing:
-                raise ValueError(
-                    f"readstat: unknown columns {missing} "
-                    "(not present in any file)"
-                )
-            order = wanted
+        fields = [by_name[n] for n in order]
         per_file = {
             p: [f.name for f in sch.fields]
             for p, sch in zip(paths, schemas)
         }
-        return StructType([by_name[n] for n in order]), per_file
+        return (
+            StructType(
+                [fields[i] for i in selected_indices(fields, self.options)]
+            ),
+            per_file,
+        )
 
     def streamReader(self, schema: StructType):
         """spark.readStream.format("readstat").load(dir_or_glob) —
@@ -536,10 +512,10 @@ class ReadstatDataSource(DataSource):
         filter reader selects them away after applying, so the OUTPUT
         schema stays the user's projection (round 13). Must run before
         any reader construction (readers parse `columns` at init).
-        Unknown names still fail loudly in _selected_vars."""
+        Unknown names still fail loudly in selected_indices."""
         where = self.options.get("where")
-        cols_opt = self.options.get("columns")
-        if not where or not cols_opt:
+        projected = column_names(self.options)
+        if not where or projected is None:
             return ()
         from polars_readstat_spark.sources.filters import parse_where
 
@@ -558,9 +534,6 @@ class ReadstatDataSource(DataSource):
             a = getattr(g, "attribute", None)
             if a:
                 refs.add(a[0])
-        projected = [
-            c.strip() for c in str(cols_opt).split(",") if c.strip()
-        ]
         missing = sorted(r for r in refs if r not in projected)
         if not missing:
             return ()
@@ -838,18 +811,6 @@ class ReadstatDataSource(DataSource):
         return XptReader(self._path(), self.options)
 
 
-def _selected_vars(meta, options):
-    cols = options.get("columns")
-    if cols:
-        wanted = [c.strip() for c in str(cols).split(",") if c.strip()]
-        by_name = {v.name: i for i, v in enumerate(meta.variables)}
-        missing = [c for c in wanted if c not in by_name]
-        if missing:
-            raise ValueError(f"readstat: unknown columns {missing}")
-        return [by_name[c] for c in wanted]
-    return list(range(len(meta.variables)))
-
-
 def _shape_informative(fields, options, eligible_names) -> list:
     """Re-shape schema fields for the informative-null modes
     (reference build_indicator_schema, src/lib.rs:237-297)."""
@@ -889,212 +850,170 @@ def _shape_informative(fields, options, eligible_names) -> list:
     return out
 
 
-def dta_spark_schema(meta, options) -> StructType:
-    """Schema from header metadata only; per-variable metadata (label,
-    format, value-label name) rides on StructField.metadata —
-    the Spark shape of the reference's metadata surface (§1.4,
-    src/metadata_df.rs)."""
+class _Layout(NamedTuple):
+    """What one format's header metadata says about each variable —
+    the only per-format part of the read schema."""
+
+    variables: Callable[[Any], list]  # meta → variables in file order
+    is_str: Callable[[Any], bool]
+    labeled: Callable[[Any], Any]  # truthy: carries value labels
+    numeric: Callable[[Any], Any]  # Spark type of a plain numeric
+    fmt: Callable[[Any], str]
+    label: Callable[[Any], str]
+    extra: Callable[[Any], dict]  # format-specific metadata keys
+    tagged: bool  # numerics carry informative-null tags
+
+
+def _no_labels(v) -> bool:
+    return False
+
+
+def _double(v):
+    return DoubleType()
+
+
+def _no_extra(v) -> dict:
+    return {}
+
+
+_DTA_NUMERIC = {
+    "byte": ByteType(),
+    "int": ShortType(),
+    "long": IntegerType(),
+    "float": FloatType(),
+    "double": DoubleType(),
+}
+_SAV_MEASURE = {1: "nominal", 2: "ordinal", 3: "scale"}
+_VARIABLES = attrgetter("variables")
+_FMT = attrgetter("fmt")
+_LABEL = attrgetter("label")
+
+_LAYOUTS = {
+    "dta": _Layout(
+        _VARIABLES,
+        lambda v: v.kind in ("str", "strl"),
+        attrgetter("lblname"),
+        lambda v: _DTA_NUMERIC[v.kind],
+        _FMT,
+        attrgetter("varlabel"),
+        lambda v: {"value_label": v.lblname} if v.lblname else {},
+        True,
+    ),
+    # every SAS numeric can carry `.A`-`.Z`/`._` tags in its NaN
+    # payload (reference src/sas/value.rs:181-194)
+    "sas7bdat": _Layout(
+        attrgetter("columns"),
+        lambda c: c.ctype == "s",
+        _no_labels,
+        _double,
+        _FMT,
+        _LABEL,
+        _no_extra,
+        True,
+    ),
+    "sav": _Layout(
+        _VARIABLES,
+        attrgetter("is_str"),
+        attrgetter("value_labels"),
+        _double,
+        _FMT,
+        _LABEL,
+        lambda v: (
+            {"measure": _SAV_MEASURE.get(v.measure, "")} if v.measure else {}
+        ),
+        True,
+    ),
+    "por": _Layout(
+        _VARIABLES,
+        attrgetter("is_str"),
+        attrgetter("value_labels"),
+        _double,
+        lambda v: "",
+        _LABEL,
+        _no_extra,
+        False,
+    ),
+    # XPT numerics carry tags in byte 0 of an otherwise-zero field
+    # (reference is_xpt_missing, src/sas/xpt.rs:396-408)
+    "xpt": _Layout(
+        _VARIABLES,
+        lambda v: not v.is_numeric,
+        _no_labels,
+        _double,
+        _FMT,
+        _LABEL,
+        _no_extra,
+        True,
+    ),
+}
+_LAYOUTS["zsav"] = _LAYOUTS["sav"]
+
+
+def _parse_meta(fmt: str, path: str):
+    if fmt == "dta":
+        from polars_readstat_spark.sources.dta.meta import parse_dta_meta
+
+        return parse_dta_meta(path)
+    if fmt == "sas7bdat":
+        from polars_readstat_spark.sources.sas7bdat.meta import parse_sas_meta
+
+        return parse_sas_meta(path)
+    if fmt in ("sav", "zsav"):
+        from polars_readstat_spark.sources.sav.meta import parse_sav_meta
+
+        return parse_sav_meta(path)
+    if fmt == "por":
+        from polars_readstat_spark.sources.por.reader import parse_por
+
+        return parse_por(path)[0]
+    from polars_readstat_spark.sources.xpt.meta import parse_xpt_meta
+
+    return parse_xpt_meta(path)
+
+
+def spark_schema(fmt: str, meta, options) -> StructType:
+    """Read schema from header metadata only. Strings (and, with
+    value_labels_as_strings, value-labeled numerics) read as string;
+    other numerics by display format as date, timestamp or — Spark has
+    no time type — bigint ns since midnight tagged
+    ``time=ns_since_midnight`` (SURVEY.md §1.3), else the format's
+    numeric type. Per-variable format/label (+ dta value_label, sav
+    measure) ride on StructField.metadata, the Spark shape of the
+    reference's metadata surface (§1.4, src/metadata_df.rs)."""
+    lay = _LAYOUTS[fmt]
+    variables = lay.variables(meta)
     vls = _opt_bool(options, "value_labels_as_strings")
     fields = []
     eligible = set()
-    for i in _selected_vars(meta, options):
-        v = meta.variables[i]
-        if v.kind in ("str", "strl"):
+    for i in selected_indices(variables, options):
+        v = variables[i]
+        tk = v.time_kind
+        if lay.is_str(v) or (vls and lay.labeled(v)):
             t = StringType()
-        elif vls and v.lblname:
-            t = StringType()
-        elif v.time_kind == "date":
+        elif tk == "date":
             t = DateType()
-        elif v.time_kind == "datetime":
+        elif tk == "datetime":
             t = TimestampNTZType()
+        elif tk == "time":
+            t = LongType()
         else:
-            t = {
-                "byte": ByteType(),
-                "int": ShortType(),
-                "long": IntegerType(),
-                "float": FloatType(),
-                "double": DoubleType(),
-            }[v.kind]
-        if v.kind not in ("str", "strl") and not (vls and v.lblname):
+            t = lay.numeric(v)
+        if lay.tagged and not isinstance(t, StringType):
             eligible.add(v.name)
-        md = {"format": v.fmt}
-        if v.varlabel:
-            md["label"] = v.varlabel
-        if v.lblname:
-            md["value_label"] = v.lblname
+        md = {}
+        if fmt_name := lay.fmt(v):
+            md["format"] = fmt_name
+        if label := lay.label(v):
+            md["label"] = label
+        md.update(lay.extra(v))
+        if tk == "time":
+            md["time"] = "ns_since_midnight"
         fields.append(StructField(v.name, t, True, metadata=md))
     fields = _shape_informative(fields, options, eligible)
     ri = options.get("row_index_name")
     if ri:
         if any(f.name == ri for f in fields):
             # reference rejects clashes at analysis time (src/lib.rs:400-413)
-            raise ValueError(f"row_index_name '{ri}' collides with a column")
-        fields.append(StructField(ri, LongType(), False))
-    return StructType(fields)
-
-
-def sas_spark_schema(meta, options) -> StructType:
-    """SAS schema: numeric→double (or date/timestamp/time-ns by format
-    name), char→string; per-column label/format on StructField.metadata."""
-    cols = options.get("columns")
-    if cols:
-        wanted = [c.strip() for c in str(cols).split(",") if c.strip()]
-        by_name = {c.name: c for c in meta.columns}
-        missing = [c for c in wanted if c not in by_name]
-        if missing:
-            raise ValueError(f"readstat: unknown columns {missing}")
-        selected = [by_name[c] for c in wanted]
-    else:
-        selected = list(meta.columns)
-    fields = []
-    eligible = set()
-    for c in selected:
-        if c.ctype == "s":
-            t = StringType()
-        elif c.time_kind == "date":
-            t = DateType()
-        elif c.time_kind == "datetime":
-            t = TimestampNTZType()
-        elif c.time_kind == "time":
-            # no Spark TimeType: ns since midnight (SURVEY.md §1.3)
-            t = LongType()
-        else:
-            t = DoubleType()
-        if c.ctype != "s":
-            # every SAS numeric can carry `.A`-`.Z`/`._` tags in its
-            # NaN payload (reference src/sas/value.rs:181-194)
-            eligible.add(c.name)
-        md = {}
-        if c.fmt:
-            md["format"] = c.fmt
-        if c.label:
-            md["label"] = c.label
-        if c.time_kind == "time":
-            md["time"] = "ns_since_midnight"
-        fields.append(StructField(c.name, t, True, metadata=md))
-    fields = _shape_informative(fields, options, eligible)
-    ri = options.get("row_index_name")
-    if ri:
-        if any(f.name == ri for f in fields):
-            raise ValueError(f"row_index_name '{ri}' collides with a column")
-        fields.append(StructField(ri, LongType(), False))
-    return StructType(fields)
-
-
-def sav_spark_schema(meta, options) -> StructType:
-    """SPSS schema: string→string, numeric→double (or date/timestamp/
-    time-ns by format class, SURVEY.md §1.3); value_labels_as_strings
-    flips labeled columns to string (reference T2/T6)."""
-    vls = _opt_bool(options, "value_labels_as_strings")
-    fields = []
-    eligible = set()
-    for i in _selected_vars(meta, options):
-        v = meta.variables[i]
-        if v.is_str or (vls and v.value_labels):
-            t = StringType()
-        elif v.time_kind == "date":
-            t = DateType()
-        elif v.time_kind == "datetime":
-            t = TimestampNTZType()
-        elif v.time_kind == "time":
-            t = LongType()
-        else:
-            t = DoubleType()
-        if not v.is_str and not (vls and v.value_labels):
-            eligible.add(v.name)
-        md = {}
-        if v.fmt:
-            md["format"] = v.fmt
-        if v.label:
-            md["label"] = v.label
-        if v.measure:
-            md["measure"] = {1: "nominal", 2: "ordinal", 3: "scale"}.get(
-                v.measure, ""
-            )
-        if v.time_kind == "time":
-            md["time"] = "ns_since_midnight"
-        fields.append(StructField(v.name, t, True, metadata=md))
-    fields = _shape_informative(fields, options, eligible)
-    ri = options.get("row_index_name")
-    if ri:
-        if any(f.name == ri for f in fields):
-            raise ValueError(f"row_index_name '{ri}' collides with a column")
-        fields.append(StructField(ri, LongType(), False))
-    return StructType(fields)
-
-
-def por_spark_schema(meta, options) -> StructType:
-    """POR schema: width>0 → string; numeric → double/date/timestamp/
-    time-ns by (82-shifted) format-type code (reference
-    __init__.py:405-425)."""
-    vls = _opt_bool(options, "value_labels_as_strings")
-    fields = []
-    for i in _selected_vars(meta, options):
-        v = meta.variables[i]
-        if v.is_str or (vls and v.value_labels):
-            t = StringType()
-        elif v.time_kind == "date":
-            t = DateType()
-        elif v.time_kind == "datetime":
-            t = TimestampNTZType()
-        elif v.time_kind == "time":
-            t = LongType()
-        else:
-            t = DoubleType()
-        md = {}
-        if v.label:
-            md["label"] = v.label
-        if v.time_kind == "time":
-            md["time"] = "ns_since_midnight"
-        fields.append(StructField(v.name, t, True, metadata=md))
-    ri = options.get("row_index_name")
-    if ri:
-        if any(f.name == ri for f in fields):
-            raise ValueError(f"row_index_name '{ri}' collides with a column")
-        fields.append(StructField(ri, LongType(), False))
-    return StructType(fields)
-
-
-def xpt_spark_schema(meta, options) -> StructType:
-    """XPT schema: IBM-float numerics→double (or date/timestamp/time-ns
-    by format), char→string."""
-    cols = options.get("columns")
-    if cols:
-        wanted = [c.strip() for c in str(cols).split(",") if c.strip()]
-        by_name = {v.name: v for v in meta.variables}
-        missing = [c for c in wanted if c not in by_name]
-        if missing:
-            raise ValueError(f"readstat: unknown columns {missing}")
-        selected = [by_name[c] for c in wanted]
-    else:
-        selected = list(meta.variables)
-    fields = []
-    eligible = set()
-    for v in selected:
-        if not v.is_numeric:
-            t = StringType()
-        elif v.time_kind == "date":
-            t = DateType()
-        elif v.time_kind == "datetime":
-            t = TimestampNTZType()
-        elif v.time_kind == "time":
-            t = LongType()
-        else:
-            t = DoubleType()
-        if v.is_numeric:
-            # XPT numerics carry tags in byte 0 of an otherwise-zero
-            # field (reference is_xpt_missing, src/sas/xpt.rs:396-408)
-            eligible.add(v.name)
-        md = {}
-        if v.fmt:
-            md["format"] = v.fmt
-        if v.label:
-            md["label"] = v.label
-        fields.append(StructField(v.name, t, True, metadata=md))
-    fields = _shape_informative(fields, options, eligible)
-    ri = options.get("row_index_name")
-    if ri:
-        if any(f.name == ri for f in fields):
             raise ValueError(f"row_index_name '{ri}' collides with a column")
         fields.append(StructField(ri, LongType(), False))
     return StructType(fields)
@@ -1377,84 +1296,25 @@ class CompressingReader(DataSourceReader):
             yield apply_plan(batch, self.plan)
 
 
-class RowRange(InputPartition):
-    def __init__(self, start: int, n: int):
-        self.start = start
-        self.n = n
-
-
 # per-executor strL index cache, keyed (path, mtime_ns, size) — the
 # same rewrite-invalidating identity as the metadata memo, so a reused
 # worker can never pair a fresh DtaMeta with a stale GSO table
 _STRL_CACHE: dict[tuple, dict] = {}
 
 
-class DtaReader(DataSourceReader):
+class DtaReader(ScanReader):
     handles_readahead = True  # pipelines fetch/decode in read()
 
     def __init__(self, path: str, options, schema: StructType):
         from polars_readstat_spark.sources.dta.meta import parse_dta_meta
 
-        self.path = path
-        self.options = dict(options)
         self.meta = parse_dta_meta(path)
-        self.col_indices = _selected_vars(self.meta, options)
-        self.value_labels_as_strings = _opt_bool(options, "value_labels_as_strings")
-        self.missing_string_as_null = _opt_bool(options, "missing_string_as_null")
-        self.row_index_name = options.get("row_index_name")
-        self.row_index_offset = _opt_int(options, "row_index_offset", 0)
-        self.limit = _opt_int(options, "n_rows", _opt_int(options, "limit"))
-        self.offset = _opt_int(options, "offset", 0) or 0
-        self.batch_size = _opt_int(options, "batch_size")
-        self.rows_per_partition = _opt_int(options, "rows_per_partition")
-        self.target_parallelism = _opt_int(options, "target_parallelism")
-        # readahead handled HERE (fetch/decode overlap inside the row
-        # loop) rather than by the generic ReadaheadReader wrapper,
-        # which can only overlap whole-batch production with JVM
-        # serialization
-        from polars_readstat_spark.sources.readahead import (
-            parse_readahead_opts,
-        )
-
-        self.io_readahead, self.sim_latency_s = parse_readahead_opts(options)
-        from polars_readstat_spark.sources import informative as inf
-
-        self.informative = inf.parse_opts(options)
-
-    # -- planning (driver side) ------------------------------------
-
-    def _row_span(self) -> tuple[int, int]:
-        total = self.meta.nobs
-        start = min(self.offset, total)
-        n = total - start
-        if self.limit is not None:
-            n = min(n, self.limit)
-        return start, n
+        super().__init__(path, options, self.meta.variables)
 
     def partitions(self):
-        start, n = self._row_span()
-        rw = max(self.meta.record_width, 1)
-        per = self.rows_per_partition
-        if per is None:
-            from polars_readstat_spark.sources.partplan import (
-                rows_per_partition,
-            )
+        return self._row_plan(self.meta.nobs, self.meta.record_width)
 
-            per = rows_per_partition(rw, n, self.target_parallelism)
-        parts = []
-        pos = start
-        while pos < start + n:
-            cnt = min(per, start + n - pos)
-            parts.append(RowRange(pos, cnt))
-            pos += cnt
-        return parts or [RowRange(start, 0)]
-
-    # -- execution (executor side) ---------------------------------
-
-    def read(self, partition: RowRange):
-        import numpy as np
-        import pyarrow as pa
-
+    def read(self, partition):
         from polars_readstat_spark.sources.dta.decode import (
             build_strl_lookup,
             decode_rows,
@@ -1485,39 +1345,16 @@ class DtaReader(DataSourceReader):
                     _STRL_CACHE.clear()
                 _STRL_CACHE[ck] = strl_lookup
 
-        rw = meta.record_width
-        ncols = max(len(self.col_indices), 1)
-        from polars_readstat_spark.sources.partplan import (
-            default_batch_rows,
-        )
-
-        batch_rows = self.batch_size or default_batch_rows(
-            ncols, self.target_parallelism
-        )
-
-        def with_row_index(batch, pos, cnt):
-            if not self.row_index_name:
-                return batch
-            # exact file-order index from partition row offsets
-            # (reference O2, src/sas/polars_output.rs:443-474) —
-            # result-relative, starting at row_index_offset
-            idx = pa.array(
-                np.arange(pos, pos + cnt, dtype=np.int64)
-                + ((self.row_index_offset or 0) - self.offset)
-            )
-            return pa.RecordBatch.from_arrays(
-                [*batch.columns, idx],
-                names=[*batch.schema.names, self.row_index_name],
+        def decode(buf, cnt):
+            return decode_rows(
+                meta, buf, cnt, self.col_indices,
+                self.value_labels_as_strings, self.missing_string_as_null,
+                strl_lookup, informative=self.informative,
             )
 
         if partition.n == 0:
             # empty span: one zero-row batch so the schema is honored
-            batch = decode_rows(
-                meta, b"", 0, self.col_indices,
-                self.value_labels_as_strings, self.missing_string_as_null,
-                strl_lookup, informative=self.informative,
-            )
-            yield with_row_index(batch, partition.start, 0)
+            yield self._indexed(decode(b"", 0), partition.start)
             return
 
         # raw range fetches, separable from decode so io_readahead can
@@ -1530,45 +1367,9 @@ class DtaReader(DataSourceReader):
             fetch_row_ranges,
         )
 
-        it = fetch_row_ranges(
-            self.path, meta.data_offset, rw,
-            partition.start, partition.n, batch_rows,
+        for pos, cnt, buf in fetch_row_ranges(
+            self.path, meta.data_offset, meta.record_width,
+            partition.start, partition.n, self._batch_rows(),
             self.sim_latency_s, self.io_readahead,
-        )
-        probe = os.environ.get("PRS_READ_PROBE")
-        t_read0 = time.perf_counter() if probe else 0.0
-        n_batches = 0
-        for pos, cnt, buf in it:
-            batch = decode_rows(
-                meta,
-                buf,
-                cnt,
-                self.col_indices,
-                self.value_labels_as_strings,
-                self.missing_string_as_null,
-                strl_lookup,
-                informative=self.informative,
-            )
-            n_batches += 1
-            yield with_row_index(batch, pos, cnt)
-        if probe:
-            # executor-side diagnostics (workers re-import this module,
-            # so driver-side instrumentation can't see them). The
-            # monotonic stamp keeps records from colliding when a
-            # reused worker handles same-offset partitions of several
-            # files (multi-file scans all start at 0). Best-effort
-            # only (ADVICE r09): a missing or unwritable probe dir
-            # must never fail a task whose scan already succeeded.
-            try:
-                os.makedirs(probe, exist_ok=True)
-                with open(
-                    f"{probe}/part_{os.getpid()}_{partition.start}"
-                    f"_{time.monotonic_ns()}.txt",
-                    "w",
-                ) as pf:
-                    pf.write(
-                        f"ra={self.io_readahead} nb={n_batches} "
-                        f"dt={time.perf_counter() - t_read0:.3f}\n"
-                    )
-            except OSError:
-                pass
+        ):
+            yield self._indexed(decode(buf, cnt), pos)

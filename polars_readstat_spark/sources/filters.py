@@ -537,25 +537,6 @@ def _stripes_refute(
     return True
 
 
-def _rebuilder(inner):
-    """(start, n) -> narrowed partition, or None when this partition
-    class can't be safely rebuilt. A class that carries plan-derived
-    state exposes ``retarget`` (sav's RowRange threads its
-    literal/ckpt/pipeline fields through it); the exact 2-arg
-    row-range classes (dta, xpt) rebuild via their constructor."""
-    rt = getattr(inner, "retarget", None)
-    if callable(rt):
-        return rt
-    from polars_readstat_spark.sources.datasource import (
-        RowRange as _DtaRowRange,
-    )
-    from polars_readstat_spark.sources.xpt.reader import XptRowRange
-
-    if type(inner) in (_DtaRowRange, XptRowRange):
-        return lambda s, n: type(inner)(s, n)
-    return None
-
-
 class _FilterApplyReader(DataSourceReader):
     """Shared filter core: applies a compiled conjunction per Arrow
     batch (null → row dropped, SQL semantics) and, when the inner
@@ -655,9 +636,11 @@ class _FilterApplyReader(DataSourceReader):
             """Shrink an exact row-addressable partition to exclude
             refuted stripe-aligned prefix/suffix rows (kept spans stay
             contiguous; interior holes are left to the batch filter).
-            Only for partition classes whose (start, n) is a global
-            file row span that decodes independently."""
-            rebuild = _rebuilder(inner)
+            Only for partitions whose (start, n) is a global file row
+            span that decodes independently: partplan.RowRange, whose
+            ``retarget`` keeps its plan state (sav's literal/ckpt/
+            pipeline fields)."""
+            rebuild = getattr(inner, "retarget", None)
             if rebuild is None:
                 return inner
             e = stats.get(path)

@@ -29,10 +29,11 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql.datasource import DataSourceReader, InputPartition
+from pyspark.sql.datasource import InputPartition
 
 from polars_readstat_spark.sources import strdecode
 from polars_readstat_spark.sources.fs import fs_open
+from polars_readstat_spark.sources.partplan import ScanReader, row_span
 
 LINE_LEN = 80
 SPSS_SEC_SHIFT = 12_219_379_200
@@ -1103,32 +1104,20 @@ class PorPartition(InputPartition):
     pass
 
 
-class PorReader(DataSourceReader):
+class PorReader(ScanReader):
     def __init__(self, path: str, options):
-        self.path = path
-        self.options = dict(options)
-        meta, _ = parse_por(path)
-        self.meta = meta
-        from polars_readstat_spark.sources.datasource import _selected_vars
-
-        self.col_indices = _selected_vars(meta, options)
-        v = options.get("value_labels_as_strings")
-        self.value_labels_as_strings = (
-            str(v).lower() in {"1", "true", "yes"} if v is not None else False
-        )
-        lim = options.get("n_rows") or options.get("limit")
-        self.limit = int(lim) if lim else None
-        self.offset = int(options.get("offset") or 0)
-        self.row_index_name = options.get("row_index_name")
+        self.meta = parse_por(path)[0]
+        super().__init__(path, options, self.meta.variables)
 
     def partitions(self):
         return [PorPartition(0)]
 
     def read(self, partition):
         meta, cols = read_por_columns(self.path)
-        n = len(cols[0]) if cols else 0
-        start = min(self.offset, n)
-        end = n if self.limit is None else min(n, start + self.limit)
+        start, n = row_span(
+            len(cols[0]) if cols else 0, self.offset, self.limit
+        )
+        end = start + n
         arrays, names = [], []
         for i in self.col_indices:
             v = meta.variables[i]
@@ -1203,7 +1192,6 @@ class PorReader(DataSourceReader):
                 else:
                     arrays.append(strdecode.pa_masked(fv, pa.float64(), mask))
             names.append(v.name)
-        if self.row_index_name:
-            arrays.append(pa.array(np.arange(end - start, dtype=np.int64)))
-            names.append(self.row_index_name)
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        yield self._indexed(
+            pa.RecordBatch.from_arrays(arrays, names=names), start
+        )

@@ -18,12 +18,16 @@ Partitioning (reference §4.2 translated to Spark):
 
 from __future__ import annotations
 
-import numpy as np
-import pyarrow as pa
-from pyspark.sql.datasource import DataSourceReader, InputPartition
+from pyspark.sql.datasource import InputPartition
 
-from polars_readstat_spark.sources.sas7bdat.meta import SasMeta, parse_sas_meta
 from polars_readstat_spark.sources.fs import fs_open
+from polars_readstat_spark.sources.partplan import (
+    ScanReader,
+    _opt_int,
+    pages_per_partition,
+    row_span,
+)
+from polars_readstat_spark.sources.sas7bdat.meta import SasMeta, parse_sas_meta
 from polars_readstat_spark.sources.sas7bdat.pages import (
     page_row_bytes,
     page_row_count,
@@ -39,51 +43,12 @@ class SasPageRange(InputPartition):
         self.take = take  # rows to emit after skip (-1 = all)
 
 
-def _opt_bool(options, key, default=False):
-    v = options.get(key)
-    return default if v is None else str(v).lower() in {"1", "true", "yes"}
-
-
-def _opt_int(options, key, default=None):
-    v = options.get(key)
-    return default if v in (None, "") else int(v)
-
-
-class SasReader(DataSourceReader):
+class SasReader(ScanReader):
     handles_readahead = True  # pipelines range-fetch/decode in read()
 
     def __init__(self, path: str, options, meta: SasMeta | None = None):
-        self.path = path
-        self.options = dict(options)
         self.meta = meta or parse_sas_meta(path)
-        cols = options.get("columns")
-        if cols:
-            wanted = [c.strip() for c in str(cols).split(",") if c.strip()]
-            by_name = {c.name: i for i, c in enumerate(self.meta.columns)}
-            missing = [c for c in wanted if c not in by_name]
-            if missing:
-                raise ValueError(f"readstat: unknown columns {missing}")
-            self.col_indices = [by_name[c] for c in wanted]
-        else:
-            self.col_indices = list(range(len(self.meta.columns)))
-        self.missing_string_as_null = _opt_bool(options, "missing_string_as_null")
-        self.row_index_name = options.get("row_index_name")
-        self.row_index_offset = _opt_int(options, "row_index_offset", 0) or 0
-        self.limit = _opt_int(options, "n_rows", _opt_int(options, "limit"))
-        self.offset = _opt_int(options, "offset", 0) or 0
-        self.batch_size = _opt_int(options, "batch_size")
-        self.rows_per_partition = _opt_int(options, "rows_per_partition")
-        self.target_parallelism = _opt_int(options, "target_parallelism")
-        # readahead pipelined HERE at the range-fetch / decode seam
-        # (datasource.py skips its whole-batch wrapper when set)
-        from polars_readstat_spark.sources.readahead import (
-            parse_readahead_opts,
-        )
-
-        self.io_readahead, self.sim_latency_s = parse_readahead_opts(options)
-        from polars_readstat_spark.sources import informative as inf
-
-        self.informative = inf.parse_opts(options)
+        super().__init__(path, options, self.meta.columns)
 
     # -- planning ---------------------------------------------------
 
@@ -168,10 +133,7 @@ class SasReader(DataSourceReader):
     def partitions(self):
         m = self.meta
         total = m.row_count
-        start = min(self.offset, total)
-        want = total - start
-        if self.limit is not None:
-            want = min(want, self.limit)
+        start, want = row_span(total, self.offset, self.limit)
         end = start + want
 
         if m.compression:
@@ -186,10 +148,6 @@ class SasReader(DataSourceReader):
             #   rows in META/DATA pages — verified across the corpus).
             plain = start == 0 and want == total and not self.row_index_name
             if plain and m.page_count > 1 and not self._has_mix_pages():
-                from polars_readstat_spark.sources.partplan import (
-                    pages_per_partition,
-                )
-
                 per_pages = _opt_int(
                     self.options, "pages_per_partition"
                 ) or pages_per_partition(
@@ -205,15 +163,7 @@ class SasReader(DataSourceReader):
             return [SasPageRange(0, m.page_count, 0, start, want)]
 
         counts = self._page_rows()
-        per = self.rows_per_partition
-        if per is None:
-            from polars_readstat_spark.sources.partplan import (
-                rows_per_partition,
-            )
-
-            per = rows_per_partition(
-                m.row_length, want, self.target_parallelism
-            )
+        per = self._per_partition(m.row_length, want)
         parts: list[SasPageRange] = []
         rows_before = 0
         range_first = None
@@ -259,14 +209,7 @@ class SasReader(DataSourceReader):
         from polars_readstat_spark.sources.sas7bdat.decode import decode_rows
 
         m = self.meta
-        ncols = max(len(self.col_indices), 1)
-        from polars_readstat_spark.sources.partplan import (
-            default_batch_rows,
-        )
-
-        batch_rows = self.batch_size or default_batch_rows(
-            ncols, self.target_parallelism
-        )
+        batch_rows = self._batch_rows()
         rl = max(m.row_length, 1)
 
         def emit(chunk: bytes, global_start: int):
@@ -274,16 +217,7 @@ class SasReader(DataSourceReader):
                 m, chunk, self.col_indices, self.missing_string_as_null,
                 informative=self.informative,
             )
-            if self.row_index_name:
-                idx = pa.array(
-                    np.arange(global_start, global_start + batch.num_rows, dtype=np.int64)
-                    + (self.row_index_offset - self.offset)
-                )
-                batch = pa.RecordBatch.from_arrays(
-                    [*batch.columns, idx],
-                    names=[*batch.schema.names, self.row_index_name],
-                )
-            return batch
+            return self._indexed(batch, global_start)
 
         if partition.n_pages == 0:
             yield emit(b"", 0)

@@ -20,104 +20,34 @@ strictly serially, PARALLELIZATION.md:34-40):
 
 from __future__ import annotations
 
-
 import numpy as np
-import pyarrow as pa
 
-from pyspark.sql.datasource import DataSourceReader, InputPartition
 from polars_readstat_spark.sources.fs import fs_size
+from polars_readstat_spark.sources.partplan import (
+    RowRange,
+    ScanReader,
+    _active_cores,
+    row_ranges,
+    row_span,
+)
 
 
-class RowRange(InputPartition):
-    def __init__(
-        self,
-        start: int,
-        n: int,
-        literal: bool = False,
-        ckpt: tuple[int, int] | None = None,
-        pipeline: bool = True,
-    ):
-        self.start = start
-        self.n = n
-        # False when the scan fans out to ~every core: the walk→scatter
-        # thread pipeline inside iter_compressed_elements only helps
-        # when the host has spare cycles (serial/few-partition reads);
-        # under full task fan-out it is pure oversubscription —
-        # measured 0.37 s inline vs 0.51 s pooled per ACS checkpoint
-        # partition at 32 concurrent tasks, and 11.0 s pooled vs
-        # 14.3 s inline for the same file consumed serially (r7)
-        self.pipeline = pipeline
-        # True: the bytecode stream was proven all-literal at plan
-        # time (validate_literal_stream), so this range decodes
-        # independently via the affine byte↔element map
-        self.literal = literal
-        # (byte_off, el_off) of the nearest plan-time checkpoint at or
-        # before this range's first element (build_checkpoint_index):
-        # the general-stream parallel path for bias/mixed bytecode
-        self.ckpt = ckpt
+class SavReader(ScanReader):
+    # every path pipelines io_readahead itself: the uncompressed row
+    # loop and the compressed chunk loop (sequential + checkpoint, via
+    # iter_compressed_elements) at their fetch/decode seams; the
+    # literal path issues ONE contiguous range fetch per partition,
+    # which has no loop to pipeline
+    handles_readahead = True
 
-    def retarget(self, start: int, n: int) -> "RowRange":
-        """Same plan state, narrower row window — the zone-map stripe
-        trimming hook (sources/filters.py). Sound because ckpt only
-        promises to sit AT OR BEFORE the range's first element (a
-        later start just skips more from the same checkpoint), the
-        literal affine map addresses any row directly, and pipeline
-        is a pure execution hint."""
-        return RowRange(
-            start,
-            n,
-            literal=self.literal,
-            ckpt=self.ckpt,
-            pipeline=self.pipeline,
-        )
-
-
-def _opt_bool(options, key, default=False):
-    v = options.get(key)
-    return default if v is None else str(v).lower() in {"1", "true", "yes"}
-
-
-def _opt_int(options, key, default=None):
-    v = options.get(key)
-    return default if v in (None, "") else int(v)
-
-
-class SavReader(DataSourceReader):
     def __init__(self, path: str, options):
         from polars_readstat_spark.sources.sav.meta import parse_sav_meta
 
-        self.path = path
-        self.options = dict(options)
         self.meta = parse_sav_meta(path)
-        from polars_readstat_spark.sources.datasource import _selected_vars
-
-        self.col_indices = _selected_vars(self.meta, options)
-        self.value_labels_as_strings = _opt_bool(options, "value_labels_as_strings")
-        self.missing_string_as_null = _opt_bool(options, "missing_string_as_null")
-        self.row_index_name = options.get("row_index_name")
-        self.row_index_offset = _opt_int(options, "row_index_offset", 0)
-        self.limit = _opt_int(options, "n_rows", _opt_int(options, "limit"))
-        self.offset = _opt_int(options, "offset", 0) or 0
-        self.batch_size = _opt_int(options, "batch_size")
-        self.rows_per_partition = _opt_int(options, "rows_per_partition")
-        self.target_parallelism = _opt_int(options, "target_parallelism")
-        # every path pipelines io_readahead itself: the uncompressed
-        # row loop and the compressed chunk loop (sequential +
-        # checkpoint, via iter_compressed_elements) at their
-        # fetch/decode seams; the literal path issues ONE contiguous
-        # range fetch per partition, which has no loop to pipeline
-        from polars_readstat_spark.sources.readahead import (
-            parse_readahead_opts,
-        )
-
-        self.io_readahead, self.sim_latency_s = parse_readahead_opts(options)
+        super().__init__(path, options, self.meta.variables)
         # bench A/B switch for the zsav inflate pool (default on);
         # the serial arm of the floor_zsav_lat50_* probe pair sets 0
         self.zsav_pool = str(options.get("io_zsav_pool", "1")) != "0"
-        self.handles_readahead = True
-        from polars_readstat_spark.sources import informative as inf
-
-        self.informative = inf.parse_opts(options)
 
     def _total_rows(self) -> int:
         m = self.meta
@@ -131,16 +61,9 @@ class SavReader(DataSourceReader):
 
         return count_compressed_rows(m)
 
-    def _row_span(self) -> tuple[int, int]:
-        total = self._total_rows()
-        start = min(self.offset, total)
-        n = total - start
-        if self.limit is not None:
-            n = min(n, self.limit)
-        return start, n
-
     def partitions(self):
-        start, n = self._row_span()
+        start, n = row_span(self._total_rows(), self.offset, self.limit)
+        per = self._per_partition(self.meta.record_width, n)
         if self.meta.compression != 0:
             # bytecode streams are sequential in general — but the
             # all-literal framing (the only one our writer emits, and
@@ -176,41 +99,13 @@ class SavReader(DataSourceReader):
                 # itself writes for integer-heavy data): one plan-time
                 # checkpoint walk (sidecar-cached) buys exact
                 # row-range partitions; small streams stay serial
-                return self._ckpt_partitions(start, n) or [
+                return self._ckpt_partitions(start, n, per) or [
                     RowRange(start, n)
                 ]
-            rw = max(self.meta.record_width, 1)
-            per = self.rows_per_partition
-            if per is None:
-                from polars_readstat_spark.sources.partplan import (
-                    rows_per_partition,
-                )
+            return row_ranges(start, n, per, literal=True)
+        return row_ranges(start, n, per)
 
-                per = rows_per_partition(rw, n, self.target_parallelism)
-            parts = []
-            pos = start
-            while pos < start + n:
-                cnt = min(per, start + n - pos)
-                parts.append(RowRange(pos, cnt, literal=True))
-                pos += cnt
-            return parts or [RowRange(start, 0)]
-        rw = max(self.meta.record_width, 1)
-        per = self.rows_per_partition
-        if per is None:
-            from polars_readstat_spark.sources.partplan import (
-                rows_per_partition,
-            )
-
-            per = rows_per_partition(rw, n, self.target_parallelism)
-        parts = []
-        pos = start
-        while pos < start + n:
-            cnt = min(per, start + n - pos)
-            parts.append(RowRange(pos, cnt))
-            pos += cnt
-        return parts or [RowRange(start, 0)]
-
-    def _ckpt_partitions(self, start: int, n: int):
+    def _ckpt_partitions(self, start: int, n: int, per: int):
         """Row-range partitions for a general (non-all-literal)
         bytecode stream via a plan-time checkpoint index; None when
         not worthwhile (small stream / single partition)."""
@@ -230,14 +125,6 @@ class SavReader(DataSourceReader):
             16 << 20
         ):
             return None
-        rw = max(meta.record_width, 1)
-        per = self.rows_per_partition
-        if per is None:
-            from polars_readstat_spark.sources.partplan import (
-                rows_per_partition,
-            )
-
-            per = rows_per_partition(rw, n, self.target_parallelism)
         if per >= n:
             return None
         # checkpoint spacing ~per/4 rows of elements (waste per task ≤
@@ -263,28 +150,16 @@ class SavReader(DataSourceReader):
             return None
         if ck.shape[0] < 2:
             return None
-        from polars_readstat_spark.sources.partplan import _active_cores
-
         cores = self.target_parallelism or _active_cores() or 1
-        n_parts = (n + per - 1) // per
-        pipe = 2 * n_parts <= cores
-        parts = []
-        pos = start
-        end = start + n
-        while pos < end:
-            cnt = min(per, end - pos)
-            j = int(np.searchsorted(ck[:, 1], pos * cs, side="right") - 1)
-            parts.append(
-                RowRange(
-                    pos, cnt,
-                    ckpt=(int(ck[j, 0]), int(ck[j, 1])),
-                    pipeline=pipe,
-                )
-            )
-            pos += cnt
+        parts = row_ranges(start, n, per)
+        pipe = 2 * len(parts) <= cores
+        for p in parts:
+            j = int(np.searchsorted(ck[:, 1], p.start * cs, side="right") - 1)
+            p.ckpt = (int(ck[j, 0]), int(ck[j, 1]))
+            p.pipeline = pipe
         return parts
 
-    def read(self, partition: RowRange):
+    def read(self, partition):
         from polars_readstat_spark.sources.sav.decode import (
             decode_rows,
             iter_compressed_rows,
@@ -292,28 +167,9 @@ class SavReader(DataSourceReader):
 
         meta = self.meta
         rw = meta.record_width
-        ncols = max(len(self.col_indices), 1)
-        from polars_readstat_spark.sources.partplan import (
-            default_batch_rows,
-        )
+        batch_rows = self._batch_rows()
 
-        batch_rows = self.batch_size or default_batch_rows(
-            ncols, self.target_parallelism
-        )
-
-        def with_row_index(batch, pos, cnt):
-            if not self.row_index_name:
-                return batch
-            idx = pa.array(
-                np.arange(pos, pos + cnt, dtype=np.int64)
-                + ((self.row_index_offset or 0) - self.offset)
-            )
-            return pa.RecordBatch.from_arrays(
-                [*batch.columns, idx],
-                names=[*batch.schema.names, self.row_index_name],
-            )
-
-        def emit(rows, pos, cnt):
+        def emit(rows, pos):
             batch = decode_rows(
                 meta,
                 rows,
@@ -322,14 +178,14 @@ class SavReader(DataSourceReader):
                 self.missing_string_as_null,
                 informative=self.informative,
             )
-            return with_row_index(batch, pos, cnt)
+            return self._indexed(batch, pos)
 
         if partition.n == 0:
-            yield emit(np.empty((0, rw), dtype=np.uint8), partition.start, 0)
+            yield emit(np.empty((0, rw), dtype=np.uint8), partition.start)
             return
 
         if meta.compression != 0:
-            ck = getattr(partition, "ckpt", None)
+            ck = partition.ckpt
             if ck is not None:
                 from polars_readstat_spark.sources.sav.decode import (
                     iter_checkpoint_rows,
@@ -338,14 +194,14 @@ class SavReader(DataSourceReader):
                 for pos, rows in iter_checkpoint_rows(
                     meta, partition.start, partition.n, batch_rows,
                     ck[0], ck[1],
-                    pipeline=getattr(partition, "pipeline", True),
+                    pipeline=partition.pipeline,
                     io_readahead=self.io_readahead,
                     sim_latency_s=self.sim_latency_s,
                     zsav_pool=self.zsav_pool,
                 ):
-                    yield emit(rows, pos, rows.shape[0])
+                    yield emit(rows, pos)
                 return
-            if getattr(partition, "literal", False):
+            if partition.literal:
                 from polars_readstat_spark.sources.sav.decode import (
                     iter_literal_rows,
                 )
@@ -356,7 +212,7 @@ class SavReader(DataSourceReader):
                     sim_latency_s=self.sim_latency_s,
                     zsav_pool=self.zsav_pool,
                 ):
-                    yield emit(rows, pos, rows.shape[0])
+                    yield emit(rows, pos)
                 return
             # sequential command stream: decode once, bounded memory —
             # one chunk + one partial case live at a time (round-1 OOM
@@ -367,7 +223,7 @@ class SavReader(DataSourceReader):
                 sim_latency_s=self.sim_latency_s,
                 zsav_pool=self.zsav_pool,
             ):
-                yield emit(rows, pos, rows.shape[0])
+                yield emit(rows, pos)
             return
 
         # raw range fetches, separable from decode so io_readahead
@@ -386,4 +242,4 @@ class SavReader(DataSourceReader):
             rows = np.frombuffer(buf, dtype=np.uint8, count=cnt * rw).reshape(
                 cnt, rw
             )
-            yield emit(rows, pos, cnt)
+            yield emit(rows, pos)

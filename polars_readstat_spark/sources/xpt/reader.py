@@ -1,13 +1,10 @@
 """XPT DataSourceReader: fixed-width records ⇒ exact row-range
-partitions, same planning shape as the Stata reader (reference
-src/sas/xpt.rs batch iterator, re-expressed)."""
+partitions on the shared scan front end (sources/partplan.py), the
+reference src/sas/xpt.rs batch iterator re-expressed."""
 
 from __future__ import annotations
 
-import numpy as np
-import pyarrow as pa
-from pyspark.sql.datasource import DataSourceReader, InputPartition
-
+from polars_readstat_spark.sources.partplan import ScanReader
 from polars_readstat_spark.sources.xpt.meta import (
     XptMeta,
     decode_xpt_rows,
@@ -15,114 +12,27 @@ from polars_readstat_spark.sources.xpt.meta import (
 )
 
 
-class XptRowRange(InputPartition):
-    def __init__(self, start: int, n: int):
-        self.start = start
-        self.n = n
-
-
-def _opt_bool(options, key, default=False):
-    v = options.get(key)
-    return default if v is None else str(v).lower() in {"1", "true", "yes"}
-
-
-def _opt_int(options, key, default=None):
-    v = options.get(key)
-    return default if v in (None, "") else int(v)
-
-
-class XptReader(DataSourceReader):
+class XptReader(ScanReader):
     handles_readahead = True  # pipelines fetch/decode in read()
 
     def __init__(self, path: str, options, meta: XptMeta | None = None):
-        self.path = path
-        self.options = dict(options)
         self.meta = meta or parse_xpt_meta(path)
-        cols = options.get("columns")
-        if cols:
-            wanted = [c.strip() for c in str(cols).split(",") if c.strip()]
-            by_name = {v.name: i for i, v in enumerate(self.meta.variables)}
-            missing = [c for c in wanted if c not in by_name]
-            if missing:
-                raise ValueError(f"readstat: unknown columns {missing}")
-            self.col_indices = [by_name[c] for c in wanted]
-        else:
-            self.col_indices = list(range(len(self.meta.variables)))
-        self.missing_string_as_null = _opt_bool(options, "missing_string_as_null")
-        self.row_index_name = options.get("row_index_name")
-        self.row_index_offset = _opt_int(options, "row_index_offset", 0) or 0
-        self.limit = _opt_int(options, "n_rows", _opt_int(options, "limit"))
-        self.offset = _opt_int(options, "offset", 0) or 0
-        self.rows_per_partition = _opt_int(options, "rows_per_partition")
-        self.target_parallelism = _opt_int(options, "target_parallelism")
-        self.batch_size = _opt_int(options, "batch_size")
-        from polars_readstat_spark.sources.readahead import (
-            parse_readahead_opts,
-        )
-
-        self.io_readahead, self.sim_latency_s = parse_readahead_opts(options)
-        from polars_readstat_spark.sources import informative as inf
-
-        self.informative = inf.parse_opts(options)
+        super().__init__(path, options, self.meta.variables)
 
     def partitions(self):
-        total = self.meta.n_rows
-        start = min(self.offset, total)
-        n = total - start
-        if self.limit is not None:
-            n = min(n, self.limit)
-        if self.rows_per_partition:
-            per = self.rows_per_partition
-        else:
-            from polars_readstat_spark.sources.partplan import (
-                rows_per_partition,
-            )
+        return self._row_plan(self.meta.n_rows, self.meta.record_width)
 
-            per = rows_per_partition(
-                self.meta.record_width, n, self.target_parallelism
-            )
-        parts = []
-        pos = start
-        while pos < start + n:
-            cnt = min(per, start + n - pos)
-            parts.append(XptRowRange(pos, cnt))
-            pos += cnt
-        return parts or [XptRowRange(start, 0)]
-
-    def read(self, partition: XptRowRange):
+    def read(self, partition):
         m = self.meta
-        rl = max(m.record_width, 1)
-        ncols = max(len(self.col_indices), 1)
-        from polars_readstat_spark.sources.partplan import (
-            default_batch_rows,
-        )
 
-        batch_rows = self.batch_size or default_batch_rows(
-            ncols, self.target_parallelism
-        )
-
-        def finish(batch, global_start):
-            if self.row_index_name:
-                idx = pa.array(
-                    np.arange(
-                        global_start, global_start + batch.num_rows, dtype=np.int64
-                    )
-                    + (self.row_index_offset - self.offset)
-                )
-                batch = pa.RecordBatch.from_arrays(
-                    [*batch.columns, idx],
-                    names=[*batch.schema.names, self.row_index_name],
-                )
-            return batch
+        def decode(buf):
+            return decode_xpt_rows(
+                m, buf, self.col_indices, self.missing_string_as_null,
+                informative=self.informative,
+            )
 
         if partition.n == 0:
-            yield finish(
-                decode_xpt_rows(
-                    m, b"", self.col_indices, self.missing_string_as_null,
-                    informative=self.informative,
-                ),
-                partition.start,
-            )
+            yield self._indexed(decode(b""), partition.start)
             return
 
         # raw range fetches, separable from decode so io_readahead
@@ -132,14 +42,9 @@ class XptReader(DataSourceReader):
             fetch_row_ranges,
         )
 
-        it = fetch_row_ranges(
-            self.path, m.data_offset, rl,
-            partition.start, partition.n, batch_rows,
+        for pos, _cnt, buf in fetch_row_ranges(
+            self.path, m.data_offset, max(m.record_width, 1),
+            partition.start, partition.n, self._batch_rows(),
             self.sim_latency_s, self.io_readahead,
-        )
-        for pos, cnt, buf in it:
-            batch = decode_xpt_rows(
-                m, buf, self.col_indices, self.missing_string_as_null,
-                informative=self.informative,
-            )
-            yield finish(batch, pos)
+        ):
+            yield self._indexed(decode(buf), pos)

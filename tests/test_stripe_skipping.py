@@ -161,13 +161,12 @@ def test_stripes_refute_malformed_manifest_never_prunes():
 
 
 def test_part_row_span_shapes():
-    from polars_readstat_spark.sources.datasource import RowRange
     from polars_readstat_spark.sources.filters import _part_row_span
+    from polars_readstat_spark.sources.partplan import RowRange
     from polars_readstat_spark.sources.sas7bdat.reader import SasPageRange
-    from polars_readstat_spark.sources.xpt.reader import XptRowRange
 
     assert _part_row_span(RowRange(5, 10)) == (5, 15)
-    assert _part_row_span(XptRowRange(0, 3)) == (0, 3)
+    assert _part_row_span(RowRange(0, 3)) == (0, 3)
     # uncompressed sas page range: exact span
     assert _part_row_span(SasPageRange(0, 4, 100, 5, 20)) == (105, 125)
     # compressed plain scan (take=-1): span unknowable → None
