@@ -380,10 +380,12 @@ def write_readstat(df, path, metadata=None, **kwargs) -> None:
     """Write a Spark DataFrame to a statistical file format, dispatched
     on extension (reference write_readstat, __init__.py:708-878).
 
-    Formats: .dta (Stata v118), .sav, .xpt (v5), .por. kwargs:
-    data_label, variable_labels, value_labels (+ per-format extras);
-    `metadata` accepts a `read_metadata` dict or a `metadata_df`
-    DataFrame, merged with kwargs (kwargs win — reference W7).
+    Formats: .dta (Stata v118), .sav and .zsav (SPSS, zlib-compressed
+    for .zsav), .sas7bdat, .xpt (v5; ``version=8`` for v8), .por.
+    kwargs: data_label, variable_labels, value_labels (+ per-format
+    extras); `metadata` accepts a `read_metadata` dict or a
+    `metadata_df` DataFrame, merged with kwargs (kwargs win —
+    reference W7). A failed write leaves no partial file at `path`.
     """
     if metadata is not None:
         kwargs = _merge_write_metadata(df, metadata, kwargs)

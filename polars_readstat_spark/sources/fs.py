@@ -43,6 +43,7 @@ import os
 import posixpath
 import re
 import time
+from contextlib import suppress
 
 _SCHEME_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.\-]*)://")
 _SIMLAT_RE = re.compile(r"^simlat(\d+)$")
@@ -660,17 +661,25 @@ class _SpoolUpload:
             finally:
                 out.close()
         finally:
+            self.discard()
+
+    def discard(self) -> None:
+        """Drop the spool without uploading (error-path exit): an
+        upload now would publish a torn remote file."""
+        self._closed = True
+        with suppress(OSError):
             self._f.close()
-            try:
-                os.unlink(self._spool)
-            except OSError:
-                pass
+        with suppress(OSError):
+            os.unlink(self._spool)
 
     def __enter__(self):
         return self
 
-    def __exit__(self, *exc):
-        self.close()
+    def __exit__(self, exc_type, *exc):
+        if exc_type is not None:
+            self.discard()
+        else:
+            self.close()
         return False
 
 
@@ -918,13 +927,7 @@ class _S3MultipartUpload:
             return
         self._closed = True
         if self._fallback is not None:
-            # spool close() would upload a torn artifact; just drop it
-            self._fallback._closed = True
-            try:
-                self._fallback._f.close()
-                os.unlink(self._fallback._spool)
-            except OSError:
-                pass
+            self._fallback.discard()
             return
         self._abort_upload()
         self._cleanup_local()

@@ -1,15 +1,21 @@
 """Writers / sinks (SURVEY.md §2.7): Spark DataFrame → statistical
 file formats. Single-file formats with row-count headers ⇒ a pre-pass
 aggregation job (widths/counts/ranges) + a driver-side streaming
-assembly over Arrow chunks (iter_arrow_chunks — the Spark translation
-of the reference's two-pass sink_stata, pybindings.rs:951-1096).
+assembly of chunks the executors already packed (``packed_stream`` —
+the Spark translation of the reference's two-pass sink_stata,
+pybindings.rs:951-1096).
 
 The column plan every path shares (single file, partitioned, sink) also
 lives here: Spark type → kind (``column_kinds``), the pre-pass
 (``prepass_aggs``), string-width limits (``str_widths``) and the epoch
-casts (``to_disk``). dta plans its own integer narrowing."""
+casts (``to_disk``). dta plans its own integer narrowing. So does the
+single-file export stream (``packed_stream`` over the ``_TRANSPORT``
+table; dta's strL path alone uses ``iter_arrow_chunks``), its output
+(``export_output``) and the ``tagged_missing`` split."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager, suppress
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -37,6 +43,41 @@ _NUMERIC = (
     "tinyint", "smallint", "int", "bigint", "float", "double", "boolean",
     "void",  # an all-null column: written as an all-missing numeric
 )
+
+
+def _rows_at_least(n: int):
+    return lambda src, rows: int(rows) >= n
+
+
+def _fewer_parts_than_cores(src, rows) -> bool:
+    cores = max(int(src.sparkSession.sparkContext.defaultParallelism), 1)
+    return src.rdd.getNumPartitions() < cores
+
+
+# the single-file transport per format (packed_stream): (predicate on
+# (projected input, pre-pass row count) that selects the ordered
+# all-cores protocol, narrow chunk rows, ordered chunk rows). The
+# narrow path's toLocalIterator runs ~1 input partition at a time,
+# capping pack parallelism at the scan's partition count, so big
+# exports fan out.
+# - por: the shortest-token ladder dominates; ordered 8192-row chunks
+#   fan it across every core (65536-row chunks capped a 600k-row
+#   export at ~10-way) — the byte stream is chunk-boundary independent
+# - dta: the pack is a vectorized recarray fill (~2 s per million rows
+#   single-core), cheap enough that the shuffle+persist costs more
+#   than it saves at 100k rows (measured 2.0 -> 3.2 s at 600k rows)
+# - sas7bdat: its pre-pass counts no rows (the header is back-patched);
+#   row packing and the RLE/RDC encode dominate, so any input with
+#   fewer partitions than cores (one 128 MB-split parquet scan → 3
+#   tasks on a 32-core box) takes the ordered protocol
+_TRANSPORT = {
+    "sav": (_rows_at_least(100_000), 8192, 8192),
+    "zsav": (_rows_at_least(100_000), 8192, 8192),
+    "xpt": (_rows_at_least(100_000), 8192, 8192),
+    "por": (_rows_at_least(100_000), 65536, 8192),
+    "dta": (_rows_at_least(2_000_000), 65536, 65536),
+    "sas7bdat": (_fewer_parts_than_cores, 8192, 4096),
+}
 
 
 def column_kinds(fields, fmt: str) -> list[str]:
@@ -196,6 +237,113 @@ def str_cell_matrix(col, w: int, utf8_boundary: bool = False):
     return out[codes]
 
 
+def split_tagged(df, tagged_missing):
+    """Split ``tagged_missing={"value_col": "indicator_col"}`` off the
+    frame → (data frame without the indicator columns, indicator
+    names, ``__tag_<i>`` string projections of the indicators for a
+    stream's tail, {data column index: stream column index of its
+    indicator})."""
+    tagged_missing = tagged_missing or {}
+    ind_names = list(dict.fromkeys(tagged_missing.values()))
+    data_df = df.drop(*ind_names) if ind_names else df
+    names = data_df.columns
+    tag_exprs = [
+        F.col(c).cast("string").alias(f"__tag_{i}")
+        for i, c in enumerate(ind_names)
+    ]
+    tag_slot = {
+        names.index(v): len(names) + ind_names.index(i)
+        for v, i in tagged_missing.items()
+        if v in names
+    }
+    return data_df, ind_names, tag_exprs, tag_slot
+
+
+def check_tagged(tagged_missing, numeric, columns) -> None:
+    """Every tagged value column must be a numeric data column and
+    every indicator a column of the input frame."""
+    for vcol, icol in (tagged_missing or {}).items():
+        if vcol not in numeric:
+            raise ValueError(
+                f"tagged_missing: {vcol!r} is not a numeric data column"
+            )
+        if icol not in columns:
+            raise ValueError(
+                f"tagged_missing: indicator column {icol!r} not in DataFrame"
+            )
+
+
+@contextmanager
+def export_output(path: str):
+    """Open a single-file export target. If the body raises, the
+    partial file is removed: the open already truncated it. A failed
+    open removes nothing. Remote targets discard their spool or
+    multipart upload instead, publishing nothing."""
+    from polars_readstat_spark.sources import fs
+
+    out = fs.fs_open_output(path)
+    try:
+        with out as fh:
+            yield fh
+    except BaseException:
+        if not fs.is_remote(path):
+            with suppress(OSError):
+                fs.fs_remove(path)
+        raise
+
+
+def packed_stream(df, fmt, project, pack_fn, *, rows, modules):
+    """The single-file export stream: ``(payload, n)`` packed on the
+    executors by ``pack_fn``, yielded in input order.
+
+    ``_TRANSPORT[fmt]`` picks the narrow (``iter_packed_chunks``) or
+    ordered (``iter_ordered_packed``) transport and its chunk rows;
+    both are called through this module's globals as ``(df, pack_fn,
+    chunk_rows, modules=, cast=)``, so a tap that wraps them sees
+    every export. ``project(frame, extra)`` selects the on-disk
+    columns plus ``extra``: before the narrow transport, and after the
+    ordered one's shuffle (its ``cast``) — RangePartitioner's bounds
+    sampling re-executes the exchange child, and post-shuffle that
+    pass is the bare scan + order tags, not scan + casts (measured:
+    the pre-cast child cost the sav export ~0.4 s/run at sf0.1).
+
+    ``rows``, when known, is the pre-pass count the header already
+    carries: a drained total that differs (a nondeterministic upstream
+    can feed the two jobs different rows) raises instead of leaving a
+    file whose header disagrees with its data."""
+    ordered, narrow_rows, ordered_rows = _TRANSPORT[fmt]
+    src = project(df, [])
+    if ordered(src, rows):
+        chunks = iter_ordered_packed(
+            df, pack_fn, ordered_rows, modules=modules,
+            cast=lambda b: project(
+                b, [F.col("__prs_mid"), F.col("__prs_cid")]
+            ),
+        )
+    else:
+        chunks = iter_packed_chunks(src, pack_fn, narrow_rows, modules=modules)
+    got = 0
+    for payload, n in chunks:
+        got += n
+        yield payload, n
+    if rows is not None and got != int(rows):
+        raise RuntimeError(
+            f"write {fmt}: the pre-pass counted {int(rows)} rows but the "
+            f"stream delivered {got} (is the input deterministic?)"
+        )
+
+
+def _pickle_by_value(modules) -> None:
+    """Register ``modules`` for cloudpickle pickle-by-value, so a stage
+    works where only the driver can import the package."""
+    import sys
+
+    from pyspark import cloudpickle
+
+    for m in modules:
+        cloudpickle.register_pickle_by_value(sys.modules[m])
+
+
 def iter_arrow_chunks(df, max_rows: int = 65536):
     """Partition-ordered Arrow-chunk transport for driver-side sinks.
 
@@ -246,17 +394,11 @@ def iter_packed_chunks(df, pack_fn, max_rows: int = 8192, modules=()):
     stage on the executors (rows pack independently in every format
     here); the driver receives (payload, n_rows) pairs in partition
     order and only concatenates. `modules` are registered for
-    cloudpickle pickle-by-value so the stage works when the package
-    is importable only on the driver (the external-driver layout);
-    pack_fn and everything it references must resolve from those
-    modules' globals, not from runtime package imports.
+    pickle-by-value (``_pickle_by_value``); pack_fn and everything it
+    references must resolve from those modules' globals, not from
+    runtime package imports.
     """
-    import sys
-
-    from pyspark import cloudpickle
-
-    for m in modules:
-        cloudpickle.register_pickle_by_value(sys.modules[m])
+    _pickle_by_value(modules)
     names = df.columns
 
     def stage(batches):
@@ -282,45 +424,23 @@ def iter_packed_chunks(df, pack_fn, max_rows: int = 8192, modules=()):
         yield row[0], row[1]
 
 
-# chunk-id buckets per core in the wide packing protocol (see
-# iter_ordered_packed). 1, measured: 4x over-partitioning to
-# load-balance unevenly-hashed chunk ids LOST to its own per-task
-# Python-worker overhead in an interleaved A/B at sf0.1 (por
-# 4.2 vs 4.4 s, rle 3.6 vs 3.9, zsav 2.9 vs 3.6) — the straggler
-# tail it targets is smaller than 96 extra mapInArrow task spin-ups.
-_WIDE_FACTOR = 1
-
-
 def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None):
     """Executor packing fanned across every core with JVM-side order
-    tags — one Python crossing (round 13; guide §4.1: control how
-    often data crosses the boundary).
+    tags and one Python crossing (guide §4.1).
 
     Rows are tagged in the JVM with a monotonically-increasing id and
-    a chunk id (``__prs_cid = __prs_mid div max_rows`` — contiguous,
-    in-order row groups, because the id is (partition << 33) + offset
-    so chunk ids sort exactly like the input row order), then
-    RANGE-repartitioned BY CHUNK ID across the cluster: whole chunks
-    travel together through a JVM-only shuffle, the data crosses into
-    Python exactly once in the pack stage, and — because range
-    partition index order IS cid order and each task emits its chunks
-    cid-ascending — the persisted pack output streams to the driver
-    already in exact input order via plain toLocalIterator (round 14;
-    VERDICT r13 next#5). The previous hash-partitioned drain paid a
-    second full exchange + sort of the PACKED PAYLOAD BYTES
-    (orderBy(cid) over the persisted chunks) to restore that order;
-    range partitioning moves the cost to one row-sampling pass of the
-    tagged input (RangePartitioner bounds), which at export scale is
-    far cheaper than re-shuffling every packed byte. A strictly-
-    increasing cid check at the drain turns any ordering violation
-    into a hard error instead of a corrupt file.
-
-    The previous protocol (two mapInArrow stages around the shuffle)
-    paid a second full Python crossing — slicing + Arrow-IPC
-    re-serializing every row on the narrow input partitions before
-    the shuffle could spread the work — measured 0.65 s of the
-    sas7bdat export pipeline at sf0.1 — plus a driver-side (pid, seq)
-    reassembly dict.
+    a chunk id (``__prs_cid = __prs_mid div max_rows``: the id is
+    (partition << 33) + offset, so chunk ids sort exactly like the
+    input rows), then RANGE-repartitioned by chunk id: whole chunks
+    travel together through a JVM-only shuffle, cross into Python once
+    in the pack stage, and — because range partition order is cid
+    order and each task emits its chunks cid-ascending — the persisted
+    pack output drains in exact input order via plain
+    toLocalIterator. The cost is one row-sampling pass of the tagged
+    input (RangePartitioner bounds), far cheaper at export scale than
+    re-shuffling the packed bytes. A strictly-increasing cid check and
+    chunk/row totals at the drain turn any ordering or loss into a
+    hard error instead of a corrupt file.
 
     ``cast``, when given, is applied AFTER the repartition and must
     preserve the ``__prs_mid``/``__prs_cid`` columns: the shuffle
@@ -328,12 +448,7 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
     (e.g. dates → display strings) runs on every core instead of on
     the scan's partition count.
     """
-    import sys
-
-    from pyspark import cloudpickle
-
-    for m in modules:
-        cloudpickle.register_pickle_by_value(sys.modules[m])
+    _pickle_by_value(modules)
     for c in ("__prs_mid", "__prs_cid"):
         if c in df.columns:
             raise ValueError(f"iter_ordered_packed: column {c!r} is reserved")
@@ -342,7 +457,12 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
     tagged = df.withColumn(
         "__prs_mid", F.monotonically_increasing_id()
     ).withColumn("__prs_cid", F.expr(f"__prs_mid div {int(max_rows)}"))
-    body = tagged.repartitionByRange(_WIDE_FACTOR * cores, "__prs_cid")
+    # one chunk-id range per core, measured: 4x over-partitioning to
+    # load-balance unevenly-hashed chunk ids LOST to its own per-task
+    # Python-worker overhead in an interleaved A/B at sf0.1 (por
+    # 4.2 vs 4.4 s, rle 3.6 vs 3.9, zsav 2.9 vs 3.6) — the straggler
+    # tail it targets is smaller than 96 extra mapInArrow task spin-ups
+    body = tagged.repartitionByRange(cores, "__prs_cid")
     if cast is not None:
         body = cast(body)
     names = [c for c in body.columns if c not in ("__prs_mid", "__prs_cid")]

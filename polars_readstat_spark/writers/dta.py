@@ -7,8 +7,8 @@ Two Spark jobs, then a streaming assembly:
    row count — the Spark shape of the reference's sink pre-pass
    (pybindings.rs:996-1047).
 2. **Pack**: batches are packed vectorized (numpy structured array per
-   batch). The driver-side `write_dta` pulls partitions in order via
-   `toLocalIterator()`; the distributed path
+   batch). The driver-side `write_dta` drains executor-packed chunks
+   in input order (``writers.packed_stream``); the distributed path
    (writers/partitioned.py) hands the column plan from the global
    pre-pass to the sink's ``write_partition_file``, which runs the
    same pack+assemble inside each executor task against its own
@@ -34,6 +34,12 @@ from pyspark.sql import functions as F
 from polars_readstat_spark.sources.dta.decode import (
     STATA_EPOCH_DAYS,
     STATA_EPOCH_MS,
+)
+from polars_readstat_spark.writers import (
+    check_tagged,
+    export_output,
+    packed_stream,
+    split_tagged,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
@@ -379,8 +385,6 @@ def _pack_stream(
     """Pack an iterator of pandas batches → (data, strls, n_rows).
     tagged_missing: value column → indicator column (both must be in
     each batch; the indicator column is consumed, not packed)."""
-    parse_tag_offsets = _parse_tag_offsets
-
     rec_dtype = _rec_dtype(cols)
     data = bytearray()
     strls = bytearray()
@@ -388,21 +392,28 @@ def _pack_stream(
     for pdf in pdf_iter:
         if len(pdf) == 0:
             continue
-        tag_offsets = None
-        if tagged_missing:
-            tag_offsets = {
-                vcol: parse_tag_offsets(pdf[icol].tolist())
-                for vcol, icol in tagged_missing.items()
-            }
-            for offs in tag_offsets.values():
-                if (offs == 27).any():
-                    raise ValueError(
-                        "tagged_missing: Stata has no '._' tag "
-                        "(only '.' and '.a'-'.z')"
-                    )
+        tag_offsets = _tag_offsets(pdf, tagged_missing)
         data += _pack_batch(cols, rec_dtype, pdf, pos, strls, tag_offsets)
         pos += len(pdf)
     return data, strls, pos
+
+
+def _tag_offsets(pdf, tagged_missing) -> dict | None:
+    """value column → per-row tag offsets from its indicator column
+    (None without tags); Stata has no '._' tag."""
+    if not tagged_missing:
+        return None
+    tag_offsets = {
+        vcol: _parse_tag_offsets(pdf[icol].tolist())
+        for vcol, icol in tagged_missing.items()
+    }
+    for offs in tag_offsets.values():
+        if (offs == 27).any():
+            raise ValueError(
+                "tagged_missing: Stata has no '._' tag "
+                "(only '.' and '.a'-'.z')"
+            )
+    return tag_offsets
 
 
 def _assemble_dta(
@@ -531,90 +542,54 @@ def write_dta(
     value_labels = value_labels or {}
     tagged_missing = dict(tagged_missing or {})
 
-    ind_names = list(dict.fromkeys(tagged_missing.values()))
-    data_df = df.drop(*ind_names) if ind_names else df
+    data_df, ind_names, _, _ = split_tagged(df, tagged_missing)
     plan, aggs = _plan_columns(data_df)
     stats = df.agg(*aggs).collect()[0].asDict()
     cols = _finalize_cols(plan, stats)
-    kinds_by_name = {c[0]: c[1] for c in cols}
-    for vcol, icol in tagged_missing.items():
-        if kinds_by_name.get(vcol) in (None, "str", "strl"):
-            raise ValueError(
-                f"tagged_missing: {vcol!r} is not a numeric data column"
-            )
-        if icol not in df.columns:
-            raise ValueError(
-                f"tagged_missing: indicator column {icol!r} not in DataFrame"
-            )
+    check_tagged(
+        tagged_missing,
+        [c[0] for c in cols if c[1] not in ("str", "strl")],
+        df.columns,
+    )
 
     names = [c[0] for c in cols]
-    src = df.select(*names, *ind_names)
-    has_strl = any(c[1] == "strl" for c in cols)
-    if has_strl:
+
+    def project(frame, extra):
+        return frame.select(*names, *ind_names, *extra)
+
+    if any(c[1] == "strl" for c in cols):
         # strL GSO records key on the GLOBAL row number, which only
         # the ordered driver stream knows — keep packing driver-side
-        # (reference W2 pattern)
+        # (reference W2 pattern); looked up at call time, like the
+        # transports packed_stream calls, so a tap on the module sees it
         from polars_readstat_spark.writers import iter_arrow_chunks
 
-        batches = iter_arrow_chunks(src, 65536)
+        batches = iter_arrow_chunks(project(df, []), 65536)
         data, strls, n_rows = _pack_stream(cols, batches, tagged_missing)
     else:
         # fixed-width records with no cross-row state: pack on the
-        # executors, concatenate on the driver in partition order.
-        # Big exports take the all-cores JVM-tagged protocol (see
-        # iter_ordered_packed; same ≥100k-row policy as por/sav/xpt).
-        from polars_readstat_spark.writers import (
-            iter_ordered_packed,
-            iter_packed_chunks,
-        )
-
-        cols_l, tm = list(cols), dict(tagged_missing)
-        rec_dtype = _rec_dtype(cols_l)
+        # executors, concatenate on the driver in input order
+        rec_dtype = _rec_dtype(cols)
 
         def pack_fn(pdf):
-            tag_offsets = None
-            if tm:
-                tag_offsets = {
-                    vcol: _parse_tag_offsets(pdf[icol].tolist())
-                    for vcol, icol in tm.items()
-                }
-                for offs in tag_offsets.values():
-                    if (offs == 27).any():
-                        raise ValueError(
-                            "tagged_missing: Stata has no '._' tag "
-                            "(only '.' and '.a'-'.z')"
-                        )
             return _pack_batch(
-                cols_l, rec_dtype, pdf, 0, bytearray(), tag_offsets
+                cols, rec_dtype, pdf, 0, bytearray(),
+                _tag_offsets(pdf, tagged_missing),
             )
 
-        data = bytearray()
-        strls = bytearray()
-        n_rows = 0
-        # dta's pack is a vectorized numpy recarray fill (~2 s per
-        # million rows single-core) — cheap enough that the wide
-        # protocol's shuffle+persist costs MORE than it saves at the
-        # 100k scale where the ladder-style packers (por/sav/xpt)
-        # already win; measured 2.0 -> 3.2 s at 600k rows. Only very
-        # large exports take the wide path.
-        chunks_iter = (
-            iter_ordered_packed if int(stats["__n"]) >= 2_000_000
-            else iter_packed_chunks
+        data = b"".join(
+            payload
+            for payload, _n in packed_stream(
+                df, "dta", project, pack_fn, rows=stats["__n"],
+                modules=(
+                    "polars_readstat_spark.writers.dta",
+                    "polars_readstat_spark.writers.tagged",
+                ),
+            )
         )
-        for payload, n in chunks_iter(
-            src, pack_fn, 65536,
-            modules=(
-                "polars_readstat_spark.writers.dta",
-                "polars_readstat_spark.writers.tagged",
-            ),
-        ):
-            data += payload
-            n_rows += n
+        strls, n_rows = b"", int(stats["__n"])
     out = _assemble_dta(
         cols, data, strls, n_rows, data_label, variable_labels, value_labels
     )
-    from polars_readstat_spark.sources.fs import fs_open_output
-
-    with fs_open_output(path) as f:
+    with export_output(path) as f:
         f.write(out)
-

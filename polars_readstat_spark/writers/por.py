@@ -19,11 +19,11 @@ semantics at the format's edge.
 
 POR is an eager single file (the format is legacy interchange, not a
 data-plane format at scale); token packing — the shortest-form ladder
-— runs on the executors (iter_packed_chunks*, one numpy lane-wise
+— runs on the executors (writers.packed_stream, one numpy lane-wise
 ladder pass per DISTINCT value — see _num_tokens_unique), and the
-driver only concatenates chunk payloads in partition order and wraps
-the stream at 80 columns with one numpy pass per chunk, so memory
-stays bounded.
+driver only concatenates chunk payloads in input order and wraps the
+stream at 80 columns with one numpy pass per chunk, so memory stays
+bounded.
 """
 
 from __future__ import annotations
@@ -31,12 +31,13 @@ from __future__ import annotations
 import datetime
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_readstat_spark.sources.por.b30 import _parse_base30
 from polars_readstat_spark.sources.por.reader import _POS_ASCII
 from polars_readstat_spark.writers import (
     column_kinds,
+    export_output,
+    packed_stream,
     prepass_aggs,
     str_widths,
     to_disk,
@@ -747,12 +748,9 @@ def write_por(
     kinds = column_kinds(fields, "por")
     stats = df.agg(*prepass_aggs(fields, kinds, "por")).collect()[0].asDict()
     widths = str_widths("por", fields, kinds, lambda n: stats.get(f"__w_{n}"))
-    src = to_disk(df, "por", fields, kinds)
 
     now = datetime.datetime.now()
-    from polars_readstat_spark.sources.fs import fs_open_output
-
-    with fs_open_output(path) as fh:
+    with export_output(path) as fh:
         w = _PorWriter(fh)
         # vanity: 5 × 40 chars; file label surfaces in row 1 cols 20-39
         row0 = "ASCII SPSS PORT FILE".ljust(40)
@@ -801,45 +799,18 @@ def write_por(
                 w.write("C")
                 w.string(label[:255])
         w.write("F")
-        from polars_readstat_spark.writers import (
-            iter_ordered_packed,
-            iter_packed_chunks,
-        )
-
-        kinds_l = list(kinds)
-        # the shortest-token ladder dominates big exports: fan it
-        # across the cluster (wide protocol) once the pre-pass count
-        # says it's worth a shuffle + persist; small writes keep the
-        # cheap narrow path
-        # wide path: 8192-row chunks so the ladder fans across every
-        # core (65536-row chunks capped a 600k-row export at ~10-way);
-        # the byte stream is chunk-boundary independent — tokens are
-        # per-value and the 80-column wrap tracks a running position
-        por_mods = (
-            "polars_readstat_spark.writers.por",
-            "polars_readstat_spark.sources.por.b30",
-        )
-        # wide protocol: cast AFTER the repartition (guide §2.3) — the
-        # range-bounds sampling pass then re-executes only the bare
-        # scan + order tags, not the date/double casts (same fix as
-        # sav/xpt)
-        chunks = (
-            iter_ordered_packed(
-                df, lambda pdf: _pack_por_chunk(pdf, kinds_l), 8192,
-                modules=por_mods,
-                cast=lambda b: to_disk(
-                    b, "por", fields, kinds,
-                    extra=[F.col("__prs_mid"), F.col("__prs_cid")],
-                ),
-            )
-            if int(stats["__n"]) >= 100_000
-            else iter_packed_chunks(
-                src, lambda pdf: _pack_por_chunk(pdf, kinds_l), 65536,
-                modules=por_mods,
-            )
-        )
         pos = w.pos
-        for payload, _n in chunks:
+        # the shortest-token ladder runs on the executors; the driver
+        # wraps the concatenated tokens at 80 columns
+        for payload, _n in packed_stream(
+            df, "por",
+            lambda f, extra: to_disk(f, "por", fields, kinds, extra=extra),
+            lambda pdf: _pack_por_chunk(pdf, kinds), rows=stats["__n"],
+            modules=(
+                "polars_readstat_spark.writers.por",
+                "polars_readstat_spark.sources.por.b30",
+            ),
+        ):
             pos = _wrap_write(fh, payload, pos)
         if pos:  # Z-fill the last line like _PorWriter.finish
             fh.write(b"Z" * (LINE_LEN - pos) + b"\r\n")

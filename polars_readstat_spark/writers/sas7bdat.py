@@ -39,19 +39,22 @@ import struct
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_readstat_spark.writers import (
+    check_tagged,
     column_kinds,
+    export_output,
+    packed_stream,
     prepass_aggs,
+    split_tagged,
     str_cell_matrix,
     str_widths,
     to_disk,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
-    parse_tag_offsets as _parse_tag_offsets,
     sas7bdat_tag_rows as _sas7bdat_tag_rows,
+    slot_tags as _slot_tags,
 )
 from polars_readstat_spark.sources.sas7bdat.meta import _SIGS as _META_SIGS
 
@@ -851,17 +854,9 @@ def _build_header(dataset_name: str, page_length: int) -> bytes:
 
 def _pack_chunk_pdf(pdf, tag_slot, ncols, kinds, widths, row_length) -> bytes:
     """Pack one pandas chunk (data columns + trailing tag-indicator
-    columns per tag_slot) into fixed-width row bytes. Executor-side,
-    shared by the single- and two-stage pack paths."""
+    columns per tag_slot) into fixed-width row bytes. Executor-side."""
     cols = [pdf.iloc[:, i] for i in range(pdf.shape[1])]
-    tags = None
-    if tag_slot:
-        tags = [
-            _parse_tag_offsets(cols[tag_slot[ci]].tolist())
-            if ci in tag_slot
-            else None
-            for ci in range(ncols)
-        ]
+    tags = _slot_tags(cols, tag_slot, ncols)
     return _pack_rows(cols[:ncols], kinds, widths, row_length, tags)
 
 
@@ -1291,10 +1286,11 @@ def write_sas7bdat(
     """Write a Spark DataFrame as an uncompressed 64-bit LE sas7bdat.
 
     Same two-phase shape as the other single-file writers: one
-    pre-pass aggregation resolves string widths, then a
-    partition-ordered Arrow-chunk stream (iter_arrow_chunks) packs
-    vectorized batches onto DATA pages. Use ``write_sas7bdat_partitioned`` for
-    the distributed bulk-export path.
+    pre-pass aggregation resolves string widths, then the executors
+    pack (and RLE/RDC-encode) row chunks that the driver drains in
+    input order (``writers.packed_stream``) onto DATA pages. Use
+    ``write_sas7bdat_partitioned`` for the distributed bulk-export
+    path.
 
     numeric_lengths: SAS ``LENGTH var 3-8;`` truncated numeric
     storage — col → bytes (3..8). Keeps sign + exponent + the top
@@ -1305,23 +1301,15 @@ def write_sas7bdat(
     """
     variable_labels = variable_labels or {}
     tagged_missing = dict(tagged_missing or {})
-    ind_names = list(dict.fromkeys(tagged_missing.values()))
-    data_df = df.drop(*ind_names) if ind_names else df
+    data_df, _, tag_exprs, tag_slot = split_tagged(df, tagged_missing)
     fields = data_df.schema.fields
     names = [f.name for f in fields]
     kinds = column_kinds(fields, "sas7bdat")
-    for vcol, icol in tagged_missing.items():
-        if vcol not in names or kinds[names.index(vcol)] == "str":
-            raise ValueError(
-                f"tagged_missing: {vcol!r} is not a numeric data column"
-            )
-        if icol not in df.columns:
-            raise ValueError(
-                f"tagged_missing: indicator column {icol!r} not in DataFrame"
-            )
+    numeric = [n for n, k in zip(names, kinds) if k != "str"]
+    check_tagged(tagged_missing, numeric, df.columns)
     numeric_lengths = dict(numeric_lengths or {})
     for c in numeric_lengths:
-        if c not in names or kinds[names.index(c)] == "str":
+        if c not in numeric:
             raise ValueError(
                 f"numeric_lengths: {c!r} is not a numeric data column"
             )
@@ -1336,143 +1324,36 @@ def write_sas7bdat(
         "sas7bdat", fields, kinds, lambda n: stats.get(f"__w_{n}"),
         numeric_lengths,
     )
-    # indicator columns ride at the end of the stream, consumed at pack
-    src = to_disk(
-        df, "sas7bdat", fields, kinds,
-        extra=[F.col(c).cast("string").alias(f"__tag_{i}")
-               for i, c in enumerate(ind_names)],
-    )
-    ncols = len(names)
-    tag_slot = {names.index(v): ncols + ind_names.index(i)
-                for v, i in tagged_missing.items()}
-
-    def tags_for(cols):
-        if not tag_slot:
-            return None
-        from polars_readstat_spark.writers.tagged import parse_tag_offsets
-
-        return [
-            parse_tag_offsets(cols[tag_slot[ci]]) if ci in tag_slot else None
-            for ci in range(ncols)
-        ]
 
     # executors do the expensive work (row packing and, for
     # compressed files, per-row RLE/RDC encoding — rows are
     # independent, so this parallelizes perfectly); the driver only
-    # assembles pages from pre-encoded bytes in partition order. The
+    # assembles pages from pre-encoded bytes in input order. The
     # reference's sink is single-threaded end to end.
-    rl = sum(widths)
-    kinds_l, widths_l, comp = list(kinds), list(widths), compress or None
-    tag_slot_l, ncols_l = dict(tag_slot), ncols
+    rl, comp = sum(widths), compress or None
 
-    # the stage function and everything it references pickles BY VALUE
-    # (the executor may not have this package on sys.path — only the
-    # driver needs it); tagged.py has no package-internal imports and
-    # this module's executor-path helpers reference only module
-    # globals, so the closure is self-contained after registration
-    import sys as _sys
+    def pack_fn(pdf):
+        packed = _pack_chunk_pdf(pdf, tag_slot, len(names), kinds, widths, rl)
+        return _encode_packed(packed, rl, comp) if comp else packed
 
-    from pyspark import cloudpickle as _cp
-
-    for _mod in (
-        "polars_readstat_spark.writers.sas7bdat",
-        "polars_readstat_spark.writers.tagged",
-    ):
-        _cp.register_pickle_by_value(_sys.modules[_mod])
-
-    pack_pdf_f = _pack_chunk_pdf
-    encode_packed_f = _encode_packed
-
-    def pack_stage(batches):
-        import pyarrow as _pa
-
-        for b in batches:
-            start = 0
-            while start < b.num_rows:
-                piece = b.slice(start, 8192)
-                start += piece.num_rows
-                packed = pack_pdf_f(
-                    piece.to_pandas(), tag_slot_l, ncols_l,
-                    kinds_l, widths_l, rl,
-                )
-                if comp:
-                    packed = encode_packed_f(packed, rl, comp)
-                yield _pa.RecordBatch.from_arrays(
-                    [
-                        _pa.array([packed], type=_pa.binary()),
-                        _pa.array([piece.num_rows], type=_pa.int64()),
-                    ],
-                    names=["payload", "n"],
-                )
-
-    sc = df.sparkSession.sparkContext
-    cores = max(int(sc.defaultParallelism), 1)
-    n_src_parts = src.rdd.getNumPartitions()
-    # the encode dominates a compressed export; when the input has
-    # fewer partitions than cores (one 128 MB-split parquet scan →
-    # 3 tasks on a 32-core box), re-split the PACKED chunks across
-    # the cluster for the encode and let the driver restore order.
-    # Single-file export is the convenience path — the repartition
-    # moves chunk bytes once; bulk exports go through
-    # write_sas7bdat_partitioned which never funnels through a driver.
-    # row packing (per-row Python on string cells) dominates plain
-    # exports the same way the RLE/RDC encode dominates compressed
-    # ones, and toLocalIterator runs a narrow pack stage one partition
-    # at a time — so any big-but-narrow input takes the wide protocol
-    two_stage = n_src_parts < cores
-
-    from polars_readstat_spark.sources.fs import fs_open_output
-
-    with fs_open_output(path) as fh:
+    with export_output(path) as fh:
         sink = _SasFileSink(
             fh, fields, names, kinds, widths, dataset_name,
             variable_labels, page_length, compress,
         )
-        if two_stage:
-            # JVM-tagged single-crossing protocol (round 13; see
-            # writers.iter_ordered_packed): the shuffle carries the
-            # NARROW source types and the row-widening to_disk cast runs
-            # post-shuffle on every core, as do pack + RLE/RDC encode.
-            from polars_readstat_spark.writers import iter_ordered_packed
-
-            tag_exprs = [
-                F.col(c).cast("string").alias(f"__tag_{i}")
-                for i, c in enumerate(ind_names)
-            ]
-
-            def cast_after(shuffled):
-                return to_disk(
-                    shuffled, "sas7bdat", fields, kinds,
-                    extra=tag_exprs
-                    + [F.col("__prs_mid"), F.col("__prs_cid")],
-                )
-
-            def pack_encode_fn(pdf):
-                packed = pack_pdf_f(
-                    pdf, tag_slot_l, ncols_l, kinds_l, widths_l, rl
-                )
-                return (
-                    encode_packed_f(packed, rl, comp) if comp else packed
-                )
-
-            for payload, n in iter_ordered_packed(
-                df, pack_encode_fn, 4096,
-                modules=(
-                    "polars_readstat_spark.writers.sas7bdat",
-                    "polars_readstat_spark.writers.tagged",
-                    "polars_readstat_spark.writers",
-                ),
-                cast=cast_after,
-            ):
-                if comp:
-                    sink.write_encoded(payload, n)
-                else:
-                    sink.write_packed(payload, n)
-        else:
-            staged = src.mapInArrow(pack_stage, "payload binary, n bigint")
-            for row in staged.toLocalIterator(prefetchPartitions=True):
-                if comp:
-                    sink.write_encoded(row[0], row[1])
-                else:
-                    sink.write_packed(row[0], row[1])
+        write = sink.write_encoded if comp else sink.write_packed
+        # indicator columns ride at the stream's tail, consumed at pack
+        for payload, n in packed_stream(
+            df, "sas7bdat",
+            lambda f, extra: to_disk(
+                f, "sas7bdat", fields, kinds, extra=tag_exprs + extra
+            ),
+            pack_fn, rows=None,
+            modules=(
+                "polars_readstat_spark.writers.sas7bdat",
+                "polars_readstat_spark.writers.tagged",
+                "polars_readstat_spark.writers",
+            ),
+        ):
+            write(payload, n)
         sink.close()

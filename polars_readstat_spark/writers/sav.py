@@ -5,9 +5,10 @@ sink pre-pass, pybindings.rs:996-1047):
 
 1. **Pre-pass job**: per-string-column max UTF-8 byte width + row
    count (one Spark aggregation).
-2. **Stream**: Arrow chunks in partition order; each batch is
-   packed into the fixed-width 8-byte-element case layout with numpy
-   (vectorized; no per-value Python in the numeric path).
+2. **Stream**: the executors pack each chunk into the fixed-width
+   8-byte-element case layout with numpy (vectorized; no per-value
+   Python in the numeric path); the driver drains them in input
+   order (writers.packed_stream).
 
 Output defaults to an *uncompressed* system file (compression=0):
 every case is case_size×8 bytes, so the file we write is itself
@@ -37,10 +38,11 @@ import struct
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_readstat_spark.writers import (
     column_kinds,
+    export_output,
+    packed_stream,
     prepass_aggs,
     str_cell_matrix,
     str_widths,
@@ -128,8 +130,6 @@ def write_sav(
     )
 
     # ---- data: stream partitions, pack vectorized --------------------
-    src = to_disk(df, fmt, fields, kinds)
-
     el_numeric = np.concatenate(
         [
             np.zeros(ne, dtype=bool) if k == "str" else np.ones(1, dtype=bool)
@@ -137,9 +137,15 @@ def write_sav(
         ]
     ) if case_size else np.zeros(0, dtype=bool)
 
-    from polars_readstat_spark.sources.fs import fs_open_output
+    # case packing runs on the executors; the driver concatenates
+    # (and, for zsav, zlib-frames) in input order
+    def pack_fn(pdf):
+        return _pack_columns(
+            [pdf.iloc[:, i] for i in range(pdf.shape[1])],
+            kinds, widths, el_per, case_size,
+        )
 
-    with fs_open_output(path) as fh:
+    with export_output(path) as fh:
         fh.write(bytes(out))
         if zsav:
             sink = _ZlibSink(fh, len(out))
@@ -147,50 +153,16 @@ def write_sav(
             sink = _BytecodeSink(fh, el_numeric)
         else:
             sink = fh
-        # case packing runs on the executors; the driver concatenates
-        # (and, for zsav, zlib-frames) in partition order. Big
-        # exports take the all-cores JVM-tagged protocol — the narrow
-        # path's toLocalIterator runs ~1 input partition at a time,
-        # capping pack parallelism at the scan's partition count
-        # (guide §2.6 idle capacity; same policy as the por writer).
-        from polars_readstat_spark.writers import (
-            iter_ordered_packed,
-            iter_packed_chunks,
-        )
-
-        kinds_l, widths_l, el_l, cs = (
-            list(kinds), list(widths), list(el_per), case_size
-        )
-
-        def pack_fn(pdf):
-            return _pack_columns(
-                [pdf.iloc[:, i] for i in range(pdf.shape[1])],
-                kinds_l, widths_l, el_l, cs,
-            )
-
-        sav_mods = (
-            "polars_readstat_spark.writers.sav",
-            "polars_readstat_spark.writers",
-        )
-        # wide protocol: cast AFTER the repartition (guide §2.3 —
-        # project before the exchange). RangePartitioner's bounds
-        # sampling re-executes the exchange child once; with the cast
-        # post-shuffle that extra pass is the bare scan + order tags,
-        # not scan + date/double casts (measured: the pre-cast child
-        # cost the sav export ~0.4 s/run at sf0.1, r14)
-        chunks = (
-            iter_ordered_packed(
-                df, pack_fn, 8192, modules=sav_mods,
-                cast=lambda b: to_disk(
-                    b, fmt, fields, kinds,
-                    extra=[F.col("__prs_mid"), F.col("__prs_cid")],
-                ),
-            )
-            if int(nrows) >= 100_000
-            else iter_packed_chunks(src, pack_fn, 8192, modules=sav_mods)
-        )
         try:
-            for payload, _n in chunks:
+            for payload, _n in packed_stream(
+                df, fmt,
+                lambda f, extra: to_disk(f, fmt, fields, kinds, extra=extra),
+                pack_fn, rows=nrows,
+                modules=(
+                    "polars_readstat_spark.writers.sav",
+                    "polars_readstat_spark.writers",
+                ),
+            ):
                 sink.write(payload)
             if zsav or compress:
                 sink.close()
@@ -301,8 +273,8 @@ _SYSMIS_LE = np.frombuffer(struct.pack("<Q", SYSMIS_BITS), dtype=np.uint8)
 
 def _pack_columns(cols_data, kinds, widths, el_per, case_size) -> bytes:
     """Column-wise vectorized case packing. cols_data: one sequence
-    per column (tuples from toLocalIterator rows, or pandas Series
-    from the distributed mapInPandas path)."""
+    per column (pandas Series from an executor chunk, or any
+    sequence of values)."""
     n = len(cols_data[0]) if cols_data else 0
     mat = np.zeros((n, case_size * 8), dtype=np.uint8)
     colpos = 0

@@ -51,6 +51,20 @@ def parse_tag_offsets(indicators) -> np.ndarray:
     return out
 
 
+def slot_tags(cols, tag_slot: dict, ncols: int):
+    """Per data column tag offsets from the indicator column at
+    ``cols[tag_slot[ci]]`` (None for an untagged column); None when
+    nothing is tagged."""
+    if not tag_slot:
+        return None
+    return [
+        parse_tag_offsets(cols[tag_slot[ci]].tolist())
+        if ci in tag_slot
+        else None
+        for ci in range(ncols)
+    ]
+
+
 def sas7bdat_tag_rows(offsets: np.ndarray) -> np.ndarray:
     """(k,) offsets (no NO_TAG entries) → (k, 8) uint8 LE doubles."""
     tb = np.empty(len(offsets), dtype=np.uint8)

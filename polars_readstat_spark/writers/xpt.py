@@ -6,9 +6,10 @@ descriptors (big-endian), fixed-width row-major records, IBM
 System/370 hexadecimal floats, blank-padded to 80-byte boundaries.
 
 Same two-phase Spark shape as the other writers: a pre-pass
-aggregation for string widths + row count, then a partition-ordered
-Arrow-chunk stream packed vectorized per batch. IEEE→IBM is
-exact (56-bit hex mantissa ⊇ 53-bit IEEE) and fully numpy-vectorized.
+aggregation for string widths + row count, then chunks packed
+vectorized on the executors and drained in input order
+(writers.packed_stream). IEEE→IBM is exact (56-bit hex mantissa ⊇
+53-bit IEEE) and fully numpy-vectorized.
 
 Reference parity: src/sas/xpt_writer.rs (v5 limits: 8-char upper-case
 names, 40-char labels, numerics 8 bytes, '.' missing).
@@ -22,18 +23,21 @@ import struct
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_readstat_spark.writers import (
+    check_tagged,
     column_kinds,
+    export_output,
+    packed_stream,
     prepass_aggs,
+    split_tagged,
     str_cell_matrix,
     str_widths,
     to_disk,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
-    parse_tag_offsets as _parse_tag_offsets,
+    slot_tags as _slot_tags,
     xpt_tag_byte0 as _xpt_tag_byte0,
 )
 
@@ -132,89 +136,47 @@ def write_xpt(
     if version not in (5, 8):
         raise ValueError("write_xpt: version must be 5 or 8")
     variable_labels = variable_labels or {}
-    tagged_missing = dict(tagged_missing or {})
-    ind_names = list(dict.fromkeys(tagged_missing.values()))
-    data_df = df.drop(*ind_names) if ind_names else df
+    data_df, _, tag_exprs, tag_slot = split_tagged(df, tagged_missing)
     fields = data_df.schema.fields
     names = [f.name for f in fields]
     shorts = _short_names(names)
     kinds = column_kinds(fields, "xpt")
-    for vcol, icol in tagged_missing.items():
-        if vcol not in names or kinds[names.index(vcol)] == "str":
-            raise ValueError(
-                f"tagged_missing: {vcol!r} is not a numeric data column"
-            )
-        if icol not in df.columns:
-            raise ValueError(
-                f"tagged_missing: indicator column {icol!r} not in DataFrame"
-            )
+    check_tagged(
+        tagged_missing,
+        [n for n, k in zip(names, kinds) if k != "str"],
+        df.columns,
+    )
     stats = df.agg(*prepass_aggs(fields, kinds, "xpt")).collect()[0].asDict()
     widths = str_widths("xpt", fields, kinds, lambda n: stats.get(f"__w_{n}"))
     record_width = sum(widths)
     ncols = len(names)
-    tag_slot = {names.index(v): ncols + ind_names.index(i)
-                for v, i in tagged_missing.items()}
 
     out = _xpt_header(
         fields, shorts, kinds, widths, dataset_name, variable_labels, version
     )
-    tag_exprs = [
-        F.col(c).cast("string").alias(f"__tag_{i}")
-        for i, c in enumerate(ind_names)
-    ]
 
     # packing (incl. IEEE→IBM) runs on the executors; the driver only
-    # concatenates fixed-width records in partition order. Big exports
-    # take the all-cores JVM-tagged protocol (see iter_ordered_packed;
-    # same ≥100k-row policy as the por/sav writers).
-    from polars_readstat_spark.writers import iter_packed_chunks
-
-    kinds_l, widths_l = list(kinds), list(widths)
-    tag_slot_l, ncols_l, rw = dict(tag_slot), ncols, record_width
-
+    # concatenates fixed-width records in input order
     def pack_fn(pdf):
         cols = [pdf.iloc[:, i] for i in range(pdf.shape[1])]
-        tags = None
-        if tag_slot_l:
-            tags = [
-                _parse_tag_offsets(cols[tag_slot_l[ci]].tolist())
-                if ci in tag_slot_l
-                else None
-                for ci in range(ncols_l)
-            ]
-        return _pack_xpt(cols[:ncols_l], kinds_l, widths_l, rw, tags)
+        tags = _slot_tags(cols, tag_slot, ncols)
+        return _pack_xpt(cols[:ncols], kinds, widths, record_width, tags)
 
-    from polars_readstat_spark.sources.fs import fs_open_output
-
-    from polars_readstat_spark.writers import iter_ordered_packed
-
-    xpt_mods = (
-        "polars_readstat_spark.writers.xpt",
-        "polars_readstat_spark.writers.tagged",
-        "polars_readstat_spark.writers",
-    )
-    # wide protocol: cast AFTER the repartition (guide §2.3) — the
-    # range-bounds sampling pass then re-executes only the bare scan
-    # + order tags, not the date/double casts (same fix as sav)
-    chunks = (
-        iter_ordered_packed(
-            df, pack_fn, 8192, modules=xpt_mods,
-            cast=lambda b: to_disk(
-                b, "xpt", fields, kinds,
-                extra=tag_exprs
-                + [F.col("__prs_mid"), F.col("__prs_cid")],
-            ),
-        )
-        if int(stats["__n"]) >= 100_000
-        else iter_packed_chunks(
-            to_disk(df, "xpt", fields, kinds, extra=tag_exprs),
-            pack_fn, 8192, modules=xpt_mods,
-        )
-    )
-    with fs_open_output(path) as fh:
+    with export_output(path) as fh:
         fh.write(bytes(out))
         total = 0
-        for payload, _n in chunks:
+        for payload, _n in packed_stream(
+            df, "xpt",
+            lambda f, extra: to_disk(
+                f, "xpt", fields, kinds, extra=tag_exprs + extra
+            ),
+            pack_fn, rows=stats["__n"],
+            modules=(
+                "polars_readstat_spark.writers.xpt",
+                "polars_readstat_spark.writers.tagged",
+                "polars_readstat_spark.writers",
+            ),
+        ):
             fh.write(payload)
             total += len(payload)
         fh.write(b" " * ((-total) % 80))

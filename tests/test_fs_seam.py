@@ -438,6 +438,57 @@ def test_spool_upload_failure_leaves_no_partial_and_cleans_spool(tmp_path):
         unregister_filesystem("failfs")
 
 
+def test_spool_upload_discarded_when_writer_raises(tmp_path):
+    """An exception inside the ``with`` block must not upload the
+    spool (that would publish a torn remote file): no open_output
+    call, and the spool temp file is removed. A clean exit still
+    uploads once."""
+    from polars_readstat_spark.sources.fs import fs_open_output
+
+    class CountingFS(FsHandler):
+        def __init__(self):
+            self.outputs = 0
+
+        def open_output(self, path):
+            self.outputs += 1
+            return open(str(tmp_path / "uploaded.bin"), "wb")
+
+    fs = CountingFS()
+    register_filesystem("countfs", fs)
+    try:
+        with pytest.raises(RuntimeError, match="mid-write"):
+            with fs_open_output("countfs://bucket/x.sav") as w:
+                w.write(b"header")
+                spool = w._spool
+                raise RuntimeError("mid-write failure")
+        assert fs.outputs == 0
+        assert not os.path.exists(spool)
+        with fs_open_output("countfs://bucket/x.sav") as w:
+            w.write(b"whole")
+        assert fs.outputs == 1
+        assert (tmp_path / "uploaded.bin").read_bytes() == b"whole"
+    finally:
+        unregister_filesystem("countfs")
+
+
+def test_spool_discard_survives_failing_close(tmp_path):
+    """A flush failure (ENOSPC) while closing the spool on the error
+    path must neither escape discard() nor leave the spool behind."""
+    from polars_readstat_spark.sources.fs import _SpoolUpload
+
+    up = _SpoolUpload(FsHandler(), "countfs://bucket/x.sav")
+    real = up._f
+
+    class FullDisk:
+        def close(self):
+            real.close()
+            raise OSError(28, "No space left on device")
+
+    up._f = FullDisk()
+    up.discard()
+    assert not os.path.exists(up._spool)
+
+
 def test_spool_upload_preserves_backpatched_bytes(tmp_path):
     """Seek-backpatch into the spool must reach the uploaded object
     byte-for-byte (writers patch row counts and block tables)."""
