@@ -49,75 +49,65 @@ def query(name: str, oracle: str | None = None):
 # its code. Queries past position 50 still run in the local gate
 # (tools/check_correctness.py covers the whole registry).
 _PRIORITY: tuple[str, ...] = (
-    # round 14 window, part 1 — changed-path-first (VERDICT r13
-    # next#3): the r13-vectorized writer kernels (POR base-30 token
-    # ladder, shared string-cell pack for sav/zsav/xpt/sas7bdat) and
-    # the round-14 export drain rework get their first driver greens
-    # through the writer-backed roundtrips; the four streaming oracle
-    # queries cover the bucketed sessionizer + Arrow drain (r13) and
-    # any r14 sessionizer change. scan_sav_compressed_roundtrip rides
-    # along: it exercises the bytecode decode path this round's read
-    # instrumentation targets. Order computed by
-    # tools/rotation_plan.py from the CORRECTNESS_r*.json union.
-    "scan_por_roundtrip",
+    # part 1 — changed-path-first: the shared decode tail
+    # (sources/columns.py) now builds every reader's dates, value
+    # labels and informative-null indicators, so the informative-null
+    # queries and the reader-backed scans of every format go first.
+    "informative_null_separate",
+    "informative_null_merged",
+    "informative_null_struct",
+    "scan_dta_informative_nulls",
+    "scan_sas7bdat_informative_nulls",
+    "scan_xpt_informative_nulls",
+    "scan_dta_tagged_missing",
+    "scan_dta_value_labels",
+    "value_label_broadcast_decode",
     "scan_sav_roundtrip",
-    "scan_zsav_roundtrip",
-    "scan_xpt_roundtrip",
-    "scan_sas7bdat_roundtrip",
     "scan_sav_compressed_roundtrip",
+    "scan_zsav_roundtrip",
+    "scan_por_roundtrip",
+    "scan_xpt_roundtrip",
+    "scan_sas7bdat_types",
+    "scan_sas7bdat_rle",
+    "scan_sas7bdat_rdc",
+    "scan_sas7bdat_bigendian",
+    "scan_sas7bdat_mixpage",
+    "scan_sas7bdat_roundtrip",
     "scan_dta_roundtrip",
-    "stream_sessionize_stateful",
-    "stream_hourly_window",
-    "stream_dedup_watermark",
-    "stream_ingest_agg",
-    # part 2: the 28 queries whose newest driver green is r10 — the
-    # staleness frontier (rotation contract: no green older than 4
-    # rounds); after this window lands no query's newest driver green
-    # predates r11.
-    "simhash_band_pairs",
-    "dedup_connected_components",
-    "dedup_edit_distance_verify",
-    "winnowing_fingerprints",
-    "winnowing_copy_pairs",
-    "kmeans_update_step",
-    "embedding_quantize_int8",
-    "text_bpe_token_count",
-    "text_ngram_topk",
-    "text_rare_token_ratio",
-    "text_gopher_quality_rules",
-    "range_join_click_purchase_1h",
-    "window_lag_delta",
-    "salted_skew_agg",
-    "event_value_histogram",
-    "funnel_click_to_purchase",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "q12_linestatus_priority",
-    "q13_customer_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_variety",
-    "q17_small_quantity_revenue",
-    "q19_or_predicate_revenue",
-    "q20_excess_shipments",
-    "q21_waiting_supplier",
-    # part 3: r11-greens filling the window to 50, oldest-first per
-    # tools/rotation_plan.py registration order.
-    "pii_pattern_counts",
-    "pii_redact",
-    "training_sequence_pack",
-    "training_shard_shuffle",
-    "dedup_keep_first_records",
-    "minhash_signatures",
-    "ngram_jaccard_sampled",
-    "ngram_containment_sampled",
-    "dedup_keep_best_quality",
-    "dedup_incremental_vs_index",
-    "multimodal_media_meta",
-    # positions 51+ follow registration order (the remaining
-    # r11/r12/r13-green families wait their turn; the local gate
-    # still covers the whole registry each round).
+    # part 2: the staleness frontier, oldest newest-green first, as
+    # ordered by tools/rotation_plan.py from the CORRECTNESS_r*.json
+    # union.
+    "multimodal_decode_embed",  # newest green r11
+    "q1_pricing_summary",  # newest green r11
+    "table_profile_lineitem",  # newest green r11
+    "window_rank_family",  # newest green r11
+    "tfidf_topk_terms",  # newest green r11
+    "bm25_topk_docs",  # newest green r11
+    "repetition_chunk_dedup",  # newest green r11
+    "scan_dta_metadata_surface",  # newest green r11
+    "sas_csv_import_roundtrip",  # newest green r11
+    "sas_csv_script_pins",  # newest green r11
+    "profile_read_surface",  # newest green r11
+    "pca_power_iter_step",  # newest green r11
+    "embedding_l2_norms",  # newest green r11
+    "doc_fingerprint",  # newest green r11
+    "boilerplate_ngram_filter",  # newest green r11
+    "event_hourly_window",  # newest green r11
+    "event_value_quantiles",  # newest green r11
+    "event_props_json_extract",  # newest green r11
+    "retention_weekly_cohorts",  # newest green r11
+    "event_dau_wau_stickiness",  # newest green r11
+    "resample_ffill_hourly",  # newest green r11
+    "compress_numeric_decision",  # newest green r12
+    "sequence_packing_bins",  # newest green r12
+    "source_mixing_weights",  # newest green r12
+    "sequence_length_histogram",  # newest green r12
+    "mixture_budget_fill",  # newest green r12
+    "train_val_test_split",  # newest green r12
+    "simhash_fingerprint",  # newest green r12
+    "dedup_cluster_size_histogram",  # newest green r12
+    # positions 51+ follow registration order (the local gate still
+    # covers the whole registry each round).
 )
 
 

@@ -40,6 +40,11 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from polars_readstat_spark.sources.columns import (
+    SAS_TAGS,
+    STATA_TAGS,
+    ColumnSpec,
+)
 from polars_readstat_spark.sources.partplan import (
     ScanReader,
     _opt_bool,
@@ -861,7 +866,10 @@ class _Layout(NamedTuple):
     fmt: Callable[[Any], str]
     label: Callable[[Any], str]
     extra: Callable[[Any], dict]  # format-specific metadata keys
-    tagged: bool  # numerics carry informative-null tags
+    rule: str  # the decode tail's epoch/label rule (sources/columns.py)
+    labels: Callable[[Any, Any], Any]  # (meta, v) → labels v applies
+    # (v, use_value_labels) → tag-code dictionary; None: no tags
+    tags: Callable[[Any, bool], Any] | None
 
 
 def _no_labels(v) -> bool:
@@ -874,6 +882,16 @@ def _double(v):
 
 def _no_extra(v) -> dict:
     return {}
+
+
+def _own_labels(meta, v):
+    return v.value_labels
+
+
+def _sav_tags(v, use_value_labels):
+    from polars_readstat_spark.sources.sav.decode import missing_dictionary
+
+    return missing_dictionary(v, use_value_labels)
 
 
 _DTA_NUMERIC = {
@@ -897,7 +915,12 @@ _LAYOUTS = {
         _FMT,
         attrgetter("varlabel"),
         lambda v: {"value_label": v.lblname} if v.lblname else {},
-        True,
+        "stata",
+        lambda meta, v: (
+            None if v.kind in ("str", "strl")
+            else meta.value_labels.get(v.lblname)
+        ),
+        lambda v, use_value_labels: STATA_TAGS,
     ),
     # every SAS numeric can carry `.A`-`.Z`/`._` tags in its NaN
     # payload (reference src/sas/value.rs:181-194)
@@ -909,7 +932,9 @@ _LAYOUTS = {
         _FMT,
         _LABEL,
         _no_extra,
-        True,
+        "sas",
+        None,
+        lambda v, use_value_labels: SAS_TAGS,
     ),
     "sav": _Layout(
         _VARIABLES,
@@ -921,7 +946,9 @@ _LAYOUTS = {
         lambda v: (
             {"measure": _SAV_MEASURE.get(v.measure, "")} if v.measure else {}
         ),
-        True,
+        "spss",
+        _own_labels,
+        _sav_tags,
     ),
     "por": _Layout(
         _VARIABLES,
@@ -931,7 +958,9 @@ _LAYOUTS = {
         lambda v: "",
         _LABEL,
         _no_extra,
-        False,
+        "spss",
+        _own_labels,
+        None,
     ),
     # XPT numerics carry tags in byte 0 of an otherwise-zero field
     # (reference is_xpt_missing, src/sas/xpt.rs:396-408)
@@ -943,10 +972,46 @@ _LAYOUTS = {
         _FMT,
         _LABEL,
         _no_extra,
-        True,
+        "sas",
+        None,
+        lambda v, use_value_labels: SAS_TAGS,
     ),
 }
 _LAYOUTS["zsav"] = _LAYOUTS["sav"]
+
+
+def _reads_as_string(lay: _Layout, v, vls: bool) -> bool:
+    return lay.is_str(v) or bool(vls and lay.labeled(v))
+
+
+def tagged(fmt: str, v, vls: bool) -> bool:
+    """Whether ``v`` reads as a tag-carrying numeric: the columns an
+    ``informative_nulls`` scan may give an indicator."""
+    lay = _LAYOUTS[fmt]
+    return lay.tags is not None and not _reads_as_string(lay, v, vls)
+
+
+def column_specs(fmt: str, meta, reader) -> list[ColumnSpec]:
+    """The decode tail's static ``ColumnSpec`` of each column a
+    ``ScanReader`` selects, from the layout its schema reads."""
+    from polars_readstat_spark.sources import informative as inf
+
+    lay = _LAYOUTS[fmt]
+    variables = lay.variables(meta)
+    opts, vls = reader.informative, reader.value_labels_as_strings
+    uvl = bool(opts and opts["use_value_labels"])
+    return [
+        ColumnSpec(
+            v.name,
+            lay.rule,
+            v.time_kind,
+            lay.labels(meta, v) if vls and lay.labeled(v) else None,
+            lay.tags(v, uvl)
+            if opts and inf.eligible(opts, v.name) and tagged(fmt, v, vls)
+            else None,
+        )
+        for v in (variables[i] for i in reader.col_indices)
+    ]
 
 
 def _parse_meta(fmt: str, path: str):
@@ -988,7 +1053,7 @@ def spark_schema(fmt: str, meta, options) -> StructType:
     for i in selected_indices(variables, options):
         v = variables[i]
         tk = v.time_kind
-        if lay.is_str(v) or (vls and lay.labeled(v)):
+        if _reads_as_string(lay, v, vls):
             t = StringType()
         elif tk == "date":
             t = DateType()
@@ -998,7 +1063,7 @@ def spark_schema(fmt: str, meta, options) -> StructType:
             t = LongType()
         else:
             t = lay.numeric(v)
-        if lay.tagged and not isinstance(t, StringType):
+        if tagged(fmt, v, vls):
             eligible.add(v.name)
         md = {}
         if fmt_name := lay.fmt(v):
@@ -1315,9 +1380,10 @@ class DtaReader(ScanReader):
         return self._row_plan(self.meta.nobs, self.meta.record_width)
 
     def read(self, partition):
+        from polars_readstat_spark.sources.columns import build_batch
         from polars_readstat_spark.sources.dta.decode import (
             build_strl_lookup,
-            decode_rows,
+            decode_columns,
         )
 
         meta = self.meta
@@ -1345,11 +1411,14 @@ class DtaReader(ScanReader):
                     _STRL_CACHE.clear()
                 _STRL_CACHE[ck] = strl_lookup
 
+        specs = column_specs("dta", meta, self)
+
         def decode(buf, cnt):
-            return decode_rows(
-                meta, buf, cnt, self.col_indices,
-                self.value_labels_as_strings, self.missing_string_as_null,
-                strl_lookup, informative=self.informative,
+            return build_batch(
+                decode_columns(
+                    meta, buf, cnt, self.col_indices, specs, strl_lookup
+                ),
+                self.informative, self.missing_string_as_null,
             )
 
         if partition.n == 0:

@@ -1,4 +1,4 @@
-"""Vectorized Stata record decode: bytes → pyarrow RecordBatch.
+"""Vectorized Stata record decode: bytes → per-column arrays.
 
 Strategy (reference parity with src/stata/data.rs, re-expressed as
 array code): a row range is one contiguous byte slice (fixed-width
@@ -8,8 +8,12 @@ slice — no per-row Python in the numeric paths. Strings go through one
 Python-level pass (NUL-split + charset decode), the only part that
 genuinely needs it.
 
-Missing sentinels → Arrow nulls; tagged missing indices (.a-.z) are
-preserved for the informative-null operators (operators/nulls.py).
+This module is the Stata kernel: per selected column it yields a
+finished string array or the numeric (values, missing mask, tag codes)
+triple, where codes index ``columns.STATA_TAGS`` ('.' and '.a'-'.z').
+The shared decode tail (sources/columns.py) does the rest: value
+labels, the %td/%tc epoch promotion, the informative-null indicator
+and its assembly.
 """
 
 from __future__ import annotations
@@ -17,6 +21,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from polars_readstat_spark.sources import strdecode
+from polars_readstat_spark.sources.columns import ColumnSpec
 from polars_readstat_spark.sources.fs import fs_open
 from polars_readstat_spark.sources.dta.meta import (
     TC_BYTE,
@@ -28,10 +34,6 @@ from polars_readstat_spark.sources.dta.meta import (
     DtaMeta,
     DtaVar,
 )
-
-# Stata epoch (1960-01-01) relative to Unix epoch
-STATA_EPOCH_DAYS = -3653
-STATA_EPOCH_MS = STATA_EPOCH_DAYS * 86400000
 
 # integer missing bases (public Stata spec)
 INT_MISSING_BASE = {TC_BYTE: 101, TC_INT: 32741, TC_LONG: 2147483621}
@@ -101,121 +103,81 @@ def decode_numeric(
     return vals, mask, tags
 
 
-def _decode_bytes(b: bytes, encoding: str) -> str:
-    """Decode with per-value latin-1 fallback: v118+ files are declared
-    UTF-8 but real-world files carry stray latin-1 bytes (pandas does
-    the same fallback)."""
-    try:
-        return b.decode(encoding)
-    except (UnicodeDecodeError, LookupError):
-        return b.decode("latin-1")
-
-
-def _strings_from_fixed(col: np.ndarray, encoding: str) -> list[str]:
-    """Fixed-width bytes → str list with stop-at-first-NUL semantics
-    (reference T5, src/sas/value.rs:94-120 analog)."""
-    out = []
-    for b in col.tolist():  # S-dtype tolist strips trailing NULs
-        i = b.find(b"\0")
-        if i >= 0:
-            b = b[:i]
-        out.append(_decode_bytes(b, encoding))
-    return out
-
-
-def decode_column(
-    data: np.ndarray,
-    idx: int,
-    var: DtaVar,
+def decode_columns(
     meta: DtaMeta,
-    value_labels_as_strings: bool,
-    missing_string_as_null: bool,
+    buf: bytes,
+    n_rows: int,
+    col_indices: list[int],
+    specs: list[ColumnSpec],
     strl_lookup=None,
-) -> pa.Array:
-    from polars_readstat_spark.sources import strdecode
-
-    col = data[f"f{idx}"]
-    if var.kind == "str":
-        sl = np.ascontiguousarray(col)
-        w = sl.dtype.itemsize
-        m = sl.view(np.uint8).reshape(-1, w)
-        arr = strdecode.try_vectorized(
-            m, strdecode.lengths_first_nul(m), meta.encoding
-        )
-        if arr is None:  # non-ASCII under a non-UTF8 codepage (rare)
-            strs = _strings_from_fixed(col, meta.encoding)
-            if missing_string_as_null:
-                strs = [s if s != "" else None for s in strs]
-            return pa.array(strs, type=pa.string())
-        if missing_string_as_null:
-            arr = strdecode.empty_to_null(arr)
-        return arr
-
-    if var.kind == "strl":
-        if strl_lookup is None:
-            raise NotImplementedError(
-                f"column {var.name} is strL and no strls index was built"
-            )
-        # the 8-byte data cell packs (v, o) with v in the low v_size
-        # bytes (v_size: 4/2/3 for v117/118/119); the uint64 of the
-        # cell is the lookup key (public dta_117..119 specs)
-        raw = col.tobytes()
-        if meta.little_endian:
-            # LE: cell bytes are v_low..o_high, uint64 == packed key
-            keys = np.frombuffer(raw, dtype="<u8")
+):
+    """(spec, payload) per selected column, for ``columns.build_batch``:
+    a string array, or the numeric ``(values, mask, codes)`` whose codes
+    index ``STATA_TAGS`` (1 '.', 2-27 '.a'-'.z'), built when ``spec``
+    asks."""
+    data = np.frombuffer(buf, dtype=np_dtype_for(meta), count=n_rows)
+    for i, spec in zip(col_indices, specs):
+        var = meta.variables[i]
+        col = data[f"f{i}"]
+        if var.kind == "str":
+            yield spec, _fixed_strings(col, meta.encoding)
+        elif var.kind == "strl":
+            yield spec, _strl_strings(col, var, meta, strl_lookup)
         else:
-            # BE: v in the first v_size bytes, o in the rest, both BE
-            v_size = {117: 4, 118: 2, 119: 3}.get(meta.version, 4)
-            shift = 8 * v_size
-            keys = [
-                int.from_bytes(raw[i * 8 : i * 8 + v_size], "big")
-                | (int.from_bytes(raw[i * 8 + v_size : i * 8 + 8], "big") << shift)
-                for i in range(len(col))
-            ]
-        out = [strl_lookup.get(int(k), "") for k in keys]
-        if missing_string_as_null:
-            out = [s if s != "" else None for s in out]
-        return pa.array(out, type=pa.string())
+            # contiguous copy first: the structured-array field is a
+            # strided view, and every downstream op (mask compares, bit
+            # views, and especially pa.array — ~50× slower on strided
+            # input) pays for it otherwise
+            vals, mask, tags = decode_numeric(
+                np.ascontiguousarray(col), var, meta.version
+            )
+            codes = None
+            if spec.indicator is not None:
+                codes = mask.astype(np.uint8)
+                if tags is not None:
+                    ok = (tags >= 1) & (tags <= 26)
+                    codes[mask] += np.where(ok, tags, 0).astype(np.uint8)
+            yield spec, (vals, mask, codes)
 
-    # contiguous copy first: the structured-array field is a strided
-    # view, and every downstream op (mask compares, bit views, and
-    # especially pa.array — ~50× slower on strided input) pays for it
-    # otherwise; one gather here makes the whole column path dense
-    col = np.ascontiguousarray(col)
-    vals, mask, _tags = decode_numeric(col, var, meta.version)
-    has_missing = bool(mask.any())
-    pa_mask = mask if has_missing else None
 
-    labels = (
-        meta.value_labels.get(var.lblname)
-        if (value_labels_as_strings and var.lblname)
-        else None
+def _fixed_strings(col: np.ndarray, encoding: str) -> pa.Array:
+    sl = np.ascontiguousarray(col)
+    m = sl.view(np.uint8).reshape(-1, sl.dtype.itemsize)
+    arr = strdecode.try_vectorized(m, strdecode.lengths_first_nul(m), encoding)
+    if arr is not None:
+        return arr
+    # non-ASCII under a non-UTF8 codepage (rare): stop at the first NUL
+    # (reference T5, src/sas/value.rs:94); v118+ files declare UTF-8 but
+    # can carry stray latin-1 bytes, which fall back per value (pandas
+    # does the same)
+    return strdecode.decode_each(
+        (b.split(b"\0", 1)[0] for b in col.tolist()), encoding
     )
-    if labels is not None:
-        # labeled numeric → label strings; unlabeled codes render
-        # numeric-as-string (reference src/stata/data.rs:1050-1103) —
-        # vectorized through the unique codes (categorical cardinality)
-        iv = np.where(mask, 0, vals).astype(np.int64)
-        return strdecode.map_int_labels(iv, mask, labels)
 
-    tk = var.time_kind
-    if tk == "date":
-        clean = np.where(mask, 0, vals) if has_missing else vals
-        days = clean.astype(np.int64) + STATA_EPOCH_DAYS
-        return pa.array(days.astype(np.int32), type=pa.date32(), mask=pa_mask)
-    if tk == "datetime":
-        clean = np.where(mask, 0, vals) if has_missing else vals
-        us = (clean.astype(np.int64) + STATA_EPOCH_MS) * 1000
-        return pa.array(us, type=pa.timestamp("us"), mask=pa_mask)
 
-    pa_type = {
-        "byte": pa.int8(),
-        "int": pa.int16(),
-        "long": pa.int32(),
-        "float": pa.float32(),
-        "double": pa.float64(),
-    }[var.kind]
-    return pa.array(vals, type=pa_type, mask=pa_mask)
+def _strl_strings(col, var: DtaVar, meta: DtaMeta, strl_lookup) -> pa.Array:
+    if strl_lookup is None:
+        raise NotImplementedError(
+            f"column {var.name} is strL and no strls index was built"
+        )
+    # the 8-byte data cell packs (v, o) with v in the low v_size
+    # bytes (v_size: 4/2/3 for v117/118/119); the uint64 of the
+    # cell is the lookup key (public dta_117..119 specs)
+    raw = col.tobytes()
+    if meta.little_endian:
+        # LE: cell bytes are v_low..o_high, uint64 == packed key
+        keys = np.frombuffer(raw, dtype="<u8")
+    else:
+        # BE: v in the first v_size bytes, o in the rest, both BE
+        v_size = {117: 4, 118: 2, 119: 3}.get(meta.version, 4)
+        shift = 8 * v_size
+        keys = [
+            int.from_bytes(raw[i * 8 : i * 8 + v_size], "big")
+            | (int.from_bytes(raw[i * 8 + v_size : i * 8 + 8], "big") << shift)
+            for i in range(len(col))
+        ]
+    out = [strl_lookup.get(int(k), "") for k in keys]
+    return pa.array(out, type=pa.string())
 
 
 def build_strl_lookup(meta: DtaMeta) -> dict[int, str]:
@@ -249,82 +211,9 @@ def build_strl_lookup(meta: DtaMeta) -> dict[int, str]:
             ln = _s.unpack(f"{e}I", f.read(4))[0]
             payload = f.read(ln)
             if t == 130:  # zero-terminated text
-                s = _decode_bytes(payload.rstrip(b"\0"), meta.encoding)
+                s = strdecode.decode_one(payload.rstrip(b"\0"), meta.encoding)
             else:  # 129: binary — decode best-effort
-                s = _decode_bytes(payload, meta.encoding)
+                s = strdecode.decode_one(payload, meta.encoding)
             key = (v & ((1 << (8 * v_size)) - 1)) | (o << (8 * v_size))
             out[key] = s
     return out
-
-
-def stata_indicator(mask: np.ndarray, tags: np.ndarray | None) -> pa.Array:
-    """Missing-tag indicator strings: '.' for system missing, '.a'-'.z'
-    for tagged (reference offset_to_stata_label,
-    src/stata/value.rs:341-347); null where the value is present."""
-    out: list[str | None] = [None] * len(mask)
-    if mask.any():
-        idxs = np.flatnonzero(mask)
-        if tags is None:
-            for i in idxs:
-                out[i] = "."
-        else:
-            for i, t in zip(idxs, tags):
-                t = int(t)
-                out[i] = "." + chr(ord("a") + t - 1) if 1 <= t <= 26 else "."
-    return pa.array(out, type=pa.string())
-
-
-def dta_eligible(var: DtaVar, value_labels_as_strings: bool) -> bool:
-    """Informative-null eligibility: columns that decode to numeric
-    (incl. date/datetime promotions); labeled-as-string columns carry
-    their indicator inside the label path already."""
-    if var.kind in ("str", "strl"):
-        return False
-    return not (value_labels_as_strings and var.lblname)
-
-
-def decode_rows(
-    meta: DtaMeta,
-    buf: bytes,
-    n_rows: int,
-    col_indices: list[int],
-    value_labels_as_strings: bool,
-    missing_string_as_null: bool,
-    strl_lookup=None,
-    arrow_schema: pa.Schema | None = None,
-    informative: dict | None = None,
-) -> pa.RecordBatch:
-    from polars_readstat_spark.sources import informative as inf
-
-    data = np.frombuffer(buf, dtype=np_dtype_for(meta), count=n_rows)
-    arrays = []
-    names = []
-    for i in col_indices:
-        var = meta.variables[i]
-        col = decode_column(
-            data,
-            i,
-            var,
-            meta,
-            value_labels_as_strings,
-            missing_string_as_null,
-            strl_lookup,
-        )
-        if (
-            informative
-            and dta_eligible(var, value_labels_as_strings)
-            and inf.eligible(informative, var.name)
-        ):
-            _, mask, tags = decode_numeric(data[f"f{i}"], var, meta.version)
-            ind = stata_indicator(mask, tags)
-            for nm, arr in inf.assemble(
-                informative["mode"], var.name, informative["suffix"], col, ind
-            ):
-                arrays.append(arr)
-                names.append(nm)
-            continue
-        arrays.append(col)
-        names.append(var.name)
-    if arrow_schema is not None:
-        return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-    return pa.RecordBatch.from_arrays(arrays, names=names)

@@ -12,6 +12,22 @@ drops that information; these three output modes preserve it:
 - ``merged``: the column becomes String =
   ``coalesce(cast(value, string), indicator)`` (src/lib.rs:358-377).
 
+Indicator per format (built by the shared decode tail,
+sources/columns.py, as one take from a tag-code dictionary):
+
+  format        eligible columns          indicator where missing
+  dta           numerics not read as      '.' system missing,
+                value-label strings       '.a'-'.z' tagged
+  sas7bdat/xpt  numerics                  '.A'-'.Z', '._'; plain '.'
+                                          stays a bare null
+  sav/zsav      numerics not read as      declared discrete value: its
+                value-label strings       code string (its label with
+                                          use_value_labels); declared
+                                          range member: "MISSING" (its
+                                          label with use_value_labels);
+                                          system missing: null
+  por           none (its reader parses no declared missings)
+
 Options (option names on the `readstat` data source):
   informative_nulls         separate | struct | merged
   informative_null_columns  csv subset (default: all eligible)
@@ -23,6 +39,9 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+
+from polars_readstat_spark.sources import strdecode
 
 
 def parse_opts(options) -> dict | None:
@@ -59,20 +78,17 @@ def merged_value_strings(values: pa.Array) -> pa.Array:
     """cast(value, string) with integer-valued floats rendered without
     a trailing .0 — the reference's Polars cast renders 2.0 → "2.0" for
     floats but codes are integers in practice; we match the reference's
-    numeric-as-string code rendering (src/stata/data.rs:1050-1103)."""
+    numeric-as-string code rendering (src/stata/data.rs:1050-1103).
+    Floats render once per distinct value; NaN reads as null."""
     if pa.types.is_floating(values.type):
         np_vals = values.to_numpy(zero_copy_only=False)
-        out = []
-        for v in np_vals:
-            if v != v:  # null slot
-                out.append(None)
-            elif float(v).is_integer():
-                out.append(str(int(v)))
-            else:
-                out.append(str(v))
-        return pa.array(out, type=pa.string())
-    import pyarrow.compute as pc
-
+        scalar = np_vals.dtype.type  # float32 keeps its shortest repr
+        nan = np.isnan(np_vals)
+        return strdecode.map_via_unique(
+            np.where(nan, 0, np_vals),
+            nan,
+            lambda v: strdecode.code_string(v, scalar),
+        )
     return pc.cast(values, pa.string())
 
 
@@ -92,16 +108,8 @@ def assemble(
         )
         return [(name, struct)]
     # merged: value-as-string where present, indicator where missing
-    strs = merged_value_strings(values)
-    vnull = np.asarray(values.is_null())
-    out = []
-    s_list = strs.to_pylist()
-    i_list = indicator.to_pylist()
-    for k in range(len(s_list)):
-        out.append(i_list[k] if vnull[k] else s_list[k])
-    return [(name, pa.array(out, type=pa.string()))]
+    merged = pc.if_else(
+        values.is_null(), indicator, merged_value_strings(values)
+    )
+    return [(name, merged)]
 
-
-def struct_type(value_type: pa.DataType, name: str) -> pa.DataType:
-    return pa.struct([pa.field(name, value_type),
-                      pa.field("null_indicator", pa.string())])

@@ -31,13 +31,11 @@ import pyarrow as pa
 
 from pyspark.sql.datasource import InputPartition
 
-from polars_readstat_spark.sources import strdecode
+from polars_readstat_spark.sources.columns import build_batch
 from polars_readstat_spark.sources.fs import fs_open
 from polars_readstat_spark.sources.partplan import ScanReader, row_span
 
 LINE_LEN = 80
-SPSS_SEC_SHIFT = 12_219_379_200
-SEC_PER_DAY = 86_400
 
 # POR portable-charset positions → ASCII (public PSPP table):
 # 64-73 digits, 74-99 A-Z, 100-125 a-z, then punctuation.
@@ -1118,80 +1116,23 @@ class PorReader(ScanReader):
             len(cols[0]) if cols else 0, self.offset, self.limit
         )
         end = start + n
-        arrays, names = [], []
-        for i in self.col_indices:
-            v = meta.variables[i]
-            vals = cols[i][start:end]
-            if v.is_str:
-                if isinstance(vals, pa.Array):
-                    # vectorized gather already built the arrow array
-                    if self.value_labels_as_strings and v.value_labels:
-                        arrays.append(
-                            strdecode.map_str_labels(vals, v.value_labels)
-                        )
-                    else:
-                        arrays.append(vals)
-                    names.append(v.name)
+
+        from polars_readstat_spark.sources.datasource import column_specs
+
+        specs = column_specs("por", meta, self)
+
+        def columns():
+            for i, spec in zip(self.col_indices, specs):
+                v = meta.variables[i]
+                vals = cols[i][start:end]
+                if v.is_str:
+                    # the vectorized gather already built the arrow array
+                    if not isinstance(vals, pa.Array):
+                        vals = pa.array(vals, type=pa.string())
+                    yield spec, vals
                     continue
-                a = pa.array(vals, type=pa.string())
-                if self.value_labels_as_strings and v.value_labels:
-                    a = strdecode.map_str_labels(a, v.value_labels)
-                arrays.append(a)
-            else:
-                if isinstance(vals, np.ndarray):
-                    fv = vals.astype(np.float64, copy=False)
-                else:
-                    fv = np.array(
-                        [float("nan") if x is None else x for x in vals],
-                        dtype=np.float64,
-                    )
-                mask = np.isnan(fv)
-                if self.value_labels_as_strings and v.value_labels:
-                    vl = v.value_labels
-                    out = []
-                    for k, x in enumerate(fv):
-                        if mask[k]:
-                            out.append(None)
-                        else:
-                            lab = vl.get(float(x))
-                            if lab is None:
-                                lab = (
-                                    str(int(x))
-                                    if float(x).is_integer()
-                                    else str(float(x))
-                                )
-                            out.append(lab)
-                    arrays.append(pa.array(out, type=pa.string()))
-                elif v.time_kind == "date":
-                    iv = np.where(mask, 0, fv).astype(np.int64)
-                    days = ((iv - SPSS_SEC_SHIFT) / SEC_PER_DAY).astype(np.int64)
-                    mask2 = mask | (days < -719_162) | (days > 2_932_896)
-                    arrays.append(
-                        strdecode.pa_masked(
-                            np.where(mask2, 0, days).astype(np.int32),
-                            pa.date32(),
-                            mask2,
-                        )
-                    )
-                elif v.time_kind == "datetime":
-                    iv = np.where(mask, 0, fv).astype(np.int64)
-                    secs = iv - SPSS_SEC_SHIFT
-                    mask2 = mask | (secs < -62_135_596_800) | (secs > 253_402_300_799)
-                    arrays.append(
-                        strdecode.pa_masked(
-                            np.where(mask2, 0, secs) * 1_000_000,
-                            pa.timestamp("us"),
-                            mask2,
-                        )
-                    )
-                elif v.time_kind == "time":
-                    iv = np.where(mask, 0, fv).astype(np.int64)
-                    arrays.append(
-                        strdecode.pa_masked(iv * 1_000_000_000, pa.int64(), mask)
-                    )
-                else:
-                    arrays.append(strdecode.pa_masked(fv, pa.float64(), mask))
-            names.append(v.name)
-        yield self._indexed(
-            pa.RecordBatch.from_arrays(arrays, names=names), start
-        )
+                fv = np.asarray(vals, dtype=np.float64)  # None → NaN
+                yield spec, (fv, np.isnan(fv), None)
+
+        yield self._indexed(build_batch(columns()), start)
+

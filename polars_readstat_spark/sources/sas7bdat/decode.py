@@ -5,21 +5,22 @@ bytes are the most-significant ones); decode reconstitutes the 8-byte
 pattern with numpy slice assignment — no per-row Python (reference
 src/sas/value.rs:58-91, vectorized). Non-finite patterns → null
 (reference src/sas/value.rs:123 treats >= 0x7ff0... as missing).
-Dates: SAS epoch 1960-01-01; days → date32, seconds → timestamp(µs),
-time seconds → ns-since-midnight int64 (Spark has no TimeType —
-documented mapping choice, SURVEY.md §1.3).
+
+This module is the sas7bdat kernel: per selected column it yields a
+finished string array or the numeric (values, missing mask, tag codes)
+triple, where codes index ``columns.SAS_TAGS``. The shared decode tail
+(sources/columns.py) promotes dates (SAS epoch 1960-01-01; days →
+date32, seconds → timestamp(µs), time seconds → ns-since-midnight
+int64, SURVEY.md §1.3) and builds and assembles the indicator.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 
 from polars_readstat_spark.sources import strdecode
+from polars_readstat_spark.sources.columns import ColumnSpec
 from polars_readstat_spark.sources.sas7bdat.meta import SasColumn, SasMeta
-
-SAS_EPOCH_DAYS = -3653  # 1960-01-01 relative to Unix epoch
-SAS_EPOCH_US = SAS_EPOCH_DAYS * 86400 * 1_000_000
 
 
 class _NumericFast:
@@ -130,83 +131,15 @@ def numeric_missing_tags(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return mask, offsets
 
 
-def sas_indicator(mask: np.ndarray, offsets: np.ndarray) -> pa.Array:
-    """Indicator strings '.A'-'.Z' / '._' (reference
-    sas_offset_to_label, src/sas/value.rs:197-204); null where the
-    value is present AND for plain system missing — in the SAS family
-    `.` carries no information beyond the null itself (reference
-    src/lib.rs:113 'System missing (`.`) always becomes a plain
-    null'), unlike Stata where '.' is emitted."""
-    out: list[str | None] = [None] * len(mask)
-    for i in np.flatnonzero(mask & (offsets != 0)):
-        o = int(offsets[i])
-        if o == 27:
-            out[i] = "._"
-        else:
-            out[i] = "." + chr(ord("A") + o - 1)
-    return pa.array(out, type=pa.string())
-
-
-def finish_numeric(vals: np.ndarray, mask: np.ndarray, col: SasColumn) -> pa.Array:
-    """Decoded doubles + missing mask → typed arrow array by the
-    column's display-format class (date/datetime/time promotions)."""
-    tk = col.time_kind
-    if tk == "date":
-        days = np.round(np.where(mask, 0, vals)).astype(np.int64) + SAS_EPOCH_DAYS
-        return strdecode.pa_masked(days.astype(np.int32), pa.date32(), mask)
-    if tk == "datetime":
-        us = np.round(np.where(mask, 0, vals) * 1e6).astype(np.int64) + SAS_EPOCH_US
-        return strdecode.pa_masked(us, pa.timestamp("us"), mask)
-    if tk == "time":
-        ns = np.round(np.where(mask, 0, vals) * 1e9).astype(np.int64)
-        return strdecode.pa_masked(ns, pa.int64(), mask)
-    return strdecode.pa_masked(vals, pa.float64(), mask)
-
-
-def decode_column(
-    rows: np.ndarray,
-    col: SasColumn,
-    meta: SasMeta,
-    missing_string_as_null: bool,
-    fast: _NumericFast | None = None,
-) -> pa.Array:
-    if col.ctype == "s":
-        m = np.ascontiguousarray(rows[:, col.offset : col.offset + col.width])
-        arr = strdecode.try_vectorized(
-            m, strdecode.lengths_rstrip(m, strip=(0, 0x20)), meta.encoding
-        )
-        if arr is not None:
-            if missing_string_as_null:
-                arr = strdecode.empty_to_null(arr)
-            return arr
-        # slow path: non-ASCII bytes under a non-UTF8 codepage
-        b = m.tobytes()
-        w = col.width
-        enc = meta.encoding
-        out = []
-        for i in range(rows.shape[0]):
-            s = b[i * w : (i + 1) * w].rstrip(b"\x00 ")
-            try:
-                out.append(s.decode(enc))
-            except (UnicodeDecodeError, LookupError):
-                out.append(s.decode("latin-1", errors="replace"))
-        if missing_string_as_null:
-            out = [s if s != "" else None for s in out]
-        return pa.array(out, type=pa.string())
-
-    vals = decode_numeric_raw(rows, col, meta.little_endian, fast)
-    return finish_numeric(vals, ~np.isfinite(vals), col)
-
-
-def decode_rows(
+def decode_columns(
     meta: SasMeta,
     buf: bytes,
     col_indices: list[int],
-    missing_string_as_null: bool,
-    informative: dict | None = None,
-) -> pa.RecordBatch:
-    from polars_readstat_spark.sources import informative as inf
-
+    specs: list[ColumnSpec],
+):
+    """(spec, payload) per selected column, for ``columns.build_batch``:
+    a string array, or the numeric ``(values, mask, codes)`` whose codes
+    index ``SAS_TAGS``, built when ``spec`` asks."""
     rl = max(meta.row_length, 1)
     n = len(buf) // rl
     rows = np.frombuffer(buf, dtype=np.uint8, count=n * rl).reshape(n, rl)
@@ -215,27 +148,23 @@ def decode_rows(
     fast = _NumericFast(
         rows, rl, meta.little_endian, [meta.columns[i] for i in col_indices]
     )
-    arrays = []
-    names = []
-    for i in col_indices:
-        c = meta.columns[i]
-        if (
-            informative
-            and c.ctype != "s"
-            and inf.eligible(informative, c.name)
-        ):
-            vals = decode_numeric_raw(rows, c, meta.little_endian, fast)
-            mask, offsets = numeric_missing_tags(vals)
-            col_arr = finish_numeric(vals, mask, c)
-            ind = sas_indicator(mask, offsets)
-            for nm, arr in inf.assemble(
-                informative["mode"], c.name, informative["suffix"], col_arr, ind
-            ):
-                arrays.append(arr)
-                names.append(nm)
+    for i, spec in zip(col_indices, specs):
+        col = meta.columns[i]
+        if col.ctype != "s":
+            vals = decode_numeric_raw(rows, col, meta.little_endian, fast)
+            if spec.indicator is None:
+                yield spec, (vals, ~np.isfinite(vals), None)
+            else:
+                yield spec, (vals, *numeric_missing_tags(vals))
             continue
-        arrays.append(
-            decode_column(rows, c, meta, missing_string_as_null, fast)
+        m = np.ascontiguousarray(rows[:, col.offset : col.offset + col.width])
+        arr = strdecode.try_vectorized(
+            m, strdecode.lengths_rstrip(m, strip=(0, 0x20)), meta.encoding
         )
-        names.append(c.name)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+        if arr is None:  # non-ASCII bytes under a non-UTF8 codepage
+            b, w = m.tobytes(), col.width
+            arr = strdecode.decode_each(
+                (b[r * w : (r + 1) * w].rstrip(b"\x00 ") for r in range(n)),
+                meta.encoding,
+            )
+        yield spec, arr

@@ -206,16 +206,21 @@ class SasReader(ScanReader):
     # -- execution --------------------------------------------------
 
     def read(self, partition: SasPageRange):
-        from polars_readstat_spark.sources.sas7bdat.decode import decode_rows
+        from polars_readstat_spark.sources.columns import build_batch
+        from polars_readstat_spark.sources.datasource import column_specs
+        from polars_readstat_spark.sources.sas7bdat.decode import (
+            decode_columns,
+        )
 
         m = self.meta
         batch_rows = self._batch_rows()
         rl = max(m.row_length, 1)
+        specs = column_specs("sas7bdat", m, self)
 
         def emit(chunk: bytes, global_start: int):
-            batch = decode_rows(
-                m, chunk, self.col_indices, self.missing_string_as_null,
-                informative=self.informative,
+            batch = build_batch(
+                decode_columns(m, chunk, self.col_indices, specs),
+                self.informative, self.missing_string_as_null,
             )
             return self._indexed(batch, global_start)
 

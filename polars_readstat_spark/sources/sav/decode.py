@@ -19,6 +19,13 @@ string element, 255 system-missing.
 
 Reference parity: spss/data.rs (SavRowDecompressor :1628-1760, missing
 rules :998-1026, very-long-string reconstruct :1028-1048).
+
+Per selected column ``decode_columns`` yields a finished string array
+or the numeric (values, missing mask, tag codes) triple; declared
+discrete and range missings become codes into a per-column dictionary
+(``missing_dictionary`` / ``missing_codes``). The shared decode tail
+(sources/columns.py) applies value labels, the 1582-epoch date /
+datetime / time promotion, and builds and assembles the indicator.
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ import numpy as np
 import pyarrow as pa
 
 from polars_readstat_spark.sources import strdecode
+from polars_readstat_spark.sources.columns import ColumnSpec
 from polars_readstat_spark.sources.fs import fs_open, fs_size
 from polars_readstat_spark.sources.sav.meta import (
     HIGHEST_BITS,
@@ -38,10 +46,6 @@ from polars_readstat_spark.sources.sav.meta import (
     SavVar,
     read_compressed_stream,
 )
-
-SPSS_SEC_SHIFT = 12_219_379_200  # 1582-10-14 → 1970-01-01 in seconds
-SEC_PER_DAY = 86_400
-
 
 _CMD_LUT_CACHE: dict[tuple[float, bool], np.ndarray] = {}
 
@@ -601,7 +605,7 @@ def iter_compressed_rows(
     # batches are accumulated to ~batch_rows before emission: a wide
     # case (ACS shape, cs=286) fits only ~1.8k rows in one inflated
     # zlib block, and per-chunk emission made every downstream
-    # decode_rows call pay 286 columns of per-call overhead on a
+    # per-batch decode pay 286 columns of per-call overhead on a
     # 1.6k-row batch — 110k decode_column calls per file, measured as
     # HALF the zsav read wall. Memory stays bounded by
     # batch_rows + one chunk.
@@ -1138,6 +1142,15 @@ def dense_numeric(
     return {e: out[i] for i, e in enumerate(els)}
 
 
+def _system_missing(vals: np.ndarray, bits: np.ndarray) -> np.ndarray:
+    return (
+        (bits == SYSMIS_BITS)
+        | (bits == LOWEST_BITS)
+        | (bits == HIGHEST_BITS)
+        | np.isnan(vals)
+    )
+
+
 def decode_numeric(
     rows: np.ndarray, var: SavVar, meta: SavMeta, dense=None
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -1146,12 +1159,7 @@ def decode_numeric(
     (reference is_missing_numeric, spss/data.rs:998-1026)."""
     vals = _numeric_elements(rows, var, meta, dense).astype("<f8", copy=False)
     bits = vals.view(np.uint64)
-    mask = (
-        (bits == SYSMIS_BITS)
-        | (bits == LOWEST_BITS)
-        | (bits == HIGHEST_BITS)
-        | np.isnan(vals)
-    )
+    mask = _system_missing(vals, bits)
     md = var.missing_doubles
     if md:
         if var.missing_range and len(md) >= 2:
@@ -1221,10 +1229,7 @@ def _decode_string_vectorized(
 
 
 def decode_string_column(
-    rows: np.ndarray,
-    var: SavVar,
-    meta: SavMeta,
-    missing_string_as_null: bool,
+    rows: np.ndarray, var: SavVar, meta: SavMeta
 ) -> pa.Array:
     blob = _string_bytes(rows, var)
     declared = var.string_len or blob.shape[1]
@@ -1237,8 +1242,6 @@ def decode_string_column(
         if arr is not None:
             import pyarrow.compute as pc
 
-            if missing_string_as_null:
-                arr = strdecode.empty_to_null(arr)
             if miss:
                 arr = pc.if_else(
                     pc.is_in(arr, value_set=pa.array(sorted(miss))),
@@ -1260,154 +1263,85 @@ def decode_string_column(
         except (UnicodeDecodeError, LookupError):
             s = b.decode("latin-1")
         s = s.rstrip()
-        if (missing_string_as_null and s == "") or (miss and s in miss):
-            out.append(None)
-        else:
-            out.append(s)
+        out.append(None if miss and s in miss else s)
     return pa.array(out, type=pa.string())
 
 
-def decode_column(
-    rows: np.ndarray,
-    var: SavVar,
-    meta: SavMeta,
-    value_labels_as_strings: bool,
-    missing_string_as_null: bool,
-    dense=None,
-) -> pa.Array:
-    if var.is_str:
-        arr = decode_string_column(rows, var, meta, missing_string_as_null)
-        if value_labels_as_strings and var.value_labels:
-            return strdecode.map_str_labels(arr, var.value_labels)
-        return arr
-
-    vals, mask = decode_numeric(rows, var, meta, dense)
-
-    if value_labels_as_strings and var.value_labels:
-        vl = var.value_labels
-
-        def render(v):
-            v = float(v)
-            lab = vl.get(v)
-            if lab is None:
-                # unlabeled codes render numeric-as-string
-                # (reference NumericStringCache, spss/data.rs:1555)
-                lab = str(int(v)) if v.is_integer() else str(v)
-            return lab
-
-        # unique-code mapping: the per-value loop runs over categorical
-        # cardinality, not row count
-        return strdecode.map_via_unique(np.where(mask, 0.0, vals), mask, render)
-
-    tk = var.time_kind
-    if tk is not None:
-        iv = np.where(mask, 0.0, vals).astype(np.int64)
-        if tk == "date":
-            # Rust integer division truncates toward zero (reference
-            # apply_format_class_date, spss/data.rs:1466)
-            days = ((iv - SPSS_SEC_SHIFT) / SEC_PER_DAY).astype(np.int64)
-            # out-of-python-range dates → null (pandas NaT behavior);
-            # corrupt fixtures exist in the wild (haven datetime.sav)
-            mask = mask | (days < -719_162) | (days > 2_932_896)
-            return strdecode.pa_masked(
-                np.where(mask, 0, days).astype(np.int32), pa.date32(), mask
-            )
-        if tk == "datetime":
-            secs = iv - SPSS_SEC_SHIFT
-            mask = mask | (secs < -62_135_596_800) | (secs > 253_402_300_799)
-            us = np.where(mask, 0, secs) * 1_000_000
-            return strdecode.pa_masked(us, pa.timestamp("us"), mask)
-        # time: ns since midnight (SURVEY.md §1.3 — no Spark TimeType)
-        return strdecode.pa_masked(iv * 1_000_000_000, pa.int64(), mask)
-
-    return strdecode.pa_masked(vals, pa.float64(), mask)
-
-
-def sav_indicator(
-    rows: np.ndarray, var: SavVar, meta: SavMeta, use_value_labels: bool
-) -> pa.Array:
-    """Declared-missing indicator (reference missing_numeric_indicator,
-    spss/data.rs:1054-1185): sysmis/NaN → null; discrete declared →
-    label (when use_value_labels and defined) else the value rendered
-    as a code string; range-declared → label or "MISSING"."""
-    vals = _numeric_elements(rows, var, meta).astype("<f8", copy=False)
-    bits = vals.view(np.uint64)
-    sysmiss = (
-        (bits == SYSMIS_BITS)
-        | (bits == LOWEST_BITS)
-        | (bits == HIGHEST_BITS)
-        | np.isnan(vals)
+def _range_keys(var: SavVar) -> list[float]:
+    """Sorted labeled values inside a declared missing range."""
+    lo, hi = sorted(var.missing_doubles[:2])
+    return sorted(
+        float(k)
+        for k in var.value_labels
+        if isinstance(k, (int, float)) and lo <= k <= hi
     )
+
+
+def missing_dictionary(var: SavVar, use_value_labels: bool) -> pa.Array:
+    """Indicator per ``missing_codes`` code of a numeric variable
+    (reference missing_numeric_indicator, spss/data.rs:1054-1185): null
+    for a present or system-missing value; a declared discrete value's
+    code string and a declared range member's "MISSING", or with
+    use_value_labels their value label where one is defined."""
     md = var.missing_doubles
-    out: list[str | None] = [None] * vals.size
-    if not md:
-        return pa.array(out, type=pa.string())
     vl = var.value_labels if use_value_labels else {}
 
     def render(v: float) -> str:
         lab = vl.get(v)
-        if lab is not None:
-            return lab
-        return str(int(v)) if float(v).is_integer() else str(v)
+        return strdecode.code_string(v) if lab is None else lab
 
+    out = [None]
     if var.missing_range and len(md) >= 2:
-        lo, hi = min(md[0], md[1]), max(md[0], md[1])
+        out += ["MISSING", *(vl.get(k, "MISSING") for k in _range_keys(var))]
+        md = md[2:3]  # the range's one extra discrete value
+    return pa.array(out + [render(float(d)) for d in md], pa.string())
+
+
+def missing_codes(vals: np.ndarray, var: SavVar) -> np.ndarray:
+    """Per-row code of a declared missing: discrete values count from 1
+    in declaration order; a range member is 1, or 2 + its index among
+    the labeled values in the range, and the range's extra discrete
+    value comes last."""
+    codes = np.zeros(vals.shape[0], dtype=np.int32)
+    md = var.missing_doubles
+    if not md:
+        return codes
+    bits = vals.view(np.uint64)
+    declared = ~_system_missing(vals, bits)
+    if var.missing_range and len(md) >= 2:
+        lo, hi = sorted(md[:2])
         with np.errstate(invalid="ignore"):
-            in_range = (vals >= lo) & (vals <= hi) & ~sysmiss
-        for i in np.flatnonzero(in_range):
-            v = float(vals[i])
-            out[i] = vl.get(v, "MISSING") if use_value_labels else "MISSING"
+            in_range = (vals >= lo) & (vals <= hi) & declared
+        keys = np.array(_range_keys(var), dtype=np.float64)
+        codes[in_range] = 1
+        if keys.size:
+            v = vals[in_range]
+            j = np.minimum(np.searchsorted(keys, v), keys.size - 1)
+            codes[in_range] = np.where(keys[j] == v, j + 2, 1)
         if len(md) >= 3:
-            disc = (bits == np.float64(md[2]).view(np.uint64)) & ~sysmiss
-            for i in np.flatnonzero(disc):
-                out[i] = render(float(vals[i]))
+            hit = (bits == np.float64(md[2]).view(np.uint64)) & declared
+            codes[hit] = 2 + keys.size
     else:
-        for d in md:
-            hit = (bits == np.float64(d).view(np.uint64)) & ~sysmiss
-            for i in np.flatnonzero(hit):
-                out[i] = render(float(vals[i]))
-    return pa.array(out, type=pa.string())
+        for c, d in enumerate(md, 1):
+            codes[(bits == np.float64(d).view(np.uint64)) & declared] = c
+    return codes
 
 
-def sav_eligible(var: SavVar, value_labels_as_strings: bool) -> bool:
-    if var.is_str:
-        return False
-    return not (value_labels_as_strings and var.value_labels)
-
-
-def decode_rows(
+def decode_columns(
     meta: SavMeta,
     rows: np.ndarray,
     col_indices: list[int],
-    value_labels_as_strings: bool,
-    missing_string_as_null: bool,
-    informative: dict | None = None,
-) -> pa.RecordBatch:
-    from polars_readstat_spark.sources import informative as inf
-
-    arrays = []
-    names = []
+    specs: list[ColumnSpec],
+):
+    """(spec, payload) per selected column, for ``columns.build_batch``:
+    a string array, or the numeric ``(values, mask, codes)`` whose codes
+    are ``missing_codes``, built when ``spec`` asks."""
     dense = dense_numeric(rows, meta, [meta.variables[i] for i in col_indices])
-    for i in col_indices:
+    for i, spec in zip(col_indices, specs):
         var = meta.variables[i]
-        col = decode_column(
-            rows, var, meta, value_labels_as_strings, missing_string_as_null,
-            dense,
-        )
-        if (
-            informative
-            and sav_eligible(var, value_labels_as_strings)
-            and inf.eligible(informative, var.name)
-        ):
-            ind = sav_indicator(
-                rows, var, meta, informative["use_value_labels"]
-            )
-            for nm, arr in inf.assemble(
-                informative["mode"], var.name, informative["suffix"], col, ind
-            ):
-                arrays.append(arr)
-                names.append(nm)
+        if var.is_str:
+            yield spec, decode_string_column(rows, var, meta)
             continue
-        arrays.append(col)
-        names.append(var.name)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+        vals, mask = decode_numeric(rows, var, meta, dense)
+        codes = missing_codes(vals, var) if spec.indicator is not None else None
+        yield spec, (vals, mask, codes)

@@ -160,23 +160,22 @@ class SavReader(ScanReader):
         return parts
 
     def read(self, partition):
+        from polars_readstat_spark.sources.columns import build_batch
+        from polars_readstat_spark.sources.datasource import column_specs
         from polars_readstat_spark.sources.sav.decode import (
-            decode_rows,
+            decode_columns,
             iter_compressed_rows,
         )
 
         meta = self.meta
         rw = meta.record_width
         batch_rows = self._batch_rows()
+        specs = column_specs("sav", meta, self)
 
         def emit(rows, pos):
-            batch = decode_rows(
-                meta,
-                rows,
-                self.col_indices,
-                self.value_labels_as_strings,
-                self.missing_string_as_null,
-                informative=self.informative,
+            batch = build_batch(
+                decode_columns(meta, rows, self.col_indices, specs),
+                self.informative, self.missing_string_as_null,
             )
             return self._indexed(batch, pos)
 

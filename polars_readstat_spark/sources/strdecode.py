@@ -137,12 +137,36 @@ def try_vectorized(
     return None
 
 
+def decode_one(b: bytes, *codecs: str) -> str:
+    """``b`` in the first codec that decodes it, else latin-1: files
+    declare one encoding but real-world ones carry stray latin-1 bytes
+    (pandas does the same fallback)."""
+    for enc in codecs:
+        try:
+            return b.decode(enc)
+        except (UnicodeDecodeError, LookupError):
+            pass
+    return b.decode("latin-1")
+
+
+def decode_each(cells, *codecs: str) -> pa.Array:
+    """Per-cell ``decode_one`` of the bytes ``try_vectorized`` declines."""
+    return pa.array([decode_one(b, *codecs) for b in cells], type=pa.string())
+
+
 def empty_to_null(arr: pa.Array) -> pa.Array:
     import pyarrow.compute as pc
 
     return pc.if_else(
         pc.equal(pc.binary_length(arr), 0), pa.scalar(None, arr.type), arr
     )
+
+
+def code_string(v: float, scalar=float) -> str:
+    """An unlabeled numeric code as a string, integral values without a
+    trailing .0 (reference NumericStringCache, spss/data.rs:1555);
+    ``scalar`` gives the repr of the rest (np.float32 for float32)."""
+    return str(int(v)) if v.is_integer() else str(scalar(v))
 
 
 def map_via_unique(codes: np.ndarray, mask: np.ndarray, render) -> pa.Array:

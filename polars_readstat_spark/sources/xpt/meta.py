@@ -18,6 +18,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from polars_readstat_spark.sources import strdecode
 from polars_readstat_spark.sources.fs import fs_open, fs_size
 from polars_readstat_spark.sources.sas7bdat.meta import (
     DATE_FORMATS,
@@ -263,22 +264,10 @@ def xpt_missing_offsets(b0: np.ndarray, mask: np.ndarray) -> np.ndarray:
     return offsets
 
 
-def decode_xpt_rows(
-    meta: XptMeta,
-    buf: bytes,
-    col_indices,
-    missing_string_as_null,
-    informative: dict | None = None,
-):
-    import pyarrow as pa
-
-    from polars_readstat_spark.sources import informative as inf
-    from polars_readstat_spark.sources.sas7bdat.decode import (
-        SAS_EPOCH_DAYS,
-        SAS_EPOCH_US,
-        sas_indicator,
-    )
-
+def decode_columns(meta: XptMeta, buf: bytes, col_indices, specs):
+    """(spec, payload) per selected column, for ``columns.build_batch``:
+    a string array, or the numeric ``(values, mask, codes)`` whose codes
+    index ``SAS_TAGS``, built when ``spec`` asks."""
     rl = meta.record_width
     n = len(buf) // rl
     rows = np.frombuffer(buf, dtype=np.uint8, count=n * rl).reshape(n, rl)
@@ -288,8 +277,7 @@ def decode_xpt_rows(
         keep -= 1
     rows = rows[:keep]
 
-    arrays, names = [], []
-    for i in col_indices:
+    for i, spec in zip(col_indices, specs):
         v = meta.variables[i]
         sl = rows[:, v.position : v.position + v.width]
         if v.is_numeric:
@@ -297,76 +285,32 @@ def decode_xpt_rows(
             full[:, : v.width] = sl
             vals, missing = ibm_to_ieee(full)
             mask = missing | ~np.isfinite(vals)
-            from polars_readstat_spark.sources import strdecode
-
-            tk = v.time_kind
-            if tk == "date":
-                days = np.round(np.where(mask, 0, vals)).astype(np.int64) + SAS_EPOCH_DAYS
-                arr = strdecode.pa_masked(days.astype(np.int32), pa.date32(), mask)
-            elif tk == "datetime":
-                us = np.round(np.where(mask, 0, vals) * 1e6).astype(np.int64) + SAS_EPOCH_US
-                arr = strdecode.pa_masked(us, pa.timestamp("us"), mask)
-            elif tk == "time":
-                ns_ = np.round(np.where(mask, 0, vals) * 1e9).astype(np.int64)
-                arr = strdecode.pa_masked(ns_, pa.int64(), mask)
-            else:
-                arr = strdecode.pa_masked(vals, pa.float64(), mask)
-            if informative and inf.eligible(informative, v.name):
-                b0 = full[:, 0].astype(np.int64)
-                ind = sas_indicator(mask, xpt_missing_offsets(b0, mask))
-                for nm, a in inf.assemble(
-                    informative["mode"], v.name, informative["suffix"],
-                    arr, ind,
-                ):
-                    arrays.append(a)
-                    names.append(nm)
-                continue
-        else:
-            from polars_readstat_spark.sources import strdecode
-
-            m = np.ascontiguousarray(sl)
-            arr = strdecode.try_vectorized(
-                m, strdecode.lengths_rstrip(m, strip=(0, 0x20)), meta.encoding
-            )
-            if arr is None:  # non-ASCII bytes present
-                b = m.tobytes()
-                w = v.width
-                raw = [
-                    b[r * w : (r + 1) * w].rstrip(b"\x00 ")
-                    for r in range(rows.shape[0])
-                ]
-                # xpt declares no charset. The codec is decided once
-                # per FILE (sampled at first need, file_text_is_utf8):
-                # a per-batch or per-value choice would make the output
-                # depend on batch boundaries, or mix legacy bytes that
-                # happen to form valid UTF-8 (CP1252 'é' pairs) with
-                # UTF-8 inside one column. Cells the chosen codec
-                # cannot decode (corrupt byte, or legacy text past the
-                # sampled prefix) fall back individually.
-                if file_text_is_utf8(meta):
-                    first, second = "utf-8", meta.encoding
-                else:
-                    first, second = meta.encoding, "utf-8"
-                out = []
-                for s in raw:
-                    try:
-                        out.append(s.decode(first))
-                    except (UnicodeDecodeError, LookupError):
-                        try:
-                            out.append(s.decode(second))
-                        except (UnicodeDecodeError, LookupError):
-                            out.append(s.decode("latin-1", errors="replace"))
-                arr = pa.array(out, type=pa.string())
-                if missing_string_as_null:
-                    import pyarrow.compute as pc
-
-                    arr = pc.if_else(
-                        pc.equal(pc.binary_length(arr), 0),
-                        pa.scalar(None, pa.string()),
-                        arr,
-                    )
-            elif missing_string_as_null:
-                arr = strdecode.empty_to_null(arr)
-        arrays.append(arr)
-        names.append(v.name)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+            codes = None
+            if spec.indicator is not None:
+                codes = xpt_missing_offsets(full[:, 0].astype(np.int64), mask)
+            yield spec, (vals, mask, codes)
+            continue
+        m = np.ascontiguousarray(sl)
+        arr = strdecode.try_vectorized(
+            m, strdecode.lengths_rstrip(m, strip=(0, 0x20)), meta.encoding
+        )
+        if arr is None:  # non-ASCII bytes present
+            b = m.tobytes()
+            w = v.width
+            raw = [
+                b[r * w : (r + 1) * w].rstrip(b"\x00 ")
+                for r in range(rows.shape[0])
+            ]
+            # xpt declares no charset. The codec is decided once
+            # per FILE (sampled at first need, file_text_is_utf8):
+            # a per-batch or per-value choice would make the output
+            # depend on batch boundaries, or mix legacy bytes that
+            # happen to form valid UTF-8 (CP1252 'é' pairs) with
+            # UTF-8 inside one column. Cells the chosen codec
+            # cannot decode (corrupt byte, or legacy text past the
+            # sampled prefix) fall back individually.
+            codecs = ("utf-8", meta.encoding)
+            if not file_text_is_utf8(meta):
+                codecs = codecs[::-1]
+            arr = strdecode.decode_each(raw, *codecs)
+        yield spec, arr

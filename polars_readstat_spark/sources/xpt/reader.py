@@ -4,10 +4,11 @@ reference src/sas/xpt.rs batch iterator re-expressed."""
 
 from __future__ import annotations
 
+from polars_readstat_spark.sources.columns import build_batch
 from polars_readstat_spark.sources.partplan import ScanReader
 from polars_readstat_spark.sources.xpt.meta import (
     XptMeta,
-    decode_xpt_rows,
+    decode_columns,
     parse_xpt_meta,
 )
 
@@ -24,11 +25,14 @@ class XptReader(ScanReader):
 
     def read(self, partition):
         m = self.meta
+        from polars_readstat_spark.sources.datasource import column_specs
+
+        specs = column_specs("xpt", m, self)
 
         def decode(buf):
-            return decode_xpt_rows(
-                m, buf, self.col_indices, self.missing_string_as_null,
-                informative=self.informative,
+            return build_batch(
+                decode_columns(m, buf, self.col_indices, specs),
+                self.informative, self.missing_string_as_null,
             )
 
         if partition.n == 0:

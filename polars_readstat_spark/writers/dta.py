@@ -31,7 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.sources.dta.decode import (
+from polars_readstat_spark.sources.columns import (
     STATA_EPOCH_DAYS,
     STATA_EPOCH_MS,
 )

@@ -17,7 +17,7 @@ import pandas as pd
 import pytest
 
 import polars_readstat_spark as prs
-from polars_readstat_spark.sources.dta.decode import (
+from polars_readstat_spark.sources.columns import (
     STATA_EPOCH_DAYS,
     STATA_EPOCH_MS,
 )

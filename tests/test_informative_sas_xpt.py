@@ -15,7 +15,7 @@ SAS_CORPUS = "/root/reference/crates/polars_readstat_rs/tests/sas/data"
 INFO_NULLS = os.path.join(SAS_CORPUS, "info_nulls.sas7bdat")
 INFO_NULLS_TD = os.path.join(SAS_CORPUS, "info_nulls_test_data.sas7bdat")
 
-pytestmark = pytest.mark.skipif(
+needs_info_nulls = pytest.mark.skipif(
     not os.path.isfile(INFO_NULLS), reason="reference corpus not present"
 )
 
@@ -66,18 +66,20 @@ def test_numeric_missing_tags_patterns():
 
 
 def test_sas_indicator_strings():
-    from polars_readstat_spark.sources.sas7bdat.decode import sas_indicator
+    from polars_readstat_spark.sources.columns import SAS_TAGS, indicator
 
     mask = np.array([True, True, True, False])
     offs = np.array([0, 26, 27, 0], dtype=np.uint8)
     # plain system missing carries no indicator in the SAS family
     # (reference src/lib.rs:113); only tags surface
-    assert sas_indicator(mask, offs).to_pylist() == [None, ".Z", "._", None]
+    codes = np.where(mask, offs, 0)
+    assert indicator(SAS_TAGS, codes).to_pylist() == [None, ".Z", "._", None]
 
 
 # ── real-SAS fixture decode (absolute truth) ───────────────────────
 
 
+@needs_info_nulls
 def test_sas_fixture_tag_decode_matches_reference(spark):
     rows = (
         _scan(spark, INFO_NULLS, informative_nulls="separate")
@@ -92,11 +94,13 @@ def test_sas_fixture_tag_decode_matches_reference(spark):
     assert rows[4]["y"] is not None
 
 
+@needs_info_nulls
 def test_sas_no_indicators_without_option(spark):
     df = _scan(spark, INFO_NULLS)
     assert not [c for c in df.columns if c.endswith("_null")]
 
 
+@needs_info_nulls
 def test_sas_struct_and_merged_modes(spark):
     st = (
         _scan(

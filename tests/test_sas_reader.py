@@ -16,16 +16,24 @@ import pandas as pd
 import pytest
 
 import polars_readstat_spark as prs
-from polars_readstat_spark.sources.sas7bdat.decode import (
+from polars_readstat_spark.sources.columns import (
     SAS_EPOCH_DAYS,
-    decode_rows,
+    ColumnSpec,
+    build_batch,
 )
+from polars_readstat_spark.sources.sas7bdat.decode import decode_columns
 from polars_readstat_spark.sources.sas7bdat.meta import parse_sas_meta
 from polars_readstat_spark.sources.sas7bdat.pages import page_row_bytes
 
 CORPUS = "/root/reference/crates/polars_readstat_rs/tests/sas/data"
 ALL_FILES = sorted(
     glob.glob(os.path.join(CORPUS, "**", "*.sas7bdat"), recursive=True)
+)
+
+FIXTURES = sorted(
+    glob.glob(
+        os.path.join(os.path.dirname(__file__), "fixtures", "sas7bdat", "*.sas7bdat")
+    )
 )
 
 needs_corpus = pytest.mark.skipif(
@@ -56,7 +64,9 @@ def read_with_pipeline(path):
             rb = page_row_bytes(m, page, rows)
             rows += len(rb) // max(m.row_length, 1)
             chunks.append(rb)
-    batch = decode_rows(m, b"".join(chunks), list(range(len(m.columns))), False)
+    cols = list(range(len(m.columns)))
+    specs = [ColumnSpec(c.name, "sas", c.time_kind) for c in m.columns]
+    batch = build_batch(decode_columns(m, b"".join(chunks), cols, specs))
     return m, batch
 
 
@@ -90,6 +100,17 @@ def _to_stata_numeric(m, col, arr):
     "path", _corpus_params(ALL_FILES), ids=lambda p: p.split("/data/")[-1]
 )
 def test_corpus_matches_pandas(path):
+    _assert_matches_pandas(path)
+
+
+@pytest.mark.parametrize("path", FIXTURES, ids=os.path.basename)
+def test_fixture_matches_pandas(path):
+    """The corpus oracle on the checked-in fixtures, so the decode
+    pipeline helper also runs where the corpus is absent."""
+    _assert_matches_pandas(path)
+
+
+def _assert_matches_pandas(path):
     from pandas.io.sas.sas7bdat import SAS7BDATReader
 
     try:
