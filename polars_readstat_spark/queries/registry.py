@@ -49,31 +49,32 @@ def query(name: str, oracle: str | None = None):
 # its code. Queries past position 50 still run in the local gate
 # (tools/check_correctness.py covers the whole registry).
 _PRIORITY: tuple[str, ...] = (
-    # part 1 — changed-path-first: the shared decode tail
-    # (sources/columns.py) now builds every reader's dates, value
-    # labels and informative-null indicators, so the informative-null
-    # queries and the reader-backed scans of every format go first.
+    # part 1 — changed-path-first: every single-file export now packs
+    # in the scan's own tasks and drains through writers._drain, and
+    # por reads honour missing_string_as_null, so the write-then-read
+    # roundtrips go first; then the decode-tail queries (the shared
+    # sources/columns.py), which no driver round has checked since.
+    "scan_sav_roundtrip",
+    "scan_sav_compressed_roundtrip",
+    "scan_zsav_roundtrip",
+    "scan_por_roundtrip",
+    "scan_xpt_roundtrip",
+    "scan_sas7bdat_roundtrip",
+    "scan_dta_roundtrip",
+    "scan_dta_tagged_missing",
     "informative_null_separate",
     "informative_null_merged",
     "informative_null_struct",
     "scan_dta_informative_nulls",
     "scan_sas7bdat_informative_nulls",
     "scan_xpt_informative_nulls",
-    "scan_dta_tagged_missing",
     "scan_dta_value_labels",
     "value_label_broadcast_decode",
-    "scan_sav_roundtrip",
-    "scan_sav_compressed_roundtrip",
-    "scan_zsav_roundtrip",
-    "scan_por_roundtrip",
-    "scan_xpt_roundtrip",
     "scan_sas7bdat_types",
     "scan_sas7bdat_rle",
     "scan_sas7bdat_rdc",
     "scan_sas7bdat_bigendian",
     "scan_sas7bdat_mixpage",
-    "scan_sas7bdat_roundtrip",
-    "scan_dta_roundtrip",
     # part 2: the staleness frontier, oldest newest-green first, as
     # ordered by tools/rotation_plan.py from the CORRECTNESS_r*.json
     # union.

@@ -161,7 +161,7 @@ def column_names(options) -> list[str] | None:
 def selected_indices(variables, options) -> list[int]:
     """Indices into ``variables`` (anything with ``.name``) that the
     ``columns`` option selects, in the option's order; every index
-    when it is unset. An unknown name is a ``ValueError``."""
+    when it is unset. An unknown or repeated name is a ``ValueError``."""
     wanted = column_names(options)
     if wanted is None:
         return list(range(len(variables)))
@@ -169,6 +169,9 @@ def selected_indices(variables, options) -> list[int]:
     missing = [c for c in wanted if c not in by_name]
     if missing:
         raise ValueError(f"readstat: unknown columns {missing}")
+    repeated = sorted({c for c in wanted if wanted.count(c) > 1})
+    if repeated:
+        raise ValueError(f"readstat: columns {repeated} selected more than once")
     return [by_name[c] for c in wanted]
 
 

@@ -1134,5 +1134,8 @@ class PorReader(ScanReader):
                 fv = np.asarray(vals, dtype=np.float64)  # None → NaN
                 yield spec, (fv, np.isnan(fv), None)
 
-        yield self._indexed(build_batch(columns()), start)
+        batch = build_batch(
+            columns(), self.informative, self.missing_string_as_null
+        )
+        yield self._indexed(batch, start)
 

@@ -3,7 +3,9 @@ file formats. Single-file formats with row-count headers ⇒ a pre-pass
 aggregation job (widths/counts/ranges) + a driver-side streaming
 assembly of chunks the executors already packed (``packed_stream`` —
 the Spark translation of the reference's two-pass sink_stata,
-pybindings.rs:951-1096).
+pybindings.rs:951-1096). The pack runs in the scan's own tasks
+unless the input has fewer partitions than cores (then a chunk-id
+shuffle fans it out); ``_drain`` brings the chunks to the driver.
 
 The column plan every path shares (single file, partitioned, sink) also
 lives here: Spark type → kind (``column_kinds``), the pre-pass
@@ -45,39 +47,40 @@ _NUMERIC = (
 )
 
 
-def _rows_at_least(n: int):
-    return lambda src, rows: int(rows) >= n
-
-
-def _fewer_parts_than_cores(src, rows) -> bool:
-    cores = max(int(src.sparkSession.sparkContext.defaultParallelism), 1)
-    return src.rdd.getNumPartitions() < cores
-
-
-# the single-file transport per format (packed_stream): (predicate on
-# (projected input, pre-pass row count) that selects the ordered
-# all-cores protocol, narrow chunk rows, ordered chunk rows). The
-# narrow path's toLocalIterator runs ~1 input partition at a time,
-# capping pack parallelism at the scan's partition count, so big
-# exports fan out.
+# the single-file transport per format (packed_stream): (row floor of
+# the ordered fan-out, narrow chunk rows, ordered chunk rows). The
+# narrow path packs in the scan's own tasks, one drain job per core in
+# flight. The ordered fan-out shuffles chunks onto every core, paying a
+# sampling scan, a shuffle, a persist and a totals job at ~0.3-0.5 s
+# fixed cost each (a count of a 64-row .dta takes 0.43 s at local[2]),
+# so it runs only where it adds cores (``_fans_out``).
 # - por: the shortest-token ladder dominates; ordered 8192-row chunks
 #   fan it across every core (65536-row chunks capped a 600k-row
 #   export at ~10-way) — the byte stream is chunk-boundary independent
 # - dta: the pack is a vectorized recarray fill (~2 s per million rows
 #   single-core), cheap enough that the shuffle+persist costs more
 #   than it saves at 100k rows (measured 2.0 -> 3.2 s at 600k rows)
-# - sas7bdat: its pre-pass counts no rows (the header is back-patched);
-#   row packing and the RLE/RDC encode dominate, so any input with
-#   fewer partitions than cores (one 128 MB-split parquet scan → 3
-#   tasks on a 32-core box) takes the ordered protocol
+# - sas7bdat: its pre-pass counts no rows (the header is back-patched),
+#   so it has no floor; row packing and the RLE/RDC encode dominate,
+#   and one 128 MB-split parquet scan → 3 tasks on a 32-core box
 _TRANSPORT = {
-    "sav": (_rows_at_least(100_000), 8192, 8192),
-    "zsav": (_rows_at_least(100_000), 8192, 8192),
-    "xpt": (_rows_at_least(100_000), 8192, 8192),
-    "por": (_rows_at_least(100_000), 65536, 8192),
-    "dta": (_rows_at_least(2_000_000), 65536, 65536),
-    "sas7bdat": (_fewer_parts_than_cores, 8192, 4096),
+    "sav": (100_000, 8192, 8192),
+    "zsav": (100_000, 8192, 8192),
+    "xpt": (100_000, 8192, 8192),
+    "por": (100_000, 65536, 8192),
+    "dta": (2_000_000, 65536, 65536),
+    "sas7bdat": (0, 8192, 4096),
 }
+
+
+def _fans_out(src, rows, floor) -> bool:
+    """The ordered fan-out adds cores: ``src`` (the projected input)
+    has fewer partitions than cores and the pre-pass counted at least
+    ``floor`` rows (``rows`` is None where it counts none)."""
+    if int(rows or 0) < floor:
+        return False
+    cores = max(int(src.sparkSession.sparkContext.defaultParallelism), 1)
+    return src.rdd.getNumPartitions() < cores
 
 
 def column_kinds(fields, fmt: str) -> list[str]:
@@ -296,24 +299,26 @@ def packed_stream(df, fmt, project, pack_fn, *, rows, modules):
     """The single-file export stream: ``(payload, n)`` packed on the
     executors by ``pack_fn``, yielded in input order.
 
-    ``_TRANSPORT[fmt]`` picks the narrow (``iter_packed_chunks``) or
-    ordered (``iter_ordered_packed``) transport and its chunk rows;
-    both are called through this module's globals as ``(df, pack_fn,
-    chunk_rows, modules=, cast=)``, so a tap that wraps them sees
-    every export. ``project(frame, extra)`` selects the on-disk
-    columns plus ``extra``: before the narrow transport, and after the
-    ordered one's shuffle (its ``cast``) — RangePartitioner's bounds
-    sampling re-executes the exchange child, and post-shuffle that
-    pass is the bare scan + order tags, not scan + casts (measured:
-    the pre-cast child cost the sav export ~0.4 s/run at sf0.1).
+    ``_TRANSPORT[fmt]`` picks the narrow (``iter_packed_chunks``: pack
+    in the scan's own tasks) or, where ``_fans_out``, the ordered
+    (``iter_ordered_packed``: shuffle onto every core, then pack)
+    transport and its chunk rows; both are called through this
+    module's globals as ``(df, pack_fn, chunk_rows, modules=, cast=)``,
+    so a tap that wraps them sees every export. ``project(frame,
+    extra)`` selects the on-disk columns plus ``extra``: before the
+    narrow transport, and after the ordered one's shuffle (its
+    ``cast``) — RangePartitioner's bounds sampling re-executes the
+    exchange child, and post-shuffle that pass is the bare scan +
+    order tags, not scan + casts (measured: the pre-cast child cost the
+    sav export ~0.4 s/run at sf0.1).
 
     ``rows``, when known, is the pre-pass count the header already
     carries: a drained total that differs (a nondeterministic upstream
     can feed the two jobs different rows) raises instead of leaving a
     file whose header disagrees with its data."""
-    ordered, narrow_rows, ordered_rows = _TRANSPORT[fmt]
+    floor, narrow_rows, ordered_rows = _TRANSPORT[fmt]
     src = project(df, [])
-    if ordered(src, rows):
+    if _fans_out(src, rows, floor):
         chunks = iter_ordered_packed(
             df, pack_fn, ordered_rows, modules=modules,
             cast=lambda b: project(
@@ -344,17 +349,65 @@ def _pickle_by_value(modules) -> None:
         cloudpickle.register_pickle_by_value(sys.modules[m])
 
 
+def _drain(staged):
+    """The rows of ``staged`` on the driver, in exact partition order:
+    one single-partition job per partition, up to one per core in
+    flight. One partition per job bounds a job's result (what
+    ``spark.driver.maxResultSize`` limits) to one partition; the
+    driver holds at most one partition per core. The jobs inherit the
+    caller's local properties (job group, job tags) and carry a tag of
+    their own, cancelled on exit, so a failed consumer or an early
+    close leaves no job running."""
+    import uuid
+    from collections import deque
+    from concurrent.futures import ThreadPoolExecutor, wait
+
+    from pyspark.core.rdd import _load_from_socket
+    from pyspark.serializers import BatchedSerializer, CPickleSerializer
+    from pyspark.util import inheritable_thread_target
+
+    session = staged.sparkSession
+    sc = session.sparkContext
+    jrdd = staged._jdf.javaToPython()
+    n = jrdd.getNumPartitions()
+    cores = max(int(sc.defaultParallelism), 1)
+    ser = BatchedSerializer(CPickleSerializer())
+    tag = f"prs-drain-{uuid.uuid4().hex}"
+
+    @inheritable_thread_target(session)
+    def fetch(p):
+        sc.addJobTag(tag)  # on the pool thread's copy of the properties
+        sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, [p])
+        return list(_load_from_socket(sock, ser))
+
+    pool = ThreadPoolExecutor(max(min(cores, n), 1))
+    window = deque()
+    try:
+        for p in range(n):
+            window.append(pool.submit(fetch, p))
+            if len(window) == cores:
+                yield from window.popleft().result()
+        while window:
+            yield from window.popleft().result()
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
+        live = [f for f in window if not f.done()]
+        while live:
+            sc.cancelJobsWithTag(tag)
+            live = list(wait(live, timeout=0.5).not_done)
+
+
 def iter_arrow_chunks(df, max_rows: int = 65536):
     """Partition-ordered Arrow-chunk transport for driver-side sinks.
 
-    `toLocalIterator()` deserializes one pickled Row OBJECT per row on
-    the driver — the slowest possible transport for a bulk export.
-    Here each executor serializes its Arrow batches to IPC bytes
-    (`mapInArrow`, one binary cell per chunk ≤ max_rows), the driver
-    streams those few rows in partition order with bounded memory, and
-    each chunk deserializes back to a `pyarrow.RecordBatch` in one
-    C-level pass. Yields pandas DataFrames (the pack kernels consume
-    Series via .to_numpy / iteration) of ≤ max_rows rows.
+    Draining the frame's own rows would unpickle one Row object per
+    row on the driver — the slowest possible transport for a bulk
+    export. Here each executor serializes its Arrow batches to IPC
+    bytes (`mapInArrow`, one binary cell per chunk ≤ max_rows),
+    ``_drain`` streams those few rows in partition order, and each
+    chunk deserializes back to a `pyarrow.RecordBatch` in one C-level
+    pass. Yields pandas DataFrames (the pack kernels consume Series
+    via .to_numpy / iteration) of ≤ max_rows rows.
     """
     import pyarrow as pa
 
@@ -379,7 +432,7 @@ def iter_arrow_chunks(df, max_rows: int = 65536):
                 )
 
     staged = df.mapInArrow(stage, "chunk binary")
-    for row in staged.toLocalIterator(prefetchPartitions=True):
+    for row in _drain(staged):
         with pa.ipc.open_stream(row[0]) as reader:
             for b in reader:
                 pdf = b.to_pandas()
@@ -388,15 +441,16 @@ def iter_arrow_chunks(df, max_rows: int = 65536):
 
 
 def iter_packed_chunks(df, pack_fn, max_rows: int = 8192, modules=()):
-    """Executor-side packing for driver-assembled single-file sinks.
+    """Executor-side packing for driver-assembled single-file sinks,
+    in the scan's own tasks (no shuffle).
 
     `pack_fn(pandas.DataFrame) -> bytes` runs inside a mapInArrow
     stage on the executors (rows pack independently in every format
-    here); the driver receives (payload, n_rows) pairs in partition
-    order and only concatenates. `modules` are registered for
-    pickle-by-value (``_pickle_by_value``); pack_fn and everything it
-    references must resolve from those modules' globals, not from
-    runtime package imports.
+    here); ``_drain`` delivers the (payload, n_rows) pairs in
+    partition order and the driver only concatenates. `modules` are
+    registered for pickle-by-value (``_pickle_by_value``); pack_fn and
+    everything it references must resolve from those modules'
+    globals, not from runtime package imports.
     """
     _pickle_by_value(modules)
     names = df.columns
@@ -420,7 +474,7 @@ def iter_packed_chunks(df, pack_fn, max_rows: int = 8192, modules=()):
                 )
 
     staged = df.mapInArrow(stage, "payload binary, n bigint")
-    for row in staged.toLocalIterator(prefetchPartitions=True):
+    for row in _drain(staged):
         yield row[0], row[1]
 
 
@@ -435,12 +489,13 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
     travel together through a JVM-only shuffle, cross into Python once
     in the pack stage, and — because range partition order is cid
     order and each task emits its chunks cid-ascending — the persisted
-    pack output drains in exact input order via plain
-    toLocalIterator. The cost is one row-sampling pass of the tagged
-    input (RangePartitioner bounds), far cheaper at export scale than
-    re-shuffling the packed bytes. A strictly-increasing cid check and
-    chunk/row totals at the drain turn any ordering or loss into a
-    hard error instead of a corrupt file.
+    pack output drains in exact input order through ``_drain``. The
+    cost is one row-sampling pass of the tagged input (RangePartitioner
+    bounds), a shuffle, a persist and a totals job: worth it only when
+    the input has fewer partitions than cores (``_fans_out``). A
+    strictly-increasing cid check and chunk/row totals at the drain
+    turn any ordering or loss into a hard error instead of a corrupt
+    file.
 
     ``cast``, when given, is applied AFTER the repartition and must
     preserve the ``__prs_mid``/``__prs_cid`` columns: the shuffle
@@ -509,9 +564,9 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
     try:
         # materialize on every core AND capture chunk/row totals from
         # the same executed plan: the drained stream must match both,
-        # which catches whole-trailing-partition loss in the local
-        # iterator (the failure mode the old protocol's terminator
-        # bookkeeping guarded against)
+        # which catches whole-trailing-partition loss in the drain (the
+        # failure mode the old protocol's terminator bookkeeping
+        # guarded against)
         tot = staged.agg(
             F.count(F.lit(1)).alias("c"), F.sum("n").alias("r")
         ).collect()[0]
@@ -521,7 +576,7 @@ def iter_ordered_packed(df, pack_fn, max_rows: int = 8192, modules=(), cast=None
         # no orderBy: range partitioning already makes partition index
         # order cid order, and each task emits cid-ascending — the
         # monotonicity check below proves it on every drained stream
-        for row in staged.toLocalIterator(prefetchPartitions=True):
+        for row in _drain(staged):
             if last_cid is not None and row[0] <= last_cid:
                 raise RuntimeError(
                     "iter_ordered_packed: chunk stream out of order "

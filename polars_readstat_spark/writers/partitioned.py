@@ -1,13 +1,13 @@
 """Distributed partitioned export: one statistical file per Spark
 partition, written inside the executor tasks.
 
-The single-file writers stream through the driver
-(`toLocalIterator`), which bounds memory but serializes wall-clock —
-SCALE.md names that bound. This path removes it. Each
-``write_*_partitioned`` is a thin facade over the distributed sink's
-part-file writer (writers/spark_sink.py): a global pre-pass job
-resolves one column plan (string widths, dta integer narrowing) so
-every part-file shares a single schema, then one generic
+The single-file writers pack on the executors but assemble one file
+on the driver (``writers._drain``), which bounds memory but
+serializes the write itself — SCALE.md names that bound. This path
+removes it. Each ``write_*_partitioned`` is a thin facade over the
+distributed sink's part-file writer (writers/spark_sink.py): a global
+pre-pass job resolves one column plan (string widths, dta integer
+narrowing) so every part-file shares a single schema, then one generic
 ``mapInArrow`` task per partition streams its batches through the
 zone-map accumulator into ``write_part`` and the driver publishes the
 ``_prs_stats.json`` manifest. The output directory is exactly the

@@ -7,6 +7,7 @@ dta and sas7bdat."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -52,27 +53,38 @@ def calls(monkeypatch):
     return seen
 
 
+FORMATS = ("sav", "zsav", "xpt", "por", "dta", "sas7bdat")
+
+
+# local[8]: an input with a partition per core packs in its own tasks;
+# fewer partitions fan out (iter_ordered_packed) at or above the
+# format's row floor — patched to the frame's 300 rows where
+# ``at_floor``; sas7bdat counts no rows and has no floor
 @pytest.mark.parametrize(
-    "fmt,parts",
-    [
-        ("sav", 3), ("zsav", 3), ("xpt", 3), ("por", 3), ("dta", 3),
-        # local[8]: 8 input partitions is the narrow path, 1 the ordered
-        ("sas7bdat", 8), ("sas7bdat", 1),
+    "fmt,parts,at_floor",
+    [pytest.param(f, 3, False, id=f"{f}-3") for f in FORMATS[:-1]]
+    + [pytest.param("sas7bdat", p, False, id=f"sas7bdat-{p}") for p in (8, 1)]
+    + [
+        pytest.param(f, p, True, id=f"{f}-{p}-at-floor")
+        for f in FORMATS[:-1]
+        for p in (3, 8)
     ],
 )
 def test_every_writer_reaches_one_tapped_transport(
-    spark, tmp_path, calls, fmt, parts
+    spark, tmp_path, monkeypatch, calls, fmt, parts, at_floor
 ):
+    floor, *chunk_rows = w._TRANSPORT[fmt]
+    if at_floor:
+        floor = 300
+        monkeypatch.setitem(w._TRANSPORT, fmt, (floor, *chunk_rows))
     _write(_frame(spark, parts=parts), str(tmp_path / f"o.{fmt}"), fmt)
     assert len(calls) == 1, calls
     name, args, kwargs = calls[0]
-    assert name in ("iter_ordered_packed", "iter_packed_chunks")
     assert callable(args[0]) and isinstance(args[1], int)
     assert "modules" in kwargs
     assert ("cast" in kwargs) == (name == "iter_ordered_packed")
-    if fmt == "sas7bdat":
-        want = "iter_packed_chunks" if parts >= 8 else "iter_ordered_packed"
-        assert name == want
+    fans_out = parts < 8 and 300 >= floor
+    assert name == ("iter_ordered_packed" if fans_out else "iter_packed_chunks")
 
 
 def test_dta_strl_reaches_arrow_transport(spark, tmp_path, calls):
@@ -118,6 +130,39 @@ def test_remote_stream_failure_publishes_nothing(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="delivered 200"):
         _write(_frame(spark), "simlat0://" + dest, "sav")
     assert not os.path.exists(dest)
+
+
+def _slow_after_first(pdf) -> bytes:
+    if int(pdf["id"].iloc[0]) > 0:
+        time.sleep(30)
+    return b"x"
+
+
+def test_closing_the_stream_early_leaves_no_job_running(spark):
+    """The drain keeps a job per core in flight; closing the stream
+    (as a failed sink does) cancels them rather than letting them run
+    on."""
+    tracker = spark.sparkContext.statusTracker()
+    it = w.iter_packed_chunks(spark.range(0, 16, 1, 16), _slow_after_first, 8)
+    assert next(it) == (b"x", 1)
+    t0 = time.time()
+    it.close()
+    while tracker.getActiveJobsIds() and time.time() < t0 + 30:
+        time.sleep(0.2)
+    assert tracker.getActiveJobsIds() == []
+    assert time.time() - t0 < 25  # well short of the 30 s pack
+
+
+def test_drain_jobs_carry_the_callers_job_group(spark):
+    sc = spark.sparkContext
+    sc.setJobGroup("prs-drain-test", "a caller's job group")
+    try:
+        got = list(w.iter_packed_chunks(spark.range(0, 40, 1, 4), lambda pdf: b"", 8))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sum(n for _, n in got) == 40
+    # one single-partition job per input partition, all in the group
+    assert len(sc.statusTracker().getJobIdsForGroup("prs-drain-test")) == 4
 
 
 # sas7bdat: tests/test_informative_sas_xpt.py::test_tagged_missing_validation

@@ -4,8 +4,11 @@ every format. Files come from our own writers — no external corpus."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "sas7bdat")
 ROW_INDEX_FORMATS = ["dta", "sav", "xpt", "sas7bdat", "por"]
 TIME_FORMATS = ["sas7bdat", "xpt", "sav", "zsav", "por"]
 TIME_TAG = {"time": "ns_since_midnight"}
@@ -77,6 +80,30 @@ def test_unknown_column_raises_naming_it(twenty_rows, fmt):
         ds.schema()
     with pytest.raises(ValueError, match="NOPE"):
         ds.reader(None)
+
+
+def test_repeated_column_raises_naming_it():
+    from polars_readstat_spark.sources.datasource import ReadstatDataSource
+
+    path = os.path.join(FIXTURES, "types.sas7bdat")
+    ds = ReadstatDataSource({"path": path, "columns": "vint,vint"})
+    with pytest.raises(ValueError, match="'vint'.* more than once"):
+        ds.schema()
+    with pytest.raises(ValueError, match="'vint'.* more than once"):
+        ds.reader(None)
+
+
+@pytest.mark.parametrize("fmt", ["sav", "por"])
+def test_missing_string_as_null_nulls_empty_strings(spark, tmp_path, fmt):
+    import polars_readstat_spark as prs
+
+    path = str(tmp_path / f"e.{fmt}")
+    df = spark.createDataFrame([(1.0, "a"), (2.0, ""), (3.0, "c")], "ID double, S string")
+    prs.write_readstat(df.coalesce(1), path)
+    plain = [r.S for r in _scan(spark, path).orderBy("ID").collect()]
+    assert plain == ["a", "", "c"]
+    nulled = _scan(spark, path, missing_string_as_null="true").orderBy("ID")
+    assert [r.S for r in nulled.collect()] == ["a", None, "c"]
 
 
 @pytest.mark.parametrize("fmt", TIME_FORMATS)

@@ -34,9 +34,8 @@ def _register(spark):
     prs.register(spark)
 
 
-@pytest.fixture(scope="module")
-def frame(spark):
-    df = spark.range(4000, numPartitions=3).select(
+def _columns(ids):
+    return ids.select(
         F.when(F.col("id") % 7 == 0, None)
         .otherwise(F.col("id") * 1.25)
         .alias("num"),
@@ -55,7 +54,12 @@ def frame(spark):
         .when(F.col("id") % 5 == 2, F.lit("."))
         .otherwise(F.lit(""))  # SPSS strings have no null
         .alias("t"),
-    ).cache()
+    )
+
+
+@pytest.fixture(scope="module")
+def frame(spark):
+    df = _columns(spark.range(4000, numPartitions=3)).cache()
     df.count()
     yield df
     df.unpersist()
@@ -97,28 +101,52 @@ def _expected(frame, tagged: bool):
     return rows
 
 
+def _write_both(frame, ext, kw, tmp_path, monkeypatch) -> dict:
+    """{mode: path} of one export forced through each transport."""
+    import polars_readstat_spark as prs
+
+    floor, narrow_rows, ordered_rows = w._TRANSPORT[ext]
+    out = {}
+    # uneven chunk sizes, so the two runs cut chunks at different rows
+    for mode, rows in (
+        ("ordered", (narrow_rows, 700)),
+        ("narrow", (1000, ordered_rows)),
+    ):
+        monkeypatch.setattr(w, "_fans_out", lambda *a, _o=mode == "ordered": _o)
+        monkeypatch.setitem(w._TRANSPORT, ext, (floor, *rows))
+        path = str(tmp_path / f"{mode}.{ext}")
+        prs.write_readstat(frame, path, **kw)
+        out[mode] = path
+    return out
+
+
+def _read_back(spark, path):
+    return [
+        tuple(_norm(v) for v in r)
+        for r in spark.read.format("readstat").load(path).collect()
+    ]
+
+
 @pytest.mark.parametrize("case", list(CASES))
 def test_ordered_and_narrow_transports_write_identical_files(
     spark, tmp_path, monkeypatch, frame, case
 ):
-    import polars_readstat_spark as prs
-
     ext, kw = CASES[case]
-    _, narrow_rows, ordered_rows = w._TRANSPORT[ext]
-    out = {}
-    # uneven chunk sizes, so the two runs cut chunks at different rows
-    for mode, entry in (
-        ("ordered", (lambda src, rows: True, narrow_rows, 700)),
-        ("narrow", (lambda src, rows: False, 1000, ordered_rows)),
-    ):
-        monkeypatch.setitem(w._TRANSPORT, ext, entry)
-        path = str(tmp_path / f"{mode}.{ext}")
-        prs.write_readstat(frame, path, **kw)
-        out[mode] = path
+    out = _write_both(frame, ext, kw, tmp_path, monkeypatch)
     assert _masked(out["ordered"]) == _masked(out["narrow"])
+    assert _read_back(spark, out["narrow"]) == _expected(frame, "tagged_missing" in kw)
 
-    back = [
-        tuple(_norm(v) for v in r)
-        for r in spark.read.format("readstat").load(out["narrow"]).collect()
-    ]
-    assert back == _expected(frame, "tagged_missing" in kw)
+
+def test_many_partition_drain_keeps_input_order(spark, tmp_path, monkeypatch):
+    """More partitions than the drain keeps in flight (3 x cores + 1),
+    a quarter of them empty: the narrow drain still yields them in
+    input order, byte-identical to the ordered path."""
+    parts = 3 * spark.sparkContext.defaultParallelism + 1
+    ids = spark.range(4000, numPartitions=parts)
+    per = -(-4000 // parts)  # range() partitions are contiguous id blocks
+    many = _columns(ids.where(F.floor(F.col("id") / per) % 4 != 1))
+    assert many.rdd.getNumPartitions() == parts
+    ext, kw = CASES["xpt5"]
+    out = _write_both(many, ext, kw, tmp_path, monkeypatch)
+    assert _masked(out["ordered"]) == _masked(out["narrow"])
+    assert _read_back(spark, out["narrow"]) == _expected(many, True)

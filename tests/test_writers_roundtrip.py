@@ -1,7 +1,7 @@
 """Write-read roundtrip tests for SAV / XPT / POR / SAS-CSV writers
 (reference test model: tests/test_write_roundtrip.py matrix, SURVEY §5.5).
 
-Each writer streams partitions through a pre-pass + toLocalIterator
+Each writer streams partitions through a pre-pass + driver-side
 assembly; the roundtrip goes out through `write_readstat` and back in
 through the public `spark.read.format("readstat")` API. XPT gets an
 extra external oracle: pandas.read_sas reads our transport files.
