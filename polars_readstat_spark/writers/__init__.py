@@ -49,11 +49,12 @@ _NUMERIC = (
 
 # the single-file transport per format (packed_stream): (row floor of
 # the ordered fan-out, narrow chunk rows, ordered chunk rows). The
-# narrow path packs in the scan's own tasks, one drain job per core in
-# flight. The ordered fan-out shuffles chunks onto every core, paying a
-# sampling scan, a shuffle, a persist and a totals job at ~0.3-0.5 s
-# fixed cost each (a count of a 64-row .dta takes 0.43 s at local[2]),
-# so it runs only where it adds cores (``_fans_out``).
+# narrow path packs in the scan's own tasks, one drain job per core
+# (at most ``_DRAIN_WINDOW``) in flight. The ordered fan-out shuffles
+# chunks onto every core, paying a sampling scan, a shuffle, a persist
+# and a totals job at ~0.3-0.5 s fixed cost each (a count of a 64-row
+# .dta takes 0.43 s at local[2]), so it runs only where it adds cores
+# (``_fans_out``).
 # - por: the shortest-token ladder dominates; ordered 8192-row chunks
 #   fan it across every core (65536-row chunks capped a 600k-row
 #   export at ~10-way) — the byte stream is chunk-boundary independent
@@ -62,7 +63,8 @@ _NUMERIC = (
 #   than it saves at 100k rows (measured 2.0 -> 3.2 s at 600k rows)
 # - sas7bdat: its pre-pass counts no rows (the header is back-patched),
 #   so it has no floor; row packing and the RLE/RDC encode dominate,
-#   and one 128 MB-split parquet scan → 3 tasks on a 32-core box
+#   so any input with fewer partitions than cores (one 128 MB-split
+#   parquet scan → 3 tasks on a 32-core box) fans out
 _TRANSPORT = {
     "sav": (100_000, 8192, 8192),
     "zsav": (100_000, 8192, 8192),
@@ -349,15 +351,24 @@ def _pickle_by_value(modules) -> None:
         cloudpickle.register_pickle_by_value(sys.modules[m])
 
 
+# the drain's in-flight cap: a finished partition waits on the driver
+# until every earlier one is yielded, so the driver holds up to this
+# many drained partitions whatever the core count. 4 is the widest
+# window measured: a 4-partition sav export at local[4] took 4.0 s
+# against 4.7 s with two partitions in flight
+_DRAIN_WINDOW = 4
+
+
 def _drain(staged):
     """The rows of ``staged`` on the driver, in exact partition order:
-    one single-partition job per partition, up to one per core in
-    flight. One partition per job bounds a job's result (what
-    ``spark.driver.maxResultSize`` limits) to one partition; the
-    driver holds at most one partition per core. The jobs inherit the
-    caller's local properties (job group, job tags) and carry a tag of
-    their own, cancelled on exit, so a failed consumer or an early
-    close leaves no job running."""
+    one single-partition job per partition, up to one per core and at
+    most ``_DRAIN_WINDOW`` in flight. One partition per job bounds a
+    job's result (what ``spark.driver.maxResultSize`` limits) to one
+    partition; the driver holds at most min(cores, ``_DRAIN_WINDOW``)
+    partitions, each briefly twice while its fetch copies it out of
+    the JVM. The jobs inherit the caller's local properties (job
+    group, job tags) and carry a tag of their own, cancelled on exit,
+    so a failed consumer or an early close leaves no job running."""
     import uuid
     from collections import deque
     from concurrent.futures import ThreadPoolExecutor, wait
@@ -370,7 +381,7 @@ def _drain(staged):
     sc = session.sparkContext
     jrdd = staged._jdf.javaToPython()
     n = jrdd.getNumPartitions()
-    cores = max(int(sc.defaultParallelism), 1)
+    width = max(min(int(sc.defaultParallelism), _DRAIN_WINDOW, n), 1)
     ser = BatchedSerializer(CPickleSerializer())
     tag = f"prs-drain-{uuid.uuid4().hex}"
 
@@ -380,12 +391,12 @@ def _drain(staged):
         sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, [p])
         return list(_load_from_socket(sock, ser))
 
-    pool = ThreadPoolExecutor(max(min(cores, n), 1))
+    pool = ThreadPoolExecutor(width)
     window = deque()
     try:
         for p in range(n):
             window.append(pool.submit(fetch, p))
-            if len(window) == cores:
+            if len(window) == width:
                 yield from window.popleft().result()
         while window:
             yield from window.popleft().result()

@@ -165,6 +165,29 @@ def test_drain_jobs_carry_the_callers_job_group(spark):
     assert len(sc.statusTracker().getJobIdsForGroup("prs-drain-test")) == 4
 
 
+def _timed_pack(pdf) -> bytes:
+    import struct
+
+    t0 = time.time()
+    time.sleep(0.4)
+    return struct.pack("<qdd", int(pdf["id"].iloc[0]), t0, time.time())
+
+
+def test_drain_window_caps_jobs_in_flight(spark, monkeypatch):
+    """The driver holds at most ``_DRAIN_WINDOW`` drained partitions:
+    no more than that many pack jobs ever overlap, whatever the core
+    count, and the stream still arrives in partition order."""
+    import struct
+
+    monkeypatch.setattr(w, "_DRAIN_WINDOW", 2)
+    got = list(w.iter_packed_chunks(spark.range(0, 6, 1, 6), _timed_pack, 8))
+    packs = [struct.unpack("<qdd", payload) for payload, _ in got]
+    assert [i for i, _, _ in packs] == list(range(6))
+    # jobs running at each job's start
+    running = max(sum(s <= t0 < e for _, s, e in packs) for _, t0, _ in packs)
+    assert 1 <= running <= 2
+
+
 # sas7bdat: tests/test_informative_sas_xpt.py::test_tagged_missing_validation
 @pytest.mark.parametrize("fmt", ["xpt", "dta"])
 @pytest.mark.parametrize(
