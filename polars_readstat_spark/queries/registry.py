@@ -49,11 +49,15 @@ def query(name: str, oracle: str | None = None):
 # its code. Queries past position 50 still run in the local gate
 # (tools/check_correctness.py covers the whole registry).
 _PRIORITY: tuple[str, ...] = (
-    # part 1 — changed-path-first: every single-file export now packs
-    # in the scan's own tasks and drains through writers._drain, and
-    # por reads honour missing_string_as_null, so the write-then-read
-    # roundtrips go first; then the decode-tail queries (the shared
-    # sources/columns.py), which no driver round has checked since.
+    # part 1 — changed-path-first: the part-file writers (sink,
+    # partitioned, hive) now lay out sav/zsav/xpt/sas7bdat with the
+    # single-file exports' pack and assembler, so the part-file
+    # queries go first, then the write-then-read roundtrips; then the
+    # decode-tail queries (the shared sources/columns.py).
+    "scan_sink_dir_roundtrip",
+    "sink_remote_roundtrip",
+    "scan_hive_layout_prune",
+    "scan_zonemap_stripe_prune",
     "scan_sav_roundtrip",
     "scan_sav_compressed_roundtrip",
     "scan_zsav_roundtrip",
@@ -103,10 +107,6 @@ _PRIORITY: tuple[str, ...] = (
     "sequence_packing_bins",  # newest green r12
     "source_mixing_weights",  # newest green r12
     "sequence_length_histogram",  # newest green r12
-    "mixture_budget_fill",  # newest green r12
-    "train_val_test_split",  # newest green r12
-    "simhash_fingerprint",  # newest green r12
-    "dedup_cluster_size_histogram",  # newest green r12
     # positions 51+ follow registration order (the local gate still
     # covers the whole registry each round).
 )

@@ -8,16 +8,26 @@ unless the input has fewer partitions than cores (then a chunk-id
 shuffle fans it out); ``_drain`` brings the chunks to the driver.
 
 The column plan every path shares (single file, partitioned, sink) also
-lives here: Spark type → kind (``column_kinds``), the pre-pass
-(``prepass_aggs``), string-width limits (``str_widths``) and the epoch
-casts (``to_disk``). dta plans its own integer narrowing. So does the
-single-file export stream (``packed_stream`` over the ``_TRANSPORT``
-table; dta's strL path alone uses ``iter_arrow_chunks``), its output
-(``export_output``) and the ``tagged_missing`` split."""
+lives here: Spark type → kind (``column_kinds``, ``plan_write``), the
+pre-pass (``prepass_aggs``), string-width limits (``str_widths``) and
+the epoch casts (``to_disk``). ``plan_export`` runs that plan and the
+one pre-pass job into a ``PartPlan``. Each of sav/zsav, xpt and
+sas7bdat then has one layout: ``pack(plan, pdf)`` and ``assemble(fh,
+plan, payloads, n_rows)`` in its module (``layout``). A single-file
+export (``export_file``) packs on the executors over ``packed_stream``
+and assembles on the driver; a part-file (spark_sink's
+``write_partition_file``) packs and assembles inside its task. dta
+plans its own integer narrowing, and its two exports already share
+``_pack_stream``/``_assemble_dta``; por has no part-file path. Also
+here: the export output (``export_output``) and the
+``tagged_missing`` split. The dta strL path alone uses
+``iter_arrow_chunks``."""
 
 from __future__ import annotations
 
 from contextlib import contextmanager, suppress
+from dataclasses import dataclass, field, replace
+from functools import partial
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -115,6 +125,51 @@ def column_kinds(fields, fmt: str) -> list[str]:
                 f"write {fmt}: unsupported type {t} for column {f.name!r}"
             )
     return kinds
+
+
+# every format with a part-file path (por is single-file only)
+_SINK_FORMATS = ("sas7bdat", "sav", "zsav", "xpt", "dta")
+
+
+def plan_write(schema, options):
+    """Column plan from the declared schema alone — pure, so the sink's
+    planning worker runs it too, before any job.
+
+    Returns (fmt, fields, names, shorts, kinds): ``shorts`` is None for
+    formats that keep full names (sas7bdat, dta). dta's kinds drive
+    only the zone maps — its column types are planned elsewhere. A
+    sas7bdat ``compress`` option other than rle/rdc raises here."""
+    import os
+
+    fmt = (options.get("format") or options.get("ext") or "").lstrip(".").lower()
+    if not fmt:
+        path = options.get("path", "")
+        tail = os.path.basename(path)
+        fmt = tail.rsplit(".", 1)[-1].lower() if "." in tail else ""
+    if fmt not in _SINK_FORMATS:
+        raise ValueError(
+            f"df.write.format('readstat'): set .option('format', ...) to "
+            f"one of {sorted(_SINK_FORMATS)} (got {fmt!r})"
+        )
+    compress = options.get("compress")
+    if fmt == "sas7bdat" and compress not in (None, "", "rle", "rdc"):
+        raise ValueError(
+            f"write sas7bdat: unsupported compress={compress!r} "
+            "(only 'rle' or 'rdc')"
+        )
+    fields = schema.fields
+    names = [f.name for f in fields]
+    kinds = column_kinds(fields, fmt)
+    shorts = None
+    if fmt in ("sav", "zsav"):
+        from polars_readstat_spark.writers.sav import _short_names
+
+        shorts = _short_names(names)
+    elif fmt == "xpt":
+        from polars_readstat_spark.writers.xpt import _short_names
+
+        shorts = _short_names(names)
+    return fmt, fields, names, shorts, kinds
 
 
 def prepass_aggs(fields, kinds, fmt: str) -> list[Column]:
@@ -276,6 +331,122 @@ def check_tagged(tagged_missing, numeric, columns) -> None:
             raise ValueError(
                 f"tagged_missing: indicator column {icol!r} not in DataFrame"
             )
+
+
+@dataclass
+class PartPlan:
+    """A resolved column plan: everything a format's ``pack`` and
+    ``assemble`` need to lay out a file before they see a row.
+    ``widths`` are on-disk byte widths per column (sav: 0 for
+    numerics); dta carries its (name, kind, width, fmt) tuples in
+    ``dta_cols`` instead. ``plan_export`` resolves one per export from
+    the global pre-pass (single file and partitioned); the sink
+    resolves one per partition (``write_sink_part``)."""
+
+    fmt: str
+    fields: list
+    names: list
+    shorts: list | None
+    kinds: list
+    widths: list
+    dta_cols: list | None = None
+    dataset_name: str = "DATA"
+    data_label: str = ""
+    variable_labels: dict = field(default_factory=dict)
+    value_labels: dict = field(default_factory=dict)
+    measures: dict = field(default_factory=dict)
+    version: int = 5
+    page_length: int | None = None
+    compress: str | None = None
+    # xpt/sas7bdat: data column index → stream column of its
+    # tagged-missing indicator (``split_tagged``)
+    tag_slot: dict = field(default_factory=dict)
+    # sav: SPSS bytecode compression (only write_sav(compress=True))
+    bytecode: bool = False
+
+    def for_pack(self) -> PartPlan:
+        """This plan without what only the assembler reads (fields,
+        names and label dicts): what a pack closure ships to every
+        task."""
+        return replace(
+            self, fields=[], names=[], shorts=None, variable_labels={},
+            value_labels={}, measures={},
+        )
+
+
+def plan_export(df, fmt, tagged_missing=None, numeric_lengths=None, **opts):
+    """The one plan step of every sav/zsav/xpt/sas7bdat export, single
+    file or part-files: split off the ``tagged_missing`` indicators,
+    plan the columns (``plan_write``), check the tagged and
+    ``numeric_lengths`` columns, run the one pre-pass job and resolve
+    the widths. Everything that can be refused is refused before that
+    job. ``opts`` are PartPlan fields. Returns (plan, the pre-pass row
+    count or None, the indicator projections that ride at the
+    stream's tail)."""
+    data_df, _, tag_exprs, tag_slot = split_tagged(df, tagged_missing)
+    fmt, fields, names, shorts, kinds = plan_write(
+        data_df.schema, {"format": fmt, "compress": opts.get("compress")}
+    )
+    numeric = [n for n, k in zip(names, kinds) if k != "str"]
+    check_tagged(tagged_missing, numeric, df.columns)
+    numeric_lengths = dict(numeric_lengths or {})
+    for c, w in numeric_lengths.items():
+        if c not in numeric:
+            raise ValueError(
+                f"numeric_lengths: {c!r} is not a numeric data column"
+            )
+        if c in (tagged_missing or {}) and w != 8:
+            raise ValueError(
+                f"numeric_lengths: {c!r} is tagged-missing — tags live in "
+                "the mantissa tail that truncation drops"
+            )
+    aggs = prepass_aggs(fields, kinds, fmt)
+    stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
+    widths = str_widths(
+        fmt, fields, kinds, lambda n: stats.get(f"__w_{n}"), numeric_lengths
+    )
+    plan = PartPlan(
+        fmt, fields, names, shorts, kinds, widths, tag_slot=tag_slot, **opts
+    )
+    return plan, stats.get("__n"), tag_exprs
+
+
+# per format: the module holding its pack(plan, pdf) and
+# assemble(fh, plan, payloads, n_rows), then any other module of this
+# package the pack reaches (all pickled by value with this one)
+_LAYOUTS = {
+    "sav": ("sav",),
+    "zsav": ("sav",),
+    "xpt": ("xpt", "tagged"),
+    "sas7bdat": ("sas7bdat", "tagged"),
+}
+
+
+def layout(fmt: str):
+    """The writer module that lays out ``fmt`` (see ``_LAYOUTS``)."""
+    import importlib
+
+    return importlib.import_module(f"{__name__}.{_LAYOUTS[fmt][0]}")
+
+
+def export_file(df, path, plan, rows, tag_exprs=()) -> None:
+    """Write one planned sav/zsav/xpt/sas7bdat file at ``path``: the
+    format's ``pack`` runs on the executors over ``packed_stream`` and
+    its ``assemble`` lays the payloads out on the driver. ``rows`` is
+    the pre-pass count (None for sas7bdat, which back-patches its
+    header); ``tag_exprs`` ride at the stream's tail for the pack."""
+    mod = layout(plan.fmt)
+    fmt, fields, kinds = plan.fmt, plan.fields, plan.kinds
+    stream = packed_stream(
+        df, fmt,
+        lambda f, extra: to_disk(
+            f, fmt, fields, kinds, extra=[*tag_exprs, *extra]
+        ),
+        partial(mod.pack, plan.for_pack()), rows=rows,
+        modules=(*(f"{__name__}.{m}" for m in _LAYOUTS[fmt]), __name__),
+    )
+    with export_output(path) as fh:
+        mod.assemble(fh, plan, stream, rows)
 
 
 @contextmanager

@@ -4,20 +4,24 @@ partition, written inside the executor tasks.
 The single-file writers pack on the executors but assemble one file
 on the driver (``writers._drain``), which bounds memory but
 serializes the write itself — SCALE.md names that bound. This path
-removes it. Each ``write_*_partitioned`` is a thin facade over the
-distributed sink's part-file writer (writers/spark_sink.py): a global
-pre-pass job resolves one column plan (string widths, dta integer
-narrowing) so every part-file shares a single schema, then one generic
+removes it. Each ``write_*_partitioned`` runs the single-file
+exports' plan step (``writers.plan_export``: one global pre-pass job
+resolves string widths, so every part-file shares one schema; dta
+narrows its integers from the same kind of job), then one generic
 ``mapInArrow`` task per partition streams its batches through the
-zone-map accumulator into ``write_part`` and the driver publishes the
-``_prs_stats.json`` manifest. The output directory is exactly the
-multi-file layout the readers already consume
-(`spark.read.format("readstat").load(dir)` unions part files with
-per-file partition fan-out), so dir-write → dir-read roundtrips.
+zone-map accumulator into the sink's ``write_part``, which lays the
+file out with the format's one pack and assembler — the same two a
+single-file export runs, so a one-partition export writes the
+single-file bytes. The driver publishes the ``_prs_stats.json``
+manifest. The output directory is exactly the multi-file layout the
+readers already consume (`spark.read.format("readstat").load(dir)`
+unions part files with per-file partition fan-out), so dir-write →
+dir-read roundtrips.
 
 On a real cluster the directory must be storage every executor can
 reach (NFS/fuse-mounted object store); tasks write to a temp name and
-rename, so retries never leave torn files.
+rename, so retries never leave torn files, and a failed task removes
+its partial temp file.
 """
 
 from __future__ import annotations
@@ -33,8 +37,8 @@ def _write_parts(
 ) -> list[dict]:
     """Run the one per-partition write task over ``src`` (already in
     ``plan``'s column order and on-disk representation; ``plan`` is a
-    spark_sink.PartPlan) and publish the manifest. Empty partitions write no file. Returns
-    [{"path", "n_rows"}, ...] per written part."""
+    ``writers.PartPlan``) and publish the manifest. Empty partitions
+    write no file. Returns [{"path", "n_rows"}, ...] per written part."""
     from polars_readstat_spark.sources.fs import fs_makedirs
     from polars_readstat_spark.writers.spark_sink import (
         TASK_RESULT_SCHEMA,
@@ -88,19 +92,16 @@ def _write_planned(
     df: DataFrame, dir_path: str, fmt: str, bloom_columns=(),
     bloom_max_bytes=None, **plan_opts,
 ) -> list[dict]:
-    """sav/zsav/xpt/sas7bdat: the sink's column plan plus one global
-    pre-pass for string widths, so every part shares one layout."""
-    from polars_readstat_spark.writers import prepass_aggs, str_widths, to_disk
-    from polars_readstat_spark.writers.spark_sink import PartPlan, plan_write
+    """sav/zsav/xpt/sas7bdat: the single-file exports' plan step
+    (``writers.plan_export``: one global pre-pass), so every part
+    shares one layout — the single-file one."""
+    from polars_readstat_spark.writers import plan_export, to_disk
 
-    fmt, fields, names, shorts, kinds = plan_write(df.schema, {"format": fmt})
-    aggs = prepass_aggs(fields, kinds, fmt)
-    stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
-    widths = str_widths(fmt, fields, kinds, lambda n: stats.get(f"__w_{n}"))
+    plan, _, _ = plan_export(df, fmt, **plan_opts)
     return _write_parts(
-        to_disk(df, fmt, fields, kinds),
+        to_disk(df, fmt, plan.fields, plan.kinds),
         dir_path,
-        PartPlan(fmt, fields, names, shorts, kinds, widths, **plan_opts),
+        plan,
         bloom_columns,
         bloom_max_bytes,
     )
@@ -125,8 +126,7 @@ def write_dta_partitioned(
         _finalize_cols,
         _plan_columns,
     )
-    from polars_readstat_spark.writers import column_kinds
-    from polars_readstat_spark.writers.spark_sink import PartPlan
+    from polars_readstat_spark.writers import PartPlan, column_kinds
 
     dta_plan, aggs = _plan_columns(df)
     stats = df.agg(*aggs).collect()[0].asDict()

@@ -13,7 +13,9 @@ our reader's decompressor — property-tested — which also means the
 reader's page-parallel compressed scan applies to our own output).
 Row count and page count are back-patched with two seeks when the
 stream ends, so the writer is single-pass over the data and
-memory-bounded regardless of row count.
+memory-bounded regardless of row count. ``pack`` and ``assemble`` are
+the one sas7bdat layout, run by the single-file export and, in its
+task, by the part-file writer.
 
 Independently verified: files written here are read back by
 ``pandas.read_sas`` (a reader we do not control) bit-for-bit equal to
@@ -41,15 +43,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from polars_readstat_spark.writers import (
-    check_tagged,
-    column_kinds,
-    export_output,
-    packed_stream,
-    prepass_aggs,
-    split_tagged,
+    export_file,
+    plan_export,
     str_cell_matrix,
-    str_widths,
-    to_disk,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
@@ -852,14 +848,6 @@ def _build_header(dataset_name: str, page_length: int) -> bytes:
     return bytes(h)
 
 
-def _pack_chunk_pdf(pdf, tag_slot, ncols, kinds, widths, row_length) -> bytes:
-    """Pack one pandas chunk (data columns + trailing tag-indicator
-    columns per tag_slot) into fixed-width row bytes. Executor-side."""
-    cols = [pdf.iloc[:, i] for i in range(pdf.shape[1])]
-    tags = _slot_tags(cols, tag_slot, ncols)
-    return _pack_rows(cols[:ncols], kinds, widths, row_length, tags)
-
-
 def _encode_packed(packed: bytes, row_length: int, comp: str) -> bytes:
     """RLE/RDC-encode a packed fixed-width chunk into the sink's
     per-row framing (<BI compressed-flag, length> + payload), plus a
@@ -915,13 +903,7 @@ def _pack_rows(cols_data, kinds, widths, row_length, tags_data=None) -> bytes:
         if k == "str":
             mat[:, off : off + w] = str_cell_matrix(col, w)
         else:
-            try:  # pandas Series from the distributed path
-                vals = col.to_numpy(dtype="float64", na_value=np.nan)
-            except AttributeError:
-                vals = np.array(
-                    [np.nan if v is None else v for v in col],
-                    dtype=np.float64,
-                )
+            vals = col.to_numpy(dtype="float64", na_value=np.nan)
             # IEEE NaN is a SAS missing on disk (any non-finite decodes
             # to null in both our reader and pandas)
             bts = vals.astype("<f8").view(np.uint8).reshape(n, 8)
@@ -945,35 +927,18 @@ def _pack_rows(cols_data, kinds, widths, row_length, tags_data=None) -> bytes:
 
 
 class _SasFileSink:
-    """Streaming single-file assembly: header + meta page up front,
+    """Streaming file assembly: header + meta page up front,
     DATA pages as rows arrive, two-seek back-patch on close."""
 
-    def __init__(
-        self, fh, fields, names, kinds, widths, dataset_name,
-        variable_labels, page_length=None, compress: str | None = None,
-    ):
-        if compress not in (None, "", "rle", "rdc"):
-            raise ValueError(
-                f"write_sas7bdat: unsupported compress={compress!r} "
-                "(only 'rle' or 'rdc')"
-            )
+    def __init__(self, fh, plan):
         self.fh = fh
-        self.kinds = kinds
-        self.widths = widths
-        self.row_length = sum(widths)
-        self.compress = compress or None
-        self._encode_row = (
-            _rdc_encode_row if compress == "rdc" else _rle_encode_row
-        )
-        self._encode_rows = (
-            _rdc_encode_rows if compress == "rdc" else _rle_encode_rows
-        )
+        self.row_length = sum(plan.widths)
         literal = (
-            RDC_LITERAL if compress == "rdc"
-            else RLE_LITERAL if self.compress
+            {"rle": RLE_LITERAL, "rdc": RDC_LITERAL}[plan.compress]
+            if plan.compress
             else b""
         )
-        pl = page_length or 0x10000
+        pl = plan.page_length or 0x10000
         # every page must hold ≥1 row (plus one subheader pointer in
         # the compressed layout); metadata must fit the meta page
         pl = max(pl, self.row_length + BIT_OFFSET + 8 + PTR_LEN)
@@ -981,8 +946,8 @@ class _SasFileSink:
             pl = (pl + 0xFFF) & ~0xFFF
             try:
                 meta_page, self._rc_off = _build_meta_page(
-                    fields, names, kinds, widths, variable_labels, pl,
-                    literal,
+                    plan.fields, plan.names, plan.kinds, plan.widths,
+                    plan.variable_labels, pl, literal,
                 )
                 break
             except _MetaOverflow:
@@ -993,7 +958,7 @@ class _SasFileSink:
                 pl *= 2
         self.page_length = pl
         self.rows_per_page = (pl - BIT_OFFSET - 8) // max(self.row_length, 1)
-        fh.write(_build_header(dataset_name, pl))
+        fh.write(_build_header(plan.dataset_name, pl))
         fh.write(meta_page)
         self.pending = bytearray()
         self.n_rows = 0
@@ -1002,51 +967,6 @@ class _SasFileSink:
         # (blob, is_compressed); bodies pack after the pointer array
         self._crows: list[tuple[bytes, bool]] = []
         self._crows_bytes = 0
-
-    def write_batch(self, cols_data, tags_data=None) -> None:
-        n = len(cols_data[0]) if cols_data else 0
-        if n == 0:
-            return
-        packed = _pack_rows(
-            cols_data, self.kinds, self.widths, self.row_length, tags_data
-        )
-        self.n_rows += n
-        if self.compress:
-            rows = np.frombuffer(packed, np.uint8).reshape(n, self.row_length)
-            for i, e in enumerate(self._encode_rows(rows)):
-                if e is None:
-                    raw = rows[i].tobytes()
-                    if _collides_with_signature(raw):
-                        raise ValueError(
-                            "write_sas7bdat: incompressible row collides "
-                            "with a subheader signature prefix; cannot be "
-                            "stored in a compressed file — write without "
-                            "compress"
-                        )
-                    self._append_blob(raw, False)
-                else:
-                    self._append_blob(e, True)
-            return
-        self.pending += packed
-        chunk = self.rows_per_page * self.row_length
-        while len(self.pending) >= chunk:
-            self._emit_page(self.pending[:chunk], self.rows_per_page)
-            del self.pending[:chunk]
-
-    def _add_compressed_row(self, row: np.ndarray) -> None:
-        enc = self._encode_row(row)
-        if enc is None:
-            raw = row.tobytes()
-            if _collides_with_signature(raw):
-                raise ValueError(
-                    "write_sas7bdat: incompressible row collides with a "
-                    "subheader signature prefix; cannot be stored in a "
-                    "compressed file — write without compress"
-                )
-            blob, comp = raw, False
-        else:
-            blob, comp = enc, True
-        self._append_blob(blob, comp)
 
     def write_packed(self, packed: bytes, n: int) -> None:
         """Append pre-packed uncompressed row bytes (n rows)."""
@@ -1299,61 +1219,39 @@ def write_sas7bdat(
     the bytes); not combinable with tagged_missing on the same column
     (the tag lives in the dropped mantissa tail).
     """
-    variable_labels = variable_labels or {}
-    tagged_missing = dict(tagged_missing or {})
-    data_df, _, tag_exprs, tag_slot = split_tagged(df, tagged_missing)
-    fields = data_df.schema.fields
-    names = [f.name for f in fields]
-    kinds = column_kinds(fields, "sas7bdat")
-    numeric = [n for n, k in zip(names, kinds) if k != "str"]
-    check_tagged(tagged_missing, numeric, df.columns)
-    numeric_lengths = dict(numeric_lengths or {})
-    for c in numeric_lengths:
-        if c not in numeric:
-            raise ValueError(
-                f"numeric_lengths: {c!r} is not a numeric data column"
-            )
-        if c in tagged_missing and numeric_lengths[c] != 8:
-            raise ValueError(
-                f"numeric_lengths: {c!r} is tagged-missing — tags live in "
-                "the mantissa tail that truncation drops"
-            )
-    aggs = prepass_aggs(fields, kinds, "sas7bdat")
-    stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
-    widths = str_widths(
-        "sas7bdat", fields, kinds, lambda n: stats.get(f"__w_{n}"),
-        numeric_lengths,
+    plan, rows, tag_exprs = plan_export(
+        df, "sas7bdat", tagged_missing, numeric_lengths,
+        dataset_name=dataset_name,
+        variable_labels=variable_labels or {},
+        page_length=page_length,
+        compress=compress or None,
     )
+    export_file(df, path, plan, rows, tag_exprs)
 
-    # executors do the expensive work (row packing and, for
-    # compressed files, per-row RLE/RDC encoding — rows are
-    # independent, so this parallelizes perfectly); the driver only
-    # assembles pages from pre-encoded bytes in input order. The
-    # reference's sink is single-threaded end to end.
-    rl, comp = sum(widths), compress or None
 
-    def pack_fn(pdf):
-        packed = _pack_chunk_pdf(pdf, tag_slot, len(names), kinds, widths, rl)
-        return _encode_packed(packed, rl, comp) if comp else packed
+def pack(plan, pdf) -> bytes:
+    """One chunk's fixed-width rows (tagged missings from the indicator
+    columns at the chunk's tail), RLE/RDC-encoded with the page
+    footer when ``plan.compress`` (``_encode_packed``): the one
+    sas7bdat pack, run on the executors for a single-file export and
+    inside the task for a part-file. Rows are independent, so the
+    expensive work parallelizes; the assembler only lays out pages.
+    The reference's sink is single-threaded end to end."""
+    ncols, rl = len(plan.kinds), sum(plan.widths)
+    cols = [col for _, col in pdf.items()]
+    tags = _slot_tags(cols, plan.tag_slot, ncols)
+    packed = _pack_rows(cols[:ncols], plan.kinds, plan.widths, rl, tags)
+    return _encode_packed(packed, rl, plan.compress) if plan.compress else packed
 
-    with export_output(path) as fh:
-        sink = _SasFileSink(
-            fh, fields, names, kinds, widths, dataset_name,
-            variable_labels, page_length, compress,
-        )
-        write = sink.write_encoded if comp else sink.write_packed
-        # indicator columns ride at the stream's tail, consumed at pack
-        for payload, n in packed_stream(
-            df, "sas7bdat",
-            lambda f, extra: to_disk(
-                f, "sas7bdat", fields, kinds, extra=tag_exprs + extra
-            ),
-            pack_fn, rows=None,
-            modules=(
-                "polars_readstat_spark.writers.sas7bdat",
-                "polars_readstat_spark.writers.tagged",
-                "polars_readstat_spark.writers",
-            ),
-        ):
-            write(payload, n)
-        sink.close()
+
+def assemble(fh, plan, payloads, n_rows=None) -> int:
+    """The one sas7bdat file layout (``_SasFileSink``): header and meta
+    page, then the ``(payload, n)`` stream onto DATA pages (plain) or
+    META pages of compressed rows, then the row and page counts
+    back-patched (``n_rows`` is unused). Returns the rows written."""
+    sink = _SasFileSink(fh, plan)
+    write = sink.write_encoded if plan.compress else sink.write_packed
+    for payload, n in payloads:
+        write(payload, n)
+    sink.close()
+    return sink.n_rows

@@ -10,6 +10,10 @@ sink pre-pass, pybindings.rs:996-1047):
    Python in the numeric path); the driver drains them in input
    order (writers.packed_stream).
 
+``pack`` and ``assemble`` are the one sav/zsav layout: the part-file
+writer (spark_sink.write_partition_file) runs the same two in its
+task.
+
 Output defaults to an *uncompressed* system file (compression=0):
 every case is case_size×8 bytes, so the file we write is itself
 partitionable by our own reader — the right trade at cluster scale
@@ -40,13 +44,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from polars_readstat_spark.writers import (
-    column_kinds,
-    export_output,
-    packed_stream,
-    prepass_aggs,
+    export_file,
+    plan_export,
     str_cell_matrix,
-    str_widths,
-    to_disk,
 )
 
 SYSMIS_BITS = 0xFFEFFFFFFFFFFFFF
@@ -102,98 +102,94 @@ def write_sav(
     literals. 5-8× smaller for integer-coded data; re-reads are
     serial (a bias stream has no affine byte↔element map), so the
     uncompressed default remains the cluster-scale choice."""
-    variable_labels = variable_labels or {}
-    value_labels = value_labels or {}
-    measures = measures or {}
     if zsav is None:
         zsav = path.lower().endswith(".zsav")
-    if zsav:
-        compress = False  # zsav's zlib layer subsumes it; stream
-        # stays all-literal so our reader's parallel plan applies
+    # zsav's zlib layer subsumes bytecode compression; its stream stays
+    # all-literal so our reader's parallel plan applies
+    plan, rows, _ = plan_export(
+        df, "zsav" if zsav else "sav",
+        data_label=data_label,
+        variable_labels=variable_labels or {},
+        value_labels=value_labels or {},
+        measures=measures or {},
+        bytecode=bool(compress) and not zsav,
+    )
+    export_file(df, path, plan, rows)
 
-    fmt = "zsav" if zsav else "sav"
-    fields = df.schema.fields
-    names = [f.name for f in fields]
-    shorts = _short_names(names)
-    kinds = column_kinds(fields, fmt)
-    stats = df.agg(*prepass_aggs(fields, kinds, fmt)).collect()[0].asDict()
-    nrows = stats["__n"]
-    widths = str_widths(fmt, fields, kinds, lambda n: stats.get(f"__w_{n}"))
 
-    el_per = [max((w + 7) // 8, 1) if w else 1 for w in widths]
-    case_size = sum(el_per)
+def _el_per(widths) -> list[int]:
+    """8-byte case elements per column (a numeric takes one)."""
+    return [max((w + 7) // 8, 1) if w else 1 for w in widths]
 
-    out = _sav_dictionary(
-        fields, names, shorts, kinds, widths, el_per, case_size, nrows,
-        zsav, data_label, variable_labels, value_labels, measures,
-        compress=compress,
+
+def pack(plan, pdf) -> bytes:
+    """One chunk's cases in the fixed-width 8-byte-element layout: the
+    one sav/zsav pack, run on the executors for a single-file export
+    and inside the task for a part-file."""
+    el_per = _el_per(plan.widths)
+    return _pack_columns(
+        [col for _, col in pdf.items()][: len(plan.kinds)],
+        plan.kinds, plan.widths, el_per, sum(el_per),
     )
 
-    # ---- data: stream partitions, pack vectorized --------------------
-    el_numeric = np.concatenate(
-        [
-            np.zeros(ne, dtype=bool) if k == "str" else np.ones(1, dtype=bool)
-            for k, ne in zip(kinds, el_per)
-        ]
-    ) if case_size else np.zeros(0, dtype=bool)
 
-    # case packing runs on the executors; the driver concatenates
-    # (and, for zsav, zlib-frames) in input order
-    def pack_fn(pdf):
-        return _pack_columns(
-            [pdf.iloc[:, i] for i in range(pdf.shape[1])],
-            kinds, widths, el_per, case_size,
-        )
-
-    with export_output(path) as fh:
-        fh.write(bytes(out))
+def assemble(fh, plan, payloads, n_rows) -> int:
+    """The one sav/zsav file layout: the dictionary (whose header
+    carries ``n_rows``), then the ``(payload, n)`` case stream plain,
+    bytecode-compressed (``plan.bytecode``) or zlib-framed (zsav).
+    Returns the rows written."""
+    zsav = plan.fmt == "zsav"
+    el_per = _el_per(plan.widths)
+    head = _sav_dictionary(plan, el_per, n_rows)
+    fh.write(bytes(head))
+    if zsav:
+        sink = _ZlibSink(fh, len(head))
+    elif plan.bytecode:
+        el_numeric = np.concatenate(
+            [
+                np.zeros(ne, dtype=bool) if k == "str" else np.ones(1, dtype=bool)
+                for k, ne in zip(plan.kinds, el_per)
+            ]
+        ) if el_per else np.zeros(0, dtype=bool)
+        sink = _BytecodeSink(fh, el_numeric)
+    else:
+        sink = fh
+    got = 0
+    try:
+        for payload, n in payloads:
+            sink.write(payload)
+            got += n
+        if sink is not fh:
+            sink.close()
+    except BaseException:
+        # a failing Spark stage mid-stream must not leak the zsav
+        # compression pool (or its in-flight blocks) for the
+        # lifetime of the process — the file is dead either way
         if zsav:
-            sink = _ZlibSink(fh, len(out))
-        elif compress:
-            sink = _BytecodeSink(fh, el_numeric)
-        else:
-            sink = fh
-        try:
-            for payload, _n in packed_stream(
-                df, fmt,
-                lambda f, extra: to_disk(f, fmt, fields, kinds, extra=extra),
-                pack_fn, rows=nrows,
-                modules=(
-                    "polars_readstat_spark.writers.sav",
-                    "polars_readstat_spark.writers",
-                ),
-            ):
-                sink.write(payload)
-            if zsav or compress:
-                sink.close()
-        except BaseException:
-            # a failing Spark stage mid-stream must not leak the zsav
-            # compression pool (or its in-flight blocks) for the
-            # lifetime of the process — the file is dead either way
-            if zsav:
-                sink.abort()
-            raise
+            sink.abort()
+        raise
+    return got
 
 
-def _sav_dictionary(
-    fields, names, shorts, kinds, widths, el_per, case_size, nrows,
-    zsav, data_label, variable_labels, value_labels, measures,
-    compress: bool = False,
-) -> bytearray:
+def _sav_dictionary(plan, el_per, nrows) -> bytearray:
     """System-file dictionary: header, type-2 records, 3/4 value
     labels, type-7 subtypes, 999 terminator."""
+    fields, names, shorts = plan.fields, plan.names, plan.shorts
+    kinds, widths = plan.kinds, plan.widths
+    variable_labels, value_labels = plan.variable_labels, plan.value_labels
+    zsav, case_size = plan.fmt == "zsav", sum(el_per)
     out = bytearray()
     prod = ("@(#) SPSS DATA FILE - polars_readstat_spark").ljust(60)[:60]
     now = datetime.datetime.now()
     out += (b"$FL3" if zsav else b"$FL2") + prod.encode()
     out += struct.pack(
         "<5i", 2, case_size,
-        2 if zsav else (1 if compress else 0), 0, int(nrows),
+        2 if zsav else (1 if plan.bytecode else 0), 0, int(nrows),
     )
     out += struct.pack("<d", 100.0)
     out += now.strftime("%d %b %y").ljust(9)[:9].encode()
     out += now.strftime("%H:%M:%S").ljust(8)[:8].encode()
-    out += data_label.encode("utf-8")[:64].ljust(64)
+    out += plan.data_label.encode("utf-8")[:64].ljust(64)
     out += b"\x00\x00\x00"
     assert len(out) == 176
 
@@ -250,7 +246,7 @@ def _sav_dictionary(
     # subtype 11: display parameters (measure, width, alignment)
     disp = []
     for i, f in enumerate(fields):
-        m = measures.get(f.name) or f.metadata.get("measure") or ""
+        m = plan.measures.get(f.name) or f.metadata.get("measure") or ""
         mcode = {"nominal": 1, "ordinal": 2, "scale": 3}.get(m, 1 if kinds[i] == "str" else 3)
         disp += [mcode, max(widths[i], 8), 0 if kinds[i] == "str" else 1]
     out += struct.pack("<3i", 7, 11, 4) + struct.pack("<i", len(disp))
@@ -272,9 +268,8 @@ _SYSMIS_LE = np.frombuffer(struct.pack("<Q", SYSMIS_BITS), dtype=np.uint8)
 
 
 def _pack_columns(cols_data, kinds, widths, el_per, case_size) -> bytes:
-    """Column-wise vectorized case packing. cols_data: one sequence
-    per column (pandas Series from an executor chunk, or any
-    sequence of values)."""
+    """Column-wise vectorized case packing. cols_data: one pandas
+    Series per column of a chunk."""
     n = len(cols_data[0]) if cols_data else 0
     mat = np.zeros((n, case_size * 8), dtype=np.uint8)
     colpos = 0
@@ -283,12 +278,7 @@ def _pack_columns(cols_data, kinds, widths, el_per, case_size) -> bytes:
         if k == "str":
             mat[:, off : off + ne * 8] = str_cell_matrix(col, ne * 8)
         else:
-            try:  # pandas Series: nullable-aware bulk conversion
-                vals = col.to_numpy(dtype="float64", na_value=np.nan)
-            except AttributeError:
-                vals = np.array(
-                    [np.nan if v is None else v for v in col], dtype=np.float64
-                )
+            vals = col.to_numpy(dtype="float64", na_value=np.nan)
             bts = vals.astype("<f8").view(np.uint8).reshape(n, 8)
             miss = np.isnan(vals)
             if miss.any():

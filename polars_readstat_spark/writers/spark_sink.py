@@ -15,14 +15,16 @@ executors and the driver can reach.
 
 This module also owns the one part-file writer every distributed
 export shares: ``write_partition_file`` lays out a file from a
-resolved ``PartPlan``, and ``write_part`` adds the staged write's
-manifest payload (zone maps, stripes, blooms keyed by reader names).
-The batch and streaming sinks and each hive chunk resolve their plan
-per partition (``write_sink_part``: no pre-pass); the partitioned
-exporters (writers/partitioned.py) resolve one from a global pre-pass
-and run the same ``write_part`` in a generic ``mapInArrow`` task.
+resolved ``writers.PartPlan`` with the format's one pack and
+assembler (the two a single-file export runs), and ``write_part`` adds
+the staged write's manifest payload (zone maps, stripes, blooms keyed
+by reader names). The batch and streaming sinks and each hive chunk
+resolve their plan per partition (``write_sink_part``: no pre-pass);
+the partitioned exporters (writers/partitioned.py) resolve one from
+the single-file exports' global pre-pass and run the same
+``write_part`` in a generic ``mapInArrow`` task.
 
-Supported formats: ``sas7bdat`` (plus ``compress=rle``), ``sav``,
+Supported formats: ``sas7bdat`` (plus ``compress=rle|rdc``), ``sav``,
 ``zsav`` (zlib block container), ``xpt``, and ``dta``. The first four
 store all numerics as float64 on disk, so a partition-local
 string-width pass yields part-files that union under one Spark
@@ -43,18 +45,23 @@ from __future__ import annotations
 
 import os
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from itertools import chain
 
-from polars_readstat_spark.sources.fs import (
-    fs_open_output as _fs_open_output,
-)
 from pyspark.sql.datasource import (
     DataSourceArrowWriter,
     DataSourceStreamArrowWriter,
     WriterCommitMessage,
 )
 
-from polars_readstat_spark.writers import _EPOCH, column_kinds, str_widths
+from polars_readstat_spark.writers import (
+    _EPOCH,
+    PartPlan,
+    export_output,
+    layout,
+    plan_write,
+    str_widths,
+)
 
 
 @dataclass
@@ -81,42 +88,6 @@ class _PartMessage(WriterCommitMessage):
     # predicate file skipping for unsorted key columns; see
     # sources/bloom.py for the canonicalization invariant
     blooms: dict | None = None
-
-
-# por is single-file only (a legacy interchange format)
-_SINK_FORMATS = ("sas7bdat", "sav", "zsav", "xpt", "dta")
-
-
-def plan_write(schema, options):
-    """Driver-side column plan from the declared schema alone.
-
-    Returns (fmt, fields, names, shorts, kinds): `shorts` is None for
-    formats that keep full names (sas7bdat, dta). dta's kinds drive
-    only the zone maps — its column types are planned schema-only in
-    _dta_sink_cols (see module docstring)."""
-    fmt = (options.get("format") or options.get("ext") or "").lstrip(".").lower()
-    if not fmt:
-        path = options.get("path", "")
-        tail = os.path.basename(path)
-        fmt = tail.rsplit(".", 1)[-1].lower() if "." in tail else ""
-    if fmt not in _SINK_FORMATS:
-        raise ValueError(
-            f"df.write.format('readstat'): set .option('format', ...) to "
-            f"one of {sorted(_SINK_FORMATS)} (got {fmt!r})"
-        )
-    fields = schema.fields
-    names = [f.name for f in fields]
-    kinds = column_kinds(fields, fmt)
-    shorts = None
-    if fmt in ("sav", "zsav"):
-        from polars_readstat_spark.writers.sav import _short_names
-
-        shorts = _short_names(names)
-    elif fmt == "xpt":
-        from polars_readstat_spark.writers.xpt import _short_names
-
-        shorts = _short_names(names)
-    return fmt, fields, names, shorts, kinds
 
 
 def _utf8_width(arr) -> int:
@@ -657,44 +628,16 @@ def publish_stats_manifest(dir_path, parts, merge=True) -> None:
         pass
 
 
-@dataclass
-class PartPlan:
-    """A resolved column plan: everything ``write_partition_file``
-    needs to lay out a part-file before it sees a row. ``widths`` are
-    on-disk byte widths per column (sav: 0 for numerics); dta carries
-    its (name, kind, width, fmt) tuples in ``dta_cols`` instead. The
-    sink resolves one per partition (``write_sink_part``); the
-    partitioned exporters resolve one per export from their global
-    pre-pass."""
-
-    fmt: str
-    fields: list
-    names: list
-    shorts: list | None
-    kinds: list
-    widths: list
-    dta_cols: list | None = None
-    dataset_name: str = "DATA"
-    data_label: str = ""
-    variable_labels: dict = field(default_factory=dict)
-    value_labels: dict = field(default_factory=dict)
-    measures: dict = field(default_factory=dict)
-    version: int = 5
-    page_length: int | None = None
-    compress: str | None = None
-
-
 def write_partition_file(staged_path, plan: PartPlan, frames) -> int:
-    """The one part-file assembler. Lays out ``plan``'s file at
-    ``staged_path`` from pandas ``frames`` — consumed once, in order,
-    empty frames skipped — and returns its row count. sas7bdat and
-    xpt stream frame by frame; sav and dta headers carry the row
-    count, so those hold only the packed bytes until the end. No rows
-    → no file, 0."""
-    from itertools import chain
-
+    """Lay out ``plan``'s part-file at ``staged_path`` from pandas
+    ``frames`` (consumed once, in order, empty frames skipped) with the
+    format's one pack and assembler — the same two a single-file
+    export runs (``writers.layout``) — and return its row count. xpt
+    and sas7bdat stream frame by frame; the sav and dta headers carry
+    the row count, so those pack the whole partition first. The file
+    opens through ``export_output``: a failed write leaves no partial
+    file. No rows → no file, 0."""
     frames = (pdf for pdf in frames if len(pdf))
-    names, kinds, widths = plan.names, plan.kinds, plan.widths
     if plan.fmt == "dta":
         from polars_readstat_spark.writers.dta import (
             _assemble_dta,
@@ -707,76 +650,24 @@ def write_partition_file(staged_path, plan: PartPlan, frames) -> int:
                 plan.dta_cols, data, strls, n_rows, plan.data_label,
                 plan.variable_labels, plan.value_labels,
             )
-            with _fs_open_output(staged_path) as fh:
+            with export_output(staged_path) as fh:
                 fh.write(out)
         return n_rows
+    mod = layout(plan.fmt)
+    packed = ((mod.pack(plan, pdf), len(pdf)) for pdf in frames)
+    n_rows = None
     if plan.fmt in ("sav", "zsav"):
-        from polars_readstat_spark.writers.sav import (
-            _pack_columns,
-            _sav_dictionary,
-            _ZlibSink,
-        )
-
-        zsav = plan.fmt == "zsav"
-        el_per = [max((w + 7) // 8, 1) if w else 1 for w in widths]
-        case_size = sum(el_per)
-        data = bytearray()
-        n_rows = 0
-        for pdf in frames:
-            data += _pack_columns(
-                [pdf[n] for n in names], kinds, widths, el_per, case_size
-            )
-            n_rows += len(pdf)
-        if n_rows:
-            head = _sav_dictionary(
-                plan.fields, names, plan.shorts, kinds, widths, el_per,
-                case_size, n_rows, zsav, plan.data_label,
-                plan.variable_labels, plan.value_labels, plan.measures,
-            )
-            with _fs_open_output(staged_path) as fh:
-                fh.write(bytes(head))
-                if zsav:
-                    zs = _ZlibSink(fh, len(head))
-                    zs.write(data)
-                    zs.close()
-                else:
-                    fh.write(data)
-        return n_rows
-    first = next(frames, None)
-    if first is None:
-        return 0
-    frames = chain([first], frames)
-    with _fs_open_output(staged_path) as fh:
-        if plan.fmt == "sas7bdat":
-            from polars_readstat_spark.writers.sas7bdat import _SasFileSink
-
-            sink = _SasFileSink(
-                fh, plan.fields, names, kinds, widths, plan.dataset_name,
-                plan.variable_labels, plan.page_length, plan.compress,
-            )
-            for pdf in frames:
-                sink.write_batch([pdf[n] for n in names])
-            sink.close()
-            return sink.n_rows
-        from polars_readstat_spark.writers.xpt import _pack_xpt, _xpt_header
-
-        fh.write(
-            bytes(
-                _xpt_header(
-                    plan.fields, plan.shorts, kinds, widths,
-                    plan.dataset_name, plan.variable_labels, plan.version,
-                )
-            )
-        )
-        record_width = sum(widths)
-        n_rows = 0
-        for pdf in frames:
-            fh.write(
-                _pack_xpt([pdf[n] for n in names], kinds, widths, record_width)
-            )
-            n_rows += len(pdf)
-        fh.write(b" " * ((-n_rows * record_width) % 80))
-    return n_rows
+        packed = list(packed)
+        n_rows = sum(n for _, n in packed)
+        if not n_rows:
+            return 0
+    else:
+        first = next(packed, None)
+        if first is None:
+            return 0
+        packed = chain([first], packed)
+    with export_output(staged_path) as fh:
+        return mod.assemble(fh, plan, packed, n_rows)
 
 
 def write_part(staged_path, plan: PartPlan, frames, acc):

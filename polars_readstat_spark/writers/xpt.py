@@ -9,7 +9,9 @@ Same two-phase Spark shape as the other writers: a pre-pass
 aggregation for string widths + row count, then chunks packed
 vectorized on the executors and drained in input order
 (writers.packed_stream). IEEE→IBM is exact (56-bit hex mantissa ⊇
-53-bit IEEE) and fully numpy-vectorized.
+53-bit IEEE) and fully numpy-vectorized. ``pack`` and ``assemble`` are
+the one xpt layout: the part-file writer runs the same two in its
+task.
 
 Reference parity: src/sas/xpt_writer.rs (v5 limits: 8-char upper-case
 names, 40-char labels, numerics 8 bytes, '.' missing).
@@ -25,15 +27,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from polars_readstat_spark.writers import (
-    check_tagged,
-    column_kinds,
-    export_output,
-    packed_stream,
-    prepass_aggs,
-    split_tagged,
+    export_file,
+    plan_export,
     str_cell_matrix,
-    str_widths,
-    to_disk,
 )
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
@@ -135,60 +131,48 @@ def write_xpt(
     reader's LABELV8 parser consumes."""
     if version not in (5, 8):
         raise ValueError("write_xpt: version must be 5 or 8")
-    variable_labels = variable_labels or {}
-    data_df, _, tag_exprs, tag_slot = split_tagged(df, tagged_missing)
-    fields = data_df.schema.fields
-    names = [f.name for f in fields]
-    shorts = _short_names(names)
-    kinds = column_kinds(fields, "xpt")
-    check_tagged(
-        tagged_missing,
-        [n for n, k in zip(names, kinds) if k != "str"],
-        df.columns,
+    plan, rows, tag_exprs = plan_export(
+        df, "xpt", tagged_missing,
+        dataset_name=dataset_name,
+        variable_labels=variable_labels or {},
+        version=version,
     )
-    stats = df.agg(*prepass_aggs(fields, kinds, "xpt")).collect()[0].asDict()
-    widths = str_widths("xpt", fields, kinds, lambda n: stats.get(f"__w_{n}"))
-    record_width = sum(widths)
-    ncols = len(names)
-
-    out = _xpt_header(
-        fields, shorts, kinds, widths, dataset_name, variable_labels, version
-    )
-
-    # packing (incl. IEEE→IBM) runs on the executors; the driver only
-    # concatenates fixed-width records in input order
-    def pack_fn(pdf):
-        cols = [pdf.iloc[:, i] for i in range(pdf.shape[1])]
-        tags = _slot_tags(cols, tag_slot, ncols)
-        return _pack_xpt(cols[:ncols], kinds, widths, record_width, tags)
-
-    with export_output(path) as fh:
-        fh.write(bytes(out))
-        total = 0
-        for payload, _n in packed_stream(
-            df, "xpt",
-            lambda f, extra: to_disk(
-                f, "xpt", fields, kinds, extra=tag_exprs + extra
-            ),
-            pack_fn, rows=stats["__n"],
-            modules=(
-                "polars_readstat_spark.writers.xpt",
-                "polars_readstat_spark.writers.tagged",
-                "polars_readstat_spark.writers",
-            ),
-        ):
-            fh.write(payload)
-            total += len(payload)
-        fh.write(b" " * ((-total) % 80))
+    export_file(df, path, plan, rows, tag_exprs)
 
 
-def _xpt_header(
-    fields, shorts, kinds, widths, dataset_name, variable_labels, version
-) -> bytearray:
+def pack(plan, pdf) -> bytes:
+    """One chunk's fixed-width records (IEEE→IBM included), tagged
+    missings from the indicator columns at the chunk's tail: the one
+    xpt pack, run on the executors for a single-file export and inside
+    the task for a part-file."""
+    ncols = len(plan.kinds)
+    cols = [col for _, col in pdf.items()]
+    tags = _slot_tags(cols, plan.tag_slot, ncols)
+    return _pack_xpt(cols[:ncols], plan.kinds, plan.widths, sum(plan.widths), tags)
+
+
+def assemble(fh, plan, payloads, n_rows=None) -> int:
+    """The one xpt file layout: header records, the ``(payload, n)``
+    record stream, then the blank pad to an 80-byte boundary. The
+    header carries no row count (``n_rows`` is unused). Returns the
+    rows written."""
+    fh.write(bytes(_xpt_header(plan)))
+    total = got = 0
+    for payload, n in payloads:
+        fh.write(payload)
+        total += len(payload)
+        got += n
+    fh.write(b" " * ((-total) % 80))
+    return got
+
+
+def _xpt_header(plan) -> bytearray:
+    fields, shorts, kinds = plan.fields, plan.shorts, plan.kinds
+    widths, variable_labels = plan.widths, plan.variable_labels
     now = datetime.datetime.now()
     ts = now.strftime("%d%b%y:%H:%M:%S").upper()
 
-    v8 = version == 8
+    v8 = plan.version == 8
     tag_lib = "LIBV8" if v8 else "LIBRARY"
     tag_mem = "MEMBV8" if v8 else "MEMBER"
     tag_dsc = "DSCPTV8" if v8 else "DSCRPTR"
@@ -203,7 +187,7 @@ def _xpt_header(
     out += f"{ts:<16}".encode("ascii").ljust(80)
     out += _hdr(tag_mem, "0" * 16 + "0160" + "0" * 7 + "140" + "  ")
     out += _hdr(tag_dsc)
-    dsname = (dataset_name or "DATA").upper()[: (32 if v8 else 8)]
+    dsname = (plan.dataset_name or "DATA").upper()[: (32 if v8 else 8)]
     out += (
         f"{'SAS':<8}{dsname:<8.8}{'SASDATA':<8}{sasver:<8}{'Linux':<8}"
         + " " * 24 + f"{ts:<16}"
@@ -276,12 +260,7 @@ def _pack_xpt(cols_data, kinds, widths, record_width, tags_data=None) -> bytes:
                 col, w, utf8_boundary=True
             )
         else:
-            try:  # pandas Series from the distributed path
-                vals = col.to_numpy(dtype="float64", na_value=np.nan)
-            except AttributeError:
-                vals = np.array(
-                    [np.nan if v is None else v for v in col], dtype=np.float64
-                )
+            vals = col.to_numpy(dtype="float64", na_value=np.nan)
             mask = np.isnan(vals)
             mat[:, off : off + 8] = ieee_to_ibm(vals, mask)
             offs = tags_data[ci] if tags_data else None

@@ -186,3 +186,32 @@ def test_labels_reach_every_part(spark, tmp_path, ext):
             assert v["sex"].varlabel == "Respondent sex"
             assert v["name"].varlabel == "Full name"
             assert m.value_labels[v["sex"].lblname] == {1: "Male", 2: "Female"}
+
+
+def test_bad_compress_rejected_before_any_job(spark, tmp_path):
+    """A sas7bdat ``compress`` other than rle/rdc is refused by the
+    shared plan step, before the pre-pass or any write job — on the
+    partitioned, sink and single-file paths alike."""
+    import polars_readstat_spark as prs
+    from pyspark.sql import functions as F
+
+    df = spark.range(10).select(
+        F.col("id").cast("double").alias("x"), F.lit("a").alias("s")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("prs-bad-compress", "no job may start")
+    try:
+        with pytest.raises(ValueError, match="compress='zip'"):
+            prs.write_readstat_partitioned(
+                df, str(tmp_path / "p"), ext="sas7bdat", compress="zip"
+            )
+        with pytest.raises(ValueError, match="compress='zip'"):
+            prs.write_readstat(df, str(tmp_path / "s.sas7bdat"), compress="zip")
+        # the sink's planning worker raises; it reaches the driver wrapped
+        with pytest.raises(Exception, match="compress='zip'"):
+            df.write.format("readstat").option("format", "sas7bdat").option(
+                "compress", "zip"
+            ).mode("overwrite").save(str(tmp_path / "k"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("prs-bad-compress") == []

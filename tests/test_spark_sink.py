@@ -277,3 +277,39 @@ def test_stream_writer_publishes_manifest(spark, tmp_path):
     assert n == 4000 / 512 * 1 or n == len(
         [i for i in range(4000) if i % 512 == 41]
     )
+
+
+@pytest.mark.parametrize("fmt", ["sav", "xpt", "sas7bdat"])
+def test_failed_part_write_leaves_no_file(tmp_path, fmt):
+    """A part-file whose frames fail after the first one leaves no
+    partial file at its staged path: a failed sink task returns no
+    commit message, so ``abort`` could never remove it."""
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    from polars_readstat_spark.writers import PartPlan, plan_write, str_widths
+    from polars_readstat_spark.writers.spark_sink import write_partition_file
+
+    schema = StructType(
+        [StructField("x", DoubleType()), StructField("s", StringType())]
+    )
+    _, fields, names, shorts, kinds = plan_write(schema, {"format": fmt})
+    plan = PartPlan(
+        fmt, fields, names, shorts, kinds,
+        str_widths(fmt, fields, kinds, lambda n: 2),
+    )
+    chunk = pd.DataFrame({"x": [1.0, None], "s": ["a", "bb"]})
+
+    def frames(fail):
+        yield chunk
+        if fail:
+            raise RuntimeError("upstream task failed")
+        yield chunk
+
+    ok = tmp_path / f"ok.{fmt}"
+    assert write_partition_file(str(ok), plan, frames(False)) == 4
+    assert ok.stat().st_size > 0
+    bad = tmp_path / f"bad.{fmt}"
+    with pytest.raises(RuntimeError, match="upstream task failed"):
+        write_partition_file(str(bad), plan, frames(True))
+    assert not bad.exists()

@@ -1,16 +1,21 @@
-"""Warm best-of-N timing for the single-file exports (guide §1).
+"""Warm best-of-N timing for the exports (guide §1).
 
 Usage: python tools/time_exports.py [-nN] [sf_dir] fmt [fmt ...]
 
-fmt ∈ dta, sav, zsav, xpt, por, sas7bdat, rle, rdc. Each export writes
-the sf lineitem table to a temp file, one untimed warm pass then N
-timed passes, printing ``fmt: best med [runs...]`` — the same unit
-bench.py's export_* entries time, without the sweep around it.
+fmt ∈ dta, sav, zsav, xpt, por, sas7bdat, rle, rdc, or ``part:<fmt>``
+for any of those but por. A plain fmt writes the sf lineitem table to
+one file (the unit bench.py's export_* entries time, without the
+sweep around it); ``part:<fmt>`` writes it with
+``write_readstat_partitioned`` into a fresh temp directory, one
+part-file per input partition. Each entry runs one untimed warm pass
+then N timed passes, printing ``fmt: best med [runs...]``.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -31,6 +36,11 @@ def main() -> None:
         sf_dir = args[0]
         args = args[1:]
 
+    # the part-file tasks import the package on the executors: their
+    # Python workers inherit PYTHONPATH from the JVM this process starts
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
     from polars_readstat_spark.session import get_spark
     from polars_readstat_spark.tables import load_table
 
@@ -39,6 +49,15 @@ def main() -> None:
     out = tempfile.mkdtemp(prefix="time_exports_")
 
     def writer_for(fmt: str):
+        if fmt.startswith("part:"):
+            from polars_readstat_spark import write_readstat_partitioned
+
+            ext = fmt[len("part:"):]
+            kw = {"compress": ext} if ext in ("rle", "rdc") else {}
+            ext = "sas7bdat" if kw else ext
+            return lambda: write_readstat_partitioned(
+                li, tempfile.mkdtemp(prefix="part_", dir=out), ext=ext, **kw
+            )
         if fmt == "dta":
             from polars_readstat_spark.writers.dta import write_dta
 
@@ -86,6 +105,9 @@ def main() -> None:
             f"runs={[round(r, 3) for r in runs]}",
             flush=True,
         )
+        for d in glob.glob(os.path.join(out, "part_*")):
+            shutil.rmtree(d)
+    shutil.rmtree(out)
     spark.stop()
 
 
