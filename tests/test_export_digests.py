@@ -1,0 +1,113 @@
+"""Byte pins for the dta and por exports: the SHA-256 of each file
+(creation timestamps masked) written by ``write_readstat`` from a
+3-partition input, so every layout change must reproduce the exact
+bytes. The strL case spreads its GSO keys over all three partitions,
+so a key numbered from the wrong row offset changes the digest."""
+
+from __future__ import annotations
+
+import hashlib
+
+import pytest
+
+from pyspark.sql import functions as F
+
+from tests.test_transport_equivalence import _masked
+
+
+def _fixed(ids, *extra):
+    idc = F.col("id")
+    return ids.select(
+        (idc % 200 - 100).cast("tinyint").alias("b"),
+        (idc * 37 % 70000 - 35000).cast("int").alias("i"),
+        (idc * 1_000_003).alias("big"),
+        F.when(idc % 7 == 0, None).otherwise(idc * 1.25).alias("x"),
+        (idc * 1.5 - 40).cast("float").alias("f"),
+        (idc % 2 == 0).alias("flag"),
+        # day 0 is 0001-01-01 and day 3652058 is 9999-12-31
+        F.when(idc % 13 == 0, None)
+        .otherwise(
+            F.date_add(F.expr("DATE'0001-01-01'"), (idc * 1223 % 3652059).cast("int"))
+        )
+        .alias("d"),
+        F.when(idc % 17 == 0, None)
+        .otherwise(F.timestamp_seconds(idc * 3671 + 1_500_000_000))
+        .alias("ts"),
+        F.when(idc % 11 == 0, None)
+        .otherwise(F.concat(F.lit("s"), idc, F.repeat(F.lit("é"), (idc % 5).cast("int"))))
+        .alias("s"),
+        *extra,
+    )
+
+
+def _tags(name, mod):
+    idc = F.col("id")
+    return (
+        F.when(idc % mod == 1, F.concat(F.lit("."), F.char((F.lit(97) + idc % 26).cast("int"))))
+        .when(idc % mod == 2, F.lit("."))
+        .otherwise(F.lit(""))
+        .alias(name)
+    )
+
+
+def _strl(ids):
+    idc = F.col("id")
+
+    def wide(c):
+        # over 2045 bytes on most rows (strL); empty and null cells
+        # carry key 0 and no GSO record
+        return (
+            F.when(idc % 9 == 0, None)
+            .when(idc % 4 == 0, F.lit(""))
+            .otherwise(F.concat(F.repeat(F.lit(c), (2040 + idc % 13).cast("int")), idc))
+        )
+
+    return ids.select(
+        idc.cast("double").alias("x"),
+        wide("q").alias("long1"),
+        F.concat(F.lit("k"), idc).alias("short"),
+        wide("w").alias("long2"),
+    )
+
+
+# case -> (extension, frame builder, write_readstat keyword arguments)
+CASES = {
+    "dta_fixed": (
+        "dta",
+        _fixed,
+        {
+            "data_label": "pinned",
+            "variable_labels": {"x": "an x", "s": "a string"},
+            "value_labels": {"b": {1: "one", -1: "minus one"}},
+        },
+    ),
+    "dta_tagged": (
+        "dta",
+        lambda ids: _fixed(ids, _tags("tx", 5), _tags("ti", 3), _tags("tf", 4)),
+        {"tagged_missing": {"x": "tx", "i": "ti", "f": "tf"}},
+    ),
+    "dta_strl": ("dta", _strl, {}),
+    "por": (
+        "por",
+        lambda ids: _fixed(ids).drop("big"),
+        {"data_label": "pinned", "variable_labels": {"x": "an x"}},
+    ),
+}
+
+DIGESTS = {
+    "dta_fixed": "fa829ef53b0a6e26bc3380106d1492dc996736fd6cd2757dcf9b1c8cf0b3f9b3",
+    "dta_tagged": "8f0452db0fba8f4b2389513c84a1fc34dfcbcfbb27ee9c0d46085f0ab997f65f",
+    "dta_strl": "fb927d3854e6b7864d1c192f0071b2be43e0a04aaa2aeb7996a0a227be03bd0c",
+    "por": "3fc2e814abae7e6b8c0ce7b127096fd49c9d3d28ce098fbf6419194fdaf2356b",
+}
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_export_bytes_are_pinned(spark, tmp_path, case):
+    import polars_readstat_spark as prs
+
+    ext, build, kw = CASES[case]
+    df = build(spark.range(600, numPartitions=3))
+    path = str(tmp_path / f"{case}.{ext}")
+    prs.write_readstat(df, path, **kw)
+    assert hashlib.sha256(_masked(path)).hexdigest() == DIGESTS[case]
