@@ -49,40 +49,23 @@ def query(name: str, oracle: str | None = None):
 # its code. Queries past position 50 still run in the local gate
 # (tools/check_correctness.py covers the whole registry).
 _PRIORITY: tuple[str, ...] = (
-    # part 1 — changed-path-first: the part-file writers (sink,
-    # partitioned, hive) now lay out sav/zsav/xpt/sas7bdat with the
-    # single-file exports' pack and assembler, so the part-file
-    # queries go first, then the write-then-read roundtrips; then the
-    # decode-tail queries (the shared sources/columns.py).
-    "scan_sink_dir_roundtrip",
-    "sink_remote_roundtrip",
-    "scan_hive_layout_prune",
-    "scan_zonemap_stripe_prune",
-    "scan_sav_roundtrip",
-    "scan_sav_compressed_roundtrip",
-    "scan_zsav_roundtrip",
-    "scan_por_roundtrip",
-    "scan_xpt_roundtrip",
-    "scan_sas7bdat_roundtrip",
+    # part 1 — changed-path-first: dta and por now export through the
+    # one plan_export → pack → assemble layout (single file,
+    # partitioned and the sink's part-files), so their write-then-read
+    # roundtrips go first, then the part-file queries whose dta branch
+    # moved into dta's assembler.
     "scan_dta_roundtrip",
     "scan_dta_tagged_missing",
-    "informative_null_separate",
-    "informative_null_merged",
-    "informative_null_struct",
-    "scan_dta_informative_nulls",
-    "scan_sas7bdat_informative_nulls",
-    "scan_xpt_informative_nulls",
-    "scan_dta_value_labels",
-    "value_label_broadcast_decode",
-    "scan_sas7bdat_types",
-    "scan_sas7bdat_rle",
-    "scan_sas7bdat_rdc",
-    "scan_sas7bdat_bigendian",
-    "scan_sas7bdat_mixpage",
+    "scan_por_roundtrip",
+    "scan_sink_dir_roundtrip",
+    "scan_hive_layout_prune",
     # part 2: the staleness frontier, oldest newest-green first, as
     # ordered by tools/rotation_plan.py from the CORRECTNESS_r*.json
     # union.
     "multimodal_decode_embed",  # newest green r11
+    "informative_null_separate",  # newest green r11
+    "informative_null_merged",  # newest green r11
+    "informative_null_struct",  # newest green r11
     "q1_pricing_summary",  # newest green r11
     "table_profile_lineitem",  # newest green r11
     "window_rank_family",  # newest green r11
@@ -90,6 +73,7 @@ _PRIORITY: tuple[str, ...] = (
     "bm25_topk_docs",  # newest green r11
     "repetition_chunk_dedup",  # newest green r11
     "scan_dta_metadata_surface",  # newest green r11
+    "scan_xpt_informative_nulls",  # newest green r11
     "sas_csv_import_roundtrip",  # newest green r11
     "sas_csv_script_pins",  # newest green r11
     "profile_read_surface",  # newest green r11
@@ -107,6 +91,22 @@ _PRIORITY: tuple[str, ...] = (
     "sequence_packing_bins",  # newest green r12
     "source_mixing_weights",  # newest green r12
     "sequence_length_histogram",  # newest green r12
+    "mixture_budget_fill",  # newest green r12
+    "train_val_test_split",  # newest green r12
+    "simhash_fingerprint",  # newest green r12
+    "dedup_cluster_size_histogram",  # newest green r12
+    "value_label_broadcast_decode",  # newest green r12
+    "q3_shipping_priority",  # newest green r12
+    "q5_local_supplier_volume",  # newest green r12
+    "cube_status_priority",  # newest green r12
+    "projection_pushdown",  # newest green r12
+    "filter_pushdown",  # newest green r12
+    "limit_pushdown",  # newest green r12
+    "offset_slice",  # newest green r12
+    "metadata_merge_full_join",  # newest green r12
+    "anti_join_customers_without_orders",  # newest green r12
+    "broadcast_join_order_region",  # newest green r12
+    "max_strlen_prepass",  # newest green r12
     # positions 51+ follow registration order (the local gate still
     # covers the whole registry each round).
 )

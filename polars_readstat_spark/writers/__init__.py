@@ -11,17 +11,15 @@ The column plan every path shares (single file, partitioned, sink) also
 lives here: Spark type → kind (``column_kinds``, ``plan_write``), the
 pre-pass (``prepass_aggs``), string-width limits (``str_widths``) and
 the epoch casts (``to_disk``). ``plan_export`` runs that plan and the
-one pre-pass job into a ``PartPlan``. Each of sav/zsav, xpt and
-sas7bdat then has one layout: ``pack(plan, pdf)`` and ``assemble(fh,
-plan, payloads, n_rows)`` in its module (``layout``). A single-file
-export (``export_file``) packs on the executors over ``packed_stream``
-and assembles on the driver; a part-file (spark_sink's
-``write_partition_file``) packs and assembles inside its task. dta
-plans its own integer narrowing, and its two exports already share
-``_pack_stream``/``_assemble_dta``; por has no part-file path. Also
-here: the export output (``export_output``) and the
-``tagged_missing`` split. The dta strL path alone uses
-``iter_arrow_chunks``."""
+one pre-pass job into a ``PartPlan`` (for dta, the same job also
+narrows the integer and float columns). Every format then has one
+layout: ``pack(plan, pdf)`` and ``assemble(fh, plan, payloads,
+n_rows)`` in its module (``_LAYOUTS``, ``layout``). A single-file
+export (``export_file``) packs on the executors over
+``packed_stream`` and assembles on the driver; a part-file (spark_sink's
+``write_partition_file``) packs and assembles inside its task; por
+has no part-file path. Also here: the export output
+(``export_output``) and the ``tagged_missing`` split."""
 
 from __future__ import annotations
 
@@ -32,7 +30,7 @@ from functools import partial
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# ---- the column plan shared by every non-dta writer and the sink ----
+# ---- the column plan shared by every writer and the sink ----
 # SAS counts from 1960-01-01, SPSS from 1582-10-14 (1970-01-01 = 0)
 SAS_DAY_SHIFT = 3653
 SAS_SEC_SHIFT = 315_619_200
@@ -47,8 +45,12 @@ _EPOCH = {
     "zsav": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
     "por": (86400.0, SPSS_SEC_SHIFT / 86400.0, float(SPSS_SEC_SHIFT)),
 }
-# max string byte width per format (None: unlimited)
-_STR_LIMIT = {"sas7bdat": 32767, "sav": 255, "zsav": 255, "xpt": 200, "por": None}
+# max string byte width per format (None: unlimited; dta writes a
+# string wider than 2045 bytes as a strL)
+_STR_LIMIT = {
+    "sas7bdat": 32767, "sav": 255, "zsav": 255, "xpt": 200, "por": None,
+    "dta": None,
+}
 # on-disk numeric width where the layout records one (others: 0)
 _NUM_WIDTH = {"sas7bdat": 8, "xpt": 8}
 _NUMERIC = (
@@ -131,14 +133,16 @@ def column_kinds(fields, fmt: str) -> list[str]:
 _SINK_FORMATS = ("sas7bdat", "sav", "zsav", "xpt", "dta")
 
 
-def plan_write(schema, options):
+def plan_write(schema, options, formats=_SINK_FORMATS):
     """Column plan from the declared schema alone — pure, so the sink's
-    planning worker runs it too, before any job.
+    planning worker runs it too, before any job. A format outside
+    ``formats`` (by default the part-file formats) raises.
 
     Returns (fmt, fields, names, shorts, kinds): ``shorts`` is None for
-    formats that keep full names (sas7bdat, dta). dta's kinds drive
-    only the zone maps — its column types are planned elsewhere. A
-    sas7bdat ``compress`` option other than rle/rdc raises here."""
+    formats that keep full names (sas7bdat, dta, por). dta's kinds
+    drive only the zone maps — its column types come from its own
+    ``_plan_columns``. A sas7bdat ``compress`` option other than
+    rle/rdc raises here."""
     import os
 
     fmt = (options.get("format") or options.get("ext") or "").lstrip(".").lower()
@@ -146,10 +150,10 @@ def plan_write(schema, options):
         path = options.get("path", "")
         tail = os.path.basename(path)
         fmt = tail.rsplit(".", 1)[-1].lower() if "." in tail else ""
-    if fmt not in _SINK_FORMATS:
+    if fmt not in formats:
         raise ValueError(
             f"df.write.format('readstat'): set .option('format', ...) to "
-            f"one of {sorted(_SINK_FORMATS)} (got {fmt!r})"
+            f"one of {sorted(formats)} (got {fmt!r})"
         )
     compress = options.get("compress")
     if fmt == "sas7bdat" and compress not in (None, "", "rle", "rdc"):
@@ -216,9 +220,12 @@ def str_widths(fmt, fields, kinds, width_of, numeric_lengths=None) -> list[int]:
 def to_disk(df, fmt, fields, kinds, extra=()):
     """Select every column in the format's on-disk representation:
     numerics as double, dates/datetimes shifted to the format epoch,
-    ns-since-midnight times as seconds, strings as-is. ``extra``
-    appends pass-through columns (e.g. the wide protocol's order
-    tags)."""
+    ns-since-midnight times as seconds, strings as-is. dta columns
+    pass through unconverted: its pack does its own epoch and
+    missing-sentinel math. ``extra`` appends pass-through columns
+    (e.g. the wide protocol's order tags)."""
+    if fmt == "dta":
+        return df.select(*(f.name for f in fields), *extra)
     mul, dadd, sec = _EPOCH[fmt]
     sel = []
     for f, k in zip(fields, kinds):
@@ -338,7 +345,7 @@ class PartPlan:
     """A resolved column plan: everything a format's ``pack`` and
     ``assemble`` need to lay out a file before they see a row.
     ``widths`` are on-disk byte widths per column (sav: 0 for
-    numerics); dta carries its (name, kind, width, fmt) tuples in
+    numerics); dta lays out its (name, kind, width, fmt) tuples in
     ``dta_cols`` instead. ``plan_export`` resolves one per export from
     the global pre-pass (single file and partitioned); the sink
     resolves one per partition (``write_sink_part``)."""
@@ -358,7 +365,7 @@ class PartPlan:
     version: int = 5
     page_length: int | None = None
     compress: str | None = None
-    # xpt/sas7bdat: data column index → stream column of its
+    # xpt/dta/sas7bdat: data column index → stream column of its
     # tagged-missing indicator (``split_tagged``)
     tag_slot: dict = field(default_factory=dict)
     # sav: SPSS bytecode compression (only write_sav(compress=True))
@@ -375,18 +382,28 @@ class PartPlan:
 
 
 def plan_export(df, fmt, tagged_missing=None, numeric_lengths=None, **opts):
-    """The one plan step of every sav/zsav/xpt/sas7bdat export, single
-    file or part-files: split off the ``tagged_missing`` indicators,
-    plan the columns (``plan_write``), check the tagged and
+    """The one plan step of every export, single file or part-files:
+    split off the ``tagged_missing`` indicators, plan the columns
+    (``plan_write``; dta also ``_plan_columns``), check the tagged and
     ``numeric_lengths`` columns, run the one pre-pass job and resolve
-    the widths. Everything that can be refused is refused before that
-    job. ``opts`` are PartPlan fields. Returns (plan, the pre-pass row
-    count or None, the indicator projections that ride at the
-    stream's tail)."""
+    the widths (and dta's narrowed column types). Everything that can
+    be refused by the schema is refused before that job. ``opts`` are
+    PartPlan fields. Returns (plan, the pre-pass row count or None,
+    the indicator projections that ride at the stream's tail)."""
     data_df, _, tag_exprs, tag_slot = split_tagged(df, tagged_missing)
     fmt, fields, names, shorts, kinds = plan_write(
-        data_df.schema, {"format": fmt, "compress": opts.get("compress")}
+        data_df.schema, {"format": fmt, "compress": opts.get("compress")},
+        formats=_LAYOUTS,
     )
+    aggs = prepass_aggs(fields, kinds, fmt)
+    if fmt == "dta":
+        from polars_readstat_spark.writers.dta import (
+            _finalize_cols,
+            _plan_columns,
+        )
+
+        dta_plan, narrow = _plan_columns(fields)
+        aggs += narrow
     numeric = [n for n, k in zip(names, kinds) if k != "str"]
     check_tagged(tagged_missing, numeric, df.columns)
     numeric_lengths = dict(numeric_lengths or {})
@@ -400,11 +417,12 @@ def plan_export(df, fmt, tagged_missing=None, numeric_lengths=None, **opts):
                 f"numeric_lengths: {c!r} is tagged-missing — tags live in "
                 "the mantissa tail that truncation drops"
             )
-    aggs = prepass_aggs(fields, kinds, fmt)
     stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
     widths = str_widths(
         fmt, fields, kinds, lambda n: stats.get(f"__w_{n}"), numeric_lengths
     )
+    if fmt == "dta":
+        opts["dta_cols"] = _finalize_cols(dta_plan, stats)
     plan = PartPlan(
         fmt, fields, names, shorts, kinds, widths, tag_slot=tag_slot, **opts
     )
@@ -412,29 +430,33 @@ def plan_export(df, fmt, tagged_missing=None, numeric_lengths=None, **opts):
 
 
 # per format: the module holding its pack(plan, pdf) and
-# assemble(fh, plan, payloads, n_rows), then any other module of this
-# package the pack reaches (all pickled by value with this one)
+# assemble(fh, plan, payloads, n_rows), then any other module of the
+# package the pack reaches (all pickled by value with this one),
+# relative to the package root
 _LAYOUTS = {
-    "sav": ("sav",),
-    "zsav": ("sav",),
-    "xpt": ("xpt", "tagged"),
-    "sas7bdat": ("sas7bdat", "tagged"),
+    "sav": ("writers.sav",),
+    "zsav": ("writers.sav",),
+    "xpt": ("writers.xpt", "writers.tagged"),
+    "por": ("writers.por", "sources.por.b30"),
+    "dta": ("writers.dta", "writers.tagged"),
+    "sas7bdat": ("writers.sas7bdat", "writers.tagged"),
 }
+_ROOT = __name__.rpartition(".")[0]
 
 
 def layout(fmt: str):
     """The writer module that lays out ``fmt`` (see ``_LAYOUTS``)."""
     import importlib
 
-    return importlib.import_module(f"{__name__}.{_LAYOUTS[fmt][0]}")
+    return importlib.import_module(f"{_ROOT}.{_LAYOUTS[fmt][0]}")
 
 
 def export_file(df, path, plan, rows, tag_exprs=()) -> None:
-    """Write one planned sav/zsav/xpt/sas7bdat file at ``path``: the
-    format's ``pack`` runs on the executors over ``packed_stream`` and
-    its ``assemble`` lays the payloads out on the driver. ``rows`` is
-    the pre-pass count (None for sas7bdat, which back-patches its
-    header); ``tag_exprs`` ride at the stream's tail for the pack."""
+    """Write one planned file at ``path``: the format's ``pack`` runs
+    on the executors over ``packed_stream`` and its ``assemble`` lays
+    the payloads out on the driver. ``rows`` is the pre-pass count
+    (None for sas7bdat, which back-patches its header); ``tag_exprs``
+    ride at the stream's tail for the pack."""
     mod = layout(plan.fmt)
     fmt, fields, kinds = plan.fmt, plan.fields, plan.kinds
     stream = packed_stream(
@@ -443,7 +465,7 @@ def export_file(df, path, plan, rows, tag_exprs=()) -> None:
             f, fmt, fields, kinds, extra=[*tag_exprs, *extra]
         ),
         partial(mod.pack, plan.for_pack()), rows=rows,
-        modules=(*(f"{__name__}.{m}" for m in _LAYOUTS[fmt]), __name__),
+        modules=(*(f"{_ROOT}.{m}" for m in _LAYOUTS[fmt]), __name__),
     )
     with export_output(path) as fh:
         mod.assemble(fh, plan, stream, rows)

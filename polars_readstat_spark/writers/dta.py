@@ -1,25 +1,28 @@
 """Stata .dta writer (v118 layout) — reference W1/W2 re-expressed.
 
-Two Spark jobs, then a streaming assembly:
+One layout, like every other format (``writers._LAYOUTS``):
 
-1. **Pre-pass** (one aggregation job): per-column max UTF-8 byte
-   widths for strings, min/max for bigint downcast decisions, and the
-   row count — the Spark shape of the reference's sink pre-pass
-   (pybindings.rs:996-1047).
-2. **Pack**: batches are packed vectorized (numpy structured array per
-   batch). The driver-side `write_dta` drains executor-packed chunks
-   in input order (``writers.packed_stream``); the distributed path
-   (writers/partitioned.py) hands the column plan from the global
-   pre-pass to the sink's ``write_partition_file``, which runs the
-   same pack+assemble inside each executor task against its own
-   partition, so every part-file shares one schema.
+1. **Plan** (``writers.plan_export``): one pre-pass job returns the
+   row count, each string column's max UTF-8 byte width and the
+   min/max that narrow each integer and float column
+   (``_plan_columns``/``_finalize_cols``) — the Spark shape of the
+   reference's sink pre-pass (pybindings.rs:996-1047).
+2. **Pack** (``pack``): one numpy structured array per chunk. A
+   single-file export packs on the executors and drains the chunks in
+   input order (``writers.export_file``); a part-file packs inside
+   its task (spark_sink's ``write_partition_file``).
+3. **Assemble** (``assemble``): header and metadata sections, the
+   streamed <data> records, then <strls>, the value labels and the
+   back-patched N and section map.
 
 Layout per the public dta-118 spec (same section tags the reader
 parses). Nulls → Stata sentinel missings; date → %td day numbers;
 timestamp → %tc ms. Strings up to 2045 bytes are written as fixed
-str#; wider columns become strL: data rows carry (v,o) refs and the
-payloads stream into a <strls> GSO section (see _pack_batch and the
-strL block below).
+str#; wider columns become strL: a data cell holds the key
+v | o << 16 (v the 1-based column, o the 1-based row) of one GSO
+record in <strls>. ``pack`` numbers a chunk's rows from 1 and
+``assemble`` adds the rows before the chunk to its keys and GSO
+records, so the keys are global row numbers whatever the chunking.
 """
 
 from __future__ import annotations
@@ -31,19 +34,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_readstat_spark.sources.columns import (
-    STATA_EPOCH_DAYS,
-    STATA_EPOCH_MS,
-)
-from polars_readstat_spark.writers import (
-    check_tagged,
-    export_output,
-    packed_stream,
-    split_tagged,
-)
+from polars_readstat_spark.sources.columns import STATA_EPOCH_DAYS
+from polars_readstat_spark.writers import export_file, plan_export
 from polars_readstat_spark.writers.tagged import (
     NO_TAG as _TAG_NONE,
-    parse_tag_offsets as _parse_tag_offsets,
+    slot_tags as _slot_tags,
 )
 
 _MISS = {
@@ -62,11 +57,13 @@ _DOUBLE_EXACT_INT = 1 << 53
 _STATA_EPOCH_US = -315_619_200_000_000
 
 
-def _plan_columns(df: DataFrame):
-    """→ list of (name, stata_kind, spark_conv) and the pre-pass aggs."""
+def _plan_columns(fields):
+    """→ (name, stata kind) per field, and the min/max aggregates that
+    narrow the kinds ending in ``?`` (``writers.prepass_aggs`` adds
+    the row count and the string widths to the same job)."""
     plan = []
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in df.schema.fields:
+    aggs = []
+    for f in fields:
         t = f.dataType.simpleString()
         if t in ("tinyint", "smallint", "int", "bigint"):
             # integer widths are decided by the pre-pass range: Stata
@@ -103,9 +100,6 @@ def _plan_columns(df: DataFrame):
             plan.append((f.name, "datetime"))
         elif t == "string":
             plan.append((f.name, "str"))
-            aggs.append(
-                F.max(F.octet_length(f.name)).alias(f"__w_{f.name}")
-            )
         else:
             raise ValueError(f"write_dta: unsupported column type {t} ({f.name})")
     return plan, aggs
@@ -240,32 +234,53 @@ def _apply_tags(rec_field, kind, offs) -> None:
         ).astype("<u8")
 
 
-def _pack_batch(
-    cols, rec_dtype, pdf, row_start: int, strls_buf: bytearray,
-    tag_offsets: dict | None = None,
-) -> bytes:
+def write_dta(
+    df: DataFrame,
+    path: str,
+    *,
+    data_label: str = "",
+    variable_labels: dict[str, str] | None = None,
+    value_labels: dict[str, dict[int, str]] | None = None,
+    tagged_missing: dict[str, str] | None = None,
+) -> None:
+    plan, rows, tag_exprs = plan_export(
+        df, "dta", tagged_missing,
+        data_label=data_label,
+        variable_labels=variable_labels or {},
+        value_labels=value_labels or {},
+    )
+    export_file(df, path, plan, rows, tag_exprs)
+
+
+def pack(plan, pdf) -> bytes:
+    """One chunk's records, then the GSO records of its strL cells
+    keyed from the chunk's own row 1 (``assemble`` shifts both to the
+    global row); tagged missings from the indicator columns at the
+    chunk's tail. The one dta pack, run on the executors for a
+    single-file export and inside the task for a part-file."""
+    cols = plan.dta_cols
+    data = [col for _, col in pdf.items()]
+    tags = _slot_tags(data, plan.tag_slot, len(cols)) or [None] * len(cols)
+    if any(t is not None and (t == 27).any() for t in tags):
+        raise ValueError(
+            "tagged_missing: Stata has no '._' tag (only '.' and '.a'-'.z')"
+        )
     n = len(pdf)
-    rec = np.zeros(n, dtype=rec_dtype)
-    for i, (name, kind, w, fmt) in enumerate(cols):
-        s = pdf[name]
+    rec = np.zeros(n, dtype=_rec_dtype(cols))
+    gso = bytearray()
+    for i, ((name, kind, w, _), s, offs) in enumerate(zip(cols, data, tags)):
         if kind == "strl":
             # v118 cell: uint64 LE = v | (o << 16); one GSO per
             # non-empty value, keyed (v=col 1-based, o=row 1-based)
             keys = np.zeros(n, dtype="<u8")
-            vals = s.fillna("").astype(str)
-            for r, text in enumerate(vals):
+            for r, text in enumerate(s.fillna("").astype(str)):
                 if text == "":
                     continue  # key 0 → ""
-                v_, o_ = i + 1, row_start + r + 1
-                keys[r] = v_ | (o_ << 16)
+                keys[r] = (i + 1) | ((r + 1) << 16)
                 payload = text.encode("utf-8") + b"\x00"
-                strls_buf.extend(
-                    b"GSO"
-                    + struct.pack("<IQ", v_, o_)
-                    + bytes([130])
-                    + struct.pack("<I", len(payload))
-                    + payload
-                )
+                gso += struct.pack(
+                    "<3sIQBI", b"GSO", i + 1, r + 1, 130, len(payload)
+                ) + payload
             rec[f"f{i}"] = keys
         elif kind == "str":
             vals = s.fillna("").astype(str)
@@ -281,14 +296,9 @@ def _pack_batch(
             )
             rec[f"f{i}"] = iv
         elif kind == "date":
+            # datetime64[D] spans years 1-9999 exactly; nulls → NaT
             nulls = s.isna().values
-            days = np.array(
-                [
-                    0 if x is None else x.toordinal() - 719163
-                    for x in s
-                ],
-                dtype="<i4",
-            )
+            days = np.asarray(s.values, dtype="datetime64[D]").astype("<i8")
             rec[f"f{i}"] = np.where(
                 nulls, _MISS["long"], days - STATA_EPOCH_DAYS
             ).astype("<i4")
@@ -374,130 +384,46 @@ def _pack_batch(
             if nulls.any():
                 v.view("<u8")[nulls] = _DOUBLE_MISS_BITS
             rec[f"f{i}"] = v
-        if tag_offsets and name in tag_offsets:
-            _apply_tags(rec[f"f{i}"], kind, tag_offsets[name])
-    return rec.tobytes()
+        if offs is not None:
+            _apply_tags(rec[f"f{i}"], kind, offs)
+    return rec.tobytes() + bytes(gso)
 
 
-def _pack_stream(
-    cols, pdf_iter, tagged_missing: dict | None = None
-) -> tuple[bytearray, bytearray, int]:
-    """Pack an iterator of pandas batches → (data, strls, n_rows).
-    tagged_missing: value column → indicator column (both must be in
-    each batch; the indicator column is consumed, not packed)."""
+def assemble(fh, plan, payloads, n_rows=None) -> int:
+    """The one dta file layout: header and metadata sections, the
+    ``(payload, n)`` records streamed into <data>, then <strls> (held
+    until the data ends), the value labels, and N and the section map
+    back-patched in the header. Each chunk's strL keys and GSO rows
+    shift by the rows before it. ``n_rows`` is unused: N is the
+    streamed count. Returns the rows written."""
+    cols, value_labels = plan.dta_cols, plan.value_labels
     rec_dtype = _rec_dtype(cols)
-    data = bytearray()
+    strl = [f"f{i}" for i, c in enumerate(cols) if c[1] == "strl"]
+    head, offsets, n_pos, map_pos = _dta_head(plan)
+    fh.write(head)
+    pos = len(head)
+    got = 0
     strls = bytearray()
-    pos = 0
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        tag_offsets = _tag_offsets(pdf, tagged_missing)
-        data += _pack_batch(cols, rec_dtype, pdf, pos, strls, tag_offsets)
-        pos += len(pdf)
-    return data, strls, pos
-
-
-def _tag_offsets(pdf, tagged_missing) -> dict | None:
-    """value column → per-row tag offsets from its indicator column
-    (None without tags); Stata has no '._' tag."""
-    if not tagged_missing:
-        return None
-    tag_offsets = {
-        vcol: _parse_tag_offsets(pdf[icol].tolist())
-        for vcol, icol in tagged_missing.items()
-    }
-    for offs in tag_offsets.values():
-        if (offs == 27).any():
-            raise ValueError(
-                "tagged_missing: Stata has no '._' tag "
-                "(only '.' and '.a'-'.z')"
-            )
-    return tag_offsets
-
-
-def _assemble_dta(
-    cols,
-    data: bytes,
-    strls: bytes,
-    n_rows: int,
-    data_label: str,
-    variable_labels: dict,
-    value_labels: dict,
-) -> bytearray:
-    """Metadata sections + packed data → complete dta-118 file bytes."""
-
-    def pad(b: bytes, n: int) -> bytes:
-        return b[:n] + b"\x00" * (n - len(b))
-
-    K, N = len(cols), n_rows
-    out = bytearray()
-    out += b"<stata_dta><header><release>118</release><byteorder>LSF</byteorder><K>"
-    out += struct.pack("<H", K)
-    out += b"</K><N>"
-    out += struct.pack("<Q", N)
-    out += b"</N><label>"
-    lbl = data_label.encode("utf-8")[:80]
-    out += struct.pack("<H", len(lbl)) + lbl
-    out += b"</label><timestamp>"
-    ts = b"13 Aug 2026 00:00"
-    out += bytes([len(ts)]) + ts
-    out += b"</timestamp></header>"
-
-    map_pos = len(out) + len(b"<map>")
-    out += b"<map>" + b"\x00" * (14 * 8) + b"</map>"
-
-    offsets = [0] * 14
-    offsets[0] = 0
-    offsets[1] = map_pos - len(b"<map>")
-
-    offsets[2] = len(out)
-    out += b"<variable_types>"
-    for name, kind, w, fmt in cols:
-        out += struct.pack("<H", w if kind == "str" else _TYPECODE[kind])
-    out += b"</variable_types>"
-
-    offsets[3] = len(out)
-    out += b"<varnames>"
-    for name, *_ in cols:
-        out += pad(name.encode("utf-8"), 129)
-    out += b"</varnames>"
-
-    offsets[4] = len(out)
-    out += b"<sortlist>" + b"\x00" * (2 * (K + 1)) + b"</sortlist>"
-
-    offsets[5] = len(out)
-    out += b"<formats>"
-    for name, kind, w, fmt in cols:
-        out += pad(fmt.encode(), 57)
-    out += b"</formats>"
-
-    offsets[6] = len(out)
-    out += b"<value_label_names>"
-    for name, *_ in cols:
-        lab = name if name in value_labels else ""
-        out += pad(lab.encode("utf-8"), 129)
-    out += b"</value_label_names>"
-
-    offsets[7] = len(out)
-    out += b"<variable_labels>"
-    for name, *_ in cols:
-        out += pad(variable_labels.get(name, "").encode("utf-8"), 321)
-    out += b"</variable_labels>"
-
-    offsets[8] = len(out)
-    out += b"<characteristics></characteristics>"
-
-    offsets[9] = len(out)
-    out += b"<data>"
-    out += data
-    out += b"</data>"
-
-    offsets[10] = len(out)
-    out += b"<strls>" + bytes(strls) + b"</strls>"
-
-    offsets[11] = len(out)
-    out += b"<value_labels>"
+    for payload, n in payloads:
+        cut = n * rec_dtype.itemsize
+        data, gso = payload[:cut], payload[cut:]
+        if strl and got:
+            rec = np.frombuffer(data, dtype=rec_dtype).copy()
+            for f in strl:
+                keys = rec[f]
+                keys[keys != 0] += np.uint64(got << 16)
+            data = rec.tobytes()
+            gso = _shift_gso(gso, got)
+        fh.write(data)
+        strls += gso
+        pos += len(data)
+        got += n
+    fh.write(b"</data><strls>")
+    fh.write(strls)
+    fh.write(b"</strls>")
+    offsets[10] = pos + len(b"</data>")
+    offsets[11] = offsets[10] + len(b"<strls></strls>") + len(strls)
+    tail = bytearray(b"<value_labels>")
     for name, *_ in cols:
         if name not in value_labels:
             continue
@@ -514,82 +440,103 @@ def _assemble_dta(
             + b"".join(struct.pack("<i", int(k)) for k in keys)
             + bytes(txt)
         )
-        out += b"<lbl>"
-        out += struct.pack("<i", len(table))
-        out += pad(name.encode("utf-8"), 129) + b"\x00\x00\x00"
-        out += table
-        out += b"</lbl>"
-    out += b"</value_labels>"
+        tail += b"<lbl>"
+        tail += struct.pack("<i", len(table))
+        tail += _pad(name.encode("utf-8"), 129) + b"\x00\x00\x00"
+        tail += table
+        tail += b"</lbl>"
+    tail += b"</value_labels>"
+    offsets[12] = offsets[11] + len(tail)
+    tail += b"</stata_dta>"
+    offsets[13] = offsets[11] + len(tail)
+    fh.write(tail)
+    fh.seek(n_pos)
+    fh.write(struct.pack("<Q", got))
+    fh.seek(map_pos)
+    fh.write(struct.pack("<14Q", *offsets))
+    fh.seek(offsets[13])
+    return got
 
-    offsets[12] = len(out)
-    out += b"</stata_dta>"
-    offsets[13] = len(out)
 
-    out[map_pos : map_pos + 14 * 8] = struct.pack("<14Q", *offsets)
+def _shift_gso(gso: bytes, rows: int) -> bytearray:
+    """GSO records with each record's o (its 1-based row) moved down
+    by ``rows``: 3-byte "GSO", v uint32, o uint64, type byte, payload
+    length uint32, then the payload."""
+    out = bytearray(gso)
+    at = 0
+    while at < len(out):
+        (o,) = struct.unpack_from("<Q", out, at + 7)
+        struct.pack_into("<Q", out, at + 7, o + rows)
+        (ln,) = struct.unpack_from("<I", out, at + 16)
+        at += 20 + ln
     return out
 
 
-def write_dta(
-    df: DataFrame,
-    path: str,
-    *,
-    data_label: str = "",
-    variable_labels: dict[str, str] | None = None,
-    value_labels: dict[str, dict[int, str]] | None = None,
-    tagged_missing: dict[str, str] | None = None,
-) -> None:
-    variable_labels = variable_labels or {}
-    value_labels = value_labels or {}
-    tagged_missing = dict(tagged_missing or {})
+def _pad(b: bytes, n: int) -> bytes:
+    return b[:n] + b"\x00" * (n - len(b))
 
-    data_df, ind_names, _, _ = split_tagged(df, tagged_missing)
-    plan, aggs = _plan_columns(data_df)
-    stats = df.agg(*aggs).collect()[0].asDict()
-    cols = _finalize_cols(plan, stats)
-    check_tagged(
-        tagged_missing,
-        [c[0] for c in cols if c[1] not in ("str", "strl")],
-        df.columns,
-    )
 
-    names = [c[0] for c in cols]
+def _dta_head(plan):
+    """Everything before the first record → (bytes through <data>,
+    the 14-entry section map with offsets 0-9 filled, the file offset
+    of N, the file offset of the map)."""
+    cols, variable_labels = plan.dta_cols, plan.variable_labels
+    out = bytearray()
+    out += b"<stata_dta><header><release>118</release><byteorder>LSF</byteorder><K>"
+    out += struct.pack("<H", len(cols))
+    out += b"</K><N>"
+    n_pos = len(out)
+    out += struct.pack("<Q", 0)
+    out += b"</N><label>"
+    lbl = plan.data_label.encode("utf-8")[:80]
+    out += struct.pack("<H", len(lbl)) + lbl
+    out += b"</label><timestamp>"
+    ts = b"13 Aug 2026 00:00"
+    out += bytes([len(ts)]) + ts
+    out += b"</timestamp></header>"
 
-    def project(frame, extra):
-        return frame.select(*names, *ind_names, *extra)
+    offsets = [0] * 14
+    offsets[1] = len(out)
+    map_pos = len(out) + len(b"<map>")
+    out += b"<map>" + b"\x00" * (14 * 8) + b"</map>"
 
-    if any(c[1] == "strl" for c in cols):
-        # strL GSO records key on the GLOBAL row number, which only
-        # the ordered driver stream knows — keep packing driver-side
-        # (reference W2 pattern); looked up at call time, like the
-        # transports packed_stream calls, so a tap on the module sees it
-        from polars_readstat_spark.writers import iter_arrow_chunks
+    offsets[2] = len(out)
+    out += b"<variable_types>"
+    for name, kind, w, fmt in cols:
+        out += struct.pack("<H", w if kind == "str" else _TYPECODE[kind])
+    out += b"</variable_types>"
 
-        batches = iter_arrow_chunks(project(df, []), 65536)
-        data, strls, n_rows = _pack_stream(cols, batches, tagged_missing)
-    else:
-        # fixed-width records with no cross-row state: pack on the
-        # executors, concatenate on the driver in input order
-        rec_dtype = _rec_dtype(cols)
+    offsets[3] = len(out)
+    out += b"<varnames>"
+    for name, *_ in cols:
+        out += _pad(name.encode("utf-8"), 129)
+    out += b"</varnames>"
 
-        def pack_fn(pdf):
-            return _pack_batch(
-                cols, rec_dtype, pdf, 0, bytearray(),
-                _tag_offsets(pdf, tagged_missing),
-            )
+    offsets[4] = len(out)
+    out += b"<sortlist>" + b"\x00" * (2 * (len(cols) + 1)) + b"</sortlist>"
 
-        data = b"".join(
-            payload
-            for payload, _n in packed_stream(
-                df, "dta", project, pack_fn, rows=stats["__n"],
-                modules=(
-                    "polars_readstat_spark.writers.dta",
-                    "polars_readstat_spark.writers.tagged",
-                ),
-            )
-        )
-        strls, n_rows = b"", int(stats["__n"])
-    out = _assemble_dta(
-        cols, data, strls, n_rows, data_label, variable_labels, value_labels
-    )
-    with export_output(path) as f:
-        f.write(out)
+    offsets[5] = len(out)
+    out += b"<formats>"
+    for name, kind, w, fmt in cols:
+        out += _pad(fmt.encode(), 57)
+    out += b"</formats>"
+
+    offsets[6] = len(out)
+    out += b"<value_label_names>"
+    for name, *_ in cols:
+        lab = name if name in plan.value_labels else ""
+        out += _pad(lab.encode("utf-8"), 129)
+    out += b"</value_label_names>"
+
+    offsets[7] = len(out)
+    out += b"<variable_labels>"
+    for name, *_ in cols:
+        out += _pad(variable_labels.get(name, "").encode("utf-8"), 321)
+    out += b"</variable_labels>"
+
+    offsets[8] = len(out)
+    out += b"<characteristics></characteristics>"
+
+    offsets[9] = len(out)
+    out += b"<data>"
+    return out, offsets, n_pos, map_pos

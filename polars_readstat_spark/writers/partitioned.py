@@ -7,7 +7,7 @@ serializes the write itself — SCALE.md names that bound. This path
 removes it. Each ``write_*_partitioned`` runs the single-file
 exports' plan step (``writers.plan_export``: one global pre-pass job
 resolves string widths, so every part-file shares one schema; dta
-narrows its integers from the same kind of job), then one generic
+narrows its integers in the same job), then one generic
 ``mapInArrow`` task per partition streams its batches through the
 zone-map accumulator into the sink's ``write_part``, which lays the
 file out with the format's one pack and assembler — the same two a
@@ -21,7 +21,10 @@ dir-read roundtrips.
 On a real cluster the directory must be storage every executor can
 reach (NFS/fuse-mounted object store); tasks write to a temp name and
 rename, so retries never leave torn files, and a failed task removes
-its partial temp file.
+its partial temp file. The task imports ``polars_readstat_spark`` by
+name (as the sink's and the hive writer's do), so the package must be
+importable on every executor (``--py-files`` or an install); the
+single-file exports instead pickle their pack by value.
 """
 
 from __future__ import annotations
@@ -92,9 +95,9 @@ def _write_planned(
     df: DataFrame, dir_path: str, fmt: str, bloom_columns=(),
     bloom_max_bytes=None, **plan_opts,
 ) -> list[dict]:
-    """sav/zsav/xpt/sas7bdat: the single-file exports' plan step
-    (``writers.plan_export``: one global pre-pass), so every part
-    shares one layout — the single-file one."""
+    """The single-file exports' plan step (``writers.plan_export``:
+    one global pre-pass), so every part shares one layout — the
+    single-file one."""
     from polars_readstat_spark.writers import plan_export, to_disk
 
     plan, _, _ = plan_export(df, fmt, **plan_opts)
@@ -121,30 +124,13 @@ def write_dta_partitioned(
 
     Returns [{"path", "n_rows"}, ...] per written part (empty
     partitions are skipped). All parts share the column plan from one
-    global pre-pass, so a directory scan unions them cleanly."""
-    from polars_readstat_spark.writers.dta import (
-        _finalize_cols,
-        _plan_columns,
-    )
-    from polars_readstat_spark.writers import PartPlan, column_kinds
-
-    dta_plan, aggs = _plan_columns(df)
-    stats = df.agg(*aggs).collect()[0].asDict()
-    cols = _finalize_cols(dta_plan, stats)
-    fields = df.schema.fields
-    names = [f.name for f in fields]
-    return _write_parts(
-        df.select(*names),
-        dir_path,
-        PartPlan(
-            "dta", fields, names, None, column_kinds(fields, "dta"), [],
-            cols,
-            data_label=data_label,
-            variable_labels=variable_labels or {},
-            value_labels=value_labels or {},
-        ),
-        bloom_columns,
-        bloom_max_bytes,
+    global pre-pass (string widths and the integer narrowing), so a
+    directory scan unions them cleanly."""
+    return _write_planned(
+        df, dir_path, "dta", bloom_columns, bloom_max_bytes,
+        data_label=data_label,
+        variable_labels=variable_labels or {},
+        value_labels=value_labels or {},
     )
 
 

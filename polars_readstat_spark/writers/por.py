@@ -18,12 +18,14 @@ contributes; 5e-324 flushes to zero) — IEEE gradual-underflow
 semantics at the format's edge.
 
 POR is an eager single file (the format is legacy interchange, not a
-data-plane format at scale); token packing — the shortest-form ladder
-— runs on the executors (writers.packed_stream, one numpy lane-wise
-ladder pass per DISTINCT value — see _num_tokens_unique), and the
-driver only concatenates chunk payloads in input order and wraps the
-stream at 80 columns with one numpy pass per chunk, so memory stays
-bounded.
+data-plane format at scale), with the one layout every format has
+(``writers._LAYOUTS``): ``pack`` runs the shortest-form token ladder
+on the executors (writers.export_file, one numpy lane-wise ladder
+pass per DISTINCT value — see _num_tokens_unique), and ``assemble``
+writes the header and dictionary, then concatenates chunk payloads in
+input order and wraps the stream at 80 columns with one numpy pass
+per chunk, so memory stays bounded. The sink and the partitioned
+exporters refuse por.
 """
 
 from __future__ import annotations
@@ -34,14 +36,7 @@ from pyspark.sql import DataFrame
 
 from polars_readstat_spark.sources.por.b30 import _parse_base30
 from polars_readstat_spark.sources.por.reader import _POS_ASCII
-from polars_readstat_spark.writers import (
-    column_kinds,
-    export_output,
-    packed_stream,
-    prepass_aggs,
-    str_widths,
-    to_disk,
-)
+from polars_readstat_spark.writers import export_file, plan_export
 
 
 def _por_safe_table() -> bytes:
@@ -740,77 +735,81 @@ def write_por(
     file_label: str = "",
     variable_labels: dict | None = None,
 ) -> None:
-    variable_labels = variable_labels or {}
-    fields = df.schema.fields
-    names = [f.name for f in fields]
-    por_names = _por_names(names)
+    plan, rows, _ = plan_export(
+        df, "por", data_label=file_label, variable_labels=variable_labels or {}
+    )
+    export_file(df, path, plan, rows)
 
-    kinds = column_kinds(fields, "por")
-    stats = df.agg(*prepass_aggs(fields, kinds, "por")).collect()[0].asDict()
-    widths = str_widths("por", fields, kinds, lambda n: stats.get(f"__w_{n}"))
 
+def pack(plan, pdf) -> bytes:
+    """One chunk's unwrapped token stream: the one por pack, run on the
+    executors (``assemble`` wraps it at 80 columns)."""
+    return _pack_por_chunk(pdf, plan.kinds)
+
+
+def assemble(fh, plan, payloads, n_rows=None) -> int:
+    """The one por layout: vanity header, translation table, the
+    dictionary records, then the ``(payload, n)`` token stream wrapped
+    at 80 columns and Z-filled. The format carries no row count
+    (``n_rows`` is unused). Returns the rows written."""
+    fields, kinds, widths = plan.fields, plan.kinds, plan.widths
+    por_names = _por_names(plan.names)
     now = datetime.datetime.now()
-    with export_output(path) as fh:
-        w = _PorWriter(fh)
-        # vanity: 5 × 40 chars; file label surfaces in row 1 cols 20-39
-        row0 = "ASCII SPSS PORT FILE".ljust(40)
-        row1 = (" " * 20 + file_label[:20]).ljust(40)
-        w.write((row0 + row1 + " " * 120)[:200])
-        # translation table: position i → ASCII byte for that portable
-        # position; '0' for unmapped (identity for ASCII writers)
-        table = bytearray(b"0" * 256)
-        for pos_, ch in _POS_ASCII.items():
-            table[pos_] = ord(ch)
-        w.write(bytes(table))
-        w.write("SPSSPORT")
-        w.write("A")  # version
-        w.string(now.strftime("%Y%m%d"))
-        w.string(now.strftime("%H%M%S"))
-        w.write("1")
-        w.string("polars_readstat_spark")
-        w.write("4")
-        w.b30_int(len(fields))
+    w = _PorWriter(fh)
+    # vanity: 5 × 40 chars; file label surfaces in row 1 cols 20-39
+    row0 = "ASCII SPSS PORT FILE".ljust(40)
+    row1 = (" " * 20 + plan.data_label[:20]).ljust(40)
+    w.write((row0 + row1 + " " * 120)[:200])
+    # translation table: position i → ASCII byte for that portable
+    # position; '0' for unmapped (identity for ASCII writers)
+    table = bytearray(b"0" * 256)
+    for pos_, ch in _POS_ASCII.items():
+        table[pos_] = ord(ch)
+    w.write(bytes(table))
+    w.write("SPSSPORT")
+    w.write("A")  # version
+    w.string(now.strftime("%Y%m%d"))
+    w.string(now.strftime("%H%M%S"))
+    w.write("1")
+    w.string("polars_readstat_spark")
+    w.write("4")
+    w.b30_int(len(fields))
+    w.write("/")
+    w.write("5")
+    w.b30_int(20)
+    w.write("/")
+    for i, f in enumerate(fields):
+        k = kinds[i]
+        w.write("7")
+        w.b30_int(widths[i])
         w.write("/")
-        w.write("5")
-        w.b30_int(20)
-        w.write("/")
-        for i, f in enumerate(fields):
-            k = kinds[i]
-            w.write("7")
-            w.b30_int(widths[i])
-            w.write("/")
-            w.string(por_names[i])
-            if k == "str":
-                fmt = (1, min(widths[i], 255), 0)
-            elif k == "date":
-                fmt = (38, 10, 0)
-            elif k == "datetime":
-                fmt = (22, 20, 0)
-            elif k == "time":
-                fmt = (21, 8, 0)
-            else:
-                fmt = (5, 8, 2)
-            for _ in range(2):  # print format then write format
-                for x in fmt:
-                    w.b30_int(x)
-                    w.write("/")
-            label = variable_labels.get(f.name) or f.metadata.get("label") or ""
-            if label:
-                w.write("C")
-                w.string(label[:255])
-        w.write("F")
-        pos = w.pos
-        # the shortest-token ladder runs on the executors; the driver
-        # wraps the concatenated tokens at 80 columns
-        for payload, _n in packed_stream(
-            df, "por",
-            lambda f, extra: to_disk(f, "por", fields, kinds, extra=extra),
-            lambda pdf: _pack_por_chunk(pdf, kinds), rows=stats["__n"],
-            modules=(
-                "polars_readstat_spark.writers.por",
-                "polars_readstat_spark.sources.por.b30",
-            ),
-        ):
-            pos = _wrap_write(fh, payload, pos)
-        if pos:  # Z-fill the last line like _PorWriter.finish
-            fh.write(b"Z" * (LINE_LEN - pos) + b"\r\n")
+        w.string(por_names[i])
+        if k == "str":
+            fmt = (1, min(widths[i], 255), 0)
+        elif k == "date":
+            fmt = (38, 10, 0)
+        elif k == "datetime":
+            fmt = (22, 20, 0)
+        elif k == "time":
+            fmt = (21, 8, 0)
+        else:
+            fmt = (5, 8, 2)
+        for _ in range(2):  # print format then write format
+            for x in fmt:
+                w.b30_int(x)
+                w.write("/")
+        label = (
+            plan.variable_labels.get(f.name) or f.metadata.get("label") or ""
+        )
+        if label:
+            w.write("C")
+            w.string(label[:255])
+    w.write("F")
+    pos = w.pos
+    got = 0
+    for payload, n in payloads:
+        pos = _wrap_write(fh, payload, pos)
+        got += n
+    if pos:  # Z-fill the last line like _PorWriter.finish
+        fh.write(b"Z" * (LINE_LEN - pos) + b"\r\n")
+    return got

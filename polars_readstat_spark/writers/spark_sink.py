@@ -462,7 +462,7 @@ def convert_batches(
     _accumulate = acc.add
 
     if fmt == "dta":
-        # the dta packer (_pack_batch) consumes raw Arrow→pandas
+        # the dta pack (``dta.pack``) consumes raw Arrow→pandas
         # representations (datetime64, float-with-NaN ints, strings)
         # and does its own epoch/missing-sentinel conversions — only
         # the string widths are gathered here
@@ -632,27 +632,13 @@ def write_partition_file(staged_path, plan: PartPlan, frames) -> int:
     """Lay out ``plan``'s part-file at ``staged_path`` from pandas
     ``frames`` (consumed once, in order, empty frames skipped) with the
     format's one pack and assembler — the same two a single-file
-    export runs (``writers.layout``) — and return its row count. xpt
-    and sas7bdat stream frame by frame; the sav and dta headers carry
-    the row count, so those pack the whole partition first. The file
-    opens through ``export_output``: a failed write leaves no partial
-    file. No rows → no file, 0."""
+    export runs (``writers.layout``) — and return its row count. The
+    sav header carries the row count, so sav packs the whole
+    partition first; the other formats stream frame by frame (dta and
+    sas7bdat back-patch their counts). The file opens through
+    ``export_output``: a failed write leaves no partial file. No rows
+    → no file, 0."""
     frames = (pdf for pdf in frames if len(pdf))
-    if plan.fmt == "dta":
-        from polars_readstat_spark.writers.dta import (
-            _assemble_dta,
-            _pack_stream,
-        )
-
-        data, strls, n_rows = _pack_stream(plan.dta_cols, frames)
-        if n_rows:
-            out = _assemble_dta(
-                plan.dta_cols, data, strls, n_rows, plan.data_label,
-                plan.variable_labels, plan.value_labels,
-            )
-            with export_output(staged_path) as fh:
-                fh.write(out)
-        return n_rows
     mod = layout(plan.fmt)
     packed = ((mod.pack(plan, pdf), len(pdf)) for pdf in frames)
     n_rows = None

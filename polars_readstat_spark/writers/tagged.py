@@ -1,4 +1,5 @@
-"""Tagged-missing encode helpers shared by the SAS-family writers.
+"""Tagged-missing encode helpers shared by the SAS-family writers
+(the dta writer parses its indicators here too; Stata has no `._`).
 
 SAS distinguishes 28 kinds of missing (`.`, `.A`-`.Z`, `._`). Writers
 accept them through ``tagged_missing={"value_col": "indicator_col"}``:

@@ -87,18 +87,25 @@ def test_every_writer_reaches_one_tapped_transport(
     assert name == ("iter_ordered_packed" if fans_out else "iter_packed_chunks")
 
 
-def test_dta_strl_reaches_arrow_transport(spark, tmp_path, calls):
-    df = spark.range(20).select(
+def _strl_frame(spark, n=300, parts=3):
+    """A frame whose ``long`` strings pass 2045 bytes: dta writes
+    them as strL."""
+    return spark.range(n, numPartitions=parts).select(
         F.col("id").cast("double").alias("x"),
-        F.repeat(F.lit("q"), 2100).alias("long"),
+        F.concat(F.repeat(F.lit("q"), 2100), F.col("id")).alias("long"),
     )
+
+
+def test_dta_strl_reaches_one_packed_transport(spark, tmp_path, calls):
     import polars_readstat_spark as prs
 
-    prs.write_readstat(df, str(tmp_path / "strl.dta"))
-    assert [c[0] for c in calls] == ["iter_arrow_chunks"]
+    prs.write_readstat(_strl_frame(spark, n=20), str(tmp_path / "strl.dta"))
+    assert [c[0] for c in calls] in (
+        ["iter_packed_chunks"], ["iter_ordered_packed"]
+    )
 
 
-@pytest.mark.parametrize("fmt", ["sav", "zsav", "xpt", "por", "dta"])
+@pytest.mark.parametrize("fmt", ["sav", "zsav", "xpt", "por", "dta", "dta_strl"])
 def test_stream_short_of_header_count_raises_and_leaves_no_file(
     spark, tmp_path, monkeypatch, fmt
 ):
@@ -112,9 +119,10 @@ def test_stream_short_of_header_count_raises_and_leaves_no_file(
         yield from items[:-1]
 
     monkeypatch.setattr(w, "iter_packed_chunks", drop_last)
-    path = str(tmp_path / f"short.{fmt}")
+    frame = _strl_frame(spark) if fmt == "dta_strl" else _frame(spark)
+    path = str(tmp_path / f"short.{fmt.split('_')[0]}")
     with pytest.raises(RuntimeError, match=r"300 rows.* delivered 200"):
-        _write(_frame(spark), path, fmt)
+        _write(frame, path, fmt)
     assert not os.path.exists(path)
 
 

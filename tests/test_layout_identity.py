@@ -13,7 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.test_transport_equivalence import _masked
+from tests.test_transport_equivalence import _masked, with_strl
 
 # case -> (extension, single-file / partitioned keyword arguments)
 CASES = {
@@ -25,6 +25,7 @@ CASES = {
     "sas7bdat_rle": ("sas7bdat", {"compress": "rle"}),
     "sas7bdat_rdc": ("sas7bdat", {"compress": "rdc"}),
     "dta": ("dta", {}),
+    "dta_strl": ("dta", {}),
 }
 SINK_CASES = ("sav", "xpt5", "sas7bdat")
 
@@ -67,10 +68,14 @@ def single(frame, tmp_path_factory):
         if case not in out:
             ext, kw = CASES[case]
             out[case] = str(root / f"{case}.{ext}")
-            prs.write_readstat(frame, out[case], **kw)
+            prs.write_readstat(_input(frame, case), out[case], **kw)
         return _masked(out[case])
 
     return get
+
+
+def _input(frame, case):
+    return with_strl(frame) if case == "dta_strl" else frame
 
 
 def _only_part(d: str, ext: str) -> str:
@@ -87,7 +92,7 @@ def test_partitioned_export_writes_the_single_file_bytes(
 
     ext, kw = CASES[case]
     d = str(tmp_path / "part")
-    prs.write_readstat_partitioned(frame, d, ext=ext, **kw)
+    prs.write_readstat_partitioned(_input(frame, case), d, ext=ext, **kw)
     assert _masked(_only_part(d, ext)) == single(case)
 
 

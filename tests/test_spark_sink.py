@@ -124,6 +124,26 @@ def test_missing_format_option_is_a_clear_error(spark, src, tmp_path):
         )
 
 
+def test_por_sink_is_refused_before_any_job(spark, tmp_path):
+    """por is a single-file format: the sink refuses it while planning,
+    and no job starts. The frame has no shuffle: adaptive execution
+    runs a shuffle's map stage before it plans the write."""
+    df = spark.range(10).select(
+        F.col("id").cast("double").alias("x"), F.lit("a").alias("s")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("prs-por-sink", "no job may start")
+    try:
+        with pytest.raises(Exception, match="got 'por'"):
+            df.write.format("readstat").option("format", "por").mode(
+                "overwrite"
+            ).save(str(tmp_path / "por"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("prs-por-sink") == []
+    assert not os.path.exists(tmp_path / "por")
+
+
 def test_rle_compress_option(spark, tmp_path):
     df = spark.range(3000).repartition(2).select(
         F.col("id").cast("double").alias("v"),

@@ -22,6 +22,7 @@ CASES = {
     "xpt8": ("xpt", {"tagged_missing": {"num": "t"}, "version": 8}),
     "por": ("por", {}),
     "dta": ("dta", {"tagged_missing": {"num": "t"}}),
+    "dta_strl": ("dta", {}),
     "sas7bdat": ("sas7bdat", {"tagged_missing": {"num": "t"}}),
     "sas7bdat_rle": ("sas7bdat", {"tagged_missing": {"num": "t"}, "compress": "rle"}),
 }
@@ -54,6 +55,19 @@ def _columns(ids):
         .when(F.col("id") % 5 == 2, F.lit("."))
         .otherwise(F.lit(""))  # SPSS strings have no null
         .alias("t"),
+    )
+
+
+def with_strl(df):
+    """``df`` plus a ``long`` string column past 2045 bytes (dta
+    writes it as strL), empty where ``num`` is null. One strL column:
+    <strls> holds each chunk's GSO records column by column, so with
+    two the record order follows the chunking."""
+    return df.withColumn(
+        "long",
+        F.when(F.col("num").isNull(), F.lit("")).otherwise(
+            F.concat(F.repeat(F.lit("q"), 2046), F.col("str"))
+        ),
     )
 
 
@@ -132,9 +146,10 @@ def test_ordered_and_narrow_transports_write_identical_files(
     spark, tmp_path, monkeypatch, frame, case
 ):
     ext, kw = CASES[case]
-    out = _write_both(frame, ext, kw, tmp_path, monkeypatch)
+    df = with_strl(frame) if case == "dta_strl" else frame
+    out = _write_both(df, ext, kw, tmp_path, monkeypatch)
     assert _masked(out["ordered"]) == _masked(out["narrow"])
-    assert _read_back(spark, out["narrow"]) == _expected(frame, "tagged_missing" in kw)
+    assert _read_back(spark, out["narrow"]) == _expected(df, "tagged_missing" in kw)
 
 
 def test_many_partition_drain_keeps_input_order(spark, tmp_path, monkeypatch):
