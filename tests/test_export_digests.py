@@ -1,8 +1,12 @@
-"""Byte pins for the dta and por exports: the SHA-256 of each file
-(creation timestamps masked) written by ``write_readstat`` from a
-3-partition input, so every layout change must reproduce the exact
-bytes. The strL case spreads its GSO keys over all three partitions,
-so a key numbered from the wrong row offset changes the digest."""
+"""Byte pins for the dta, por and sas7bdat exports: the SHA-256 of
+each file (creation timestamps masked) written by ``write_readstat``
+from a 3-partition input, so every layout change must reproduce the
+exact bytes. The strL case spreads its GSO keys over all three
+partitions, so a key numbered from the wrong row offset changes the
+digest. The sas7bdat cases use a small page, so plain and compressed
+pages span the chunk boundaries; the ``_wide`` cases have rows over
+4,114 bytes with blank runs longer than one command covers, which
+take the scalar rle/rdc encoders."""
 
 from __future__ import annotations
 
@@ -70,6 +74,49 @@ def _strl(ids):
     )
 
 
+def _wide(ids):
+    # rows with id % 4 == 1 are hex digests in every column, which
+    # neither codec shortens, so they are stored raw; the others carry
+    # blank runs over 4,114 bytes
+    idc = F.col("id")
+    noise = idc % 4 == 1
+
+    def hexes(salt, width):
+        h = F.sha2(F.concat(F.lit(salt), idc.cast("string")), 256)
+        return F.substring(F.repeat(h, width // 64 + 1), 1, width)
+
+    return ids.select(
+        F.when(noise, F.xxhash64(idc).cast("double"))
+        .when(idc % 7 == 0, None)
+        .otherwise(idc * 1.25)
+        .alias("x"),
+        F.when(noise, hexes("p", 4600))
+        .otherwise(F.rpad(F.concat(F.lit("w"), idc), 4600, " "))
+        .alias("pad"),
+        F.when(noise, hexes("s", 96))
+        .otherwise(F.concat(F.repeat(F.lit("ab"), (idc % 40).cast("int")), idc))
+        .alias("s"),
+        F.when(noise, hexes("z", 300))
+        .when(idc % 3 == 0, F.repeat(F.lit("z"), 300))
+        .otherwise(F.lit(""))
+        .alias("z"),
+    )
+
+
+def _sas(compress=None):
+    kw = {
+        "page_length": 4096,
+        "variable_labels": {"x": "an x"},
+        "tagged_missing": {"x": "tx", "f": "tf"},
+        "numeric_lengths": {"b": 3, "i": 4},
+    }
+    return (
+        "sas7bdat",
+        lambda ids: _fixed(ids, _tags("tx", 5), _tags("tf", 4)),
+        dict(kw, compress=compress) if compress else kw,
+    )
+
+
 # case -> (extension, frame builder, write_readstat keyword arguments)
 CASES = {
     "dta_fixed": (
@@ -92,6 +139,11 @@ CASES = {
         lambda ids: _fixed(ids).drop("big"),
         {"data_label": "pinned", "variable_labels": {"x": "an x"}},
     ),
+    "sas7bdat": _sas(),
+    "sas7bdat_rle": _sas("rle"),
+    "sas7bdat_rdc": _sas("rdc"),
+    "sas7bdat_rle_wide": ("sas7bdat", _wide, {"compress": "rle", "page_length": 8192}),
+    "sas7bdat_rdc_wide": ("sas7bdat", _wide, {"compress": "rdc", "page_length": 8192}),
 }
 
 DIGESTS = {
@@ -99,6 +151,11 @@ DIGESTS = {
     "dta_tagged": "8f0452db0fba8f4b2389513c84a1fc34dfcbcfbb27ee9c0d46085f0ab997f65f",
     "dta_strl": "fb927d3854e6b7864d1c192f0071b2be43e0a04aaa2aeb7996a0a227be03bd0c",
     "por": "3fc2e814abae7e6b8c0ce7b127096fd49c9d3d28ce098fbf6419194fdaf2356b",
+    "sas7bdat": "086a621b044953a89332c8fbe141a3e20f1744ce189733e276d8addef0049fc2",
+    "sas7bdat_rle": "a3d7a5b3033c287cd2149b2ad3edafd1bb3f3d4b4bd4d6eabc9143f29a4da9d5",
+    "sas7bdat_rdc": "03c5e887d48c797a2eeb9030f83aacb39580f7fce03d5e88e3d5b8ea0c2def06",
+    "sas7bdat_rle_wide": "64d21341313b93360341990fe01bc3d3d17ba45aa40eab2a67b6db3d8123983e",
+    "sas7bdat_rdc_wide": "3b75b6c8f56a640c64ed70be9e860a2fd8db8030c9ea5cfbe3458e77b2559acf",
 }
 
 
