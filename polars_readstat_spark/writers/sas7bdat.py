@@ -17,6 +17,16 @@ memory-bounded regardless of row count. ``pack`` and ``assemble`` are
 the one sas7bdat layout, run by the single-file export and, in its
 task, by the part-file writer.
 
+Each codec has two encoders: a scalar one, ``_X_encode_rows_scalar``,
+which is the spec, the test reference and the path for rows wider
+than one command covers, and a numpy-vectorized ``_X_encode_rows``
+that matches it byte for byte. A compressed chunk travels from
+``pack`` to ``assemble`` unframed: the row blobs back to back, then
+``lens`` (<i4 per row) and ``comps`` (u8 per row, 1 = encoded, 0 =
+raw); the row count comes with the payload. The assembler greedily
+fills META pages from those arrays, copying each page's blobs with
+one slice.
+
 Independently verified: files written here are read back by
 ``pandas.read_sas`` (a reader we do not control) bit-for-bit equal to
 the source frame — see tests/test_sas7bdat_writer.py.
@@ -89,93 +99,9 @@ def _collides_with_signature(raw: bytes) -> bool:
     return bool(_META_SIGS.get(raw[:8]) or _META_SIGS.get(raw[:4]))
 
 
-def _rle_encode_row(arr: np.ndarray) -> bytes | None:
-    """SASYZCRL-encode one row (uint8 vector). Returns None when the
-    encoding is not strictly shorter than the raw row (both readers
-    treat length == row_length as an uncompressed row).
-
-    Exact inverse of sources/sas7bdat/pages.py:rle_decompress — the
-    public control-byte table: literal copies (0x8-0xB short, 0x0
-    long), same-byte runs (0xC short / 0x4 long), and dedicated
-    zero/blank/'@' runs (0xF/0xE/0xD short, 0x7/0x6/0x5 long)."""
-    n = arr.shape[0]
-    if n == 0:
-        return None
-    bounds = np.flatnonzero(arr[1:] != arr[:-1]) + 1
-    starts = np.concatenate(([0], bounds))
-    ends = np.concatenate((bounds, [n]))
-    out = bytearray()
-    lit0 = lit1 = 0  # pending literal span [lit0, lit1)
-
-    def emit_literal(a: int, b: int) -> None:
-        i = a
-        while i < b:
-            take = min(b - i, 4159)
-            if not out and take > 64:
-                take = 64  # first command stays in 0x80-0xBF
-            if take <= 16:
-                out.append(0x80 | (take - 1))
-            elif take <= 32:
-                out.append(0x90 | (take - 17))
-            elif take <= 48:
-                out.append(0xA0 | (take - 33))
-            elif take <= 64:
-                out.append(0xB0 | (take - 49))
-            else:
-                out.append((take - 64) >> 8)
-                out.append((take - 64) & 0xFF)
-            out.extend(arr[i : i + take].tobytes())
-            i += take
-
-    for s, e in zip(starts, ends):
-        b = int(arr[s])
-        L = e - s
-        special = 0x70 if b == 0 else 0x60 if b == 0x20 else 0x50 if b == 0x40 else 0
-        if L < (3 if special else 4):
-            lit1 = e
-            continue
-        if lit1 > lit0:
-            emit_literal(lit0, lit1)
-        if not out:  # a run may not open the stream (signature guard)
-            emit_literal(s, s + 1)
-            s += 1
-            L -= 1
-        while L > 0:
-            if special:
-                if L > 17:
-                    take = min(L, 4112)
-                    out.append(special | ((take - 17) >> 8))
-                    out.append((take - 17) & 0xFF)
-                else:
-                    take = max(L, 2)  # L >= 2 by threshold
-                    out.append((special | 0x80) | (take - 2))
-            else:
-                if L > 18:
-                    take = min(L, 4113)
-                    out.append(0x40 | ((take - 18) >> 8))
-                    out.append((take - 18) & 0xFF)
-                    out.append(b)
-                else:
-                    take = L  # >= 4 (or remainder >= ... see below)
-                    if take < 3:
-                        # leftover shorter than the short form: literal
-                        emit_literal(e - take, e)
-                        break
-                    out.append(0xC0 | (take - 3))
-                    out.append(b)
-            L -= take
-            if 0 < L < (2 if special else 3):
-                emit_literal(e - L, e)
-                L = 0
-        lit0 = lit1 = e
-    if lit1 > lit0:
-        emit_literal(lit0, lit1)
-    return bytes(out) if len(out) < n else None
-
-
 def _rle_encode_rows(mat: np.ndarray) -> list:
-    """Batch SASYZCRL encode — byte-identical per row to
-    _rle_encode_row (property-tested against it).
+    """Batch SASYZCRL encode — byte-identical per row to the spec,
+    _rle_encode_rows_scalar (property-tested against it).
 
     Fully numpy-vectorized for row_length <= 4112 (the tightest
     single-command limit: a special run's long form covers 4112
@@ -193,7 +119,7 @@ def _rle_encode_rows(mat: np.ndarray) -> list:
     Pieces are assembled as parallel arrays, ordered with one global
     argsort, and scattered into a flat buffer (headers by case mask,
     literal bytes via a repeat/cumsum gather); per-row Python is just
-    the final slice. Wider rows fall back to the per-row assembly."""
+    the final slice. Wider rows take the scalar spec encoder."""
     r, rl = mat.shape
     if rl == 0 or r == 0:
         return [None] * r
@@ -358,8 +284,17 @@ def _rle_encode_rows(mat: np.ndarray) -> list:
 
 
 def _rle_encode_rows_scalar(mat: np.ndarray) -> list:
-    """Per-row-assembly fallback for rows wider than one command can
-    cover (row_length > 4112). Byte-identical to _rle_encode_row."""
+    """SASYZCRL-encode each row of a (rows, row_length) uint8 matrix:
+    the spec encoder, the test reference for _rle_encode_rows and its
+    path for rows wider than one command covers (row_length > 4112).
+    A row's entry is None when its encoding is not strictly shorter
+    than the row (both readers treat length == row_length as an
+    uncompressed row).
+
+    Exact inverse of sources/sas7bdat/pages.py:rle_decompress — the
+    public control-byte table: literal copies (0x8-0xB short, 0x0
+    long), same-byte runs (0xC short / 0x4 long), and dedicated
+    zero/blank/'@' runs (0xF/0xE/0xD short, 0x7/0x6/0x5 long)."""
     r, rl = mat.shape
     if rl == 0 or r == 0:
         return [None] * r
@@ -453,70 +388,9 @@ def _rle_encode_rows_scalar(mat: np.ndarray) -> list:
     return results
 
 
-def _rdc_encode_row(arr: np.ndarray) -> bytes | None:
-    """SASYZCR2-encode one row (uint8 vector). Returns None when the
-    encoding is not strictly shorter than the raw row, or when the
-    compressed stream would collide with a subheader signature prefix
-    (a literal-opening RDC stream begins with a 0x0000 control word,
-    so the guard matters here where RLE's 0x80-0xBF first byte made
-    it structurally impossible).
-
-    Exact inverse of sources/sas7bdat/pages.py:rdc_decompress's
-    literal and RLE forms: 16-bit big-endian control words, clear bit
-    = one literal byte, set bit = a command group — short RLE
-    (0x0n + value, runs 3..18) or long RLE (0x1n + count + value,
-    runs 19..4114). The format's LZ pattern commands are decoder-side
-    freedom this encoder doesn't use; every conforming decompressor
-    (ours, pandas, readstat) accepts literal+RLE-only streams."""
-    n = arr.shape[0]
-    if n == 0:
-        return None
-    bounds = np.flatnonzero(arr[1:] != arr[:-1]) + 1
-    starts = np.concatenate(([0], bounds))
-    ends = np.concatenate((bounds, [n]))
-    # items: (bit, payload) — literal items are single bytes
-    items: list[tuple[int, bytes]] = []
-    row = arr.tobytes()
-    for s, e in zip(starts, ends):
-        L = e - s
-        if L < 3:
-            for k in range(s, e):
-                items.append((0, row[k : k + 1]))
-            continue
-        b = row[s : s + 1]
-        while L > 0:
-            if L > 18:
-                take = min(L, 4114)
-                cnt = take - 19
-                items.append(
-                    (1, bytes([0x10 | (cnt & 0x0F), cnt >> 4]) + b)
-                )
-            elif L >= 3:
-                take = L
-                items.append((1, bytes([0x00 | (take - 3)]) + b))
-            else:  # 1-2 leftover bytes after a long run
-                take = L
-                for _ in range(take):
-                    items.append((0, b))
-            L -= take
-    out = bytearray()
-    for c in range(0, len(items), 16):
-        chunk = items[c : c + 16]
-        ctrl = 0
-        for pos, (bit, _) in enumerate(chunk):
-            ctrl |= bit << (15 - pos)
-        out += ctrl.to_bytes(2, "big")
-        for _, payload in chunk:
-            out += payload
-    if len(out) >= n:
-        return None
-    enc = bytes(out)
-    return None if _collides_with_signature(enc) else enc
-
-
 def _rdc_encode_rows(mat: np.ndarray) -> list:
-    """Batch SASYZCR2 encode — byte-identical per row to
-    _rdc_encode_row (property-tested against it).
+    """Batch SASYZCR2 encode — byte-identical per row to the spec,
+    _rdc_encode_rows_scalar (property-tested against it).
 
     Fully numpy-vectorized: when every run fits one command word
     (row_length <= 4114, so take == L always and the while-loop in the
@@ -613,9 +487,23 @@ def _rdc_encode_rows(mat: np.ndarray) -> list:
 
 
 def _rdc_encode_rows_scalar(mat: np.ndarray) -> list:
-    """Per-row-assembly fallback for rows wider than one long-RLE
-    command can cover (row_length > 4114), where a single run may need
-    several command words. Byte-identical to _rdc_encode_row."""
+    """SASYZCR2-encode each row of a (rows, row_length) uint8 matrix:
+    the spec encoder, the test reference for _rdc_encode_rows and its
+    path for rows wider than one long-RLE command covers (row_length >
+    4114), where a single run may need several command words. A row's
+    entry is None when its encoding is not strictly shorter than the
+    row, or when it would collide with a subheader signature prefix (a
+    literal-opening RDC stream begins with a 0x0000 control word, so
+    the guard matters here where RLE's 0x80-0xBF first byte makes it
+    structurally impossible).
+
+    Exact inverse of sources/sas7bdat/pages.py:rdc_decompress's
+    literal and RLE forms: 16-bit big-endian control words, clear bit
+    = one literal byte, set bit = a command group — short RLE
+    (0x0n + value, runs 3..18) or long RLE (0x1n + count + value,
+    runs 19..4114). The format's LZ pattern commands are decoder-side
+    freedom this encoder doesn't use; every conforming decompressor
+    (ours, pandas, readstat) accepts literal+RLE-only streams."""
     r, rl = mat.shape
     if rl == 0 or r == 0:
         return [None] * r
@@ -848,49 +736,7 @@ def _build_header(dataset_name: str, page_length: int) -> bytes:
     return bytes(h)
 
 
-def _encode_packed(packed: bytes, row_length: int, comp: str) -> bytes:
-    """RLE/RDC-encode a packed fixed-width chunk into the sink's
-    per-row framing (<BI compressed-flag, length> + payload), plus a
-    numpy-parseable footer [lens i32×n][comps u8×n][<I n>][b"SLEN"]
-    so the driver can assemble pages WITHOUT walking 5-byte headers
-    per row — the per-row driver loop was ~2 s of a 5 s compressed
-    export (round 10). Pure — runs on executors in either the single-
-    or two-stage pack path; write_encoded falls back to the header
-    walk when the footer is absent."""
-    import io
-    import struct as _st
-
-    rows = np.frombuffer(packed, np.uint8).reshape(-1, row_length)
-    enc_rows = _rdc_encode_rows if comp == "rdc" else _rle_encode_rows
-    encoded = enc_rows(rows)
-    n = rows.shape[0]
-    lens = np.empty(n, dtype="<i4")
-    comps = np.empty(n, dtype=np.uint8)
-    out = io.BytesIO()
-    for j in range(n):
-        e = encoded[j]
-        if e is None:
-            raw = rows[j].tobytes()
-            if _collides_with_signature(raw):
-                raise ValueError(
-                    "write_sas7bdat: incompressible row collides with a "
-                    "subheader signature prefix; write without compress"
-                )
-            out.write(_st.pack("<BI", 0, len(raw)))
-            out.write(raw)
-            lens[j], comps[j] = len(raw), 0
-        else:
-            out.write(_st.pack("<BI", 1, len(e)))
-            out.write(e)
-            lens[j], comps[j] = len(e), 1
-    out.write(lens.tobytes())
-    out.write(comps.tobytes())
-    out.write(_st.pack("<I", n))
-    out.write(b"SLEN")
-    return out.getvalue()
-
-
-def _pack_rows(cols_data, kinds, widths, row_length, tags_data=None) -> bytes:
+def _pack_rows(cols_data, kinds, widths, row_length, tags_data=None) -> np.ndarray:
     """Column-wise vectorized row packing: (n, row_length) uint8.
 
     tags_data: optional per-column list of tag-offset arrays (None for
@@ -923,7 +769,7 @@ def _pack_rows(cols_data, kinds, widths, row_length, tags_data=None) -> bytes:
                         offs[tagged]
                     )
         off += w
-    return mat.tobytes()
+    return mat
 
 
 class _SasFileSink:
@@ -963,10 +809,11 @@ class _SasFileSink:
         self.pending = bytearray()
         self.n_rows = 0
         self.n_data_pages = 0
-        # compressed layout: rows pending for the current META page as
-        # (blob, is_compressed); bodies pack after the pointer array
-        self._crows: list[tuple[bytes, bool]] = []
-        self._crows_bytes = 0
+        # compressed layout: the rows not yet on a page, as their blobs
+        # back to back plus per-row lengths and compressed flags
+        self._blobs = b""
+        self._lens = np.empty(0, dtype=np.int64)
+        self._comps = np.empty(0, dtype=np.uint8)
 
     def write_packed(self, packed: bytes, n: int) -> None:
         """Append pre-packed uncompressed row bytes (n rows)."""
@@ -980,196 +827,65 @@ class _SasFileSink:
             del self.pending[:chunk]
 
     def write_encoded(self, payload: bytes, n: int) -> None:
-        """Append n executor-encoded rows from the staged frame: a
-        [u8 is_compressed][u32 len][blob] sequence per row, followed
-        (new executors) by the SLEN footer — see _encode_packed.
-
-        With the footer, page assembly is vectorized: blob lengths
-        come from one frombuffer, whole pages cut with searchsorted,
-        the pointer array built as one structured numpy write and the
-        blob block copied with ONE slice per page (frames store blobs
-        consecutively and META pages pack them consecutively in the
-        same order). The legacy path walks headers per row."""
-        if n > 0 and payload[-4:] == b"SLEN":
-            nf = struct.unpack_from("<I", payload, len(payload) - 8)[0]
-            foot = 8 + nf + 4 * nf
-            if nf == n and len(payload) >= foot:
-                lens = np.frombuffer(
-                    payload, "<i4", count=n, offset=len(payload) - foot
-                ).astype(np.int64)
-                comps = np.frombuffer(
-                    payload, np.uint8, count=n,
-                    offset=len(payload) - 8 - n,
-                )
-                if int(lens.sum()) + 5 * n + foot == len(payload):
-                    self._append_encoded_vec(
-                        payload[: len(payload) - foot], lens, comps
-                    )
-                    self.n_rows += n
-                    return
-        i = 0
-        for _ in range(n):
-            comp, ln = struct.unpack_from("<BI", payload, i)
-            i += 5
-            self._append_blob(payload[i : i + ln], bool(comp))
-            i += ln
+        """Append n rows compressed by ``pack``. A page is written once
+        the next row no longer fits it; the last, possibly partial,
+        page stays pending, so the bytes do not depend on how the rows
+        are chunked. A payload whose lengths do not add up raises
+        before any of its rows reaches a page."""
+        size = len(payload) - 5 * n
+        lens = (
+            np.frombuffer(payload, "<i4", n, size).astype(np.int64)
+            if size >= 0
+            else None
+        )
+        if lens is None or lens.min(initial=1) < 1 or int(lens.sum()) != size:
+            raise RuntimeError(
+                f"write_sas7bdat: a {len(payload)}-byte payload does not "
+                f"hold the {n} compressed rows its lengths describe"
+            )
+        blobs = memoryview(self._blobs + memoryview(payload)[:size])
+        lens = np.concatenate((self._lens, lens))
+        comps = np.concatenate(
+            (self._comps, np.frombuffer(payload, np.uint8, n, size + 4 * n))
+        )
+        ends = np.cumsum(lens)
+        cap = self.page_length - (BIT_OFFSET + 8)
+        # a page holds at most cap // (PTR_LEN + 1) rows, so the greedy
+        # fit only ever inspects that many lengths per page
+        window = cap // (PTR_LEN + 1) + 1
+        done = lo = 0
+        while True:
+            w = min(lens.size - done, window)
+            used = ends[done : done + w] - lo + PTR_LEN * np.arange(1, w + 1)
+            k = max(int(np.searchsorted(used, cap, side="right")), 1)
+            if done + k >= lens.size:
+                break
+            hi = int(ends[done + k - 1])
+            self._emit_rows(
+                blobs[lo:hi], lens[done : done + k], comps[done : done + k]
+            )
+            done, lo = done + k, hi
+        self._blobs = bytes(blobs[lo:])
+        self._lens, self._comps = lens[done:], comps[done:]
         self.n_rows += n
 
-    def _append_encoded_vec(
-        self, frames: bytes, lens: np.ndarray, comps: np.ndarray
-    ) -> None:
-        """Vectorized META-page assembly of framed rows. Rows already
-        pending in _crows ride along: they're prepended so page
-        fitting sees one ordered sequence, and the LAST (possibly
-        partial) greedy group always goes back to _crows — the
-        per-row writer only flushes a page when the NEXT row
-        overflows it, so deferring the tail keeps the output
-        byte-identical whether rows arrive singly or in chunks
-        (close() flushes the remainder the same way)."""
-        n = lens.shape[0]
-        # blob start offsets inside `frames` (each blob sits 5 bytes
-        # after its frame start; frame k starts at sum of (5+len) of
-        # the frames before it)
-        starts = np.empty(n, dtype=np.int64)
-        starts[0] = 5
-        if n > 1:
-            np.cumsum(lens[:-1] + 5, out=starts[1:])
-            starts[1:] += 5
-        pend = self._crows
-        npend = len(pend)
-        pend_lens = (
-            np.array([len(b) for b, _ in pend], dtype=np.int64)
-            if pend
-            else np.empty(0, dtype=np.int64)
-        )
-        all_lens = (
-            np.concatenate([pend_lens, lens]) if npend else lens
-        )
-        total = all_lens.shape[0]
-        cap = self.page_length - (BIT_OFFSET + 8)
-        csum = np.cumsum(all_lens)
-        # a page holds at most cap // (PTR_LEN + 1) rows, so the
-        # greedy fit only ever inspects a bounded window per page
-        max_rows = cap // (PTR_LEN + 1) + 1
-        done = 0
-        while True:
-            base_bytes = int(csum[done - 1]) if done else 0
-            win = min(total - done, max_rows)
-            rel = (
-                csum[done : done + win]
-                - base_bytes
-                + PTR_LEN * np.arange(1, win + 1, dtype=np.int64)
-            )
-            k = int(np.searchsorted(rel, cap, side="right"))
-            if k <= 0:
-                k = 1  # page_length admits >=1 row by construction
-            if done + k >= total:
-                break  # last greedy group stays pending
-            self._emit_meta_page(
-                frames, starts, lens, comps, pend, done, k, all_lens
-            )
-            done += k
-        # rebuild the pending tail
-        tail: list = []
-        for j in range(done, total):
-            if j < npend:
-                tail.append(pend[j])
-            else:
-                jj = j - npend
-                s = int(starts[jj])
-                tail.append(
-                    (frames[s : s + int(lens[jj])], bool(comps[jj]))
-                )
-        self._crows = tail
-        self._crows_bytes = int(sum(len(b) for b, _ in tail))
-
-    def _emit_meta_page(
-        self, frames, starts, lens, comps, pend, done, k, all_lens
-    ) -> None:
-        npend = len(pend)
+    def _emit_rows(self, blobs, lens: np.ndarray, comps: np.ndarray) -> None:
+        """One META page whose subheaders are the given compressed-layout
+        rows: the pointer array, then the blobs in one copy."""
+        k = lens.size
+        base = BIT_OFFSET + 8 + PTR_LEN * k
+        ptr = np.zeros((k, PTR_LEN), dtype=np.uint8)
+        offs = base + np.cumsum(lens) - lens
+        ptr[:, 0:8] = offs.astype("<u8").view(np.uint8).reshape(k, 8)
+        ptr[:, 8:16] = lens.astype("<u8").view(np.uint8).reshape(k, 8)
+        ptr[:, 16] = np.where(comps != 0, 4, 0)  # COMPRESSED_SUBHEADER_ID
+        ptr[:, 17] = 1  # COMPRESSED_SUBHEADER_TYPE
         page = bytearray(self.page_length)
         struct.pack_into("<4H", page, BIT_OFFSET, 0x0000, k, k, 0)
-        base = BIT_OFFSET + 8 + PTR_LEN * k
-        # pointer block: one structured write per field
-        ptr = np.zeros((k, PTR_LEN), dtype=np.uint8)
-        offs_out = np.full(k, base, dtype=np.int64)
-        if k > 1:
-            offs_out[1:] += np.cumsum(all_lens[done : done + k - 1])
-        ptr[:, 0:8] = offs_out.astype("<u8").view(np.uint8).reshape(k, 8)
-        ptr[:, 8:16] = (
-            all_lens[done : done + k]
-            .astype("<u8")
-            .view(np.uint8)
-            .reshape(k, 8)
-        )
-        pos = base
-        # blobs: pending rows (if any) one by one, then ONE slice for
-        # the contiguous new-frame run
-        rows_from_pend = max(0, min(npend - done, k))
-        for j in range(done, done + rows_from_pend):
-            blob, comp = pend[j]
-            page[pos : pos + len(blob)] = blob
-            ptr[j - done, 16] = 4 if comp else 0
-            ptr[j - done, 17] = 1
-            pos += len(blob)
-        new_lo = max(done, npend) - npend
-        new_hi = done + k - npend  # > new_lo iff new rows in page
-        if new_hi > new_lo:
-            s0 = int(starts[new_lo]) - 5  # include row new_lo's header
-            s1 = int(starts[new_hi - 1] + lens[new_hi - 1])
-            span = frames[s0:s1]
-            # strip the 5-byte headers: build one contiguous blob run
-            if new_hi - new_lo == 1:
-                blob_run = span[5:]
-            else:
-                arr = np.frombuffer(span, np.uint8)
-                keep = np.ones(arr.shape[0], dtype=bool)
-                hdr_starts = (
-                    starts[new_lo:new_hi] - 5 - s0
-                ).astype(np.int64)
-                drop = (
-                    hdr_starts[:, None] + np.arange(5)[None, :]
-                ).reshape(-1)
-                keep[drop] = False
-                blob_run = arr[keep].tobytes()
-            page[pos : pos + len(blob_run)] = blob_run
-            pos += len(blob_run)
-            sl = slice(rows_from_pend, k)
-            ptr[sl, 16] = np.where(comps[new_lo:new_hi] != 0, 4, 0)
-            ptr[sl, 17] = 1
         page[BIT_OFFSET + 8 : base] = ptr.tobytes()
+        page[base : base + len(blobs)] = blobs
         self.fh.write(page)
         self.n_data_pages += 1
-
-    def _append_blob(self, blob: bytes, comp: bool) -> None:
-        need = PTR_LEN + len(blob)
-        avail = self.page_length - (BIT_OFFSET + 8) - (
-            PTR_LEN * len(self._crows) + self._crows_bytes
-        )
-        if self._crows and need > avail:
-            self._flush_compressed_page()
-        self._crows.append((blob, comp))
-        self._crows_bytes += len(blob)
-
-    def _flush_compressed_page(self) -> None:
-        if not self._crows:
-            return
-        nsub = len(self._crows)
-        page = bytearray(self.page_length)
-        # META-type page whose subheaders are the compressed rows
-        struct.pack_into("<4H", page, BIT_OFFSET, 0x0000, nsub, nsub, 0)
-        pos = BIT_OFFSET + 8 + PTR_LEN * nsub
-        for i, (blob, comp) in enumerate(self._crows):
-            p = BIT_OFFSET + 8 + PTR_LEN * i
-            struct.pack_into("<QQ", page, p, pos, len(blob))
-            page[p + 16] = 4 if comp else 0  # COMPRESSED_SUBHEADER_ID
-            page[p + 17] = 1  # COMPRESSED_SUBHEADER_TYPE
-            page[pos : pos + len(blob)] = blob
-            pos += len(blob)
-        self.fh.write(page)
-        self.n_data_pages += 1
-        self._crows.clear()
-        self._crows_bytes = 0
 
     def _emit_page(self, rows_bytes, nrows) -> None:
         page = bytearray(self.page_length)
@@ -1179,7 +895,8 @@ class _SasFileSink:
         self.n_data_pages += 1
 
     def close(self) -> None:
-        self._flush_compressed_page()
+        if self._lens.size:
+            self._emit_rows(self._blobs, self._lens, self._comps)
         if self.pending:
             self._emit_page(
                 self.pending, len(self.pending) // max(self.row_length, 1)
@@ -1203,12 +920,14 @@ def write_sas7bdat(
     tagged_missing: dict | None = None,
     numeric_lengths: dict | None = None,
 ) -> None:
-    """Write a Spark DataFrame as an uncompressed 64-bit LE sas7bdat.
+    """Write a Spark DataFrame as a 64-bit LE sas7bdat: plain DATA
+    pages, or row-compressed META pages with ``compress='rle'`` or
+    ``compress='rdc'``.
 
     Same two-phase shape as the other single-file writers: one
     pre-pass aggregation resolves string widths, then the executors
     pack (and RLE/RDC-encode) row chunks that the driver drains in
-    input order (``writers.packed_stream``) onto DATA pages. Use
+    input order (``writers.packed_stream``) onto pages. Use
     ``write_sas7bdat_partitioned`` for the distributed bulk-export
     path.
 
@@ -1231,24 +950,44 @@ def write_sas7bdat(
 
 def pack(plan, pdf) -> bytes:
     """One chunk's fixed-width rows (tagged missings from the indicator
-    columns at the chunk's tail), RLE/RDC-encoded with the page
-    footer when ``plan.compress`` (``_encode_packed``): the one
-    sas7bdat pack, run on the executors for a single-file export and
-    inside the task for a part-file. Rows are independent, so the
-    expensive work parallelizes; the assembler only lays out pages.
-    The reference's sink is single-threaded end to end."""
+    columns at the chunk's tail): the one sas7bdat pack, run on the
+    executors for a single-file export and inside the task for a
+    part-file. Rows are independent, so the expensive work
+    parallelizes; the assembler only lays out pages. The reference's
+    sink is single-threaded end to end.
+
+    Plain: the rows back to back. With ``plan.compress``: each row's
+    RLE/RDC blob (the raw row where encoding does not shorten it) back
+    to back, then ``lens`` as <i4×n and ``comps`` as u8×n (1 =
+    encoded). A raw row whose leading bytes spell a subheader
+    signature is refused."""
     ncols, rl = len(plan.kinds), sum(plan.widths)
     cols = [col for _, col in pdf.items()]
     tags = _slot_tags(cols, plan.tag_slot, ncols)
-    packed = _pack_rows(cols[:ncols], plan.kinds, plan.widths, rl, tags)
-    return _encode_packed(packed, rl, plan.compress) if plan.compress else packed
+    mat = _pack_rows(cols[:ncols], plan.kinds, plan.widths, rl, tags)
+    if not plan.compress:
+        return mat.tobytes()
+    encode = _rdc_encode_rows if plan.compress == "rdc" else _rle_encode_rows
+    blobs = encode(mat)
+    comps = np.fromiter((b is not None for b in blobs), np.uint8, len(blobs))
+    for j in np.flatnonzero(comps == 0).tolist():
+        blobs[j] = mat[j].tobytes()
+        if _collides_with_signature(blobs[j]):
+            raise ValueError(
+                "write_sas7bdat: incompressible row collides with a "
+                "subheader signature prefix; write without compress"
+            )
+    lens = np.fromiter(map(len, blobs), "<i4", len(blobs))
+    return b"".join(blobs) + lens.tobytes() + comps.tobytes()
 
 
 def assemble(fh, plan, payloads, n_rows=None) -> int:
     """The one sas7bdat file layout (``_SasFileSink``): header and meta
     page, then the ``(payload, n)`` stream onto DATA pages (plain) or
     META pages of compressed rows, then the row and page counts
-    back-patched (``n_rows`` is unused). Returns the rows written."""
+    back-patched (``n_rows`` is unused). Returns the rows written.
+    A compressed payload whose lengths do not add up to its size
+    raises RuntimeError."""
     sink = _SasFileSink(fh, plan)
     write = sink.write_encoded if plan.compress else sink.write_packed
     for payload, n in payloads:

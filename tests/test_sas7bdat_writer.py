@@ -321,7 +321,7 @@ def test_rle_encoder_property_vs_decoder():
     import numpy as np
 
     from polars_readstat_spark.sources.sas7bdat.pages import rle_decompress
-    from polars_readstat_spark.writers.sas7bdat import _rle_encode_row
+    from polars_readstat_spark.writers.sas7bdat import _rle_encode_rows_scalar
 
     rng = np.random.default_rng(20260814)
     compressed = 0
@@ -354,7 +354,7 @@ def test_rle_encoder_property_vs_decoder():
             arr = np.full(n, int(rng.integers(1, 256)), np.uint8)
         else:  # runs longer than the 4112/4113 long-command caps
             arr = np.full(n * 20, int(rng.integers(0, 256)), np.uint8)
-        enc = _rle_encode_row(arr)
+        enc = _rle_encode_rows_scalar(arr[None])[0]
         if enc is None:
             continue
         compressed += 1
@@ -371,7 +371,7 @@ def test_rle_signature_collision_guard():
 
     from polars_readstat_spark.writers.sas7bdat import (
         _collides_with_signature,
-        _rle_encode_row,
+        _rle_encode_rows_scalar,
     )
 
     rng = np.random.default_rng(7)
@@ -385,7 +385,7 @@ def test_rle_signature_collision_guard():
             sig + bytes(rng.integers(0, 256, 4200).astype(np.uint8)),
             np.uint8,
         )
-        if _rle_encode_row(row) is None:
+        if _rle_encode_rows_scalar(row[None])[0] is None:
             assert _collides_with_signature(row.tobytes())
     # honest rows never trip the guard
     assert not _collides_with_signature(b"\x41" * 64)
@@ -454,13 +454,13 @@ def test_rle_wavefront_matches_scalar_decompressor(spark, tmp_path):
 
 
 def test_rdc_encoder_property_vs_decoder():
-    """RDC mirror of the RLE property test: _rdc_encode_row output
-    must decode to the exact input via the reader's rdc_decompress,
+    """RDC mirror of the RLE property test: _rdc_encode_rows_scalar
+    output must decode to the exact input via the reader's rdc_decompress,
     across random, run-heavy, constant, and >4114-byte-run rows."""
     import numpy as np
 
     from polars_readstat_spark.sources.sas7bdat.pages import rdc_decompress
-    from polars_readstat_spark.writers.sas7bdat import _rdc_encode_row
+    from polars_readstat_spark.writers.sas7bdat import _rdc_encode_rows_scalar
 
     rng = np.random.default_rng(20260815)
     compressed = 0
@@ -493,7 +493,7 @@ def test_rdc_encoder_property_vs_decoder():
             arr = np.full(n, int(rng.integers(1, 256)), np.uint8)
         else:  # runs longer than the 4114 long-RLE cap
             arr = np.full(n * 20, int(rng.integers(0, 256)), np.uint8)
-        enc = _rdc_encode_row(arr)
+        enc = _rdc_encode_rows_scalar(arr[None])[0]
         if enc is None:
             continue
         compressed += 1
@@ -595,14 +595,14 @@ def test_rdc_wavefront_matches_scalar_on_real_sas_file():
 
 def test_rle_encode_rows_matches_scalar_encoder():
     """The batched chunk encoder used by the executor pack stage must
-    be byte-identical to the per-row encoder across run shapes
-    (random bytes, zero/blank/'@' runs, constant runs, row
+    be byte-identical to the scalar spec encoder, row by row, across
+    run shapes (random bytes, zero/blank/'@' runs, constant runs, row
     boundaries)."""
     import numpy as np
 
     from polars_readstat_spark.writers.sas7bdat import (
-        _rle_encode_row,
         _rle_encode_rows,
+        _rle_encode_rows_scalar,
     )
 
     rng = np.random.default_rng(20260814)
@@ -617,7 +617,7 @@ def test_rle_encode_rows_matches_scalar_encoder():
             mat[i, a:b] = rng.choice([0, 0x20, 0x40, int(rng.integers(0, 256))])
         got = _rle_encode_rows(mat)
         for i in range(r):
-            assert got[i] == _rle_encode_row(mat[i]), (r, rl, i)
+            assert got[i] == _rle_encode_rows_scalar(mat[i][None])[0], (r, rl, i)
     # biased low-cardinality bytes: runs at the 2/3/17/18/19 form
     # boundaries, rows opened by runs (synthetic-literal path), and
     # opening literal spans > 64 (the capped split)
@@ -629,31 +629,27 @@ def test_rle_encode_rows_matches_scalar_encoder():
         )
         got = _rle_encode_rows(mat)
         for i in range(r):
-            assert got[i] == _rle_encode_row(mat[i]), (r, rl, i)
-    # > 4112-byte rows route through the multi-command fallback
-    from polars_readstat_spark.writers.sas7bdat import (
-        _rle_encode_rows_scalar,
-    )
-
+            assert got[i] == _rle_encode_rows_scalar(mat[i][None])[0], (r, rl, i)
+    # > 4112-byte rows route through the multi-command scalar encoder
     mat = np.zeros((3, 6000), np.uint8)
     mat[1, 10:5500] = 0x20
     mat[2, :] = rng.integers(0, 256, 6000, dtype=np.uint8)
     got = _rle_encode_rows(mat)
     assert got == _rle_encode_rows_scalar(mat)
     for i in range(3):
-        assert got[i] == _rle_encode_row(mat[i]), i
+        assert got[i] == _rle_encode_rows_scalar(mat[i][None])[0], i
 
 
 def test_rdc_encode_rows_matches_scalar_encoder():
     """The numpy-vectorized batch RDC encoder must be byte-identical
-    to the per-row encoder across run shapes (random bytes, constant
-    runs at the 3/18/19 command-form boundaries, row boundaries), and
+    to the scalar spec encoder, row by row, across run shapes (random
+    bytes, constant runs at the 3/18/19 command-form boundaries, row
+    boundaries), and
     must route rows wider than one long-RLE command (> 4114 bytes)
-    through the multi-command fallback."""
+    through the multi-command scalar encoder."""
     import numpy as np
 
     from polars_readstat_spark.writers.sas7bdat import (
-        _rdc_encode_row,
         _rdc_encode_rows,
         _rdc_encode_rows_scalar,
     )
@@ -670,7 +666,7 @@ def test_rdc_encode_rows_matches_scalar_encoder():
             mat[i, a:b] = rng.choice([0, 0x20, int(rng.integers(0, 256))])
         got = _rdc_encode_rows(mat)
         for i in range(r):
-            assert got[i] == _rdc_encode_row(mat[i]), (r, rl, i)
+            assert got[i] == _rdc_encode_rows_scalar(mat[i][None])[0], (r, rl, i)
     # command-form boundaries: runs of exactly 2/3/18/19 bytes
     for run in (2, 3, 18, 19, 30):
         mat = np.zeros((2, 64), np.uint8)
@@ -678,16 +674,16 @@ def test_rdc_encode_rows_matches_scalar_encoder():
         mat[0, 10 : 10 + run] = 5
         got = _rdc_encode_rows(mat)
         for i in range(2):
-            assert got[i] == _rdc_encode_row(mat[i]), run
+            assert got[i] == _rdc_encode_rows_scalar(mat[i][None])[0], run
     # > 4114-byte rows: a single run needs several command words;
-    # the batch path must match via the scalar fallback
+    # the batch path must match via the scalar encoder
     mat = np.zeros((3, 6000), np.uint8)
     mat[1, 10:5500] = 6
     mat[2, :] = rng.integers(0, 256, 6000, dtype=np.uint8)
     got = _rdc_encode_rows(mat)
     assert got == _rdc_encode_rows_scalar(mat)
     for i in range(3):
-        assert got[i] == _rdc_encode_row(mat[i]), i
+        assert got[i] == _rdc_encode_rows_scalar(mat[i][None])[0], i
 
 
 def test_numeric_lengths_truncated_storage(spark, tmp_path):
@@ -732,53 +728,117 @@ def test_numeric_lengths_truncated_storage(spark, tmp_path):
                        numeric_lengths={"s": 4})
 
 
-def test_write_encoded_chunking_byte_identical(tmp_path):
-    """The vectorized META-page assembly must produce byte-identical
-    files regardless of how rows are batched into write_encoded calls
-    (the pending-tail handoff between chunks is the risky seam), and
-    identical to the legacy per-row header-walk path."""
-    import io
-
+def _compressed_frame(n=3000):
+    """A (plan, frame) pair for driving pack/assemble without Spark: 24-
+    byte rows of three doubles from random bytes, every third row
+    opening with a 16-byte blank run, so encoded and raw rows mix."""
     import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField
+
+    from polars_readstat_spark.writers import PartPlan
+
+    rows = np.random.RandomState(7).randint(0, 250, size=(n, 24)).astype(np.uint8)
+    rows[::3, :16] = 0x20
+    pdf = pd.DataFrame(rows.view("<f8"), columns=["a", "b", "c"])
+    plan = PartPlan(
+        "sas7bdat", [StructField(c, DoubleType()) for c in pdf.columns],
+        list(pdf.columns), None, ["num"] * 3, [8] * 3, page_length=0x2000,
+    )
+    return plan, pdf
+
+
+def _assemble(plan, pdf, chunks):
+    """The file ``assemble`` writes when ``pdf`` arrives as ``chunks``
+    (row counts), each packed on its own."""
+    import io
 
     from polars_readstat_spark.writers import sas7bdat as W
 
-    rl = 24
-    n = 3000
-    rng = np.random.RandomState(7)
-    rows = rng.randint(0, 250, size=(n, rl)).astype(np.uint8)
-    # make many rows compressible (runs) so both comp flags appear
-    rows[::3, :16] = 0x20
-    packed = rows.tobytes()
+    fh = io.BytesIO()
+    starts = [sum(chunks[:i]) for i in range(len(chunks))]
+    payloads = (
+        (W.pack(plan, pdf.iloc[a : a + c]), c) for a, c in zip(starts, chunks)
+    )
+    assert W.assemble(fh, plan, payloads) == sum(chunks)
+    return fh.getvalue()
 
-    def build(chunks, strip_footer=False):
+
+def test_write_encoded_chunking_byte_identical():
+    """Compressed page assembly through pack/assemble, for both codecs:
+    the same bytes however the rows are chunked (the pending tail
+    carried between chunks is the risky seam), every row back to its
+    packed input through the reader's decompressors, and every page but
+    the last greedily full (the next row would not have fit)."""
+    import dataclasses
+    import struct
+
+    import numpy as np
+
+    from polars_readstat_spark.sources.sas7bdat.pages import (
+        rdc_decompress,
+        rle_decompress,
+    )
+    from polars_readstat_spark.writers import sas7bdat as W
+
+    plain, pdf = _compressed_frame()
+    n, rl = len(pdf), 24
+    packed = W.pack(plain, pdf)
+    for comp, decompress in (("rle", rle_decompress), ("rdc", rdc_decompress)):
+        plan = dataclasses.replace(plain, compress=comp)
+        whole = _assemble(plan, pdf, [n])
+        assert _assemble(plan, pdf, [1, 999, 2, 500, 498, 700, 300]) == whole
+        pl = struct.unpack_from("<I", whole, 204)[0]
+        n_pages = struct.unpack_from("<Q", whole, 208)[0]
+        cap = pl - (W.BIT_OFFSET + 8)
+        rows, page_lens, flags = [], [], set()
+        for p in range(1, n_pages):  # page 0 holds the metadata
+            page = whole[W.HEADER_LENGTH + p * pl : W.HEADER_LENGTH + (p + 1) * pl]
+            lens = []
+            for i in range(struct.unpack_from("<H", page, W.BIT_OFFSET + 2)[0]):
+                ptr = W.BIT_OFFSET + 8 + W.PTR_LEN * i
+                off, ln = struct.unpack_from("<QQ", page, ptr)
+                blob = page[off : off + ln]
+                flags.add(page[ptr + 16])
+                if page[ptr + 16] == 4:
+                    assert ln < rl
+                    blob = decompress(blob, rl)
+                rows.append(blob)
+                lens.append(ln)
+            page_lens.append(lens)
+        assert b"".join(rows) == packed, comp
+        assert flags == {0, 4} and len(page_lens) > 1, comp
+        for lens, nxt in zip(page_lens, page_lens[1:]):
+            assert sum(lens) + W.PTR_LEN * len(lens) + W.PTR_LEN + nxt[0] > cap
+
+
+def test_assemble_refuses_malformed_compressed_payload():
+    """A truncated payload, or one whose row count disagrees with its
+    length arrays, raises RuntimeError before any page of that chunk is
+    written."""
+    import dataclasses
+    import io
+
+    import pytest
+
+    from polars_readstat_spark.writers import sas7bdat as W
+
+    plan, pdf = _compressed_frame()
+    plan = dataclasses.replace(plan, compress="rle")
+    first = W.pack(plan, pdf.iloc[:1000])
+    good = W.pack(plan, pdf.iloc[1000:2000])
+    for payload, n in ((good[: len(good) // 2], 1000), (good, 999), (good, 1001)):
         fh = io.BytesIO()
-        # bare sink: only the compressed-page path attrs (the real
-        # constructor writes header+meta pages, irrelevant here)
-        sink = object.__new__(W._SasFileSink)
-        sink.fh = fh
-        sink.page_length = 0x2000
-        sink.row_length = rl
-        sink.rows_per_page = (0x2000 - 32 - 8) // rl
-        sink._crows, sink._crows_bytes = [], 0
-        sink.pending = bytearray()
-        sink.n_rows = sink.n_data_pages = 0
-        start = 0
-        for c in chunks:
-            payload = W._encode_packed(
-                rows[start : start + c].tobytes(), rl, "rle"
-            )
-            if strip_footer:
-                nf = c
-                payload = payload[: len(payload) - (8 + nf + 4 * nf)]
-            sink.write_encoded(payload, c)
-            start += c
-        assert start == n
-        sink._flush_compressed_page()
-        return fh.getvalue(), sink.n_data_pages
+        before = []
 
-    whole, pages_a = build([n])
-    chunked, pages_b = build([1, 999, 2, 500, 498, 700, 300])
-    legacy, pages_c = build([512] * 5 + [440], strip_footer=True)
-    assert whole == chunked == legacy
-    assert pages_a == pages_b == pages_c > 1
+        def stream():
+            yield first, 1000
+            before.append(fh.getvalue())
+            yield payload, n
+
+        with pytest.raises(RuntimeError, match="compressed rows"):
+            W.assemble(fh, plan, stream())
+        assert fh.getvalue() == before[0]
+    # intact, the same second chunk lays out pages of its own
+    whole = _assemble(plan, pdf.iloc[:2000], [1000, 1000])
+    assert len(whole) > len(before[0]) + 2 * plan.page_length

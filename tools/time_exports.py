@@ -2,13 +2,17 @@
 
 Usage: python tools/time_exports.py [-nN] [sf_dir] fmt [fmt ...]
 
-fmt ∈ dta, sav, zsav, xpt, por, sas7bdat, rle, rdc, or ``part:<fmt>``
-for any of those but por. A plain fmt writes the sf lineitem table to
-one file (the unit bench.py's export_* entries time, without the
-sweep around it); ``part:<fmt>`` writes it with
-``write_readstat_partitioned`` into a fresh temp directory, one
-part-file per input partition. Each entry runs one untimed warm pass
-then N timed passes, printing ``fmt: best med [runs...]``.
+fmt ∈ dta, sav, zsav, xpt, por, sas7bdat, rle, rdc, ``part:<fmt>``
+for any of those but por, or ``wide:<fmt>`` for any plain fmt. A
+plain fmt writes the sf lineitem table to one file (the unit
+bench.py's export_* entries time, without the sweep around it);
+``part:<fmt>`` writes it with ``write_readstat_partitioned`` into a
+fresh temp directory, one part-file per input partition;
+``wide:<fmt>`` writes an ANES-shape frame to one file instead: 8,000
+rows x 1,030 doubles of small integer codes, 5% missing, cached before
+the first pass (8,240-byte sas7bdat rows, wider than one rle/rdc
+command covers). Each entry runs one untimed warm pass then N timed
+passes, printing ``fmt: best med [runs...]``.
 """
 
 from __future__ import annotations
@@ -48,7 +52,20 @@ def main() -> None:
     li = load_table(spark, sf_dir, "lineitem")
     out = tempfile.mkdtemp(prefix="time_exports_")
 
-    def writer_for(fmt: str):
+    def anes_wide():
+        import numpy as np
+        import pandas as pd
+
+        r = np.arange(8_000, dtype=np.int64)[:, None]
+        c = np.arange(1_030, dtype=np.int64)[None, :]
+        codes = ((r * (2 * c + 7) + c) % (c % 9 + 2)).astype("float64")
+        codes[(r * 31 + c * 17) % 20 == 0] = np.nan
+        pdf = pd.DataFrame(codes, columns=[f"v{k}" for k in range(c.size)])
+        wide = spark.createDataFrame(pdf).cache()
+        wide.count()
+        return wide
+
+    def writer_for(fmt: str, li):
         if fmt.startswith("part:"):
             from polars_readstat_spark import write_readstat_partitioned
 
@@ -90,8 +107,13 @@ def main() -> None:
             )
         raise SystemExit(f"unknown fmt {fmt!r}")
 
+    wide = None
     for fmt in args:
-        run = writer_for(fmt)
+        if fmt.startswith("wide:"):
+            wide = wide or anes_wide()
+            run = writer_for(fmt[len("wide:"):], wide)
+        else:
+            run = writer_for(fmt, li)
         spark.sparkContext.setJobDescription(f"warm:export_{fmt}")
         run()
         runs = []
