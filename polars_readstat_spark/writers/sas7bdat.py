@@ -99,6 +99,20 @@ def _collides_with_signature(raw: bytes) -> bool:
     return bool(_META_SIGS.get(raw[:8]) or _META_SIGS.get(raw[:4]))
 
 
+def _runs(mat: np.ndarray):
+    """Maximal same-byte runs of a (rows, row_length) uint8 matrix,
+    split at every row boundary: (flat bytes, run starts, run lengths),
+    offsets into the flat bytes."""
+    r, rl = mat.shape
+    flat = np.ascontiguousarray(mat).ravel()
+    brk = flat[1:] != flat[:-1]
+    if r > 1:  # force a run break at every row boundary (no sort)
+        brk[np.arange(1, r, dtype=np.int64) * rl - 1] = True
+    bounds = np.flatnonzero(brk) + 1
+    starts = np.concatenate(([0], bounds))
+    return flat, starts, np.concatenate((bounds, [r * rl])) - starts
+
+
 def _rle_encode_rows(mat: np.ndarray) -> list:
     """Batch SASYZCRL encode — byte-identical per row to the spec,
     _rle_encode_rows_scalar (property-tested against it).
@@ -125,13 +139,7 @@ def _rle_encode_rows(mat: np.ndarray) -> list:
         return [None] * r
     if rl > 4112:
         return _rle_encode_rows_scalar(mat)
-    flat = np.ascontiguousarray(mat).ravel()
-    brk = flat[1:] != flat[:-1]
-    if r > 1:  # force a run break at every row boundary (no sort)
-        brk[np.arange(1, r, dtype=np.int64) * rl - 1] = True
-    bounds = np.flatnonzero(brk) + 1
-    starts = np.concatenate(([0], bounds))
-    run_len = np.concatenate((bounds, [r * rl])) - starts
+    flat, starts, run_len = _runs(mat)
     run_byte = flat[starts]
     sp = np.zeros(starts.size, np.uint8)
     sp[run_byte == 0x00] = 0x70
@@ -298,17 +306,12 @@ def _rle_encode_rows_scalar(mat: np.ndarray) -> list:
     r, rl = mat.shape
     if rl == 0 or r == 0:
         return [None] * r
-    flat = np.ascontiguousarray(mat).ravel()
-    brk = flat[1:] != flat[:-1]
-    if r > 1:  # force a run break at every row boundary (no sort)
-        brk[np.arange(1, r, dtype=np.int64) * rl - 1] = True
-    bounds = np.flatnonzero(brk) + 1
-    starts_all = np.concatenate(([0], bounds)).tolist()
-    ends_all = np.concatenate((bounds, [r * rl])).tolist()
-    firsts = flat[np.concatenate(([0], bounds))].tolist()
-    k_of_row = np.searchsorted(
-        np.concatenate(([0], bounds)), np.arange(r + 1, dtype=np.int64) * rl
-    ).tolist()
+    flat, starts, run_len = _runs(mat)
+    starts_all = starts.tolist()
+    ends_all = (starts + run_len).tolist()
+    firsts = flat[starts].tolist()
+    # row ri's runs are [k_of_row[ri], k_of_row[ri + 1])
+    k_of_row = np.searchsorted(starts, np.arange(r + 1) * rl).tolist()
     data = flat.tobytes()
 
     results: list = []
@@ -407,13 +410,7 @@ def _rdc_encode_rows(mat: np.ndarray) -> list:
         return [None] * r
     if rl > 4114:
         return _rdc_encode_rows_scalar(mat)
-    flat = np.ascontiguousarray(mat).ravel()
-    brk = flat[1:] != flat[:-1]
-    if r > 1:  # force a run break at every row boundary (no sort)
-        brk[np.arange(1, r, dtype=np.int64) * rl - 1] = True
-    bounds = np.flatnonzero(brk) + 1
-    starts = np.concatenate(([0], bounds))
-    run_len = np.concatenate((bounds, [r * rl])) - starts
+    flat, starts, run_len = _runs(mat)
     run_byte = flat[starts]
     lit_run = run_len < 3
     # item expansion: a literal run of L contributes L 1-byte items,
@@ -507,16 +504,11 @@ def _rdc_encode_rows_scalar(mat: np.ndarray) -> list:
     r, rl = mat.shape
     if rl == 0 or r == 0:
         return [None] * r
-    flat = np.ascontiguousarray(mat).ravel()
-    brk = flat[1:] != flat[:-1]
-    if r > 1:  # force a run break at every row boundary (no sort)
-        brk[np.arange(1, r, dtype=np.int64) * rl - 1] = True
-    bounds = np.flatnonzero(brk) + 1
-    starts_all = np.concatenate(([0], bounds)).tolist()
-    ends_all = np.concatenate((bounds, [r * rl])).tolist()
-    k_of_row = np.searchsorted(
-        np.concatenate(([0], bounds)), np.arange(r + 1, dtype=np.int64) * rl
-    ).tolist()
+    flat, starts, run_len = _runs(mat)
+    starts_all = starts.tolist()
+    ends_all = (starts + run_len).tolist()
+    # row ri's runs are [k_of_row[ri], k_of_row[ri + 1])
+    k_of_row = np.searchsorted(starts, np.arange(r + 1) * rl).tolist()
     data = flat.tobytes()
 
     results: list = []
@@ -736,7 +728,9 @@ def _build_header(dataset_name: str, page_length: int) -> bytes:
     return bytes(h)
 
 
-def _pack_rows(cols_data, kinds, widths, row_length, tags_data=None) -> np.ndarray:
+def _pack_rows(
+    cols_data, kinds, widths, row_length, tags_data=None
+) -> np.ndarray:
     """Column-wise vectorized row packing: (n, row_length) uint8.
 
     tags_data: optional per-column list of tag-offset arrays (None for
@@ -773,8 +767,9 @@ def _pack_rows(cols_data, kinds, widths, row_length, tags_data=None) -> np.ndarr
 
 
 class _SasFileSink:
-    """Streaming file assembly: header + meta page up front,
-    DATA pages as rows arrive, two-seek back-patch on close."""
+    """Streaming file assembly: header + meta page up front, DATA
+    pages (plain) or META pages of compressed rows as rows arrive,
+    two-seek back-patch on close."""
 
     def __init__(self, fh, plan):
         self.fh = fh
@@ -838,7 +833,7 @@ class _SasFileSink:
             if size >= 0
             else None
         )
-        if lens is None or lens.min(initial=1) < 1 or int(lens.sum()) != size:
+        if lens is None or lens.min(initial=1) < 1 or lens.sum() != size:
             raise RuntimeError(
                 f"write_sas7bdat: a {len(payload)}-byte payload does not "
                 f"hold the {n} compressed rows its lengths describe"

@@ -728,7 +728,7 @@ def test_numeric_lengths_truncated_storage(spark, tmp_path):
                        numeric_lengths={"s": 4})
 
 
-def _compressed_frame(n=3000):
+def _compressed_frame():
     """A (plan, frame) pair for driving pack/assemble without Spark: 24-
     byte rows of three doubles from random bytes, every third row
     opening with a 16-byte blank run, so encoded and raw rows mix."""
@@ -738,7 +738,7 @@ def _compressed_frame(n=3000):
 
     from polars_readstat_spark.writers import PartPlan
 
-    rows = np.random.RandomState(7).randint(0, 250, size=(n, 24)).astype(np.uint8)
+    rows = np.random.RandomState(7).randint(0, 250, size=(3000, 24)).astype(np.uint8)
     rows[::3, :16] = 0x20
     pdf = pd.DataFrame(rows.view("<f8"), columns=["a", "b", "c"])
     plan = PartPlan(

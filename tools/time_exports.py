@@ -110,7 +110,8 @@ def main() -> None:
     wide = None
     for fmt in args:
         if fmt.startswith("wide:"):
-            wide = wide or anes_wide()
+            if wide is None:
+                wide = anes_wide()
             run = writer_for(fmt[len("wide:"):], wide)
         else:
             run = writer_for(fmt, li)
