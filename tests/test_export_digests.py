@@ -1,4 +1,4 @@
-"""Byte pins for the dta, por and sas7bdat exports: the SHA-256 of
+"""Byte pins for every export format: the SHA-256 of
 each file (creation timestamps masked) written by ``write_readstat``
 from a 3-partition input, so every layout change must reproduce the
 exact bytes. The strL case spreads its GSO keys over all three
@@ -139,6 +139,27 @@ CASES = {
         lambda ids: _fixed(ids).drop("big"),
         {"data_label": "pinned", "variable_labels": {"x": "an x"}},
     ),
+    "sav": (
+        "sav",
+        _fixed,
+        {
+            "data_label": "pinned",
+            "variable_labels": {"x": "an x", "s": "a string"},
+            "value_labels": {"b": {1: "one", -1: "minus one"}},
+        },
+    ),
+    "sav_bytecode": ("sav", _fixed, {"compress": True}),
+    "zsav": ("zsav", _fixed, {"variable_labels": {"x": "an x"}}),
+    "xpt": (
+        "xpt",
+        lambda ids: _fixed(ids, _tags("tx", 5)),
+        {"variable_labels": {"x": "an x"}, "tagged_missing": {"x": "tx"}},
+    ),
+    "xpt8": (
+        "xpt",
+        lambda ids: _fixed(ids, _tags("tx", 5)),
+        {"version": 8, "tagged_missing": {"x": "tx"}},
+    ),
     "sas7bdat": _sas(),
     "sas7bdat_rle": _sas("rle"),
     "sas7bdat_rdc": _sas("rdc"),
@@ -151,6 +172,11 @@ DIGESTS = {
     "dta_tagged": "8f0452db0fba8f4b2389513c84a1fc34dfcbcfbb27ee9c0d46085f0ab997f65f",
     "dta_strl": "fb927d3854e6b7864d1c192f0071b2be43e0a04aaa2aeb7996a0a227be03bd0c",
     "por": "3fc2e814abae7e6b8c0ce7b127096fd49c9d3d28ce098fbf6419194fdaf2356b",
+    "sav": "c9b2a648986b72bfb70af1e8d2384a45d62ee1954b34ce2e4d4e4684dd495eb2",
+    "sav_bytecode": "a2efb21907993563d9e05c0466278e01ddc97f2eb5d4017134c6f92f31885903",
+    "zsav": "524036bb244edd5335d0e8ec3712fbd6a7e19d0ec67f52efe64eae31784871db",
+    "xpt": "f414921367f091a091ac43e67b87e9b284e73d48aa41ab5476546c0d0df0a129",
+    "xpt8": "1d35df71ef11e32ccfcc6e319b5e4339c13011569a1414f07495a7f981108089",
     "sas7bdat": "086a621b044953a89332c8fbe141a3e20f1744ce189733e276d8addef0049fc2",
     "sas7bdat_rle": "a3d7a5b3033c287cd2149b2ad3edafd1bb3f3d4b4bd4d6eabc9143f29a4da9d5",
     "sas7bdat_rdc": "03c5e887d48c797a2eeb9030f83aacb39580f7fce03d5e88e3d5b8ea0c2def06",
