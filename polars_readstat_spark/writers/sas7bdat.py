@@ -17,10 +17,13 @@ memory-bounded regardless of row count. ``pack`` and ``assemble`` are
 the one sas7bdat layout, run by the single-file export and, in its
 task, by the part-file writer.
 
-Each codec has two encoders: a scalar one, ``_X_encode_rows_scalar``,
-which is the spec, the test reference and the path for rows wider
-than one command covers, and a numpy-vectorized ``_X_encode_rows``
-that matches it byte for byte. A compressed chunk travels from
+Each codec has one production encoder, the numpy-vectorized
+``_X_encode_rows``, which works through the row matrix in row blocks of
+``_BLOCK_BYTES`` (64 KiB) so a pack task's memory stays bounded at any
+row width; rows encode independently, so the blocks change no byte.
+``_pieces`` cuts every run and literal span into the commands the spec
+allows. ``_X_encode_rows_scalar`` is the spec and the test reference,
+matched byte for byte. A compressed chunk travels from
 ``pack`` to ``assemble`` unframed: the row blobs back to back, then
 ``lens`` (<i4 per row) and ``comps`` (u8 per row, 1 = encoded, 0 =
 raw); the row count comes with the payload. The assembler greedily
@@ -87,6 +90,14 @@ SIG_FMT_LABEL = b"\xfe\xfb\xff\xff\xff\xff\xff\xff"
 RLE_LITERAL = b"SASYZCRL"
 RDC_LITERAL = b"SASYZCR2"
 
+# Input bytes per row block of the vectorized rle/rdc encoders. Their
+# piece arrays run to 50-130x a block's bytes: unblocked, one 8,000 x
+# 4,112-byte chunk peaked at 1.6 GiB (rle) / 1.3 GiB (rdc) traced. At
+# 64 KiB a block's arrays stay cache-sized, and a no-Spark probe (4-core
+# VM) encoded both narrow (74-byte) and wide (4,112/8,240-byte) rows
+# faster than with 128 KiB-4 MiB blocks or none.
+_BLOCK_BYTES = 1 << 16
+
 
 def _collides_with_signature(raw: bytes) -> bool:
     """True when a raw row's leading bytes would be classified as a
@@ -113,111 +124,122 @@ def _runs(mat: np.ndarray):
     return flat, starts, np.concatenate((bounds, [r * rl])) - starts
 
 
-def _rle_encode_rows(mat: np.ndarray) -> list:
-    """Batch SASYZCRL encode — byte-identical per row to the spec,
-    _rle_encode_rows_scalar (property-tested against it).
+def _pieces(length, cap, least, first=None):
+    """Cut segments of ``length`` bytes into the spec encoders' command
+    pieces: a first piece of at most ``first`` bytes (default ``cap``),
+    then pieces of at most ``cap``; a last piece shorter than ``least``
+    is literal bytes (the spec's remnant rule). Each of ``cap``,
+    ``least`` and ``first`` is a scalar or one value per segment.
+    Returns (seg, off, plen, lit): piece k is bytes [off[k], off[k] +
+    plen[k]) of segment seg[k], and lit[k] marks a literal remnant."""
+    first = cap if first is None else first
+    head = np.minimum(length, first)
+    # only segments longer than their first piece get more pieces
+    long = np.flatnonzero(length > head)
 
-    Fully numpy-vectorized for row_length <= 4112 (the tightest
-    single-command limit: a special run's long form covers 4112
-    bytes), where the scalar encoder's while-loops never iterate
-    twice and every segment maps to a fixed piece shape:
+    def at(v, i):
+        return v[i] if np.ndim(v) else v
 
-    - a real run (length >= 3 special / 4 plain) -> one command of
-      1-3 header bytes;
-    - the literal span between real runs -> one piece (1-byte header
-      up to 64 bytes, 2-byte beyond), except the stream-opening span
-      which is capped at 64 and may split in two;
-    - a row whose first real run starts at offset 0 opens with the
-      synthetic 1-byte literal the signature guard requires.
+    c = at(cap, long)
+    n = (length[long] - head[long] + c - 1) // c
+    t_seg = np.repeat(long, n)
+    k = np.arange(t_seg.size, dtype=np.int64) - np.repeat(np.cumsum(n) - n, n)
+    c = at(cap, t_seg)
+    t_off = head[t_seg] + k * c
+    t_len = np.minimum(c, length[t_seg] - t_off)
+    # a segment's further pieces go right after its first one
+    ins = t_seg + 1
+    seg = np.insert(np.arange(length.size, dtype=np.int64), ins, t_seg)
+    plen = np.insert(head, ins, t_len)
+    off = np.insert(np.zeros(length.size, np.int64), ins, t_off)
+    return seg, off, plen, plen < at(least, seg)
 
-    Pieces are assembled as parallel arrays, ordered with one global
-    argsort, and scattered into a flat buffer (headers by case mask,
-    literal bytes via a repeat/cumsum gather); per-row Python is just
-    the final slice. Wider rows take the scalar spec encoder."""
+
+def _in_blocks(encode, mat: np.ndarray) -> list:
+    """``encode`` over consecutive row blocks of about _BLOCK_BYTES.
+    Rows encode independently, so the blocking changes no byte; it
+    bounds the piece arrays, which run to 50-130x a block's bytes."""
     r, rl = mat.shape
-    if rl == 0 or r == 0:
+    if rl == 0:
         return [None] * r
-    if rl > 4112:
-        return _rle_encode_rows_scalar(mat)
+    step = max(1, _BLOCK_BYTES // rl)
+    out: list = []
+    for i in range(0, r, step):
+        out += encode(mat[i : i + step])
+    return out
+
+
+def _rle_encode_rows(mat: np.ndarray) -> list:
+    """Batch SASYZCRL encode of a (rows, row_length) uint8 matrix, in
+    row blocks of about _BLOCK_BYTES — byte-identical per row to the
+    spec, _rle_encode_rows_scalar (property-tested against it)."""
+    return _in_blocks(_rle_encode_block, mat)
+
+
+# rle's dedicated run commands: zero, blank and '@' runs
+_SPECIAL = np.zeros(256, np.uint8)
+_SPECIAL[[0x00, 0x20, 0x40]] = [0x70, 0x60, 0x50]
+
+
+def _rle_encode_block(mat: np.ndarray) -> list:
+    """SASYZCRL-encode one row block, numpy-vectorized. Each row with
+    a real run (length >= 3 special / 4 plain) is a sequence of
+    segments: literal spans, real runs, and the synthetic 1-byte
+    literal the signature guard requires when a run opens the row.
+    ``_pieces`` cuts them into commands (literal 4,159 bytes after a
+    row-opening 64; special run 4,112; plain run 4,113), and the
+    piece headers and literal bytes are scattered into one flat
+    buffer; per-row Python is just the final slice. Rows without a
+    real run cannot shorten and get no pieces."""
+    r, rl = mat.shape
     flat, starts, run_len = _runs(mat)
     run_byte = flat[starts]
-    sp = np.zeros(starts.size, np.uint8)
-    sp[run_byte == 0x00] = 0x70
-    sp[run_byte == 0x20] = 0x60
-    sp[run_byte == 0x40] = 0x50
-    real = run_len >= np.where(sp != 0, 3, 4)
+    real = run_len >= np.where(_SPECIAL[run_byte] != 0, 3, 4)
     rs = starts[real]
-    rL = run_len[real].astype(np.int64)
-    rbyte = run_byte[real]
-    rsp = sp[real]
+    rL = run_len[real]
     rrow = rs // rl
     n_real = rs.size
-    # rows with no real run at all encode to (literal header + the
-    # whole row) >= row_length -> None; generate no pieces for them
     if n_real == 0:
         return [None] * r
-    # first real run per row / span before each real run
+    # literal span before each real run / after each row's last one
     first_in_row = np.ones(n_real, bool)
     first_in_row[1:] = rrow[1:] != rrow[:-1]
+    last_in_row = np.ones(n_real, bool)
+    last_in_row[:-1] = first_in_row[1:]
     span_start = np.empty(n_real, np.int64)
     span_start[first_in_row] = rrow[first_in_row] * rl
     span_start[~first_in_row] = (rs + rL)[:-1][~first_in_row[1:]]
     span_len = rs - span_start
-    # stream-opening adjustments (only the row's first segment):
-    # run at offset 0 -> synthetic 1-byte literal + run shortened by 1
-    synth = first_in_row & (span_len == 0)
-    cmdL = rL - synth.astype(np.int64)
-    # opening literal span > 64 -> split 64 + rest
-    cap = first_in_row & (span_len > 64)
-    # trailing literal span of each row that has >= 1 real run
-    last_in_row = np.ones(n_real, bool)
-    last_in_row[:-1] = first_in_row[1:]
     t_start = (rs + rL)[last_in_row]
-    t_row = rrow[last_in_row]
-    t_len = (t_row + 1) * rl - t_start
-
-    # piece table: kind 0=literal, 1=special run, 2=plain run
-    # (category arrays concatenated, then one argsort restores the
-    # in-row emission order; suborder puts a synthetic literal
-    # before the command sharing its position)
-    p_kind = [np.full(n_real, 1, np.uint8)]
-    p_key = [2 * rs + 1]  # run command after a same-position literal
-    p_len = [cmdL]
-    p_src = [rs]
-    p_byte = [rbyte]
-    p_sp = [rsp]
-    p_kind[0][rsp == 0] = 2
-
-    def add_lit(srcs, lens, keys):
-        p_kind.append(np.zeros(srcs.size, np.uint8))
-        p_key.append(keys)
-        p_len.append(lens)
-        p_src.append(srcs)
-        p_byte.append(np.zeros(srcs.size, np.uint8))
-        p_sp.append(np.zeros(srcs.size, np.uint8))
-
-    nc = ~cap
-    mid = nc & (span_len > 0)
-    add_lit(span_start[mid], span_len[mid], 2 * span_start[mid])
-    add_lit(span_start[cap], np.full(int(cap.sum()), 64, np.int64),
-            2 * span_start[cap])
-    add_lit(span_start[cap] + 64, span_len[cap] - 64,
-            2 * (span_start[cap] + 64))
-    add_lit(rs[synth], np.ones(int(synth.sum()), np.int64), 2 * rs[synth])
-    tm = t_len > 0
-    add_lit(t_start[tm], t_len[tm], 2 * t_start[tm])
-
-    kind = np.concatenate(p_kind)
-    key = np.concatenate(p_key)
-    plen = np.concatenate(p_len)
-    psrc = np.concatenate(p_src)
-    pbyte = np.concatenate(p_byte)
-    psp = np.concatenate(p_sp)
-    order = np.argsort(key, kind="stable")
-    kind, key, plen, psrc, pbyte, psp = (
-        kind[order], key[order], plen[order], psrc[order], pbyte[order],
-        psp[order],
+    t_len = (rrow[last_in_row] + 1) * rl - t_start
+    # a run opening the row -> synthetic literal of its first byte
+    synth = first_in_row & (span_len == 0)
+    sd = synth.astype(np.int64)
+    # segment table (kind 0 = literal, 1 = special run, 2 = plain run),
+    # in emission order: segment starts are distinct
+    lit_s = np.concatenate((span_start, rs[synth], t_start))
+    lit_l = np.concatenate((span_len, sd[synth], t_len))
+    keep = lit_l > 0
+    lit_s, lit_l = lit_s[keep], lit_l[keep]
+    s_start = np.concatenate((rs + sd, lit_s))
+    order = np.argsort(s_start)
+    s_start = s_start[order]
+    s_len = np.concatenate((rL - sd, lit_l))[order]
+    s_byte = np.concatenate((run_byte[real], np.zeros(lit_s.size, np.uint8)))
+    s_kind = np.where(_SPECIAL[s_byte] != 0, 1, 2)
+    s_kind[rs.size :] = 0
+    s_byte, s_kind = s_byte[order], s_kind[order]
+    cap = np.array([4159, 4112, 4113])[s_kind]
+    # a row's first command stays in 0x80-0xBF: a literal of <= 64
+    opening = np.diff(s_start // rl, prepend=-1) != 0
+    seg, off, plen, rem = _pieces(
+        s_len, cap, np.array([1, 2, 3])[s_kind], np.where(opening, 64, cap)
     )
+    kind = np.where(rem, 0, s_kind[seg])
+    psrc = s_start[seg] + off
+    pbyte = s_byte[seg]
+    psp = _SPECIAL[pbyte]
+
     lit = kind == 0
     spec = kind == 1
     plain = kind == 2
@@ -227,25 +249,19 @@ def _rle_encode_rows(mat: np.ndarray) -> list:
     hdr = np.ones(kind.size, np.int64)  # short literal / short special
     hdr[long_lit | long_spec | plain] = 2
     hdr[long_plain] = 3
-    copy = np.where(lit, plen, 0)
-    psize = hdr + copy
-    prow = psrc // rl
-    row_out_len = np.bincount(prow, weights=psize, minlength=r).astype(
-        np.int64
-    )
+    psize = hdr + np.where(lit, plen, 0)
     dst_end = np.cumsum(psize)
     dst = dst_end - psize
-    buf = np.empty(int(dst_end[-1]) if psize.size else 0, np.uint8)
+    buf = np.empty(int(dst_end[-1]), np.uint8)
     # header byte 0
     b0 = np.empty(kind.size, np.int64)
     b0[lit] = np.where(
         long_lit[lit], (plen[lit] - 64) >> 8, 0x80 + plen[lit] - 1
     )
-    sL = np.maximum(plen, 2)
     b0[spec] = np.where(
         long_spec[spec],
         psp[spec] | ((plen[spec] - 17) >> 8),
-        (psp[spec] | 0x80) | (sL[spec] - 2),
+        (psp[spec] | 0x80) | (plen[spec] - 2),
     )
     b0[plain] = np.where(
         long_plain[plain],
@@ -263,38 +279,33 @@ def _rle_encode_rows(mat: np.ndarray) -> list:
     buf[dst[m2] + 1] = b1[m2].astype(np.uint8)
     # header byte 2 (long plain run: the repeated byte)
     buf[dst[long_plain] + 2] = pbyte[long_plain]
-    # literal payload gather
-    lsrc = psrc[lit]
-    llen = plen[lit]
-    ldst = dst[lit] + hdr[lit]
-    tot = int(llen.sum())
-    if tot:
-        seq = np.arange(tot, dtype=np.int64)
-        base = np.repeat(np.cumsum(llen) - llen, llen)
-        off = seq - base
-        buf[np.repeat(ldst, llen) + off] = flat[np.repeat(lsrc, llen) + off]
-    # per-row slices (rows are contiguous in piece order)
-    row_first_piece = np.full(r, -1, np.int64)
-    fp = np.flatnonzero(np.diff(prow, prepend=-1))
-    row_first_piece[prow[fp]] = fp
+    # literal bytes: pieces are in source and in output order, so the
+    # literal bytes are one masked copy
+    buf[_cover(buf.size, dst[lit] + hdr[lit], plen[lit])] = flat[
+        _cover(flat.size, psrc[lit], plen[lit])
+    ]
+    # per-row slices (a row's pieces are contiguous)
+    row_len = np.bincount(psrc // rl, weights=psize, minlength=r).astype(np.int64)
+    row_start = (np.cumsum(row_len) - row_len).tolist()
     data = buf.tobytes()
-    out_start = dst
-    results: list = []
-    rol = row_out_len.tolist()
-    for ri in range(r):
-        ln = rol[ri]
-        if ln == 0 or ln >= rl:
-            results.append(None)
-            continue
-        s = int(out_start[row_first_piece[ri]])
-        results.append(data[s : s + ln])
-    return results
+    return [
+        data[s : s + ln] if 0 < ln < rl else None
+        for s, ln in zip(row_start, row_len.tolist())
+    ]
+
+
+def _cover(size: int, starts, lens) -> np.ndarray:
+    """Bool mask of length ``size``, True on the disjoint ranges
+    [starts[i], starts[i] + lens[i])."""
+    d = np.zeros(size + 1, np.int8)
+    d[starts] = 1
+    d[starts + lens] -= 1
+    return np.cumsum(d[:-1], dtype=np.int8).view(bool)
 
 
 def _rle_encode_rows_scalar(mat: np.ndarray) -> list:
     """SASYZCRL-encode each row of a (rows, row_length) uint8 matrix:
-    the spec encoder, the test reference for _rle_encode_rows and its
-    path for rows wider than one command covers (row_length > 4112).
+    the spec encoder and the test reference for _rle_encode_rows.
     A row's entry is None when its encoding is not strictly shorter
     than the row (both readers treat length == row_length as an
     uncompressed row).
@@ -392,37 +403,31 @@ def _rle_encode_rows_scalar(mat: np.ndarray) -> list:
 
 
 def _rdc_encode_rows(mat: np.ndarray) -> list:
-    """Batch SASYZCR2 encode — byte-identical per row to the spec,
-    _rdc_encode_rows_scalar (property-tested against it).
+    """Batch SASYZCR2 encode of a (rows, row_length) uint8 matrix, in
+    row blocks of about _BLOCK_BYTES — byte-identical per row to the
+    spec, _rdc_encode_rows_scalar (property-tested against it)."""
+    return _in_blocks(_rdc_encode_block, mat)
 
-    Fully numpy-vectorized: when every run fits one command word
-    (row_length <= 4114, so take == L always and the while-loop in the
-    scalar encoder never iterates twice), each run maps to a fixed
-    item shape — L literal items for L < 3, one short-RLE item for
-    3..18, one long-RLE item for 19..4114. Item bits, control words,
-    payload bytes and output offsets are then all computable with
-    repeat/cumsum/reduceat and scattered into one flat buffer; the
-    only per-row Python left is the final slice + the subheader-
-    signature guard. ~15x over the per-item tuple assembly the scalar
-    path pays (55 -> ~3.5 us/row on packed lineitem rows)."""
+
+def _rdc_encode_block(mat: np.ndarray) -> list:
+    """SASYZCR2-encode one row block, numpy-vectorized. ``_pieces``
+    cuts every run into commands of at most 4,114 bytes; a run or
+    remnant under 3 bytes becomes one literal item per byte, every
+    other piece one short (3..18) or long (19..4114) RLE item. Item
+    bits, control words, payload bytes and output offsets are then
+    computed with repeat/cumsum/reduceat and scattered into one flat
+    buffer; the only per-row Python left is the final slice and the
+    subheader-signature guard."""
     r, rl = mat.shape
-    if rl == 0 or r == 0:
-        return [None] * r
-    if rl > 4114:
-        return _rdc_encode_rows_scalar(mat)
     flat, starts, run_len = _runs(mat)
-    run_byte = flat[starts]
-    lit_run = run_len < 3
-    # item expansion: a literal run of L contributes L 1-byte items,
-    # every other run exactly one command item
-    n_items_run = np.where(lit_run, run_len, 1)
-    item_run = np.repeat(
-        np.arange(starts.size, dtype=np.int64), n_items_run
-    )
-    total_items = item_run.size
-    i_lit = lit_run[item_run]
-    i_len = run_len[item_run]
-    i_byte = run_byte[item_run]
+    seg, _, plen, lit = _pieces(run_len, 4114, 3)
+    # a literal piece is one item per byte, any other piece one item
+    item = np.repeat(np.arange(seg.size, dtype=np.int64), np.where(lit, plen, 1))
+    total_items = item.size
+    i_lit = lit[item]
+    i_len = plen[item]
+    i_start = starts[seg[item]]
+    i_byte = flat[i_start]
     i_short = ~i_lit & (i_len <= 18)
     paylen = np.where(i_lit, 1, np.where(i_short, 2, 3)).astype(np.int64)
     cnt = i_len - 19  # long-RLE count field (valid where paylen == 3)
@@ -432,7 +437,7 @@ def _rdc_encode_rows(mat: np.ndarray) -> list:
     ).astype(np.uint8)
     p1 = np.where(i_short, i_byte, cnt >> 4).astype(np.uint8)
     # per-row item/group geometry (runs never cross row boundaries)
-    row_of_item = (starts // rl)[item_run]
+    row_of_item = i_start // rl
     items_per_row = np.bincount(row_of_item, minlength=r).astype(np.int64)
     row_item_base = np.concatenate(
         ([0], np.cumsum(items_per_row))
@@ -485,14 +490,13 @@ def _rdc_encode_rows(mat: np.ndarray) -> list:
 
 def _rdc_encode_rows_scalar(mat: np.ndarray) -> list:
     """SASYZCR2-encode each row of a (rows, row_length) uint8 matrix:
-    the spec encoder, the test reference for _rdc_encode_rows and its
-    path for rows wider than one long-RLE command covers (row_length >
-    4114), where a single run may need several command words. A row's
-    entry is None when its encoding is not strictly shorter than the
-    row, or when it would collide with a subheader signature prefix (a
-    literal-opening RDC stream begins with a 0x0000 control word, so
-    the guard matters here where RLE's 0x80-0xBF first byte makes it
-    structurally impossible).
+    the spec encoder and the test reference for _rdc_encode_rows. A
+    run longer than one long-RLE command (4,114 bytes) takes several
+    command words. A row's entry is None when its encoding is not
+    strictly shorter than the row, or when it would collide with a
+    subheader signature prefix (a literal-opening RDC stream begins
+    with a 0x0000 control word, so the guard matters here where RLE's
+    0x80-0xBF first byte makes it structurally impossible).
 
     Exact inverse of sources/sas7bdat/pages.py:rdc_decompress's
     literal and RLE forms: 16-bit big-endian control words, clear bit

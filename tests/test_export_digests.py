@@ -5,8 +5,7 @@ exact bytes. The strL case spreads its GSO keys over all three
 partitions, so a key numbered from the wrong row offset changes the
 digest. The sas7bdat cases use a small page, so plain and compressed
 pages span the chunk boundaries; the ``_wide`` cases have rows over
-4,114 bytes with blank runs longer than one command covers, which
-take the scalar rle/rdc encoders."""
+4,114 bytes with blank runs longer than one rle/rdc command covers."""
 
 from __future__ import annotations
 

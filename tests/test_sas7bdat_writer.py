@@ -593,11 +593,42 @@ def test_rdc_wavefront_matches_scalar_on_real_sas_file():
     assert n_checked >= 10  # the fixture's full compressed-row count
 
 
+def _check_wide_rows(rng, encode, scalar, runs, remnants):
+    """``encode`` matches the spec encoder ``scalar`` row by row on
+    rows up to 20,000 bytes, each carrying one run of ``k * cap + rem``
+    bytes of ``b`` for every (b, cap, k) in ``runs`` and rem in
+    ``remnants``: in noise, and opening the row. Then on random rows
+    with runs of up to 13,000 bytes, in one matrix."""
+    import numpy as np
+
+    for b, cap, k in runs:
+        for rem in remnants:
+            n = k * cap + rem
+            for at in (0, 150):
+                row = rng.integers(0, 256, n + 300, dtype=np.uint8)
+                row[max(at - 1, 0) : at + n + 1] = b ^ 1  # the run is exactly n
+                row[at : at + n] = b
+                got = encode(row[None])[0]
+                assert got is not None
+                assert got == scalar(row[None])[0], (b, cap, k, rem, at)
+    rl = int(rng.integers(12_000, 20_000))
+    mat = rng.integers(0, 256, size=(12, rl), dtype=np.uint8)
+    for _ in range(40):
+        i, a = int(rng.integers(0, 12)), int(rng.integers(0, rl))
+        n = int(rng.choice([rng.integers(1, 90), rng.integers(4000, 13_000)]))
+        mat[i, a : a + n] = rng.choice([0, 0x20, 0x40, int(rng.integers(0, 256))])
+    got = encode(mat)
+    assert got == scalar(mat)
+    for i in range(mat.shape[0]):
+        assert got[i] == scalar(mat[i][None])[0], i
+
+
 def test_rle_encode_rows_matches_scalar_encoder():
     """The batched chunk encoder used by the executor pack stage must
     be byte-identical to the scalar spec encoder, row by row, across
     run shapes (random bytes, zero/blank/'@' runs, constant runs, row
-    boundaries)."""
+    boundaries, runs and literal spans over several commands in rows
+    up to 20,000 bytes)."""
     import numpy as np
 
     from polars_readstat_spark.writers.sas7bdat import (
@@ -630,13 +661,27 @@ def test_rle_encode_rows_matches_scalar_encoder():
         got = _rle_encode_rows(mat)
         for i in range(r):
             assert got[i] == _rle_encode_rows_scalar(mat[i][None])[0], (r, rl, i)
-    # > 4112-byte rows route through the multi-command scalar encoder
-    mat = np.zeros((3, 6000), np.uint8)
-    mat[1, 10:5500] = 0x20
-    mat[2, :] = rng.integers(0, 256, 6000, dtype=np.uint8)
+    # rows up to 20,000 bytes: special (4,112) and plain (4,113) runs
+    # over 2-4 command caps with remnants of 0-3 and 17-19 bytes (1-2
+    # byte remnants become literals), mid-row and opening the row
+    _check_wide_rows(
+        rng, _rle_encode_rows, _rle_encode_rows_scalar,
+        [(b, 4112, k) for b in (0x00, 0x20, 0x40) for k in (2, 3, 4)]
+        + [(7, 4113, k) for k in (2, 3, 4)],
+        (0, 1, 2, 3, 17, 18, 19),
+    )
+    # literal spans over 4,159 bytes in rows that still compress, and
+    # row-opening spans over 64 + 4,159 bytes
+    rl = 20_000
+    spans = (4159, 4160, 64 + 4159, 64 + 4160, 2 * 4159 + 7, 12_000)
+    mat = rng.integers(0, 256, size=(2 * len(spans), rl), dtype=np.uint8)
+    for j, n in enumerate(spans):
+        mat[2 * j, :100] = 0x20  # literal span [100, 100 + n)
+        mat[2 * j, 100 + n :] = 0x20
+        mat[2 * j + 1, n:] = 0  # row-opening literal span [0, n)
     got = _rle_encode_rows(mat)
-    assert got == _rle_encode_rows_scalar(mat)
-    for i in range(3):
+    assert all(g is not None for g in got)
+    for i in range(mat.shape[0]):
         assert got[i] == _rle_encode_rows_scalar(mat[i][None])[0], i
 
 
@@ -644,9 +689,8 @@ def test_rdc_encode_rows_matches_scalar_encoder():
     """The numpy-vectorized batch RDC encoder must be byte-identical
     to the scalar spec encoder, row by row, across run shapes (random
     bytes, constant runs at the 3/18/19 command-form boundaries, row
-    boundaries), and
-    must route rows wider than one long-RLE command (> 4114 bytes)
-    through the multi-command scalar encoder."""
+    boundaries, runs over several command words in rows up to 20,000
+    bytes)."""
     import numpy as np
 
     from polars_readstat_spark.writers.sas7bdat import (
@@ -675,15 +719,79 @@ def test_rdc_encode_rows_matches_scalar_encoder():
         got = _rdc_encode_rows(mat)
         for i in range(2):
             assert got[i] == _rdc_encode_rows_scalar(mat[i][None])[0], run
-    # > 4114-byte rows: a single run needs several command words;
-    # the batch path must match via the scalar encoder
-    mat = np.zeros((3, 6000), np.uint8)
-    mat[1, 10:5500] = 6
-    mat[2, :] = rng.integers(0, 256, 6000, dtype=np.uint8)
-    got = _rdc_encode_rows(mat)
-    assert got == _rdc_encode_rows_scalar(mat)
-    for i in range(3):
-        assert got[i] == _rdc_encode_rows_scalar(mat[i][None])[0], i
+    # rows up to 20,000 bytes: runs over 2-4 command caps (4,114) with
+    # remnants of 0-3 and 18-19 bytes (1-2 byte remnants become
+    # literal items), mid-row and opening the row
+    _check_wide_rows(
+        rng, _rdc_encode_rows, _rdc_encode_rows_scalar,
+        [(b, 4114, k) for b in (0x00, 0x20, 6) for k in (2, 3, 4)],
+        (0, 1, 2, 3, 18, 19),
+    )
+
+
+def test_pack_never_reaches_a_scalar_encoder(spark, monkeypatch):
+    """The vectorized encoders are the only production rle/rdc path,
+    at every row width: ``pack`` of the wide digest frame (5,004-byte
+    rows, ~4,596-byte blank runs) runs with both spec encoders raising,
+    and writes the bytes it writes when they encode every row."""
+    import numpy as np
+
+    import polars_readstat_spark.writers.sas7bdat as sas
+    from polars_readstat_spark.writers import plan_export, to_disk
+    from tests.test_export_digests import _wide
+
+    df = _wide(spark.range(600, numPartitions=3))
+
+    def refuse(mat):
+        raise AssertionError("a production call reached a spec encoder")
+
+    for codec in ("rle", "rdc"):
+        full = plan_export(df, "sas7bdat", compress=codec)[0]
+        pdf = to_disk(df, "sas7bdat", full.fields, full.kinds).toArrow().to_pandas()
+        plan = full.for_pack()
+        spec = getattr(sas, f"_{codec}_encode_rows_scalar")
+        with monkeypatch.context() as m:
+            m.setattr(sas, "_rle_encode_rows_scalar", refuse)
+            m.setattr(sas, "_rdc_encode_rows_scalar", refuse)
+            got = sas.pack(plan, pdf)
+        comps = np.frombuffer(got[-len(pdf):], np.uint8)
+        assert 0 < comps.sum() < len(pdf)  # encoded and raw rows
+        with monkeypatch.context() as m:
+            m.setattr(sas, f"_{codec}_encode_rows", spec)
+            assert sas.pack(plan, pdf) == got, codec
+
+
+@pytest.mark.parametrize("rl", [4112, 8240])
+def test_encoder_memory_is_bounded(rl):
+    """The encoders work in row blocks, so their traced peak on an
+    8,000-row ANES-shape chunk (small integer codes as doubles, 5%
+    missing) stays near the encoded output (~14 / ~28 MiB), whatever
+    the row width. Encoding the whole matrix at once peaked at 1.6 GiB
+    (rle) and 1.3 GiB (rdc) at 4,112 bytes."""
+    import tracemalloc
+
+    import numpy as np
+
+    from polars_readstat_spark.writers.sas7bdat import (
+        _rdc_encode_rows,
+        _rle_encode_rows,
+    )
+
+    r = np.arange(8_000, dtype=np.int64)[:, None]
+    c = np.arange(rl // 8, dtype=np.int64)[None, :]
+    codes = ((r * (2 * c + 7) + c) % (c % 9 + 2)).astype("<f8")
+    codes[(r * 31 + c * 17) % 20 == 0] = np.nan
+    mat = codes.view(np.uint8)
+    assert mat.shape == (8_000, rl)
+    for encode in (_rle_encode_rows, _rdc_encode_rows):
+        tracemalloc.start()
+        try:
+            out = encode(mat)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert sum(b is not None for b in out) > 7_000
+        assert peak < 64 * 2**20, (encode.__name__, peak)
 
 
 def test_numeric_lengths_truncated_storage(spark, tmp_path):
