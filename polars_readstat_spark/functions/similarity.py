@@ -58,21 +58,14 @@ def recommended_lsh(n_vectors: int, bands: int = 4) -> tuple[int, int]:
     return bits * bands, bands
 
 
-def _coef(p_expr: str) -> str:
-    """Integer LCG coefficient for plane*64+dim index expression."""
-    return (
-        f"(((1103515245 * ({p_expr}) + 12345) % 2147483648) div 65536 - 16384)"
-    )
-
-
 def lsh_scaled_dim_expr(x_col: str = "xf") -> str:
     """Scaled-integer value of one exploded vector element."""
     return f"CAST(FLOOR(CAST({x_col} AS DOUBLE) * {_XSCALE}) AS BIGINT)"
 
 
 def lsh_coef(p: int, d: int) -> int:
-    """The same LCG coefficient, evaluated at plan-build time. Python's
-    `%` and `//` on nonnegative ints match the SQL `%` / `div` exactly."""
+    """Integer LCG coefficient of hyperplane ``p`` at dimension ``d``
+    (index p*64 + d), evaluated at plan-build time."""
     return ((1103515245 * (p * 64 + d) + 12345) % 2147483648) // 65536 - 16384
 
 

@@ -100,12 +100,6 @@ def canon_str(v) -> int | None:
     )
 
 
-def canon_date_days(days: int) -> int:
-    """Epoch-day int → uint64 two's complement (negative days = pre-
-    1970 dates map like numpy's int64→uint64 view on the write side)."""
-    return days & _MASK
-
-
 class BloomAccumulator:
     """Write-side distinct-canon collector for ONE column.
 

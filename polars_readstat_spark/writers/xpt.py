@@ -38,10 +38,6 @@ from polars_readstat_spark.writers.tagged import (
 )
 
 
-def _pad80(b: bytes) -> bytes:
-    return b + b" " * ((-len(b)) % 80)
-
-
 def _hdr(tag: str, tail: str = "0" * 30) -> bytes:
     s = f"HEADER RECORD*******{tag:<8}HEADER RECORD!!!!!!!{tail}"
     return s.encode("ascii").ljust(80)
