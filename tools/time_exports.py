@@ -3,16 +3,20 @@
 Usage: python tools/time_exports.py [-nN] [sf_dir] fmt [fmt ...]
 
 fmt ∈ dta, sav, zsav, xpt, por, sas7bdat, rle, rdc, ``part:<fmt>``
-for any of those but por, or ``wide:<fmt>`` for any plain fmt. A
-plain fmt writes the sf lineitem table to one file (the unit
-bench.py's export_* entries time, without the sweep around it);
+for any of those but por, ``wide:<fmt>`` or ``pack:<fmt>`` for any
+plain fmt. A plain fmt writes the sf lineitem table to one file (the
+unit bench.py's export_* entries time, without the sweep around it);
 ``part:<fmt>`` writes it with ``write_readstat_partitioned`` into a
 fresh temp directory, one part-file per input partition;
 ``wide:<fmt>`` writes an ANES-shape frame to one file instead: 8,000
 rows x 1,030 doubles of small integer codes, 5% missing, cached before
-the first pass (8,240-byte sas7bdat rows, wider than one rle/rdc
-command covers). Each entry runs one untimed warm pass then N timed
-passes, printing ``fmt: best med [runs...]``.
+the first pass (8,240-byte sas7bdat rows). Each entry runs one untimed
+warm pass then N timed passes, printing ``fmt: best med [runs...]``.
+
+``pack:<fmt>`` times the pack kernel alone, in this process: it plans
+the ``wide:`` frame once, collects its first 2,667 rows as one chunk
+and runs ``layout(fmt).pack`` on them, printing the same line plus
+the tracemalloc peak of one more, traced pass (``peak=...MiB``).
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ import statistics
 import sys
 import tempfile
 import time
+import tracemalloc
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -64,6 +69,21 @@ def main() -> None:
         wide = spark.createDataFrame(pdf).cache()
         wide.count()
         return wide
+
+    def packer_for(fmt: str, wide):
+        from polars_readstat_spark.writers import layout, plan_export, to_disk
+
+        ext = "sas7bdat" if fmt in ("rle", "rdc") else fmt
+        kw = {"compress": fmt} if ext != fmt else {}
+        plan = plan_export(wide, ext, **kw)[0]
+        pdf = (
+            to_disk(wide, ext, plan.fields, plan.kinds)
+            .limit(2_667)
+            .toArrow()
+            .to_pandas()
+        )
+        pack, plan = layout(ext).pack, plan.for_pack()
+        return lambda: pack(plan, pdf)
 
     def writer_for(fmt: str, li):
         if fmt.startswith("part:"):
@@ -109,10 +129,13 @@ def main() -> None:
 
     wide = None
     for fmt in args:
-        if fmt.startswith("wide:"):
-            if wide is None:
-                wide = anes_wide()
-            run = writer_for(fmt[len("wide:"):], wide)
+        kind, _, sub = fmt.rpartition(":")
+        if kind in ("wide", "pack") and wide is None:
+            wide = anes_wide()
+        if kind == "wide":
+            run = writer_for(sub, wide)
+        elif kind == "pack":
+            run = packer_for(sub, wide)
         else:
             run = writer_for(fmt, li)
         spark.sparkContext.setJobDescription(f"warm:export_{fmt}")
@@ -123,9 +146,15 @@ def main() -> None:
             t0 = time.perf_counter()
             run()
             runs.append(time.perf_counter() - t0)
+        peak = ""
+        if kind == "pack":  # one more, traced pass
+            tracemalloc.start()
+            run()
+            peak = f" peak={tracemalloc.get_traced_memory()[1] / 2**20:.1f}MiB"
+            tracemalloc.stop()
         print(
             f"{fmt}: best={min(runs):.3f} med={statistics.median(runs):.3f} "
-            f"runs={[round(r, 3) for r in runs]}",
+            f"runs={[round(r, 3) for r in runs]}{peak}",
             flush=True,
         )
         for d in glob.glob(os.path.join(out, "part_*")):
