@@ -92,10 +92,11 @@ RDC_LITERAL = b"SASYZCR2"
 
 # Input bytes per row block of the vectorized rle/rdc encoders. Their
 # piece arrays run to 50-130x a block's bytes: unblocked, one 8,000 x
-# 4,112-byte chunk peaked at 1.6 GiB (rle) / 1.3 GiB (rdc) traced. At
-# 64 KiB a block's arrays stay cache-sized, and a no-Spark probe (4-core
-# VM) encoded both narrow (74-byte) and wide (4,112/8,240-byte) rows
-# faster than with 128 KiB-4 MiB blocks or none.
+# 4,112-byte chunk peaked at 1.6 GiB (rle) / 1.3 GiB (rdc) traced. A
+# no-Spark sweep of 32 KiB-4 MiB blocks (4-core VM) encoded narrow
+# (74-byte) and wide (4,112/8,240-byte) rows fastest at 64-128 KiB,
+# where a block's arrays stay cache-sized; the smaller keeps the peak
+# lower.
 _BLOCK_BYTES = 1 << 16
 
 
