@@ -49,16 +49,18 @@ def query(name: str, oracle: str | None = None):
 # its code. Queries past position 50 still run in the local gate
 # (tools/check_correctness.py covers the whole registry).
 _PRIORITY: tuple[str, ...] = (
-    # part 1 — changed-path-first: dta and por now export through the
-    # one plan_export → pack → assemble layout (single file,
-    # partitioned and the sink's part-files), so their write-then-read
-    # roundtrips go first, then the part-file queries whose dta branch
-    # moved into dta's assembler.
-    "scan_dta_roundtrip",
-    "scan_dta_tagged_missing",
+    # part 1 — changed-path-first: the read side lost its per-reader
+    # latency option and its outer readahead wrapper, so the scans
+    # through the simlat:// seam and with io_readahead go first, then
+    # the zsav, sav-bytecode and por scans whose fetch paths changed
+    # (the zsav/sav stream fingerprint now reads through the seam; por
+    # lost its batch queue).
+    "sink_remote_roundtrip",
+    "scan_fs_seam_roundtrip",
+    "scan_dta_multifile_readahead",
+    "scan_zsav_roundtrip",
+    "scan_sav_compressed_roundtrip",
     "scan_por_roundtrip",
-    "scan_sink_dir_roundtrip",
-    "scan_hive_layout_prune",
     # part 2: the staleness frontier, oldest newest-green first, as
     # ordered by tools/rotation_plan.py from the CORRECTNESS_r*.json
     # union.
@@ -106,7 +108,6 @@ _PRIORITY: tuple[str, ...] = (
     "metadata_merge_full_join",  # newest green r12
     "anti_join_customers_without_orders",  # newest green r12
     "broadcast_join_order_region",  # newest green r12
-    "max_strlen_prepass",  # newest green r12
     # positions 51+ follow registration order (the local gate still
     # covers the whole registry each round).
 )

@@ -105,9 +105,13 @@ def write_atomic(path: str, data: bytes) -> None:
 def content_fingerprint(path: str) -> str:
     """Cheap source-file identity beyond (size, mtime): sha1 of the
     first and last 4 KiB plus the byte size. Detects a rewrite that
-    lands on the same size within one mtime_ns tick."""
+    lands on the same size within one mtime_ns tick. Reads through
+    the filesystem seam, so a remote path (three range requests) gets
+    the same identity a local one does."""
+    from polars_readstat_spark.sources.fs import fs_open
+
     h = hashlib.sha1()
-    with open(path, "rb") as fh:
+    with fs_open(path) as fh:
         head = fh.read(4096)
         fh.seek(0, os.SEEK_END)
         size = fh.tell()

@@ -143,14 +143,12 @@ class ReadstatDataSource(DataSource):
                                union columns by name across files,
                                widen numeric types, null-fill gaps
       io_readahead             fetch-ahead depth for high-latency
-                               stores (0 = off; A4). dta/xpt/sav
-                               pipeline row-range or bytecode-chunk
-                               fetches, sas7bdat 4 MiB page ranges,
-                               at the fetch/decode seam; por buffers
-                               whole decoded batches (serial text
-                               format)
-      io_simulated_latency_ms  bench/test only: per-range first-byte
-                               sleep standing in for an object store
+                               stores (0 = off locally, 2 for remote
+                               URIs; A4). dta/xpt/sav pipeline
+                               row-range or bytecode-chunk fetches,
+                               sas7bdat 4 MiB page ranges, at the
+                               fetch/decode seam; por reads its file
+                               in one request
       where                    explicit reader-side filter (simple
                                conjunction, sources/filters.py
                                parse_where): batch-wise apply +
@@ -435,16 +433,6 @@ class ReadstatDataSource(DataSource):
             base = CompressingReader(
                 base, self._compress_plan(), self.options.get("row_index_name")
             )
-        # opt-in IO/decode overlap for high-latency stores (S3-class
-        # ~50-100 ms first-byte per range); off by default because on
-        # local disk it only duplicates OS readahead (SCALE.md A4)
-        ra_depth = int(self.options.get("io_readahead", 0) or 0)
-        if ra_depth > 0 and not _handles_readahead(base):
-            from polars_readstat_spark.sources.readahead import (
-                ReadaheadReader,
-            )
-
-            base = ReadaheadReader(base, ra_depth)
         # single-file scans get zone-map pruning too (round 13): a
         # part-file loaded directly out of a sink directory still sits
         # beside its _prs_stats.json, and per-STRIPE entries prune row
@@ -684,27 +672,6 @@ class ReadstatDataSource(DataSource):
                     )
                     for r in sub
                 ]
-        # mixed-format directories (ADVICE r09): wrap ONLY the
-        # per-file readers that don't pipeline io_readahead at
-        # their own fetch/decode seam. Wrapping the whole union
-        # when ANY file self-pipelines would stack a second queue
-        # (and a second buffer) on top of the dta/sav/xpt
-        # in-reader pipelines, which parse io_readahead
-        # unconditionally.
-        mf_ra = int(self.options.get("io_readahead", 0) or 0)
-        if mf_ra > 0 and not all(
-            _handles_readahead(r) for r in readers
-        ):
-            from polars_readstat_spark.sources.readahead import (
-                ReadaheadReader,
-            )
-
-            readers = [
-                r
-                if _handles_readahead(r)
-                else ReadaheadReader(r, mf_ra)
-                for r in readers
-            ]
         # small-file coalescing target: pack tiny files' tasks
         # into 48 MB bins (1 MB open cost → ~48 tiny files per
         # task), never fewer than ~cores partitions.
@@ -1128,21 +1095,6 @@ def _widen_types(a, b, name: str):
     )
 
 
-def _handles_readahead(r) -> bool:
-    """True when the (possibly wrapped) reader pipelines io_readahead
-    itself at the fetch/decode seam — the outer whole-batch wrapper
-    would only double-buffer on top of it."""
-    if getattr(r, "handles_readahead", False):
-        return True
-    inner = getattr(r, "inner", None)
-    if inner is not None:
-        return _handles_readahead(inner)
-    readers = getattr(r, "readers", None)
-    if readers:
-        return all(_handles_readahead(x) for x in readers)
-    return False
-
-
 class SchemaAlignReader(DataSourceReader):
     """Adapts one file's batches to the multi-file union schema:
     reorders columns by name, null-fills columns the file lacks, and
@@ -1227,7 +1179,7 @@ class MultiFileReader(DataSourceReader):
         # group's total decoded bytes are already bin-bounded by the
         # packer. The in-reader per-file pipelines (A4) overlap WITHIN
         # a unit; this overlaps ACROSS unit boundaries — a single
-        # producer thread could not (sleeps in one thread serialize).
+        # producer thread could not (its first-byte waits serialize).
         self.group_readahead = int(group_readahead or 0)
 
     def partitions(self):
@@ -1368,8 +1320,6 @@ _STRL_CACHE: dict[tuple, dict] = {}
 
 
 class DtaReader(ScanReader):
-    handles_readahead = True  # pipelines fetch/decode in read()
-
     def __init__(self, path: str, options, schema: StructType):
         from polars_readstat_spark.sources.dta.meta import parse_dta_meta
 
@@ -1429,9 +1379,7 @@ class DtaReader(ScanReader):
         # raw range fetches, separable from decode so io_readahead can
         # overlap the NEXT range's first-byte latency with the CURRENT
         # range's decode (reference scan_prefetch.rs:35-52 pipelines at
-        # exactly this layer). io_simulated_latency_ms is the
-        # bench/test stand-in for an object store's per-range
-        # first-byte cost — local files return in µs.
+        # exactly this layer).
         from polars_readstat_spark.sources.readahead import (
             fetch_row_ranges,
         )
@@ -1439,6 +1387,6 @@ class DtaReader(ScanReader):
         for pos, cnt, buf in fetch_row_ranges(
             self.path, meta.data_offset, meta.record_width,
             partition.start, partition.n, self._batch_rows(),
-            self.sim_latency_s, self.io_readahead,
+            self.io_readahead,
         ):
             yield self._indexed(decode(buf, cnt), pos)

@@ -16,12 +16,12 @@ Schemes:
   zero wrapper objects, unchanged perf for the local case.
 - ``simlat<N>://<abs-path>`` — the local filesystem with N ms of
   deterministic first-byte latency per *range request* (each open
-  and each seek+read pays one sleep). This is the object-store
-  stand-in: the r8–r10 latency A/B probes (readahead, 4 MiB SAS
-  ranges, zsav block pools, packed-group prefetch) measure against
-  this seam instead of per-reader ``io_simulated_latency_ms``
-  plumbing, so the exact code path a real remote FS would take is
-  what gets timed.
+  and each seek+read pays one sleep). This is the package's only
+  latency model and the object-store stand-in: the latency A/B
+  probes (readahead, 4 MiB SAS ranges, zsav block pools,
+  packed-group prefetch) measure against this seam, so the exact
+  code path a real remote FS would take is what gets timed. No
+  reader sleeps on its own (tests/test_latency_seam_lint.py).
 - any other ``scheme://`` — a registered filesystem if one matches,
   else ``fsspec`` (if importable), else
   ``pyarrow.fs.FileSystem.from_uri`` (S3/GCS/HDFS out of the box).

@@ -262,9 +262,6 @@ class ScanReader(DataSourceReader):
 
     def __init__(self, path: str, options, variables):
         from polars_readstat_spark.sources import informative as inf
-        from polars_readstat_spark.sources.readahead import (
-            parse_readahead_opts,
-        )
 
         self.path = path
         self.options = dict(options)
@@ -278,7 +275,7 @@ class ScanReader(DataSourceReader):
         self.batch_size = _opt_int(options, "batch_size")
         self.rows_per_partition = _opt_int(options, "rows_per_partition")
         self.target_parallelism = _opt_int(options, "target_parallelism")
-        self.io_readahead, self.sim_latency_s = parse_readahead_opts(options)
+        self.io_readahead = _opt_int(options, "io_readahead", 0)
         self.informative = inf.parse_opts(options)
 
     def _per_partition(self, record_width: int, n: int) -> int:

@@ -9,21 +9,26 @@ exactly one producer thread and a depth-bounded queue, never an
 unbounded buffer (reference parity: scan_prefetch.rs:35-52 bounds its
 prefetch the same way).
 
-``readahead(it, depth)`` wraps any batch iterator: a daemon thread
+``readahead(it, depth)`` wraps a fetch iterator: a daemon thread
 pulls up to ``depth`` items ahead while the consumer drains the queue.
-Memory is bounded by depth × batch size; exceptions re-raise in the
+Memory is bounded by depth × item size; exceptions re-raise in the
 consumer with their original traceback; an abandoned consumer lets the
 producer park on the full queue and die with the process (daemon) —
 generator close() also unblocks it explicitly.
 
-Enabled per-read via ``io_readahead`` (depth, default 0 = off):
+It runs at one layer only, each reader's fetch/decode seam: dta, xpt
+and uncompressed sav row ranges (``fetch_row_ranges``), sas7bdat
+4 MiB page ranges and the sav/zsav bytecode chunks. por reads its
+file in one request, so there is nothing to run ahead of. Enabled
+per read via ``io_readahead`` (depth; 0 = off, the local default,
+2 for remote URIs):
 
     spark.read.format("readstat").option("io_readahead", "2").load(p)
 
-The bench floor probes (``floor_ranges50ms_*``) measure the shape this
-is for: 16 ranges × (50 ms fetch + ~25 ms decode) per partition runs
-~1.6× faster with depth-2 readahead; with 0 ms fetch the wrapper costs
-<3% — which is why it stays off for local files.
+Latency itself is modelled in one place, the ``simlat<N>://``
+filesystem seam (sources/fs.py): every open and seek there pays N ms,
+on the same code path a real object store read takes. The bench
+floor pairs (``floor_*_lat*``) time this pipeline through that seam.
 """
 
 from __future__ import annotations
@@ -32,7 +37,6 @@ import queue
 import threading
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import DataSourceReader
 from polars_readstat_spark.sources.fs import fs_open
 
 _SENTINEL = object()
@@ -95,15 +99,6 @@ def readahead(it: Iterator, depth: int = 2) -> Iterator:
         stop.set()
 
 
-def parse_readahead_opts(options) -> tuple[int, float]:
-    """(io_readahead depth, simulated latency in seconds) from a
-    datasource options mapping — the pair every pipelining reader
-    consumes."""
-    depth = int(options.get("io_readahead", 0) or 0)
-    lat = float(options.get("io_simulated_latency_ms", 0) or 0) / 1000.0
-    return depth, lat
-
-
 def fetch_row_ranges(
     path: str,
     data_offset: int,
@@ -111,14 +106,14 @@ def fetch_row_ranges(
     start: int,
     n: int,
     batch_rows: int,
-    sim_latency_s: float = 0.0,
     io_readahead: int = 0,
 ):
     """Raw fixed-width row-range fetches for [start, start+n), yielded
     as (pos, cnt, buf) — the fetch half of the fetch/decode pipeline
     shared by the dta / uncompressed-sav / xpt readers. With
-    io_readahead > 0 the NEXT range's (simulated) first-byte latency
-    overlaps the caller's decode of the CURRENT range."""
+    io_readahead > 0 the NEXT range's first-byte latency overlaps the
+    caller's decode of the CURRENT range. Each range is one seek + read,
+    one range request on a remote filesystem."""
 
     def fetched():
         with fs_open(path) as f:
@@ -126,10 +121,6 @@ def fetch_row_ranges(
             end = start + n
             while pos < end:
                 cnt = min(batch_rows, end - pos)
-                if sim_latency_s:
-                    import time as _t
-
-                    _t.sleep(sim_latency_s)
                 f.seek(data_offset + pos * record_width)
                 yield pos, cnt, f.read(cnt * record_width)
                 pos += cnt
@@ -139,23 +130,3 @@ def fetch_row_ranges(
         it = readahead(it, io_readahead)
     return it
 
-
-class ReadaheadReader(DataSourceReader):
-    """Wraps any format reader, pulling its batches through a bounded
-    readahead queue — the opt-in IO/decode overlap for high-latency
-    stores. Partition planning is delegated untouched, so the scan's
-    parallel shape is identical with or without the wrapper."""
-
-    # once wrapped, the readahead obligation is met — the dispatch in
-    # datasource.reader() must not stack a second queue on top
-    handles_readahead = True
-
-    def __init__(self, inner: DataSourceReader, depth: int):
-        self.inner = inner
-        self.depth = int(depth)
-
-    def partitions(self):
-        return self.inner.partitions()
-
-    def read(self, partition):
-        return readahead(self.inner.read(partition), self.depth)

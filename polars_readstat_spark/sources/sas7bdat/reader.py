@@ -44,8 +44,6 @@ class SasPageRange(InputPartition):
 
 
 class SasReader(ScanReader):
-    handles_readahead = True  # pipelines range-fetch/decode in read()
-
     def __init__(self, path: str, options, meta: SasMeta | None = None):
         self.meta = meta or parse_sas_meta(path)
         super().__init__(path, options, self.meta.columns)
@@ -239,19 +237,13 @@ class SasReader(ScanReader):
             """Contiguous multi-page range fetches (~4 MiB per request,
             the object-store IO unit — one first-byte latency per range,
             not per page). With io_readahead the NEXT range's fetch
-            overlaps the CURRENT range's decompress+decode downstream.
-            io_simulated_latency_ms stands in for the remote first-byte
-            cost in the bench A/B (local files return in µs)."""
+            overlaps the CURRENT range's decompress+decode downstream."""
             pl = max(m.page_length, 1)
             per = max(1, (4 << 20) // pl)
             p = partition.first_page
             end = p + partition.n_pages
             while p < end:
                 k = min(per, end - p)
-                if self.sim_latency_s:
-                    import time as _t
-
-                    _t.sleep(self.sim_latency_s)
                 f.seek(m.header_length + p * pl)
                 yield f.read(k * pl)
                 p += k

@@ -143,7 +143,6 @@ def decompress_bytecode(raw: bytes, meta: SavMeta) -> np.ndarray:
 def _iter_zsav_inflated(
     meta: SavMeta,
     start_byte: int = 0,
-    sim_latency_s: float = 0.0,
     use_pool: bool = True,
 ):
     """zsav inflated-stream chunks from uncompressed offset start_byte:
@@ -156,14 +155,13 @@ def _iter_zsav_inflated(
     consumers run well above that. Four threads push decompression off
     the critical path; ≤8 in-flight blocks bound memory at ~32 MB.
 
-    sim_latency_s (bench/test stand-in for a remote store's per-range
-    first-byte cost) is charged INSIDE the per-block fetch, BEFORE
-    the shared-handle lock — a remote reader issues its 4 range GETs
-    concurrently, so their first-byte waits overlap exactly like the
-    pool's do here (VERDICT r09 next#7: previously the charge sat
-    serially at the consumer, which modeled a store no concurrent
-    reader resembles). use_pool=False forces the inline fallback —
-    the serial arm of the bench A/B pair."""
+    Each block is one seek + read: one range request on a remote
+    filesystem, where the latency model is the seam's (sources/fs.py;
+    simlat<N>:// charges N ms per open and per seek). On a remote path
+    every pool thread reads through its own handle, so the 4 range
+    GETs are in flight concurrently and their first-byte waits overlap
+    like the inflates do (VERDICT r09 next#7). use_pool=False forces
+    the inline fallback — the serial arm of the bench A/B pair."""
     import threading
     import zlib
     from collections import deque
@@ -180,20 +178,21 @@ def _iter_zsav_inflated(
         b0 = int(np.searchsorted(starts, start_byte, side="right") - 1)
         skip0 = start_byte - int(starts[b0])
         blocks = blocks[b0:]
+    from contextlib import nullcontext
+
     from polars_readstat_spark.sources.fs import is_remote
 
-    with fs_open(meta.path) as f:
+    # On a remote filesystem a shared handle would SERIALIZE the
+    # per-range first-byte waits behind lock_read, defeating the pool
+    # (each seek+read pays latency inside the lock). A real remote
+    # reader issues its concurrent range GETs on separate connections
+    # — so each pool thread opens its own handle, lazily, and the
+    # waits overlap; no shared handle is opened (its open would be one
+    # more request). Local files keep the single shared handle (an
+    # extra open per thread buys nothing there).
+    remote = is_remote(meta.path)
+    with nullcontext() if remote else fs_open(meta.path) as f:
         lock_read = threading.Lock()
-        # On a remote filesystem a shared handle would SERIALIZE the
-        # per-range first-byte waits behind lock_read, defeating the
-        # pool (each seek+read pays latency inside the lock). A real
-        # remote reader issues its concurrent range GETs on separate
-        # connections — so each pool thread opens its own handle,
-        # lazily, and the waits overlap exactly as the
-        # io_simulated_latency_ms model assumed. Local files keep the
-        # single shared handle (an extra open per thread buys nothing
-        # there).
-        remote = is_remote(meta.path)
         tl = threading.local()
         extra_handles: list = []
         handles_lock = threading.Lock()
@@ -209,10 +208,6 @@ def _iter_zsav_inflated(
 
         def inflate(blk):
             c_ofs, c_sz, _unc = blk
-            if sim_latency_s:
-                import time as _t
-
-                _t.sleep(sim_latency_s)  # per-range first-byte; see doc
             if remote:
                 h = _thread_handle()
                 h.seek(c_ofs)
@@ -281,28 +276,20 @@ def _iter_raw_chunks(
     meta: SavMeta,
     chunk_bytes: int,
     start_byte: int = 0,
-    sim_latency_s: float = 0.0,
     zsav_pool: bool = True,
 ):
     """Raw bytecode stream in bounded pieces starting at uncompressed
     stream offset start_byte: file slices for compression=1, per-block
     thread-pooled zlib inflates for zsav (_iter_zsav_inflated).
-    sim_latency_s stands in for a remote store's per-range first-byte
-    cost (bench/test only; for zsav it is charged inside each block
-    fetch, the unit a remote reader would range-GET — concurrently,
-    so the inflate pool overlaps the waits)."""
+    Under the seam's latency model (sources/fs.py) compression=1 is
+    one sequential GET: one seek, then chunk reads that pay no further
+    first-byte wait; zsav pays one range request per zlib block."""
     if meta.compression == 2:
-        yield from _iter_zsav_inflated(
-            meta, start_byte, sim_latency_s, use_pool=zsav_pool
-        )
+        yield from _iter_zsav_inflated(meta, start_byte, use_pool=zsav_pool)
         return
     with fs_open(meta.path) as f:
         f.seek(meta.data_offset + start_byte)
         while True:
-            if sim_latency_s:
-                import time as _t
-
-                _t.sleep(sim_latency_s)
             b = f.read(chunk_bytes)
             if not b:
                 return
@@ -466,7 +453,6 @@ def iter_compressed_elements(
     start_byte: int = 0,
     pipeline: bool = True,
     io_readahead: int = 0,
-    sim_latency_s: float = 0.0,
     zsav_pool: bool = True,
 ):
     """Stream the bytecode as (k, 8) element matrices with memory
@@ -495,9 +481,7 @@ def iter_compressed_elements(
     # 27% slower per partition (r7)
     dpool = _SyncExecutor() if not pipeline else ThreadPoolExecutor(2)
     inflight: deque = deque()
-    src = _iter_raw_chunks(
-        meta, chunk_bytes, start_byte, sim_latency_s, zsav_pool
-    )
+    src = _iter_raw_chunks(meta, chunk_bytes, start_byte, zsav_pool)
     if io_readahead > 0:
         # A4 on the bytecode stream: the NEXT chunk's fetch (or zlib
         # inflate) overlaps the CURRENT chunk's group walk + scatter
@@ -592,7 +576,6 @@ def iter_compressed_rows(
     n: int,
     batch_rows: int,
     io_readahead: int = 0,
-    sim_latency_s: float = 0.0,
     zsav_pool: bool = True,
 ):
     """Yield (absolute_row_pos, (rows, record_width) matrix) batches for
@@ -615,7 +598,6 @@ def iter_compressed_rows(
     for elems in iter_compressed_elements(
         meta,
         io_readahead=io_readahead,
-        sim_latency_s=sim_latency_s,
         zsav_pool=zsav_pool,
     ):
         if carry.size:
@@ -774,7 +756,6 @@ def iter_literal_rows(
     n: int,
     batch_rows: int,
     total_rows: int,
-    sim_latency_s: float = 0.0,
     zsav_pool: bool = True,
 ):
     """Parallel-task decode of rows [start, start+n) from a VALIDATED
@@ -790,7 +771,7 @@ def iter_literal_rows(
     g0 = e0 // 8
     g1 = min((e1 + 7) // 8, g_full)
     lo_b, hi_b = g0 * 72, g1 * 72
-    buf = _fetch_stream_bytes(meta, lo_b, hi_b, sim_latency_s, zsav_pool)
+    buf = _fetch_stream_bytes(meta, lo_b, hi_b, zsav_pool)
     k = (hi_b - lo_b) // 72
     blocks = np.frombuffer(buf, dtype=np.uint8, count=k * 72).reshape(k, 9, 8)
     if k and not bool(
@@ -806,9 +787,7 @@ def iter_literal_rows(
     els = np.ascontiguousarray(blocks[:, 1:, :]).reshape(k * 8, 8)
     if e1 > g_full * 8:
         # trailing partial group: decode the strict tail generically
-        tail_raw = _fetch_stream_bytes(
-            meta, g_full * 72, None, sim_latency_s, zsav_pool
-        )
+        tail_raw = _fetch_stream_bytes(meta, g_full * 72, None, zsav_pool)
         tail_els = decompress_bytecode(tail_raw, meta)
         els = np.concatenate([els, tail_els[: total_el - g_full * 8]])
     off = e0 - g0 * 8
@@ -948,7 +927,6 @@ def iter_checkpoint_rows(
     ckpt_el: int,
     pipeline: bool = True,
     io_readahead: int = 0,
-    sim_latency_s: float = 0.0,
     zsav_pool: bool = True,
 ):
     """Parallel-task decode of rows [start, start+n) from a general
@@ -971,7 +949,6 @@ def iter_checkpoint_rows(
         start_byte=ckpt_byte,
         pipeline=pipeline,
         io_readahead=io_readahead,
-        sim_latency_s=sim_latency_s,
         zsav_pool=zsav_pool,
     ):
         if skip:
@@ -1008,7 +985,6 @@ def _fetch_stream_bytes(
     meta: SavMeta,
     lo: int,
     hi: int | None,
-    sim_latency_s: float = 0.0,
     use_pool: bool = True,
 ) -> bytes:
     """Bytes [lo, hi) of the bytecode stream (hi=None → to end).
@@ -1017,9 +993,10 @@ def _fetch_stream_bytes(
     one pool task — on a remote store the per-block range GETs are
     independent requests, so issuing them concurrently overlaps their
     first-byte waits with each other and with the inflates (the same
-    physics as _iter_zsav_inflated's pool; VERDICT r09 next#7).
-    sim_latency_s charges that per-range first-byte cost in bench/
-    test runs; use_pool=False is the serial A/B arm."""
+    physics as _iter_zsav_inflated's pool; VERDICT r09 next#7). The
+    latency model is the seam's (sources/fs.py): compression=1 pays
+    one range request, zsav one per overlapping block. use_pool=False
+    is the serial A/B arm."""
     if meta.compression != 2:
         with fs_open(meta.path) as f:
             f.seek(meta.data_offset + lo)
@@ -1034,14 +1011,16 @@ def _fetch_stream_bytes(
     end = int(starts[-1]) if hi is None else hi
     b_lo = int(np.searchsorted(starts, lo, side="right") - 1)
     b_hi = int(np.searchsorted(starts, max(end - 1, lo), side="right"))
+    from contextlib import nullcontext
+
     from polars_readstat_spark.sources.fs import is_remote
 
-    with fs_open(meta.path) as f:
+    # per-thread handles on remote paths, same reasoning as
+    # _iter_zsav_inflated: a shared handle serializes the first-byte
+    # waits behind lock_read, defeating the pool
+    remote = is_remote(meta.path)
+    with nullcontext() if remote else fs_open(meta.path) as f:
         lock_read = threading.Lock()
-        # per-thread handles on remote paths, same reasoning as
-        # _iter_zsav_inflated: a shared handle serializes the
-        # first-byte waits behind lock_read, defeating the pool
-        remote = is_remote(meta.path)
         tl = threading.local()
         extra_handles: list = []
         handles_lock = threading.Lock()
@@ -1057,10 +1036,6 @@ def _fetch_stream_bytes(
 
         def fetch_inflate(blk):
             c_ofs, c_sz, _u = blk
-            if sim_latency_s:
-                import time as _t
-
-                _t.sleep(sim_latency_s)  # per-range first-byte
             if remote:
                 h = _thread_handle()
                 h.seek(c_ofs)

@@ -33,13 +33,12 @@ from polars_readstat_spark.sources.partplan import (
 
 
 class SavReader(ScanReader):
-    # every path pipelines io_readahead itself: the uncompressed row
-    # loop and the compressed chunk loop (sequential + checkpoint, via
-    # iter_compressed_elements) at their fetch/decode seams; the
-    # literal path issues ONE contiguous range fetch per partition,
-    # which has no loop to pipeline
-    handles_readahead = True
-
+    # io_readahead runs at each path's fetch/decode seam: the
+    # uncompressed row loop and the compressed chunk loop (sequential
+    # + checkpoint, via iter_compressed_elements); the literal path
+    # issues ONE contiguous range fetch per partition, which has no
+    # loop to pipeline. zsav block fetches overlap on the inflate pool
+    # instead.
     def __init__(self, path: str, options):
         from polars_readstat_spark.sources.sav.meta import parse_sav_meta
 
@@ -195,7 +194,6 @@ class SavReader(ScanReader):
                     ck[0], ck[1],
                     pipeline=partition.pipeline,
                     io_readahead=self.io_readahead,
-                    sim_latency_s=self.sim_latency_s,
                     zsav_pool=self.zsav_pool,
                 ):
                     yield emit(rows, pos)
@@ -208,7 +206,6 @@ class SavReader(ScanReader):
                 for pos, rows in iter_literal_rows(
                     meta, partition.start, partition.n, batch_rows,
                     meta.nobs,
-                    sim_latency_s=self.sim_latency_s,
                     zsav_pool=self.zsav_pool,
                 ):
                     yield emit(rows, pos)
@@ -219,7 +216,6 @@ class SavReader(ScanReader):
             for pos, rows in iter_compressed_rows(
                 meta, partition.start, partition.n, batch_rows,
                 io_readahead=self.io_readahead,
-                sim_latency_s=self.sim_latency_s,
                 zsav_pool=self.zsav_pool,
             ):
                 yield emit(rows, pos)
@@ -235,7 +231,7 @@ class SavReader(ScanReader):
         it = fetch_row_ranges(
             self.path, meta.data_offset, rw,
             partition.start, partition.n, batch_rows,
-            self.sim_latency_s, self.io_readahead,
+            self.io_readahead,
         )
         for pos, cnt, buf in it:
             rows = np.frombuffer(buf, dtype=np.uint8, count=cnt * rw).reshape(

@@ -216,7 +216,6 @@ class ReadstatStreamReader(DataSourceStreamReader):
             MultiPartGroup,
             ReadstatDataSource,
             SchemaAlignReader,
-            _handles_readahead,
         )
 
         # rebuild this task's readers from their option dicts (parsed
@@ -231,13 +230,6 @@ class ReadstatStreamReader(DataSourceStreamReader):
             )
             if partition.union:
                 r = SchemaAlignReader(r, list(self._schema.fields))
-            ra = int(opts.get("io_readahead", 0) or 0)
-            if ra > 0 and not _handles_readahead(r):
-                from polars_readstat_spark.sources.readahead import (
-                    ReadaheadReader,
-                )
-
-                r = ReadaheadReader(r, ra)
             readers.append(r)
         # group prefetch depth from the per-file opts (they carry the
         # remote io_readahead default injected at plan time; the raw

@@ -14,8 +14,6 @@ from polars_readstat_spark.sources.xpt.meta import (
 
 
 class XptReader(ScanReader):
-    handles_readahead = True  # pipelines fetch/decode in read()
-
     def __init__(self, path: str, options, meta: XptMeta | None = None):
         self.meta = meta or parse_xpt_meta(path)
         super().__init__(path, options, self.meta.variables)
@@ -49,6 +47,6 @@ class XptReader(ScanReader):
         for pos, _cnt, buf in fetch_row_ranges(
             self.path, m.data_offset, max(m.record_width, 1),
             partition.start, partition.n, self._batch_rows(),
-            self.sim_latency_s, self.io_readahead,
+            self.io_readahead,
         ):
             yield self._indexed(decode(buf), pos)

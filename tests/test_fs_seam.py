@@ -109,6 +109,180 @@ def test_simlat_pays_per_range_latency(dta_file):
     assert wall < 1.0
 
 
+# -- the seam's cost model, per pipelining reader ---------------------
+#
+# Under simlat<N>:// every range request is an open or a seek of a
+# _LatencyFile. These pin how many requests ONE partition's read
+# issues, which is what the bench latency pairs (floor_*_lat*) time.
+
+
+@pytest.fixture(scope="module")
+def cost_files(spark, tmp_path_factory):
+    """One 120,000-row frame (11 fractional doubles plus one integral
+    code column) in every format with a pipelined fetch loop. Big
+    enough that each fetch loop runs more than once: sas7bdat spans
+    several 4 MiB page ranges, zsav several zlib blocks, and the sav
+    bytecode stream several 4 MiB chunks."""
+    from pyspark.sql import functions as F
+
+    import polars_readstat_spark as prs
+    from polars_readstat_spark.writers.sas7bdat import write_sas7bdat
+    from polars_readstat_spark.writers.sav import write_sav
+
+    d = tmp_path_factory.mktemp("seamcost")
+    df = spark.range(120_000).select(
+        *[(F.col("id") * (0.37 + i)).alias(f"x{i}") for i in range(11)],
+        (F.col("id") % 97).cast("double").alias("k"),
+    )
+    out = {}
+    for tag in ("dta", "xpt", "sav", "zsav"):
+        out[tag] = str(d / f"c.{tag}")
+        prs.write_readstat(df, out[tag])
+    out["sav_bytecode"] = str(d / "c_bc.sav")
+    write_sav(df, out["sav_bytecode"], compress=True)
+    out["sas7bdat"] = str(d / "c.sas7bdat")
+    write_sas7bdat(df, out["sas7bdat"])
+    out["sas7bdat_rle"] = str(d / "c_rle.sas7bdat")
+    write_sas7bdat(df, out["sas7bdat_rle"], compress="rle")
+    return out
+
+
+@pytest.fixture
+def range_requests(monkeypatch):
+    """Counts _LatencyFile opens and seeks (thread-safe: readahead
+    and the zsav inflate pool fetch from their own threads)."""
+    import threading
+
+    from polars_readstat_spark.sources import fs
+
+    n = {"open": 0, "seek": 0}
+    lock = threading.Lock()
+    init, seek = fs._LatencyFile.__init__, fs._LatencyFile.seek
+
+    def counted_init(self, path, lat_s):
+        with lock:
+            n["open"] += 1
+        init(self, path, lat_s)
+
+    def counted_seek(self, pos, whence=0):
+        with lock:
+            n["seek"] += 1
+        return seek(self, pos, whence)
+
+    monkeypatch.setattr(fs._LatencyFile, "__init__", counted_init)
+    monkeypatch.setattr(fs._LatencyFile, "seek", counted_seek)
+    return n
+
+
+def _read_counted(reader, part, n):
+    """Rows of one partition's read, with the counter zeroed after
+    planning so only the read's requests count."""
+    n["open"] = n["seek"] = 0
+    return sum(b.num_rows for b in reader.read(part))
+
+
+@pytest.mark.parametrize("ra", ["0", "2"])
+@pytest.mark.parametrize("tag", ["dta", "xpt", "sav"])
+def test_simlat_row_range_requests(cost_files, range_requests, tag, ra):
+    """dta, xpt and uncompressed sav: one open plus one seek per
+    ⌈n / batch_rows⌉ row range (fetch_row_ranges). Readahead moves the
+    fetches onto a thread; it never adds a request."""
+    from polars_readstat_spark.sources.datasource import DtaReader
+    from polars_readstat_spark.sources.sav.reader import SavReader
+    from polars_readstat_spark.sources.xpt.reader import XptReader
+
+    opts = {
+        "rows_per_partition": "50000",
+        "batch_size": "7000",
+        "io_readahead": ra,
+    }
+    uri = "simlat1://" + cost_files[tag]
+    if tag == "dta":
+        r = DtaReader(uri, opts, None)
+    elif tag == "xpt":
+        r = XptReader(uri, opts)
+    else:
+        r = SavReader(uri, opts)
+    part = r.partitions()[1]
+    assert (part.start, part.n) == (50_000, 50_000)
+    assert _read_counted(r, part, range_requests) == part.n
+    assert range_requests == {"open": 1, "seek": -(-part.n // 7000)}
+
+
+@pytest.mark.parametrize("ra", ["0", "2"])
+@pytest.mark.parametrize("tag", ["sas7bdat", "sas7bdat_rle"])
+def test_simlat_sas_page_range_requests(cost_files, range_requests, tag, ra):
+    """sas7bdat, plain and rle: one open plus one seek per 4 MiB page
+    range of the partition (SasReader.read's raw_ranges)."""
+    from polars_readstat_spark.sources.sas7bdat.reader import SasReader
+
+    whole = "1000000000"  # one partition: rows (plain) or pages (rle)
+    r = SasReader(
+        "simlat1://" + cost_files[tag],
+        {
+            "rows_per_partition": whole,
+            "pages_per_partition": whole,
+            "io_readahead": ra,
+        },
+    )
+    (part,) = r.partitions()
+    per = (4 << 20) // r.meta.page_length
+    ranges = -(-part.n_pages // per)
+    assert ranges >= 2  # the fixture must span several ranges
+    assert _read_counted(r, part, range_requests) == 120_000
+    assert range_requests == {"open": 1, "seek": ranges}
+
+
+@pytest.mark.parametrize("pool", ["0", "1"])
+def test_simlat_zsav_block_requests(cost_files, range_requests, pool):
+    """zsav: one seek per zlib block. On a remote path each inflate
+    thread reads through its own handle (one open each, at most the
+    pool's 4; exactly one on the serial arm) and no shared handle is
+    opened."""
+    from polars_readstat_spark.sources.sav.reader import SavReader
+
+    uri = "simlat1://" + cost_files["zsav"]
+    # the plan-time stream proofs read through the seam too: a remote
+    # zsav plans parallel partitions, not the serial fallback
+    assert len(SavReader(uri, {"rows_per_partition": "30000"}).partitions()) == 4
+    r = SavReader(
+        uri,
+        {
+            "rows_per_partition": "1000000000",
+            "io_readahead": "0",
+            "io_zsav_pool": pool,
+        },
+    )
+    (part,) = r.partitions()
+    blocks = len(r.meta.zsav.blocks)
+    assert blocks >= 3
+    assert _read_counted(r, part, range_requests) == 120_000
+    assert range_requests["seek"] == blocks
+    if pool == "0":
+        assert range_requests["open"] == 1
+    else:
+        assert 1 <= range_requests["open"] <= 4
+
+
+def test_simlat_sav_bytecode_is_one_request(cost_files, range_requests):
+    """A sav bytecode stream (compression=1) pays one open and one
+    seek per partition, however many 4 MiB chunks the decode loop
+    reads: the chunks are sequential reads of one GET, so they carry
+    no further first-byte wait."""
+    from polars_readstat_spark.sources.sav.decode import stream_nbytes
+    from polars_readstat_spark.sources.sav.reader import SavReader
+
+    r = SavReader(
+        "simlat1://" + cost_files["sav_bytecode"],
+        {"rows_per_partition": "1000000000", "io_readahead": "2"},
+    )
+    assert r.meta.compression == 1
+    assert stream_nbytes(r.meta) > 2 * (4 << 20)  # 3+ chunks
+    (part,) = r.partitions()
+    assert _read_counted(r, part, range_requests) == 120_000
+    assert range_requests == {"open": 1, "seek": 1}
+
+
 def test_simlat_listdir_and_glob(dta_file):
     d = os.path.dirname(dta_file)
     uri_d = "simlat0://" + d

@@ -1,5 +1,7 @@
-"""Bounded readahead wrapper: ordering, bounding, error relay, and
-the io_readahead option end-to-end through the datasource."""
+"""Bounded readahead: ordering, bounding, error relay, and the
+io_readahead option end-to-end through the datasource, with the
+pipelined scans reading through a simlat1:// URI (the latency seam,
+sources/fs.py)."""
 
 from __future__ import annotations
 
@@ -129,7 +131,8 @@ def test_sas7bdat_internal_pipeline_identical(spark, tmp_path):
     """SasReader pipelines 4 MiB range fetches ahead of decode when
     io_readahead is set; the page regrouping must be byte-identical —
     including on an RLE-compressed file whose page groups now span
-    fetched ranges."""
+    fetched ranges. The pipelined scan reads through the latency
+    seam, as a remote scan would."""
     from pyspark.sql import functions as F
 
     import polars_readstat_spark as prs
@@ -149,45 +152,17 @@ def test_sas7bdat_internal_pipeline_identical(spark, tmp_path):
         ra = (
             spark.read.format("readstat")
             .option("io_readahead", "2")
-            .option("io_simulated_latency_ms", "1")
-            .load(path)
+            .load("simlat1://" + path)
         )
         a = sorted(tuple(r) for r in plain.collect())
         b = sorted(tuple(r) for r in ra.collect())
         assert a == b, tag
 
 
-def test_handles_readahead_wrap_decisions(spark, tmp_path):
-    """The datasource must NOT double-wrap readers that pipeline
-    io_readahead internally — every sav path now does (uncompressed
-    row loop, compressed chunk loop; the literal path's one-shot range
-    fetch has no loop to pipeline)."""
-    from pyspark.sql import functions as F
-
-    from polars_readstat_spark.sources.datasource import (
-        DtaReader,
-        _handles_readahead,
-    )
-    from polars_readstat_spark.sources.sav.reader import SavReader
-    from polars_readstat_spark.writers.dta import write_dta
-    from polars_readstat_spark.writers.sav import write_sav
-
-    df = spark.range(1000).select(F.col("id").cast("double").alias("a"))
-    pd_ = str(tmp_path / "w.dta")
-    write_dta(df, pd_)
-    assert _handles_readahead(DtaReader(pd_, {}, None))
-    ps = str(tmp_path / "w.sav")
-    write_sav(df, ps)
-    assert _handles_readahead(SavReader(ps, {}))
-    pb = str(tmp_path / "w_bc.sav")
-    write_sav(df, pb, compress=True)
-    assert _handles_readahead(SavReader(pb, {}))
-
-
 def test_sav_xpt_internal_pipeline_identical(spark, tmp_path):
     """The SavReader (uncompressed row loop AND the compressed
-    bytecode chunk loop) and XptReader pipelines must be
-    byte-identical to the inline scans."""
+    bytecode chunk loop) and XptReader pipelines, reading through the
+    latency seam, must be byte-identical to the inline scans."""
     from pyspark.sql import functions as F
 
     import polars_readstat_spark as prs
@@ -214,8 +189,7 @@ def test_sav_xpt_internal_pipeline_identical(spark, tmp_path):
         ra = (
             spark.read.format("readstat")
             .option("io_readahead", "2")
-            .option("io_simulated_latency_ms", "1")
-            .load(path)
+            .load("simlat1://" + path)
         )
         a = sorted(tuple(r) for r in plain.collect())
         b = sorted(tuple(r) for r in ra.collect())

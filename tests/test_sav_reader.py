@@ -767,9 +767,10 @@ def test_decode_cmd_group_direct_affine_matches_lut():
 def test_zsav_pool_arms_identical(spark, tmp_path):
     """VERDICT r09 next#7: the zsav block fetch+inflate runs pooled by
     default (remote-store latency overlap) with io_zsav_pool=0 as the
-    serial bench arm — both arms, with and without simulated latency,
-    must return identical data on both the literal and the general
-    bytecode partition paths (a larger written zsav exercises
+    serial bench arm — both arms, read locally and through a
+    simlat5:// URI (per-thread handles, one range request per zlib
+    block), must return identical data on both the literal and the
+    general bytecode partition paths (a larger written zsav exercises
     multi-block spans)."""
     from pyspark.sql import functions as F
 
@@ -783,9 +784,9 @@ def test_zsav_pool_arms_identical(spark, tmp_path):
     )
     write_sav(df, p)
     base = _load(spark, p).collect()
-    for opts in (
-        {"io_zsav_pool": "0"},
-        {"io_simulated_latency_ms": "5"},
-        {"io_simulated_latency_ms": "5", "io_zsav_pool": "0"},
+    for uri, opts in (
+        (p, {"io_zsav_pool": "0"}),
+        ("simlat5://" + p, {}),
+        ("simlat5://" + p, {"io_zsav_pool": "0"}),
     ):
-        assert _load(spark, p, **opts).collect() == base, opts
+        assert _load(spark, uri, **opts).collect() == base, (uri, opts)
